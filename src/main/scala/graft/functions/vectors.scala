@@ -33,6 +33,14 @@ object vectors {
   def argmaxCos(vec: Column, nrm: Column, cents: Seq[(Int, Seq[Double], Double)]): Column =
     call_function("vec_argmax_cos", vec, nrm, typedLit(cents))
 
+  /** Fused grouped squared-L2 assignment (the PQ train/encode step): per
+    * row, the list id of the code in `books(grp)` = (list_id, cemb, c2 =
+    * ‖cemb‖²) that maximizes 2·vec·cemb − c2, exact ties to the smaller
+    * list id. One primitive loop per row inside whole-stage codegen;
+    * bit-identical to the array_max-over-structs form (NativeExprSpec). */
+  def argmaxL2(vec: Column, grp: Column, books: Map[Int, Seq[(Int, Seq[Double], Double)]]): Column =
+    call_function("vec_argmax_l2", vec, grp, typedLit(books))
+
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 

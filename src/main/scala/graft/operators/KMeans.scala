@@ -42,13 +42,6 @@ object KMeans {
 
   private type Centroids = Seq[(Int, Seq[Double])]
 
-  /** The engine-wide assignment tiebreak as ONE lexicographic argmax:
-    * array_max over struct(score, -list_id, list_id) — highest score wins,
-    * exact-score ties go to the smallest list_id (identical to the former
-    * max_by(_, struct(sc, -list_id)), including NaN-sorts-greatest). */
-  private[graft] def bestBy(entries: Seq[Column]): Column =
-    array_max(array(entries: _*))
-
   /** Left-to-right Σx², the driver-side twin of the native `vec_dot(a, a)`
     * accumulation — same op sequence, so a norm computed here is
     * bit-identical to one computed by [[vectors.norm]] on executors. */
@@ -59,16 +52,19 @@ object KMeans {
     * detsum means. posexplode + one narrow aggregate beats k·dim aggregate
     * expressions, which overflow codegen limits; the (list_id, pos) partial
     * sums collapse map-side, so only k·dim rows per partition cross the
-    * wire. Returns list_id -> new centroid (empty lists absent). */
-  private def round(vecs: DataFrame, grpCols: Seq[String], bestList: Column): DataFrame = {
+    * wire — the round's ONE shuffle. The k·dim means come back to the
+    * driver, which orders each list's dimensions by `pos`. Returns
+    * (grp values, list_id) -> new centroid (empty lists absent). */
+  private def round(vecs: DataFrame, grpCols: Seq[String], bestList: Column): Map[(Seq[Int], Int), Seq[Double]] = {
     val g = grpCols.map(col)
+    val ng = grpCols.size
     vecs
       .select(g ++ Seq(bestList.as("list_id"), posexplode(col("emb")).as(Seq("pos", "x"))): _*)
       .groupBy(g ++ Seq(col("list_id"), col("pos")): _*)
       .agg((detsum.sumDet(col("x"), 9) / count(lit(1))).as("cx"))
-      .groupBy(g :+ col("list_id"): _*)
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-        t => t.getField("cx")).as("cnew"))
+      .collect()
+      .groupBy(r => ((0 until ng).map(r.getInt), r.getInt(ng)))
+      .map { case (key, rs) => key -> rs.sortBy(_.getInt(ng + 1)).map(_.getDouble(ng + 2)).toSeq }
   }
 
   /** vecs: (id: long, emb: array<double>, nrm: double).
@@ -86,14 +82,13 @@ object KMeans {
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
     for (_ <- 1 to rounds) {
       // fused native argmax (vec_argmax_cos): bit-identical to the former
-      // bestBy struct form (parity spec-pinned), but one k×dim primitive
+      // struct-argmax form (parity spec-pinned), but one k×dim primitive
       // loop inside codegen — the struct tree fell off whole-stage codegen
       // past k≈30 and timed out the 100× (k=102) build
       val best = vectors.argmaxCos(col("emb"), col("nrm"),
         cent.map { case (l, ce) => (l, ce, math.sqrt(sqSum(ce))) })
       val updated = round(vecs, Nil, best)
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-      cent = cent.map { case (l, old) => (l, updated.getOrElse(l, old)) }
+      cent = cent.map { case (l, old) => (l, updated.getOrElse((Nil, l), old)) }
     }
     cent.toDF("list_id", "cemb")
   }
@@ -101,12 +96,13 @@ object KMeans {
   /** GROUPED k-means: trains an independent codebook per `grp` value in ONE
     * distributed pass — the shape a product-quantization trainer needs (8
     * subspace codebooks from one scan, not 8 sequential fits). Metric is
-    * squared-L2 (argmin distance ≡ argmax 2·x·c − ‖c‖², so the per-row score
-    * reuses the dot kernel and the x² constant cancels). The per-grp
-    * codebooks enter the scan as ONE nested map literal — the row's own
-    * grp's entries resolve via element_at, so every grp still assigns in
-    * the same single pass. Seeding follows the fit convention with the
-    * grouped twist: per grp, the k smallest [[vectors.hash60]] of
+    * squared-L2 (argmin distance ≡ argmax 2·x·c − ‖c‖², so the x² constant
+    * cancels). The per-grp codebooks enter the scan as ONE literal folded
+    * into the fused `vec_argmax_l2` kernel ([[vectors.argmaxL2]] — the
+    * same convention [[graft.queries.VecIndex.encodeAgainst]] encodes
+    * with), which picks the row's own grp's codebook, so every grp still
+    * assigns in the same single pass. Seeding follows the fit convention
+    * with the grouped twist: per grp, the k smallest [[vectors.hash60]] of
     * "grp:id" (concat_ws — the DuckDB mirror is `grp || ':' || id`).
     *
     * vecs: (grp: int, id: long, emb: array<double>).
@@ -127,17 +123,8 @@ object KMeans {
         cent.groupBy(_._1).map { case (g, cs) =>
           g -> cs.sortBy(_._2).map { case (_, l, ce) => (l, ce, sqSum(ce)) }
         }
-      val entries = element_at(typedLit(byGrp), col("grp"))
-      // aliases are stripped inside HOF lambdas, so name the argmax
-      // result's fields by a positional cast before extracting
-      val scored = transform(entries, e => struct(
-        lit(2.0) * vectors.dot(col("emb"), e.getField("_2")) - e.getField("_3"),
-        -e.getField("_1"), e.getField("_1")))
-      val best = array_max(scored)
-        .cast("struct<sc:double,neg:int,l:int>").getField("l")
-      val updated = round(vecs, Seq("grp"), best)
-        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
-      cent = cent.map { case (g, l, old) => (g, l, updated.getOrElse((g, l), old)) }
+      val updated = round(vecs, Seq("grp"), vectors.argmaxL2(col("emb"), col("grp"), byGrp))
+      cent = cent.map { case (g, l, old) => (g, l, updated.getOrElse((Seq(g), l), old)) }
     }
     cent.toDF("grp", "list_id", "cemb")
   }

@@ -34,6 +34,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CosArgmax.fromLiteral(exprs(0), exprs(1), exprs(2))
       }))
     e.injectFunction((
+      FunctionIdentifier("vec_argmax_l2"),
+      info("vec_argmax_l2", "vec_argmax_l2(vec, grp, books) - nearest code by squared L2 (score 2·x·c − ‖c‖² desc, id asc) in the row's group of a frozen codebook literal"),
+      (exprs: Seq[Expression]) => {
+        if (exprs.length != 3)
+          throw new IllegalArgumentException(
+            s"vec_argmax_l2 requires 3 arguments (vec, grp, books), got ${exprs.length}")
+        L2Argmax.fromLiteral(exprs(0), exprs(1), exprs(2))
+      }))
+    e.injectFunction((
       FunctionIdentifier("simhash60"),
       info("simhash60", "simhash60(tokens) - 60-bit md5-based SimHash of a string array"),
       (exprs: Seq[Expression]) => SimHash60(exprs(0))))

@@ -132,12 +132,13 @@ case class GeohashEnc(left: Expression, right: Expression, chars: Int) extends B
   * k×dim primitive loop that stays inside whole-stage codegen.
   *
   * Semantics are bit-identical to the struct-argmax form (NativeExprSpec
-  * pins parity against [[graft.operators.KMeans.bestBy]]):
+  * keeps it as the parity reference):
   *  - per-entry score = vec_dot(vec, cemb) / (nrm · cnrm), the identical
   *    left-to-right accumulation ([[NativeKernels.vecDot]]'s loop) and the
   *    identical single division;
   *  - ordering = Spark's double ordering (NaN greatest, -0.0 == 0.0),
-  *    ties to the smaller list_id — [[cmpD]] mirrors SQLOrderingUtil;
+  *    ties to the smaller list_id — [[NativeKernels.cmpDouble]] mirrors
+  *    SQLOrderingUtil;
   *  - the zero-norm contract (the VecOracle pin): a zero denominator
   *    RAISES under ANSI ([DIVIDE_BY_ZERO], captured at construction from
   *    the session conf) and under legacy mode ranks NULLS-LAST exactly
@@ -162,18 +163,6 @@ case class CosArgmax(
         s"vec_argmax_cos(array<double>, double, cents): got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  /** Spark's double comparison (SQLOrderingUtil semantics): -0.0 == 0.0,
-    * NaN greater than everything, NaN == NaN. */
-  @inline private def cmpD(a: Double, b: Double): Int =
-    if (a == b) 0
-    else if (a < b) -1
-    else if (a > b) 1
-    else { // at least one NaN
-      val an = java.lang.Double.isNaN(a)
-      val bn = java.lang.Double.isNaN(b)
-      if (an && bn) 0 else if (an) 1 else -1
-    }
-
   def kernel(vecA: ArrayData, nrm: Double): Int = {
     val e = vecA.toDoubleArray()
     var found = false
@@ -197,7 +186,7 @@ case class CosArgmax(
         val sc = s / denom
         // entries iterate in ascending list_id order, so strictly-greater
         // keeps the smaller id on exact ties — the (sc desc, -l) tiebreak
-        if (!found || cmpD(sc, bestSc) > 0) { found = true; bestSc = sc; bestL = listIds(i) }
+        if (!found || NativeKernels.cmpDouble(sc, bestSc) > 0) { found = true; bestSc = sc; bestL = listIds(i) }
       }
       i += 1
     }
@@ -241,6 +230,107 @@ object CosArgmax {
     CosArgmax(vec, nrm,
       order.map(ls).toArray, order.map(ce).toArray, order.map(cn).toArray,
       org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+  }
+}
+
+/** vec_argmax_l2(vec, grp, books): nearest code by squared L2 within the
+  * row's own group's FROZEN codebook — the product-quantization assignment
+  * step (grouped k-means training and encoding) as ONE fused kernel call,
+  * the [[CosArgmax]] pattern applied to the L2 metric.
+  *
+  * `books` is a literal map<grp, array<struct<list_id, cemb, c2>>>, folded
+  * at construction into per-group primitive tables (ascending list_id).
+  * Semantics are bit-identical to the struct-argmax form it replaced
+  * (`array_max` over `struct(2·vec_dot(vec, cemb) − c2, −list_id, list_id)`;
+  * NativeExprSpec keeps that form as the parity reference):
+  *  - per-entry score = 2.0 · dot − c2, the dot accumulated left-to-right
+  *    exactly like [[NativeKernels.vecDot]];
+  *  - ordering = Spark's double ordering (NaN greatest), exact ties to the
+  *    smaller list_id;
+  *  - a null vector or group is null; a group with no codebook is null. */
+case class L2Argmax(
+    left: Expression,
+    right: Expression,
+    grps: Array[Int],
+    listIds: Array[Array[Int]],
+    cents: Array[Array[Array[Double]]],
+    c2s: Array[Array[Double]]) extends BinaryExpression {
+  override def prettyName: String = "vec_argmax_l2"
+  // the folded codebooks are primitive arrays: keep them out of plan strings
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(DoubleType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+    case _ =>
+      TypeCheckResult.TypeCheckFailure(
+        s"vec_argmax_l2(array<double>, int, books): got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  }
+
+  /** Index of `grp`'s codebook, or -1 when it has none. */
+  def slot(grp: Int): Int = {
+    val i = java.util.Arrays.binarySearch(grps, grp)
+    if (i >= 0) i else -1
+  }
+
+  def kernel(vecA: ArrayData, slot: Int): Int = {
+    val e = vecA.toDoubleArray()
+    val ids = listIds(slot)
+    val cs = cents(slot)
+    val c2 = c2s(slot)
+    var bestSc = 0.0
+    var bestL = 0
+    var i = 0
+    while (i < ids.length) {
+      val c = cs(i)
+      val n = math.min(e.length, c.length)
+      var s = 0.0d
+      var j = 0
+      while (j < n) { s += e(j) * c(j); j += 1 } // vecDot's exact fold
+      val sc = 2.0 * s - c2(i)
+      // ascending list_id, so strictly-greater keeps the smaller id on ties
+      if (i == 0 || NativeKernels.cmpDouble(sc, bestSc) > 0) { bestSc = sc; bestL = ids(i) }
+      i += 1
+    }
+    bestL
+  }
+
+  override def nullSafeEval(v: Any, g: Any): Any = {
+    val i = slot(g.asInstanceOf[Int])
+    if (i < 0) null else java.lang.Integer.valueOf(kernel(v.asInstanceOf[ArrayData], i))
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("l2Argmax", this, classOf[L2Argmax].getName)
+    val i = ctx.freshName("slot")
+    nullSafeCodeGen(ctx, ev, (v, g) =>
+      s"""int $i = $ref.slot($g);
+         |if ($i < 0) { ${ev.isNull} = true; } else { ${ev.value} = $ref.kernel($v, $i); }""".stripMargin)
+  }
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): L2Argmax =
+    copy(left = newLeft, right = newRight)
+}
+
+object L2Argmax {
+  /** Builder for the function registry: folds the foldable third argument
+    * (map<grp, array<struct<list_id, cemb, c2>>>) into per-group primitive
+    * tables, groups ascending and each codebook in ascending list_id. */
+  def fromLiteral(vec: Expression, grp: Expression, booksLit: Expression): L2Argmax = {
+    require(booksLit.foldable, "vec_argmax_l2 codebooks must be a literal")
+    val m = booksLit.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
+    val books = (0 until m.numElements()).map { i =>
+      val arr = m.valueArray().getArray(i)
+      val entries = (0 until arr.numElements()).map { j =>
+        val row = arr.getStruct(j, 3)
+        (row.getInt(0), row.getArray(1).toDoubleArray(), row.getDouble(2))
+      }.sortBy(_._1)
+      require(entries.nonEmpty, "vec_argmax_l2 needs at least one centroid per group")
+      m.keyArray().getInt(i) -> entries
+    }.sortBy(_._1)
+    L2Argmax(vec, grp,
+      books.map(_._1).toArray,
+      books.map(_._2.map(_._1).toArray).toArray,
+      books.map(_._2.map(_._2).toArray).toArray,
+      books.map(_._2.map(_._3).toArray).toArray)
   }
 }
 

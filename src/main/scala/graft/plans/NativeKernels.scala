@@ -224,6 +224,19 @@ object NativeKernels {
     new GenericArrayData(out)
   }
 
+  /** Spark's double comparison (SQLOrderingUtil semantics): -0.0 == 0.0,
+    * NaN greater than everything, NaN == NaN — the order `array_max` over
+    * score structs uses, shared by the fused argmax expressions. */
+  @inline def cmpDouble(a: Double, b: Double): Int =
+    if (a == b) 0
+    else if (a < b) -1
+    else if (a > b) 1
+    else { // at least one NaN
+      val an = java.lang.Double.isNaN(a)
+      val bn = java.lang.Double.isNaN(b)
+      if (an && bn) 0 else if (an) 1 else -1
+    }
+
   /** Double dot product, accumulating left-to-right exactly like the
     * `aggregate(zip_with(...))` fold — bit-identical to the DuckDB oracle's
     * left-associated term chain. */

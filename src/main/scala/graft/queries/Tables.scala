@@ -37,6 +37,20 @@ object Tables {
     try f finally spark.conf.set("spark.sql.shuffle.partitions", old)
   }
 
+  /** Run `f` with the calling thread's Spark job description set to
+    * `desc`, restoring the caller's description after — so an event log
+    * can attribute the jobs of concurrent builds (each on its own thread)
+    * to the artifact that ran them. */
+  def withJobDescription[T](spark: SparkSession, desc: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(desc)
+    try f finally sc.setLocalProperty(JobDescription, prev)
+  }
+
+  /** The local property `SparkContext.setJobDescription` writes. */
+  private[graft] val JobDescription = "spark.job.description"
+
   /** Collect the (coordinator-sized: top-N / final-agg) `result` to the
     * driver, then SYNCHRONOUSLY free `sketch`'s localCheckpoint blocks —
     * deterministic release, no reliance on GC + ContextCleaner timing. The

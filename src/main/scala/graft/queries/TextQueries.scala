@@ -140,7 +140,7 @@ object TextQueries {
     // checkpoint storage and every consumer's broadcast is literal-fed.
     // Keys stay caller-chosen: every existing key is 1:1 with its raw
     // frame, so spec corpora (planted-signal tests) memoize separately.
-    artifact(qualityModelCache, raw.sparkSession, ckptKey) {
+    artifact(qualityModelCache, "text.quality_model", raw.sparkSession, ckptKey) {
       import graft.functions.detlog
       val grams = qualityGrams(raw)
       val counts = grams.filter(col("doc_id") % 5 =!= 0)
@@ -219,7 +219,7 @@ object TextQueries {
   private val rankedVocabCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
   private[graft] def rankedVocab(s: SparkSession, d: String): DataFrame =
-    artifact(rankedVocabCache, s, d) {
+    artifact(rankedVocabCache, "text.ranked_vocab", s, d) {
       import org.apache.spark.sql.expressions.Window
       dfVocab(s, d)
         .filter(length(col("term")) >= 4)
@@ -244,7 +244,7 @@ object TextQueries {
   private val dfVocabCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
   private def dfVocab(s: SparkSession, d: String): DataFrame =
-    artifact(dfVocabCache, s, d) {
+    artifact(dfVocabCache, "text.vocab", s, d) {
       tfArtifact(s, d)
         .groupBy(col("tok")).agg(count(lit(1)).as("df"))
         .select(col("tok").as("term"), col("df"))
@@ -259,7 +259,7 @@ object TextQueries {
   private val titleVocabCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
   private def titleVocab(s: SparkSession, d: String): DataFrame =
-    artifact(titleVocabCache, s, d) {
+    artifact(titleVocabCache, "text.title_vocab", s, d) {
       tfArtifact(s, d).filter(col("tf_t") > 0)
         .groupBy(col("tok")).agg(count(lit(1)).as("df"))
         .select(col("tok").as("term"), col("df"))
@@ -275,7 +275,7 @@ object TextQueries {
   private val topBigramCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
   private def topBigram(s: SparkSession, d: String): DataFrame =
-    artifact(topBigramCache, s, d) {
+    artifact(topBigramCache, "text.top_bigram", s, d) {
       docsAnalyzed(s, d)
         .select(explode(text.shingles(col("toks"), 2)).as("g"))
         .groupBy(col("g")).agg(count(lit(1)).as("cnt"))
@@ -752,17 +752,19 @@ object TextQueries {
     * long-lived JVM that restarts sessions (test suites, repeated
     * GraftSession.local()) from pinning dead sessions' driver heap. */
   private def artifact[T](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), ArtifactSlot[T]],
-      s: SparkSession, d: String)(build: => T): T = {
+      kind: String, s: SparkSession, d: String)(build: => T): T = {
     cache.keysIterator.foreach { k =>
       if (k._1.sparkContext.isStopped) cache.remove(k)
     }
-    cache.getOrElseUpdate((s, d), new ArtifactSlot(() => build)).value
+    // the build's jobs carry `artifact:<kind>` as their description
+    cache.getOrElseUpdate((s, d),
+      new ArtifactSlot(() => Tables.withJobDescription(s, s"artifact:$kind")(build))).value
   }
 
   private val analyzedCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
   private[graft] def docsAnalyzed(s: SparkSession, d: String): DataFrame =
-    artifact(analyzedCache, s, d) {
+    artifact(analyzedCache, "text.analyzed", s, d) {
       // repartition BEFORE the checkpoint: a single-file corpus would
       // otherwise materialize as ONE partition and serialize every
       // downstream explode on one core (the q72 scan-spreading lesson,
@@ -781,7 +783,7 @@ object TextQueries {
   private val tfCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
   private def tfArtifact(s: SparkSession, d: String): DataFrame =
-    artifact(tfCache, s, d) {
+    artifact(tfCache, "text.tf", s, d) {
       docsAnalyzed(s, d)
         .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
         .groupBy(col("doc_id"), col("tok"))
@@ -816,19 +818,35 @@ object TextQueries {
   private val postingsCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[Postings]]
   private[graft] def postings(s: SparkSession, d: String): Postings =
-    artifact(postingsCache, s, d) {
+    artifact(postingsCache, "text.postings", s, d) {
       val g = tfArtifact(s, d)
       // per-doc field lengths: map-side over the doc_id-clustered artifact
       val dl = g.groupBy(col("doc_id"))
         .agg(sum(col("tf_b")).as("dl_b"), sum(col("tf_t")).as("dl_t"))
         .withColumn("dl_l", col("dl_b") - col("dl_t"))
-      // build-time stats below aggregate only docs PRESENT in the tf
-      // artifact, while the scan forms they replaced (and the unchanged
-      // DuckDB oracles) aggregate over every doc — identical ONLY under
-      // the no-zero-token-docs invariant. Assert it at build so a future
-      // corpus with an empty text field fails LOUDLY here instead of
-      // silently shifting n_docs/avgdl for every scored request.
-      val nDl = dl.count()
+      // ONE aggregate over dl: the zero-token check's doc count and the
+      // n_docs/avgdl of all three fields (count/sum over a field's doc set
+      // through when(), the same integers a filter-then-aggregate gives)
+      def field(name: String, dlCol: String, in: Column): Seq[Column] = Seq(
+        count(when(in, 1)).as(s"n_$name"),
+        (sum(when(in, col(dlCol))).cast("double") / count(when(in, 1))).as(s"avgdl_$name"))
+      val st = dl.agg(count(lit(1)).as("n_dl"),
+        field("body", "dl_b", lit(true)) ++
+          // the title field's doc set = docs with ≥1 first-8 token (the
+          // gT = g.filter(tf_t > 0) contract)
+          field("title", "dl_t", col("dl_t") > 0) ++
+          // the TAIL field (tokens 9+, q86d's head/tail split): per-doc
+          // length = dl_b − dl_t, doc set = docs with ≥1 token past the
+          // first 8 (Σ(tf_b − tf_t) > 0 ⟺ ∃ term with tf_b > tf_t, since
+          // tf_t ≤ tf_b per term)
+          field("tail", "dl_l", col("dl_l") > 0): _*).head()
+      // the stats aggregate only docs PRESENT in the tf artifact, while the
+      // scan forms they replaced (and the unchanged DuckDB oracles)
+      // aggregate over every doc — identical ONLY under the
+      // no-zero-token-docs invariant. Assert it at build so a future corpus
+      // with an empty text field fails LOUDLY here instead of silently
+      // shifting n_docs/avgdl for every scored request.
+      val nDl = st.getAs[Long]("n_dl")
       val nDocs = docsAnalyzed(s, d).count()
       require(nDl == nDocs,
         s"postings build: $nDocs analyzed docs but only $nDl with tokens — " +
@@ -836,24 +854,12 @@ object TextQueries {
       val frame = g.join(dl, Seq("doc_id"))
         .repartition(col("tok"))
         .localCheckpoint(true)
-      def statsOf(dlCol: String, pred: Column): DataFrame = {
-        val row = dl.filter(pred).agg(
-          count(lit(1)).as("n_docs"),
-          (sum(col(dlCol)).cast("double") / count(lit(1))).as("avgdl")).head()
+      def statsOf(name: String): DataFrame =
         s.range(1).select(
-          lit(row.getAs[Long]("n_docs")).as("n_docs"),
-          lit(row.getAs[Double]("avgdl")).as("avgdl"))
-      }
-      Postings(frame,
-        statsBody = statsOf("dl_b", lit(true)),
-        // the title field's doc set = docs with ≥1 first-8 token (the
-        // gT = g.filter(tf_t > 0) contract)
-        statsTitle = statsOf("dl_t", col("dl_t") > 0),
-        // the TAIL field (tokens 9+, q86d's head/tail split): per-doc
-        // length = dl_b − dl_t, doc set = docs with ≥1 token past the
-        // first 8 (Σ(tf_b − tf_t) > 0 ⟺ ∃ term with tf_b > tf_t, since
-        // tf_t ≤ tf_b per term)
-        statsTail = statsOf("dl_l", col("dl_l") > 0))
+          lit(st.getAs[Long](s"n_$name")).as("n_docs"),
+          lit(st.getAs[Double](s"avgdl_$name")).as("avgdl"))
+      Postings(frame, statsBody = statsOf("body"), statsTitle = statsOf("title"),
+        statsTail = statsOf("tail"))
     }
 
   /** Persist the ENTIRE text index of dataset `d` as parquet tables —
@@ -874,7 +880,7 @@ object TextQueries {
     // tiny files + commits per save), while at warehouse scale the SAME
     // hint yields advisory-sized files. Pure layout: loadIndex reads the
     // identical rows, TextIndexSpec pins byte-identical scores.
-    def w(df: DataFrame, sub: String, by: Seq[String] = Nil): Unit =
+    def w(df: DataFrame, sub: String, by: Seq[String]): Unit =
       df.hint("rebalance", by.map(col): _*).write.mode("overwrite").parquet(s"$dir/$sub")
     // keyed rebalance keeps the artifact's clustering (doc-clustered
     // analyzed/tf, term-clustered postings) in the saved layout.
@@ -885,20 +891,28 @@ object TextQueries {
     // of serializing ten job tails (the Bench.buildIndex discipline).
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.DurationInt
+    buildTextIndex(s, d)
     implicit val ec: ExecutionContext = ExecutionContext.global
+    indexTables(s, d).map { case (sub, df, by) => Future(w(df, sub, by)) }
+      .foreach(Await.result(_, 10.minutes))
+  }
+
+  /** Every table of the text index as (name, frame, clustering columns) —
+    * the set [[saveIndex]] writes and [[buildTextIndex]] builds. Accessing
+    * an unbuilt artifact builds it here, one after another. */
+  private[graft] def indexTables(s: SparkSession, d: String): Seq[(String, DataFrame, Seq[String])] = {
     val art = postings(s, d)
-    val writes = Seq(
-      () => w(docsAnalyzed(s, d), "analyzed", Seq("doc_id")),
-      () => w(tfArtifact(s, d), "tf", Seq("doc_id")),
-      () => w(art.frame, "postings", Seq("tok")),
-      () => w(art.statsBody, "stats_body"),
-      () => w(art.statsTitle, "stats_title"),
-      () => w(art.statsTail, "stats_tail"),
-      () => w(dfVocab(s, d), "vocab"),
-      () => w(rankedVocab(s, d), "ranked_vocab"),
-      () => w(titleVocab(s, d), "title_vocab"),
-      () => w(topBigram(s, d), "top_bigram")).map(f => Future(f()))
-    writes.foreach(Await.result(_, 10.minutes))
+    Seq(
+      ("analyzed", docsAnalyzed(s, d), Seq("doc_id")),
+      ("tf", tfArtifact(s, d), Seq("doc_id")),
+      ("postings", art.frame, Seq("tok")),
+      ("stats_body", art.statsBody, Nil),
+      ("stats_title", art.statsTitle, Nil),
+      ("stats_tail", art.statsTail, Nil),
+      ("vocab", dfVocab(s, d), Nil),
+      ("ranked_vocab", rankedVocab(s, d), Nil),
+      ("title_vocab", titleVocab(s, d), Nil),
+      ("top_bigram", topBigram(s, d), Nil))
   }
 
   /** Install a saved text index under dataset key `key`: every artifact
@@ -934,7 +948,7 @@ object TextQueries {
   private val loadedKeyCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[String]]
   private def loadedIndexKey(s: SparkSession, d: String): String =
-    artifact(loadedKeyCache, s, d) {
+    artifact(loadedKeyCache, "text.loaded_index", s, d) {
       val dir = IngestQueries.scratchDir("graft_text_index_srv").toString
       saveIndex(s, d, dir)
       val key = s"$dir::loaded"
@@ -967,9 +981,18 @@ object TextQueries {
     * ran. Bench times this so the index-build cost is a visible record row
     * instead of hiding in the untimed warmup. */
   private[graft] def buildTextIndex(s: SparkSession, d: String): Unit = {
-    docsAnalyzed(s, d); tfArtifact(s, d); postings(s, d)
-    dfVocab(s, d); rankedVocab(s, d); titleVocab(s, d); topBigram(s, d)
-    ()
+    tfArtifact(s, d) // builds docsAnalyzed on the way
+    // Everything else reads only tf or the analyzed corpus, so the four
+    // remaining builds run concurrently: one build's small jobs fill the
+    // cores another's tail leaves idle. The pool's threads start here and
+    // so inherit the caller's Spark local properties.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Seq(Future(postings(s, d)), Future(rankedVocab(s, d)), Future(titleVocab(s, d)),
+        Future(topBigram(s, d))).foreach(Await.result(_, Duration.Inf))
+    finally pool.shutdown()
   }
 
   /** The front door's [[QueryDsl.Relevance]] — every scorer routes through

@@ -103,7 +103,7 @@ object VecIndex {
       .withColumn("nrm", vectors.norm(col("emb")))
 
   /** (id, emb) → one row per (grp, id, subspace slice). */
-  private[queries] def subvectors(df: DataFrame): DataFrame =
+  private[graft] def subvectors(df: DataFrame): DataFrame =
     df.select(col("id"), posexplode(
       transform(sequence(lit(0), lit(PqSubs - 1)),
         i => slice(col("emb"), i * PqSubDim + 1, lit(PqSubDim)))).as(Seq("grp", "emb")))
@@ -127,11 +127,12 @@ object VecIndex {
 
   /** PQ-encode subvectors against FROZEN codebooks — shared by build and
     * [[append]]. Codebooks are coordinator-sized literals (8 grps × 16
-    * codes), inlined as ONE nested map literal keyed by grp — encoding is a
-    * pure projection of the subvector scan (the former broadcast join +
-    * per-(grp,id) max_by shuffled 8 rows per vector). The chosen code's
-    * centroid rides in the argmax struct, so the reconstruction error needs
-    * no second lookup. */
+    * codes) folded into the fused `vec_argmax_l2` kernel — the assignment
+    * convention [[graft.operators.KMeans.fitGrouped]] trains with, so
+    * encoding is a pure projection of the subvector scan (the former
+    * broadcast join + per-(grp,id) max_by shuffled 8 rows per vector). The
+    * chosen code's c2 and centroid come from one literal (grp, code)
+    * lookup for the reconstruction error. */
   private[graft] def encodeAgainst(subv: DataFrame, codebooks: DataFrame): DataFrame = {
     val cb: Map[Int, Seq[(Int, Seq[Double], Double)]] = codebooks
       .select(col("grp"), col("list_id"), col("cemb"), col("c2")).collect()
@@ -139,34 +140,32 @@ object VecIndex {
       .groupBy(_._1).map { case (g, rows) =>
         g -> rows.sortBy(_._2).map(t => (t._2, t._3, t._4)).toSeq
       }
-    val entries = element_at(typedLit(cb), col("grp"))
-    // aliases are stripped inside HOF lambdas, so name the argmax result's
-    // fields by a positional cast before extracting
-    val best = array_max(transform(entries, e => struct(
-      lit(2.0) * vectors.dot(col("emb"), e.getField("_2")) - e.getField("_3"),
-      -e.getField("_1"),
-      e.getField("_1"), e.getField("_3"), e.getField("_2"))))
-      .cast("struct<sc:double,neg:int,code:int,c2:double,cemb:array<double>>")
-    // Materialize the argmax ONCE: the output references it three times
-    // (code, c2, and the error lambda), and HOFs are CodegenFallback with no
-    // common-subexpression elimination — inlining `best` would re-run the
-    // 16-entry scoring per reference. CollapseProject keeps the two Projects
-    // apart (the producer is non-cheap and multiply referenced), so the
-    // inner projection pins single evaluation.
-    subv.select(col("id"), col("grp"), col("emb"), best.as("best"))
+    val entry = element_at(
+      element_at(typedLit(cb.map { case (g, es) => g -> es.map { case (l, ce, c2) => l -> (c2, ce) }.toMap }),
+        col("grp")),
+      col("code"))
+    // The argmax runs in its own Project: the output references `code`
+    // twice (c2 and the error lambda), and CollapseProject keeps a
+    // non-cheap, multiply referenced producer apart, so the kernel
+    // evaluates once per row.
+    subv.select(col("id"), col("grp"), col("emb"),
+        vectors.argmaxL2(col("emb"), col("grp"), cb).as("code"))
       .select(
-        col("id").as("vec_id"), col("grp"),
-        col("best").getField("code").as("code"), col("best").getField("c2").as("c2"),
+        col("id").as("vec_id"), col("grp"), col("code"), entry.getField("_1").as("c2"),
         detsum.roundDet(
           aggregate(
-            zip_with(col("emb"), col("best").getField("cemb"), (a, b) => (a - b) * (a - b)),
+            zip_with(col("emb"), entry.getField("_2"), (a, b) => (a - b) * (a - b)),
             lit(0.0), (acc, x) => acc + x) / PqSubDim, 9).as("sub_sq_err"))
   }
 
   def coarse(s: SparkSession, d: String): Coarse = live(coarseCache, d)(_.lists) {
+    Tables.withJobDescription(s, "artifact:vec.coarse")(buildCoarse(s, d))
+  }
+
+  private def buildCoarse(s: SparkSession, d: String): Coarse = {
     val c = corpus(s, d).localCheckpoint(true)
-    // nlists from the corpus size (the count is a metadata read off the
-    // materialized checkpoint — no extra scan)
+    // nlists from the corpus size: the count re-reads the materialized
+    // checkpoint (2 jobs, no parquet scan)
     val k = nlistsFor(c.count())
     val cent = graft.operators.KMeans
       .fit(c.select(col("vec_id").as("id"), col("emb"), col("nrm")), k = k, rounds = CoarseRounds)
@@ -177,6 +176,10 @@ object VecIndex {
   }
 
   def pq(s: SparkSession, d: String): Pq = live(pqCache, d)(_.codes) {
+    Tables.withJobDescription(s, "artifact:vec.pq")(buildPq(s, d))
+  }
+
+  private def buildPq(s: SparkSession, d: String): Pq = {
     val subv = subvectors(corpus(s, d).select(col("vec_id").as("id"), col("emb")))
       .localCheckpoint(true) // reused by train AND encode
     val codebooks = graft.operators.KMeans.fitGrouped(subv, k = PqK, rounds = PqRounds)

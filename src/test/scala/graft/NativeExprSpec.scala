@@ -12,6 +12,11 @@ class NativeExprSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.builder("4").getOrCreate()
 
+  /** The struct-argmax form vec_argmax_cos replaced — the parity
+    * reference: array_max over struct(score, -list_id, list_id), highest
+    * score wins, exact ties to the smallest list_id, NaN sorts greatest. */
+  private def bestBy(entries: Seq[org.apache.spark.sql.Column]) = array_max(array(entries: _*))
+
   test("VecDot is bit-identical to the aggregate/zip_with fold") {
     val e = queries.Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id"), vectors.toDoubleArr(col("embedding")).as("emb"))
@@ -36,7 +41,7 @@ class NativeExprSpec extends AnyFunSuite {
         val ce = r.getSeq[Double](1)
         (i + 1, ce, math.sqrt(ce.foldLeft(0.0)((a, x) => a + x * x)))
       }.toSeq
-    val structForm = operators.KMeans.bestBy(cents.map { case (l, ce, cn) =>
+    val structForm = bestBy(cents.map { case (l, ce, cn) =>
       org.apache.spark.sql.functions.struct(
         (vectors.dot(col("emb"), org.apache.spark.sql.functions.typedLit(ce)) / (col("nrm") * lit(cn))).as("sc"),
         lit(-l).as("neg"), lit(l).as("l"))
@@ -64,7 +69,7 @@ class NativeExprSpec extends AnyFunSuite {
       (9, Seq(1.0, 0.0, 0.0), 1.0))
     val df = Seq((1L, Seq(0.3, -0.7, 0.2)), (2L, Seq(-0.3, 0.7, -0.2)), (3L, Seq(0.9, 0.1, 0.1)))
       .toDF("id", "emb").withColumn("nrm", vectors.norm(col("emb")))
-    val structForm = operators.KMeans.bestBy(cents.sortBy(_._1).map { case (l, ce, cn) =>
+    val structForm = bestBy(cents.sortBy(_._1).map { case (l, ce, cn) =>
       org.apache.spark.sql.functions.struct(
         (vectors.dot(col("emb"), org.apache.spark.sql.functions.typedLit(ce)) / (col("nrm") * lit(cn))).as("sc"),
         lit(-l).as("neg"), lit(l).as("l"))
@@ -100,6 +105,62 @@ class NativeExprSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.ansi.enabled", ansiWas)
   }
 
+  /** The struct-argmax form vec_argmax_l2 replaced — the parity
+    * reference: array_max over struct(2·x·c − c2, −list_id, list_id) of
+    * the row's group's codebook entries. */
+  private def l2StructForm(books: Map[Int, Seq[(Int, Seq[Double], Double)]]) = {
+    val entries = element_at(typedLit(books), col("grp"))
+    array_max(transform(entries, e => struct(
+      lit(2.0) * vectors.dot(col("emb"), e.getField("_2")) - e.getField("_3"),
+      -e.getField("_1"), e.getField("_1"))))
+      .cast("struct<sc:double,neg:int,l:int>").getField("l")
+  }
+
+  test("native L2Argmax equals the struct-argmax form on real PQ subvectors") {
+    val subv = queries.VecIndex.subvectors(
+      queries.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+        .select(col("vec_id").as("id"), vectors.toDoubleArr(col("embedding")).as("emb")))
+    // codebooks = 16 real subvectors per group (deterministic pick), ids
+    // listed out of order to exercise the builder's ascending-id sort;
+    // the centroid rows themselves are among the encoded rows
+    val books = subv.filter(col("id") % 7 === 0).collect()
+      .groupBy(_.getInt(0)).map { case (g, rs) =>
+        g -> rs.sortBy(_.getLong(1)).take(16).zipWithIndex.map { case (r, i) =>
+          val ce = r.getSeq[Double](2)
+          (16 - i, ce, ce.foldLeft(0.0)((a, x) => a + x * x))
+        }.toSeq
+      }
+    assert(books.size == 8)
+    val cmp = subv.select(
+      vectors.argmaxL2(col("emb"), col("grp"), books).as("native"),
+      l2StructForm(books).as("structform"))
+    assert(cmp.count() > 0)
+    assert(cmp.filter(!(col("native") <=> col("structform"))).count() == 0,
+      "fused L2 argmax diverged from the struct-argmax reference")
+  }
+
+  test("L2Argmax edge contract: exact ties to the smaller id, NaN ranks greatest, null vector is null") {
+    import spark.implicits._
+    // grp 0: ids 7 and 3 hold the SAME centroid — an exact tie; grp 1: a
+    // NaN-component centroid scores NaN, which array_max ranks above every
+    // finite score, and two NaN entries tie to the smaller id
+    val books = Map(
+      0 -> Seq((7, Seq(1.0, 2.0), 5.0), (3, Seq(1.0, 2.0), 5.0), (5, Seq(-1.0, 0.0), 1.0)),
+      1 -> Seq((4, Seq(Double.NaN, 0.0), 0.0), (2, Seq(1.0, 1.0), 2.0), (9, Seq(0.0, Double.NaN), 0.0)))
+    val df = Seq[(Long, Int, Seq[Double])](
+      (1L, 0, Seq(1.0, 2.0)), (2L, 0, Seq(-3.0, 0.5)), (3L, 1, Seq(1.0, 1.0)), (4L, 1, null))
+      .toDF("id", "grp", "emb")
+    val rows = df.select(col("id"),
+      vectors.argmaxL2(col("emb"), col("grp"), books).as("native"),
+      l2StructForm(books).as("structform")).collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(rows(1L)._1.contains(3), "an exact tie must go to the smaller list id")
+    assert(rows(2L)._1.contains(5))
+    assert(rows(3L)._1.contains(4), "a NaN score ranks greatest; NaN ties go to the smaller id")
+    Seq(1L, 2L, 3L).foreach(id => assert(rows(id)._1 == rows(id)._2, s"id $id: kernel != struct form"))
+    assert(rows(4L)._1.isEmpty, "a null vector must give null")
+  }
+
   test("native SimHash60 equals the 60-fold HOF form") {
     val d = queries.Tables(spark, "/root/testdata/sf0.001", "documents")
       .withColumn("toks", text.tokens(col("text")))
@@ -131,9 +192,13 @@ class NativeExprSpec extends AnyFunSuite {
     val r = spark.sql(
       "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
         "simhash60(array('a','b')) AS s, " +
-        "minhash_sig(array('a','b','c'), 4) AS m").collect()(0)
+        "minhash_sig(array('a','b','c'), 4) AS m, " +
+        "vec_argmax_l2(array(1.0d, 0.0d), 0, map(0, array(" +
+        "named_struct('l', 1, 'c', array(0.0d, 1.0d), 'c2', 1.0d), " +
+        "named_struct('l', 2, 'c', array(1.0d, 0.0d), 'c2', 1.0d)))) AS a").collect()(0)
     assert(r.getDouble(0) == 11.0)
     assert(r.getSeq[Long](2).size == 4)
+    assert(r.getInt(3) == 2)
   }
 
   test("int128_sum: bit-identical to the decimal detsum path on real data and adversarial layouts") {

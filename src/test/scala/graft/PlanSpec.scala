@@ -185,11 +185,12 @@ class PlanSpec extends AnyFunSuite {
       .toDF("grp", "list_id", "cemb", "c2")
     val opt = queries.VecIndex.encodeAgainst(subv, cbs)
       .queryExecution.optimizedPlan.toString
-    // three consumers (code, c2, error lambda) must share ONE argmax: HOFs
-    // are CodegenFallback with no CSE, so CollapseProject folding the inner
-    // Project away would re-run the full codebook scoring per reference
-    assert("array_max".r.findAllIn(opt).size == 1,
+    // two consumers (c2 and the error lambda, a CodegenFallback HOF with no
+    // CSE) read the chosen code: CollapseProject folding the inner Project
+    // away would re-run the full codebook scoring per reference
+    assert("vec_argmax_l2".r.findAllIn(opt).size == 1,
       s"argmax must be materialized exactly once:\n$opt")
+    assert(!opt.contains("array_max"), s"the argmax must be the fused kernel:\n$opt")
   }
 
   test("q50g: conversation labeling broadcasts the top-N set; decoded flows never sort-merge") {

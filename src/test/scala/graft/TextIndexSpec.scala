@@ -21,6 +21,30 @@ class TextIndexSpec extends AnyFunSuite {
       case v => String.valueOf(v)
     }.mkString("|")).toSet
 
+  private def avgdlBits(df: org.apache.spark.sql.DataFrame): Long =
+    java.lang.Double.doubleToLongBits(df.collect()(0).getAs[Double]("avgdl"))
+
+  test("the concurrent buildTextIndex builds the same rows as sequential accessor calls") {
+    def snapshot() = queries.TextQueries.indexTables(spark, sf).map { case (name, df, _) =>
+      name -> (rowsOf(df), if (name.startsWith("stats_")) Some(avgdlBits(df)) else None)
+    }
+    // sequential: indexTables' accessors build each artifact in turn
+    queries.TextQueries.resetTextIndex(spark, sf)
+    val sequential = snapshot()
+    // concurrent: buildTextIndex builds, indexTables only reads
+    queries.TextQueries.resetTextIndex(spark, sf)
+    queries.TextQueries.buildTextIndex(spark, sf)
+    val concurrent = snapshot()
+    assert(sequential.map(_._1) == concurrent.map(_._1))
+    assert(sequential.size == 10)
+    sequential.zip(concurrent).foreach { case ((name, (rows, bits)), (_, (cRows, cBits))) =>
+      assert(rows.nonEmpty, s"$name is empty")
+      assert(cRows == rows, s"$name rows differ between concurrent and sequential builds")
+      // bit-exact avgdl — BM25 byte-identity rests on it
+      assert(cBits == bits, s"$name avgdl bits differ")
+    }
+  }
+
   test("the saved index round-trips byte-identically and serves probes with zero build jobs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_index_spec").toString
     queries.TextQueries.saveIndex(spark, sf, dir)
