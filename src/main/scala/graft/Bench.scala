@@ -157,15 +157,10 @@ object Bench {
     * ONE definition — [[graft.tools.BenchIndex]] times this same build, so
     * the isolated reproduction can never drift from what the bench
     * reports. */
-  private[graft] def buildIndex(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.DurationInt
-    val halves = Seq(
-      Future(queries.VecIndex.coarse(spark, sfDir).lists.count()),
-      Future(queries.VecIndex.pq(spark, sfDir).codes.count()))
-    halves.foreach(Await.result(_, 10.minutes))
-  }
+  private[graft] def buildIndex(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
+    queries.Artifacts.concurrently(
+      () => queries.VecIndex.coarse(spark, sfDir).lists.count(),
+      () => queries.VecIndex.pq(spark, sfDir).codes.count())
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Artifacts
+
 /** Byte-pair-encoding tokenizer TRAINING and encoding, distributed
   * (Sennrich et al. 2016, "Neural Machine Translation of Rare Words with
   * Subword Units" — the public BPE algorithm every modern LLM tokenizer
@@ -136,23 +138,20 @@ object Bpe {
       .toDF("doc_id", "subwords")
   }
 
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Merge]]
-
   /** Train-once model per dataset (the tokenizer-artifact shape: a
     * tokenizer is trained once and shipped with the pipeline). */
   def model(spark: SparkSession, d: String, nMerges: Int): Seq[Merge] =
-    modelCache.getOrElseUpdate(s"$d#$nMerges", {
+    Artifacts(spark, d, s"bpe.merges#$nMerges") {
       val words = graft.queries.Tables(spark, d, "documents")
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("word"))
         .filter(length(col("word")) > 0)
         .groupBy(col("word"))
         .agg(count(lit(1)).as("freq"))
       train(words, nMerges)
-    })
+    }
 
   /** Test hook: drop trained models. */
-  def reset(): Unit = modelCache.clear()
+  def reset(): Unit = Artifacts.dropAll("bpe.")
 
   // ------------------------------------------------- persistence ----------
   // The tokenizer-artifact shape: a model is TRAINED once and shipped with
@@ -188,6 +187,6 @@ object Bpe {
     require(budgets.sameElements(Array(nMerges)),
       s"BPE model at $dir was trained with n_merges=${budgets.mkString(",")}, not $nMerges")
     val merges = rows.sortBy(_._1).map { case (rank, l, r, _) => Merge(rank, l, r) }.toSeq
-    modelCache.put(s"$d#$nMerges", merges)
+    Artifacts.put(spark, d, s"bpe.merges#$nMerges", merges)
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Artifacts
+
 /** Unigram-language-model tokenizer TRAINING and encoding, distributed —
   * the SentencePiece family (Kudo 2018, "Subword Regularization: Improving
   * Neural Network Translation Models with Multiple Subword Candidates";
@@ -129,22 +131,10 @@ object Unigram {
   private def localize(scored: DataFrame): Map[String, Double] =
     scored.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
-  private val scoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Double]]
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Per-dataset training-run counter (spec hook: encode-after-[[load]]
-    * must run ZERO training jobs for that dataset — keyed so a parallel
-    * suite training ANOTHER dataset cannot trip the assertion). */
-  private[graft] val trainRuns =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
   /** The trained model: final (pruned, smoothed) piece scores per dataset —
     * steps 1-3 of the loop, train-once like [[Bpe.model]]. */
   def model(spark: SparkSession, d: String): Map[String, Double] =
-    scoreCache.getOrElseUpdate(d, {
-      trainRuns.updateWith(d) { c => Some(c.getOrElse(0) + 1) }
+    Artifacts(spark, d, "unigram.scores") {
       val w = words(spark, d).localCheckpoint(true)
       // 1. seed scores
       val s1 = localize(scores(seedCounts(w)))
@@ -165,12 +155,12 @@ object Unigram {
       val s2 = localize(scores(kept))
       graft.queries.Tables.freeCheckpoint(w)
       s2
-    })
+    }
 
   /** Train-once final segmentation table (word, freq, pieces) per dataset —
     * the tokenizer-artifact shape, cached like [[Bpe.model]]. */
   def segmentations(spark: SparkSession, d: String): DataFrame =
-    modelCache.getOrElseUpdate(d, {
+    Artifacts(spark, d, "unigram.segmentations") {
       val w = words(spark, d).localCheckpoint(true)
       val maxLen = w.agg(max(length(col("word")))).collect().head.getInt(0)
       require(maxLen <= MaxWordLen,
@@ -179,7 +169,7 @@ object Unigram {
       val fin = segment(w, model(spark, d)).localCheckpoint(true)
       graft.queries.Tables.freeCheckpoint(w)
       fin
-    })
+    }
 
   // ------------------------------------------------- persistence ----------
   // The tokenizer-artifact shape (the Bpe.save/load discipline): the model
@@ -211,13 +201,11 @@ object Unigram {
     require(rows.forall(r => r.getInt(2) == KeepK && r.getInt(3) == MaxPieceLen),
       s"unigram model at $dir was trained under different piece budgets " +
         s"(${rows.head.getInt(2)}/${rows.head.getInt(3)}, expected $KeepK/$MaxPieceLen)")
-    scoreCache.put(d, rows.map(r => r.getString(0) -> r.getDouble(1)).toMap)
-    // drop (don't free) the stale segmentation frame: a parallel test suite
-    // sharing the session may still be executing a plan over it, and the
-    // leak is one vocab-sized frame per install
-    modelCache.remove(d): Unit
+    Artifacts.put(spark, d, "unigram.scores", rows.map(r => r.getString(0) -> r.getDouble(1)).toMap)
+    // the segmentation frame was encoded under the displaced scores
+    Artifacts.drop(spark, d, Seq("unigram.segmentations"))
   }
 
   /** Test hook: drop trained models. */
-  def reset(): Unit = { scoreCache.clear(); modelCache.clear() }
+  def reset(): Unit = Artifacts.dropAll("unigram.")
 }

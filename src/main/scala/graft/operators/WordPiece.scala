@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Artifacts
+
 /** WordPiece tokenizer TRAINING and encoding, distributed — the THIRD
   * trainer family next to [[Bpe]] (merge-by-count) and [[Unigram]]
   * (prune-by-likelihood): merge-by-LIKELIHOOD (Schuster & Nakajima 2012,
@@ -190,17 +192,9 @@ object WordPiece {
     Model(vocab, maxLen, nMerges)
   }
 
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[String, Model]
-
-  /** Per-dataset training-run counter (spec hook, the [[Unigram]] shape). */
-  private[graft] val trainRuns =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
   /** Train-once model per dataset (the tokenizer-artifact shape). */
   def model(spark: SparkSession, d: String, nMerges: Int): Model =
-    modelCache.getOrElseUpdate(s"$d#$nMerges", {
-      trainRuns.updateWith(d) { c => Some(c.getOrElse(0) + 1) }
+    Artifacts(spark, d, s"wordpiece.model#$nMerges") {
       val w = Unigram.words(spark, d)
       // fail LOUDLY like Unigram.segmentations: the q120 oracle unrolls
       // only MaxWordLen MaxMatch steps and keeps rows reaching
@@ -212,10 +206,10 @@ object WordPiece {
         s"corpus word length $maxLen exceeds the q120 oracle's ${Unigram.MaxWordLen}-step MaxMatch unroll")
       val (merges, alphabet) = train(w, nMerges)
       modelOf(merges, alphabet, nMerges)
-    })
+    }
 
   /** Test hook: drop trained models. */
-  def reset(): Unit = modelCache.clear()
+  def reset(): Unit = Artifacts.dropAll("wordpiece.")
 
   // ------------------------------------------------- persistence ----------
   // The tokenizer-artifact shape (the Bpe.save/load discipline): the model
@@ -245,6 +239,6 @@ object WordPiece {
     require(budgets.sameElements(Array(nMerges)),
       s"WordPiece model at $dir was trained with n_merges=${budgets.mkString(",")}, not $nMerges")
     val vocab = rows.map(_.getString(0)).toSet
-    modelCache.put(s"$d#$nMerges", modelOf(Nil, vocab, nMerges))
+    Artifacts.put(spark, d, s"wordpiece.model#$nMerges", modelOf(Nil, vocab, nMerges))
   }
 }

@@ -40,35 +40,20 @@ object IngestQueries {
     p
   }
 
-  /** Build-once SPOOL registry — the streaming harness's arrival-feed
-    * directories, keyed (session, dataset, kind). A spool is collector-feed
-    * scaffolding, not the operator under test (st05's own comment): it
-    * simulates the static test feed ARRIVING, and before r19 every
-    * invocation of every spool-fed streaming query re-materialized the
-    * whole feed (a full documents/packets rewrite) before starting the
-    * stream — guide §1.2's "don't redo the work" applied to the harness.
-    * The feed is a deterministic function of the dataset, so it is written
-    * once per (session, dataset, kind) — the build-once artifact discipline
-    * — and every stream run replays the SAME files; all streaming work
-    * (source listing, decode, state, watermarks, sink) stays in the request
-    * path. Same lazy-slot atomicity as TextQueries.ArtifactSlot; stopped
-    * sessions are pruned on the next lookup. */
-  private final class SpoolSlot(build: () => java.nio.file.Path) {
-    lazy val value: java.nio.file.Path = build()
-  }
-  private val spoolCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), SpoolSlot]
+  /** The streaming harness's arrival-feed directory of `kind`, written
+    * once per (session, dataset) as a build-once artifact. A spool is
+    * collector-feed scaffolding, not the operator under test: it simulates
+    * the static test feed ARRIVING, and the feed is a deterministic
+    * function of the dataset, so every stream run replays the SAME files
+    * while all streaming work (source listing, decode, state, watermarks,
+    * sink) stays in the request path. */
   private[graft] def spoolOnce(s: SparkSession, d: String, kind: String)(
-      write: java.nio.file.Path => Unit): java.nio.file.Path = {
-    spoolCache.keysIterator.foreach { k =>
-      if (k._1.sparkContext.isStopped) spoolCache.remove(k)
-    }
-    spoolCache.getOrElseUpdate((s, d, kind), new SpoolSlot(() => {
+      write: java.nio.file.Path => Unit): java.nio.file.Path =
+    Artifacts(s, d, s"spool.$kind") {
       val p = scratchDir(s"graft_spool_$kind")
       write(p)
       p
-    })).value
-  }
+    }
 
   /** NetFlow v5 packet frame derived from events — the synthetic collector
     * feed used by the batch (q50) and streaming (st04) ingest pipelines. */

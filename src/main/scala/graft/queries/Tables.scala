@@ -51,12 +51,6 @@ object Tables {
   /** The local property `SparkContext.setJobDescription` writes. */
   private[graft] val JobDescription = "spark.job.description"
 
-  /** Collect the (coordinator-sized: top-N / final-agg) `result` to the
-    * driver, then SYNCHRONOUSLY free `sketch`'s localCheckpoint blocks —
-    * deterministic release, no reliance on GC + ContextCleaner timing. The
-    * returned frame is a LocalRelation (the exact analog of an ES response
-    * materializing on the coordinator); the big intermediates stay
-    * distributed and their storage is gone when this returns. */
   /** Collect `df` (coordinator-sized by contract) to the driver and return
     * it as a LocalRelation — the ES coordinator-materialization analog.
     * Shared by materializeAndFree, VecIndex, and the one-row-aggregate
@@ -64,6 +58,12 @@ object Tables {
   def localize(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
+  /** Collect the (coordinator-sized: top-N / final-agg) `result` to the
+    * driver, then SYNCHRONOUSLY free `sketch`'s localCheckpoint blocks —
+    * deterministic release, no reliance on GC + ContextCleaner timing. The
+    * returned frame is a LocalRelation (the exact analog of an ES response
+    * materializing on the coordinator); the big intermediates stay
+    * distributed and their storage is gone when this returns. */
   def materializeAndFree(result: DataFrame, sketch: DataFrame): DataFrame = {
     val local = localize(result)
     sketch.unpersist(blocking = true) // cache()/persist()-backed storage
@@ -72,16 +72,12 @@ object Tables {
   }
 
   /** Synchronously unpersist the localCheckpoint blocks backing `df` (a
-    * frame returned by `localCheckpoint(true)`) — ROOT only. The pre-r18
-    * shape collected every LogicalRDD in the plan, which frees frames the
-    * caller does NOT own: a sketch whose plan references a shared
-    * build-once artifact (docsAnalyzed/tfArtifact/postings are
-    * LogicalRDD leaves since r17) would tear the artifact's blocks out
-    * from under every later consumer (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-    * on lineage-truncated frames — caught by Verify when r18 routed the
-    * dedup family through docsAnalyzed). A caller owns exactly the
-    * checkpoint it created, which is the plan ROOT; anything deeper is
-    * someone else's. */
+    * frame returned by `localCheckpoint(true)`) — ROOT only. A caller owns
+    * exactly the checkpoint it created, which is the plan ROOT; anything
+    * deeper is someone else's: a sketch whose plan reads a shared
+    * build-once [[Artifacts]] frame (a LogicalRDD leaf) must not tear the
+    * artifact's blocks out from under every later consumer
+    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on lineage-truncated frames). */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
@@ -91,9 +87,8 @@ object Tables {
         // derived plan that still CONTAINS checkpoint leaves signals an
         // ownership mistake at the call site (the caller meant to free the
         // root it checkpointed and passed a derived frame instead): that
-        // leaks blocks silently — the inverse of the pre-r18 over-free bug
-        // — so surface it loudly instead of quietly doing nothing (r18
-        // ADVICE item).
+        // leaks blocks silently, so surface it loudly instead of quietly
+        // doing nothing.
         if (other.collectLeaves().exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
           System.err.println(
             "[graft] freeCheckpoint: called on a DERIVED frame whose plan contains " +

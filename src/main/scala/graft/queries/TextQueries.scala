@@ -128,19 +128,14 @@ object TextQueries {
     * streaming scorer can collect the same weights the batch query
     * broadcasts (train offline / score online — one training
     * definition). */
-  private val qualityModelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[(DataFrame, DataFrame)]]
   private[graft] def qualityModelFrom(raw: DataFrame, ckptKey: String): (DataFrame, DataFrame) =
-    // TRAIN-ONCE memoization (r19): the Bpe/Unigram model-cache precedent
-    // applied to the third trainer — q99/q99b/st18 each re-paid the full
-    // gram-count training pass per invocation although the model is a pure
-    // function of the static corpus. The memoized model is the pair of
-    // LOCALIZED relations (≤256 weight rows + the 1-row prior — the exact
-    // doubles the old frames computed, collected once), so nothing holds
-    // checkpoint storage and every consumer's broadcast is literal-fed.
-    // Keys stay caller-chosen: every existing key is 1:1 with its raw
-    // frame, so spec corpora (planted-signal tests) memoize separately.
-    artifact(qualityModelCache, "text.quality_model", raw.sparkSession, ckptKey) {
+    // Trained once: the model is a pure function of the static corpus. It
+    // is the pair of LOCALIZED relations (≤256 weight rows + the 1-row
+    // prior, collected once), so nothing holds checkpoint storage and
+    // every consumer's broadcast is literal-fed. Keys stay caller-chosen:
+    // every existing key is 1:1 with its raw frame, so spec corpora
+    // (planted-signal tests) memoize separately.
+    Artifacts(raw.sparkSession, ckptKey, "text.quality_model") {
       import graft.functions.detlog
       val grams = qualityGrams(raw)
       val counts = grams.filter(col("doc_id") % 5 =!= 0)
@@ -207,29 +202,18 @@ object TextQueries {
     * shipped corpus has only 24 such terms at every SF — a rank window must
     * stay inside that (q77's original 26..33 window selected NOTHING and
     * made its oracle vacuous; TextSurfaceSpec now asserts non-emptiness).
-    * Since round 18 a BUILD-ONCE artifact derived from the [[dfVocab]]
-    * dictionary (ES has ONE terms dictionary per index, built at index
-    * time) — before, every rank-windowed request re-aggregated the
-    * corpus-row-sized tf artifact to re-derive these ~24 rows, the last
-    * request-time family outside the structured scale band (q102 6.1× /
-    * q103 5.9× / q168 5.8× at 100×). df values are unchanged (filtering
-    * the dictionary ≡ filtering the aggregate), so every hash holds. The
-    * single-partition rank window is vocab-bounded AND now runs exactly
-    * once per (session, dataset) instead of per request. */
-  private val rankedVocabCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
-  private[graft] def rankedVocab(s: SparkSession, d: String): DataFrame =
-    artifact(rankedVocabCache, "text.ranked_vocab", s, d) {
-      import org.apache.spark.sql.expressions.Window
-      dfVocab(s, d)
-        .filter(length(col("term")) >= 4)
-        .withColumn("r", row_number().over(Window.orderBy(col("df").desc, col("term").asc)))
-        .localCheckpoint(true)
-    }
-
-  // (the r17 per-call swapCheckpoint generation pool is gone: its last
-  // caller, the quality-model trainer, is a memoized train-once artifact
-  // since r19 — see qualityModelFrom)
+    * A build-once artifact derived from the [[dfVocab]] dictionary (ES has
+    * ONE terms dictionary per index, built at index time): filtering the
+    * dictionary ≡ filtering the tf aggregate, so df values equal a
+    * per-request aggregation's, and the vocab-bounded single-partition
+    * rank window runs once per (session, dataset). */
+  private[graft] val rankedVocab: IndexPart[DataFrame] = table("ranked_vocab") { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    dfVocab(s, d)
+      .filter(length(col("term")) >= 4)
+      .withColumn("r", row_number().over(Window.orderBy(col("df").desc, col("term").asc)))
+      .localCheckpoint(true)
+  }
 
   /** The FULL document-frequency vocabulary (no length filter) — the term
     * dictionary the multi-term-rewrite retrieval queries (q87 fuzzy, q88
@@ -237,56 +221,45 @@ object TextQueries {
     * against. The Lucene shape: a prefix/wildcard/fuzzy query rewrites to
     * a term-set against the dictionary, so the doc stream only ever pays
     * an equi-join on expanded terms — never a per-row pattern/
-    * edit-distance scan. Since round 18 a BUILD-ONCE artifact (the ES
-    * terms dictionary is index-time state, not request-time work): the
-    * round-17 per-call swapCheckpoint still re-paid a full tf-artifact
-    * aggregation per request to materialize these vocab-sized rows. */
-  private val dfVocabCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
-  private def dfVocab(s: SparkSession, d: String): DataFrame =
-    artifact(dfVocabCache, "text.vocab", s, d) {
-      tfArtifact(s, d)
-        .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .select(col("tok").as("term"), col("df"))
-        .localCheckpoint(true)
-    }
+    * edit-distance scan. A build-once artifact: the ES terms dictionary
+    * is index-time state, not request-time work. */
+  private val dfVocab: IndexPart[DataFrame] = table("vocab") { (s, d) =>
+    tfArtifact(s, d)
+      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
+      .select(col("tok").as("term"), col("df"))
+      .localCheckpoint(true)
+  }
 
   /** The TITLE field's document-frequency dictionary — df per term over
     * docs whose first-8 window (the derived title field, q86's
     * convention) contains it. ES keeps one terms dictionary PER FIELD at
     * index time; field-scoped clauses (q106's `title:term`) probe this
     * instead of re-aggregating the tf frame per request. */
-  private val titleVocabCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
-  private def titleVocab(s: SparkSession, d: String): DataFrame =
-    artifact(titleVocabCache, "text.title_vocab", s, d) {
-      tfArtifact(s, d).filter(col("tf_t") > 0)
-        .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .select(col("tok").as("term"), col("df"))
-        .localCheckpoint(true)
-    }
+  private val titleVocab: IndexPart[DataFrame] = table("title_vocab") { (s, d) =>
+    tfArtifact(s, d).filter(col("tf_t") > 0)
+      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
+      .select(col("tok").as("term"), col("df"))
+      .localCheckpoint(true)
+  }
 
   /** The top corpus bigram (count desc, gram asc) — ONE derivation shared
     * by q78 (match_phrase/span_near) and q90 (match_phrase_prefix), like
-    * their oracles share the bg/top1 CTEs. Returns one (w1, w2) row.
-    * Since round 18 a BUILD-ONCE artifact (the phrase-dictionary analog
-    * of [[rankedVocab]]): five callers each re-paid the corpus-sized
-    * shingle explode+aggregate per request before. */
-  private val topBigramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
-  private def topBigram(s: SparkSession, d: String): DataFrame =
-    artifact(topBigramCache, "text.top_bigram", s, d) {
-      docsAnalyzed(s, d)
-        .select(explode(text.shingles(col("toks"), 2)).as("g"))
-        .groupBy(col("g")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("g").asc).limit(1)
-        .select(split(col("g"), " ").getItem(0).as("w1"),
-          split(col("g"), " ").getItem(1).as("w2"))
-        .localCheckpoint(true)
-    }
+    * their oracles share the bg/top1 CTEs. Returns one (w1, w2) row. A
+    * build-once artifact (the phrase-dictionary analog of
+    * [[rankedVocab]]), so its callers never re-pay the corpus-sized
+    * shingle explode+aggregate. */
+  private val topBigram: IndexPart[DataFrame] = table("top_bigram") { (s, d) =>
+    docsAnalyzed(s, d)
+      .select(explode(text.shingles(col("toks"), 2)).as("g"))
+      .groupBy(col("g")).agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("g").asc).limit(1)
+      .select(split(col("g"), " ").getItem(0).as("w1"),
+        split(col("g"), " ").getItem(1).as("w2"))
+      .localCheckpoint(true)
+  }
 
-  /** The per-(doc, term) frame q86d/q92/q102/... share — since round 17
-    * the BUILD-ONCE [[tfArtifact]] (doc_id-clustered: the aggregate
+  /** The per-(doc, term) frame q86d/q92/q102/... share — the build-once
+    * [[tfArtifact]] (doc_id-clustered: the aggregate
     * completed map-side under the artifact's repartition and the
     * checkpoint preserves the partitioning), not a per-call rebuild;
     * every per-field statistic (dl = Σtf, df = frame rows per term) is
@@ -721,83 +694,58 @@ object TextQueries {
     rankedVocab(s, d).filter(col("r") >= QLo && col("r") <= QHi)
       .orderBy(col("r").asc).collect().map(_.getAs[String]("term")).mkString(" ")
 
-  /** documents + the MATERIALIZED analyzed token column for front-door
-    * full-text leaves ([[QueryDsl.Catalog.withAnalyzed]]): a BUILD-ONCE
-    * artifact per dataset (the VecIndex `live` discipline, NOT the
-    * per-call swapCheckpoint) — the ES analyzed-index analog: at 100 TB
-    * the analyzed corpus is materialized exactly once and every
-    * match/count request PROBES it (array_contains), paying zero
-    * per-request tokenization or text scan. The first Scale100 cut used
-    * the per-call checkpoint and measured factor 23.7 at 100x — the same
-    * as the regex scan, because every request re-paid the 500k-doc
-    * tokenize+materialize; the artifact cache is what makes the probe
-    * model real. */
-  /** One slot of the build-once artifact registry below. `lazy val` is the
-    * atomicity: getOrElseUpdate may construct (and discard) a losing Holder
-    * under contention, but its thunk never ran — the ONE winning Holder's
-    * lazy val builds exactly once, under the JVM's lazy-val lock, and every
-    * caller reads that same frame. The pre-round-17 shape (build eagerly,
-    * put(), free the displaced frame) could free a concurrent first
-    * caller's checkpoint blocks while its queries were still running — a
-    * lineage-truncated frame fails outright on freed blocks, not recompute. */
-  private final class ArtifactSlot[T](build: () => T) { lazy val value: T = build() }
-
-  /** Build-once artifact registry keyed by (session, dataset) — keying by
-    * dataset alone could hand a second live SparkSession a frame bound to a
-    * different session. Artifacts are the ES index analog: built once,
-    * resident for the session's lifetime, NEVER freed out from under a
-    * consumer. Entries of STOPPED sessions are pruned on the next lookup:
-    * a stopped session's frames can have no live consumers (every action
-    * on them throws), so dropping the map entry is safe and keeps a
-    * long-lived JVM that restarts sessions (test suites, repeated
-    * GraftSession.local()) from pinning dead sessions' driver heap. */
-  private def artifact[T](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), ArtifactSlot[T]],
-      kind: String, s: SparkSession, d: String)(build: => T): T = {
-    cache.keysIterator.foreach { k =>
-      if (k._1.sparkContext.isStopped) cache.remove(k)
-    }
-    // the build's jobs carry `artifact:<kind>` as their description
-    cache.getOrElseUpdate((s, d),
-      new ArtifactSlot(() => Tables.withJobDescription(s, s"artifact:$kind")(build))).value
+  /** One artifact of the text index: its parquet tables as (name,
+    * clustering columns), in [[Artifacts.frames]] order over its value,
+    * and `assemble`, which rebuilds the value from those tables. Its
+    * registry kind is `text.<first table>`. */
+  private[graft] final class IndexPart[T](val tables: Seq[(String, Seq[String])],
+      assemble: Seq[DataFrame] => T)(build: (SparkSession, String) => T) {
+    val kind = s"text.${tables.head._1}"
+    def apply(s: SparkSession, d: String): T = Artifacts(s, d, kind)(build(s, d))
+    def load(s: SparkSession, d: String, dir: String): Unit =
+      Artifacts.put(s, d, kind, assemble(tables.map(t => s.read.parquet(s"$dir/${t._1}"))))
   }
 
-  private val analyzedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
-  private[graft] def docsAnalyzed(s: SparkSession, d: String): DataFrame =
-    artifact(analyzedCache, "text.analyzed", s, d) {
-      // repartition BEFORE the checkpoint: a single-file corpus would
-      // otherwise materialize as ONE partition and serialize every
-      // downstream explode on one core (the q72 scan-spreading lesson,
-      // baked into the artifact so every consumer inherits it)
-      docs(s, d).repartition(col("doc_id")).localCheckpoint(true)
-    }
+  /** A text-index artifact that is one table. */
+  private def table(name: String, by: String*)(
+      build: (SparkSession, String) => DataFrame): IndexPart[DataFrame] =
+    new IndexPart[DataFrame](Seq(name -> by), _.head)(build)
+
+  /** documents + the MATERIALIZED analyzed token column for front-door
+    * full-text leaves ([[QueryDsl.Catalog.withAnalyzed]]): a build-once
+    * artifact per dataset — the ES analyzed-index analog: at 100 TB the
+    * analyzed corpus is materialized exactly once and every match/count
+    * request PROBES it (array_contains), paying zero per-request
+    * tokenization or text scan. A per-call checkpoint measured factor
+    * 23.7 at 100x, the same as the regex scan, because every request
+    * re-paid the tokenize+materialize. */
+  private[graft] val docsAnalyzed: IndexPart[DataFrame] = table("analyzed", "doc_id") { (s, d) =>
+    // repartition BEFORE the checkpoint: a single-file corpus would
+    // otherwise materialize as ONE partition and serialize every
+    // downstream explode on one core (the q72 scan-spreading lesson,
+    // baked into the artifact so every consumer inherits it)
+    docs(s, d).repartition(col("doc_id")).localCheckpoint(true)
+  }
 
   /** The build-once per-(doc, term) tf frame — the "doc values" layout:
     * (doc_id, tok, tf_b = body occurrences, tf_t = first-8 occurrences),
     * doc_id-clustered (groupBy under the artifact's repartition completes
     * map-side and the checkpoint preserves the partitioning), shared by
-    * every doc-centric consumer via [[perDocTermTf]]. Round 16 built this
-    * frame PER CALL (swapCheckpoint) — ~10 call sites each re-paid the
-    * tokenize+explode+aggregate+materialize; it is derived data over a
-    * static dataset, so it is an artifact like [[docsAnalyzed]]. */
-  private val tfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[DataFrame]]
-  private def tfArtifact(s: SparkSession, d: String): DataFrame =
-    artifact(tfCache, "text.tf", s, d) {
-      docsAnalyzed(s, d)
-        .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
-        .groupBy(col("doc_id"), col("tok"))
-        // ps = the term's sorted 0-based positions — the POSITIONAL half
-        // of the posting (Lucene's positions list): phrase/near scoring
-        // probes it per query term instead of re-scanning token arrays
-        .agg(count(lit(1)).as("tf_b"), count(when(col("pos") < 8, 1)).as("tf_t"),
-          sort_array(collect_list(col("pos"))).as("ps"))
-        .localCheckpoint(true)
-    }
+    * every doc-centric consumer via [[perDocTermTf]]. */
+  private val tfArtifact: IndexPart[DataFrame] = table("tf", "doc_id") { (s, d) =>
+    docsAnalyzed(s, d)
+      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
+      .groupBy(col("doc_id"), col("tok"))
+      // ps = the term's sorted 0-based positions — the POSITIONAL half
+      // of the posting (Lucene's positions list): phrase/near scoring
+      // probes it per query term instead of re-scanning token arrays
+      .agg(count(lit(1)).as("tf_b"), count(when(col("pos") < 8, 1)).as("tf_t"),
+        sort_array(collect_list(col("pos"))).as("ps"))
+      .localCheckpoint(true)
+  }
 
-  /** The POSTING-LIST artifact — the round-16 verdict's one weak grade,
-    * closed: the inverted layout of [[tfArtifact]], partitioned BY TERM
-    * (at 100 TB: a term-bucketed table, so a request's probe prunes to its
+  /** The POSTING-LIST artifact: the inverted layout of [[tfArtifact]],
+    * partitioned BY TERM (at 100 TB: a term-bucketed table, so a request's probe prunes to its
     * query terms' buckets; locally: one hash exchange at build), with each
     * doc's field lengths CARRIED on every posting row (the Lucene norms
     * analog) and the corpus-level field statistics collected ONCE at build
@@ -806,61 +754,64 @@ object TextQueries {
     * df (rows per term) and tf/dl (carried) directly, idf comes from the
     * broadcast 1-row stats, and the per-doc grouping runs over the
     * hit-sized probe — ES's postings cost model, not a per-request corpus
-    * re-aggregation (round 16 paid 62/53/65s at 100× for q148/q149/q155).
-    * Bit-identity with the round-16 chain, so every oracle hash is
-    * unchanged: df(term) = frame rows per tok = distinct docs per term;
-    * dl_b = Σtf_b per doc = the exploded token count; dl_t = Σtf_t; the
+    * re-aggregation. Bit-identity with a token-stream pass, so every
+    * oracle hash holds: df(term) = frame rows per tok = distinct docs per
+    * term; dl_b = Σtf_b per doc = the exploded token count; dl_t = Σtf_t; the
     * stats use bm25QIdf's exact arithmetic (count, sum cast double /
     * count) over the same per-doc rows. */
   private[graft] final case class Postings(
       frame: DataFrame, statsBody: DataFrame, statsTitle: DataFrame,
       statsTail: DataFrame)
-  private val postingsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[Postings]]
-  private[graft] def postings(s: SparkSession, d: String): Postings =
-    artifact(postingsCache, "text.postings", s, d) {
-      val g = tfArtifact(s, d)
-      // per-doc field lengths: map-side over the doc_id-clustered artifact
-      val dl = g.groupBy(col("doc_id"))
-        .agg(sum(col("tf_b")).as("dl_b"), sum(col("tf_t")).as("dl_t"))
-        .withColumn("dl_l", col("dl_b") - col("dl_t"))
-      // ONE aggregate over dl: the zero-token check's doc count and the
-      // n_docs/avgdl of all three fields (count/sum over a field's doc set
-      // through when(), the same integers a filter-then-aggregate gives)
-      def field(name: String, dlCol: String, in: Column): Seq[Column] = Seq(
-        count(when(in, 1)).as(s"n_$name"),
-        (sum(when(in, col(dlCol))).cast("double") / count(when(in, 1))).as(s"avgdl_$name"))
-      val st = dl.agg(count(lit(1)).as("n_dl"),
-        field("body", "dl_b", lit(true)) ++
-          // the title field's doc set = docs with ≥1 first-8 token (the
-          // gT = g.filter(tf_t > 0) contract)
-          field("title", "dl_t", col("dl_t") > 0) ++
-          // the TAIL field (tokens 9+, q86d's head/tail split): per-doc
-          // length = dl_b − dl_t, doc set = docs with ≥1 token past the
-          // first 8 (Σ(tf_b − tf_t) > 0 ⟺ ∃ term with tf_b > tf_t, since
-          // tf_t ≤ tf_b per term)
-          field("tail", "dl_l", col("dl_l") > 0): _*).head()
-      // the stats aggregate only docs PRESENT in the tf artifact, while the
-      // scan forms they replaced (and the unchanged DuckDB oracles)
-      // aggregate over every doc — identical ONLY under the
-      // no-zero-token-docs invariant. Assert it at build so a future corpus
-      // with an empty text field fails LOUDLY here instead of silently
-      // shifting n_docs/avgdl for every scored request.
-      val nDl = st.getAs[Long]("n_dl")
-      val nDocs = docsAnalyzed(s, d).count()
-      require(nDl == nDocs,
-        s"postings build: $nDocs analyzed docs but only $nDl with tokens — " +
-          "a zero-token doc breaks the stats identity with the full-corpus scan forms")
-      val frame = g.join(dl, Seq("doc_id"))
-        .repartition(col("tok"))
-        .localCheckpoint(true)
-      def statsOf(name: String): DataFrame =
-        s.range(1).select(
-          lit(st.getAs[Long](s"n_$name")).as("n_docs"),
-          lit(st.getAs[Double](s"avgdl_$name")).as("avgdl"))
-      Postings(frame, statsBody = statsOf("body"), statsTitle = statsOf("title"),
-        statsTail = statsOf("tail"))
-    }
+  private[graft] val postings: IndexPart[Postings] = new IndexPart[Postings](
+    Seq("postings" -> Seq("tok"), "stats_body" -> Nil, "stats_title" -> Nil, "stats_tail" -> Nil),
+    t => Postings(t(0), t(1), t(2), t(3)))((s, d) => {
+    val g = tfArtifact(s, d)
+    // per-doc field lengths: map-side over the doc_id-clustered artifact
+    val dl = g.groupBy(col("doc_id"))
+      .agg(sum(col("tf_b")).as("dl_b"), sum(col("tf_t")).as("dl_t"))
+      .withColumn("dl_l", col("dl_b") - col("dl_t"))
+    // ONE aggregate over dl: the zero-token check's doc count and the
+    // n_docs/avgdl of all three fields (count/sum over a field's doc set
+    // through when(), the same integers a filter-then-aggregate gives)
+    def field(name: String, dlCol: String, in: Column): Seq[Column] = Seq(
+      count(when(in, 1)).as(s"n_$name"),
+      (sum(when(in, col(dlCol))).cast("double") / count(when(in, 1))).as(s"avgdl_$name"))
+    val st = dl.agg(count(lit(1)).as("n_dl"),
+      field("body", "dl_b", lit(true)) ++
+        // the title field's doc set = docs with ≥1 first-8 token (the
+        // gT = g.filter(tf_t > 0) contract)
+        field("title", "dl_t", col("dl_t") > 0) ++
+        // the TAIL field (tokens 9+, q86d's head/tail split): per-doc
+        // length = dl_b − dl_t, doc set = docs with ≥1 token past the
+        // first 8 (Σ(tf_b − tf_t) > 0 ⟺ ∃ term with tf_b > tf_t, since
+        // tf_t ≤ tf_b per term)
+        field("tail", "dl_l", col("dl_l") > 0): _*).head()
+    // the stats aggregate only docs PRESENT in the tf artifact, while the
+    // scan forms they replaced (and the unchanged DuckDB oracles)
+    // aggregate over every doc — identical ONLY under the
+    // no-zero-token-docs invariant. Assert it at build so a future corpus
+    // with an empty text field fails LOUDLY here instead of silently
+    // shifting n_docs/avgdl for every scored request.
+    val nDl = st.getAs[Long]("n_dl")
+    val nDocs = docsAnalyzed(s, d).count()
+    require(nDl == nDocs,
+      s"postings build: $nDocs analyzed docs but only $nDl with tokens — " +
+        "a zero-token doc breaks the stats identity with the full-corpus scan forms")
+    val frame = g.join(dl, Seq("doc_id"))
+      .repartition(col("tok"))
+      .localCheckpoint(true)
+    def statsOf(name: String): DataFrame =
+      s.range(1).select(
+        lit(st.getAs[Long](s"n_$name")).as("n_docs"),
+        lit(st.getAs[Double](s"avgdl_$name")).as("avgdl"))
+    Postings(frame, statsBody = statsOf("body"), statsTitle = statsOf("title"),
+      statsTail = statsOf("tail"))
+  })
+
+  /** The text index, in dependency order. Build, save, load and reset all
+    * run over this one list. */
+  private lazy val textIndex: Seq[IndexPart[_]] =
+    Seq(docsAnalyzed, tfArtifact, postings, dfVocab, rankedVocab, titleVocab, topBigram)
 
   /** Persist the ENTIRE text index of dataset `d` as parquet tables —
     * analyzed corpus, per-(doc, term) tf with positions, term-partitioned
@@ -872,83 +823,43 @@ object TextQueries {
     * every probe runs with ZERO build jobs, exactly how an ES node opens
     * an existing index instead of re-analyzing the corpus. */
   private[graft] def saveIndex(s: SparkSession, d: String, dir: String): Unit = {
-    // r18 opt (guide §6, output file sizing): REBALANCE before every write
-    // — AQE coalesces each table to advisory-sized output partitions, so
-    // locally each artifact lands as a handful of right-sized files
-    // instead of one near-empty file per in-memory partition (the
-    // checkpointed frames carry 32+ partitions; the old shape wrote ~100
-    // tiny files + commits per save), while at warehouse scale the SAME
-    // hint yields advisory-sized files. Pure layout: loadIndex reads the
-    // identical rows, TextIndexSpec pins byte-identical scores.
-    def w(df: DataFrame, sub: String, by: Seq[String]): Unit =
-      df.hint("rebalance", by.map(col): _*).write.mode("overwrite").parquet(s"$dir/$sub")
-    // keyed rebalance keeps the artifact's clustering (doc-clustered
-    // analyzed/tf, term-clustered postings) in the saved layout.
-    // r19 (guide §2.6, overlap independent jobs): the ten table writes are
-    // independent of each other and all read already-materialized artifact
-    // frames, so they run from a small thread pool — the next write's
-    // tasks back-fill executors freed by the current write's tail instead
-    // of serializing ten job tails (the Bench.buildIndex discipline).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
     buildTextIndex(s, d)
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    indexTables(s, d).map { case (sub, df, by) => Future(w(df, sub, by)) }
-      .foreach(Await.result(_, 10.minutes))
+    // The writes are independent and read materialized artifacts, so they
+    // overlap: one write's tasks back-fill the cores another's tail frees.
+    // REBALANCE before each write lets AQE coalesce a table into a few
+    // advisory-sized files instead of one per in-memory partition; the
+    // keyed rebalance keeps the artifact's clustering in the saved layout.
+    Artifacts.concurrently(indexTables(s, d).map { case (sub, df, by) => () =>
+      df.hint("rebalance", by.map(col): _*).write.mode("overwrite").parquet(s"$dir/$sub")
+    }: _*)
   }
 
   /** Every table of the text index as (name, frame, clustering columns) —
-    * the set [[saveIndex]] writes and [[buildTextIndex]] builds. Accessing
-    * an unbuilt artifact builds it here, one after another. */
-  private[graft] def indexTables(s: SparkSession, d: String): Seq[(String, DataFrame, Seq[String])] = {
-    val art = postings(s, d)
-    Seq(
-      ("analyzed", docsAnalyzed(s, d), Seq("doc_id")),
-      ("tf", tfArtifact(s, d), Seq("doc_id")),
-      ("postings", art.frame, Seq("tok")),
-      ("stats_body", art.statsBody, Nil),
-      ("stats_title", art.statsTitle, Nil),
-      ("stats_tail", art.statsTail, Nil),
-      ("vocab", dfVocab(s, d), Nil),
-      ("ranked_vocab", rankedVocab(s, d), Nil),
-      ("title_vocab", titleVocab(s, d), Nil),
-      ("top_bigram", topBigram(s, d), Nil))
-  }
+    * the set [[saveIndex]] writes. Accessing an unbuilt artifact builds it
+    * here, one after another. */
+  private[graft] def indexTables(s: SparkSession, d: String): Seq[(String, DataFrame, Seq[String])] =
+    textIndex.flatMap(p => p.tables.zip(Artifacts.frames(p(s, d))).map {
+      case ((name, by), df) => (name, df, by)
+    })
 
   /** Install a saved text index under dataset key `key`: every artifact
-    * slot for `key` is REPLACED with a parquet-backed frame, so the whole
+    * for `key` is REPLACED with a parquet-backed frame, so the whole
     * dictionary/postings consumer family (scored search, rewrites, phrase
     * probes) serves from the loaded tables — no tokenize, no aggregation,
     * no build jobs, and parquet pushdown/pruning apply to every probe.
     * Values round-trip exactly (longs, strings, position arrays, and the
     * build-time stats doubles), so scores are byte-identical to the
     * building session's — TextIndexSpec pins that. */
-  private[graft] def loadIndex(s: SparkSession, key: String, dir: String): Unit = {
-    def put[T](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), ArtifactSlot[T]],
-        v: T): Unit =
-      cache.put((s, key), new ArtifactSlot(() => v))
-    put(analyzedCache, s.read.parquet(s"$dir/analyzed"))
-    put(tfCache, s.read.parquet(s"$dir/tf"))
-    put(postingsCache, Postings(
-      s.read.parquet(s"$dir/postings"),
-      s.read.parquet(s"$dir/stats_body"),
-      s.read.parquet(s"$dir/stats_title"),
-      s.read.parquet(s"$dir/stats_tail")))
-    put(dfVocabCache, s.read.parquet(s"$dir/vocab"))
-    put(rankedVocabCache, s.read.parquet(s"$dir/ranked_vocab"))
-    put(titleVocabCache, s.read.parquet(s"$dir/title_vocab"))
-    put(topBigramCache, s.read.parquet(s"$dir/top_bigram"))
-  }
+  private[graft] def loadIndex(s: SparkSession, key: String, dir: String): Unit =
+    textIndex.foreach(_.load(s, key, dir))
 
   /** The once-per-(session, dataset) persisted-and-reloaded index key that
     * q178's steady-state serving path probes: saveIndex writes the whole
     * text index to parquet ONCE, loadIndex installs the parquet-backed
     * frames under a fresh dataset key, and every later request serves from
     * those tables — the ES "node opens an existing index" shape. */
-  private val loadedKeyCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ArtifactSlot[String]]
   private def loadedIndexKey(s: SparkSession, d: String): String =
-    artifact(loadedKeyCache, "text.loaded_index", s, d) {
+    Artifacts(s, d, "text.loaded_index") {
       val dir = IngestQueries.scratchDir("graft_text_index_srv").toString
       saveIndex(s, d, dir)
       val key = s"$dir::loaded"
@@ -956,44 +867,22 @@ object TextQueries {
       key
     }
 
-  /** Bench hook (the [[VecIndex.reset]] analog): drop every build-once
-    * text-index artifact for (s, d) and synchronously free the displaced
-    * frames' checkpoint blocks, so the next [[buildTextIndex]] pays the
-    * full build from the parquet corpus. Callers must be sequential with
-    * every artifact consumer (Bench is); freeing is root-only per the
-    * [[Tables.freeCheckpoint]] ownership rule, and every derived artifact
-    * is itself checkpointed, so freeing a parent cannot lineage-truncate a
-    * sibling. */
-  private[graft] def resetTextIndex(s: SparkSession, d: String): Unit = {
-    def drop[T](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), ArtifactSlot[T]])(
-        free: T => Unit): Unit =
-      cache.remove((s, d)).foreach(slot => free(slot.value))
-    drop(postingsCache)(p => Tables.freeCheckpoint(p.frame))
-    Seq(tfCache, dfVocabCache, rankedVocabCache, titleVocabCache, topBigramCache, analyzedCache)
-      .foreach(c => drop(c)(Tables.freeCheckpoint))
-  }
+  /** Bench hook (the [[VecIndex.reset]] analog): drop every text-index
+    * artifact for (s, d) and free its checkpoint blocks, so the next
+    * [[buildTextIndex]] pays the full build from the parquet corpus.
+    * Callers must be sequential with every artifact consumer. */
+  private[graft] def resetTextIndex(s: SparkSession, d: String): Unit =
+    Artifacts.drop(s, d, textIndex.map(_.kind))
 
   /** Force-build the full text index for (s, d) — the exact artifact set
-    * [[saveIndex]] persists (analyzed corpus, tf, postings + the three
-    * build-time stats tables, the per-field dictionaries, the phrase
-    * dictionary). Every frame is localCheckpoint(true) (eager) and the
-    * postings stats collect at build, so returning means every build job
-    * ran. Bench times this so the index-build cost is a visible record row
-    * instead of hiding in the untimed warmup. */
-  private[graft] def buildTextIndex(s: SparkSession, d: String): Unit = {
-    tfArtifact(s, d) // builds docsAnalyzed on the way
-    // Everything else reads only tf or the analyzed corpus, so the four
-    // remaining builds run concurrently: one build's small jobs fill the
-    // cores another's tail leaves idle. The pool's threads start here and
-    // so inherit the caller's Spark local properties.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Seq(Future(postings(s, d)), Future(rankedVocab(s, d)), Future(titleVocab(s, d)),
-        Future(topBigram(s, d))).foreach(Await.result(_, Duration.Inf))
-    finally pool.shutdown()
-  }
+    * [[saveIndex]] persists. Every frame is localCheckpoint(true) (eager)
+    * and the postings stats collect at build, so returning means every
+    * build job ran. The parts build concurrently: each waits in its lazy
+    * slot for the parts it reads, and once tf exists the builds that read
+    * only tf or the analyzed corpus fill the cores each other's tails
+    * leave idle. */
+  private[graft] def buildTextIndex(s: SparkSession, d: String): Unit =
+    Artifacts.concurrently(textIndex.map(p => () => p(s, d)): _*)
 
   /** The front door's [[QueryDsl.Relevance]] — every scorer routes through
     * THE shared BM25 stack, so `searchScored` can never grow a second copy
@@ -1403,17 +1292,13 @@ object TextQueries {
       rules)
 
   /** Spool the documents table and open it as a file stream with tokens
-    * attached — the ONE doc-stream scaffold behind st13/st14/st15/st16
-    * (the testdata table is a single parquet file; the file stream source
-    * wants a directory feed, and the multi-file spool gives several
-    * micro-batch splits). */
-  /** The arriving-documents feed every text/multimodal streaming query
-    * (st13–st19, st16) reads. The spool is built ONCE per (session,
-    * dataset) via [[IngestQueries.spoolOnce]] — before r19 every
-    * invocation re-wrote the whole documents table before starting its
-    * stream (7 consumers × warmup+2 bench runs = 21 full-corpus rewrites
-    * per bench). Tokenization stays IN the stream (`toks` is computed on
-    * the streamed rows per request); `name` identifies the consumer only. */
+    * attached — the ONE arriving-documents feed every text/multimodal
+    * streaming query (st13–st19) reads. The testdata table is a single
+    * parquet file; the file stream source wants a directory feed, and the
+    * multi-file spool gives several micro-batch splits. The spool is
+    * written ONCE per (session, dataset) via [[IngestQueries.spoolOnce]];
+    * tokenization stays IN the stream (`toks` is computed on the streamed
+    * rows per request); `name` identifies the consumer only. */
   private[graft] def docStream(s: SparkSession, d: String, name: String): DataFrame = {
     val spool = IngestQueries.spoolOnce(s, d, "docs4") { p =>
       Tables(s, d, "documents").repartition(4).write.mode("overwrite").parquet(p.toString)

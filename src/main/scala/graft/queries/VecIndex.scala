@@ -7,12 +7,11 @@ import graft.functions.{detsum, vectors}
 
 /** Train-once vector index shared by the ANN/quantization queries — the
   * FAISS IVFADC shape: an index is BUILT once (coarse quantizer + inverted
-  * lists; PQ codebooks + codes) and then MANY searches run against it. The
-  * round-3 surface trained a fresh quantizer inside every query invocation
-  * ("train twice per query"), which is the wrong cost model for a 100 TB
-  * index build; here the trained artifacts are memoized per dataset
-  * directory, so q37 (IVF), q37b (IVF-PQ) and q58b (PQ encode) all read the
-  * SAME index.
+  * lists; PQ codebooks + codes) and then MANY searches run against it.
+  * Training a fresh quantizer inside every query invocation is the wrong
+  * cost model for a 100 TB index build; here the trained artifacts are
+  * [[Artifacts]] of each (session, dataset), so q37 (IVF), q37b (IVF-PQ)
+  * and q58b (PQ encode) all read the SAME index.
   *
   * Storage contract: the trained frames are deliberately long-lived — they
   * ARE the index (the cluster analog is a persisted index table). Centroid /
@@ -78,22 +77,6 @@ object VecIndex {
   private[queries] val PqK = 16
   private[queries] val PqRounds = 3
 
-  private val coarseCache = scala.collection.concurrent.TrieMap.empty[String, Coarse]
-  private val pqCache = scala.collection.concurrent.TrieMap.empty[String, Pq]
-
-  /** Memoized artifacts are bound to the SparkContext that built them; after
-    * a spark.stop()/restart in the same JVM the cached frames are unusable
-    * ("Cannot call methods on a stopped SparkContext"). Evict-and-rebuild on
-    * a dead context instead of handing the caller a corpse. */
-  private def live[T](cache: scala.collection.concurrent.TrieMap[String, T], d: String)(
-      frameOf: T => DataFrame)(build: => T): T = {
-    cache.get(d) match {
-      case Some(v) if !frameOf(v).sparkSession.sparkContext.isStopped => v
-      case Some(_) => cache.remove(d); cache.getOrElseUpdate(d, build)
-      case None => cache.getOrElseUpdate(d, build)
-    }
-  }
-
   /** (vec_id, emb: array<double>, nrm) corpus scan, spread across the
     * cluster (the embeddings table is a single file at test SFs). */
   private[queries] def corpus(s: SparkSession, d: String): DataFrame =
@@ -158,9 +141,7 @@ object VecIndex {
             lit(0.0), (acc, x) => acc + x) / PqSubDim, 9).as("sub_sq_err"))
   }
 
-  def coarse(s: SparkSession, d: String): Coarse = live(coarseCache, d)(_.lists) {
-    Tables.withJobDescription(s, "artifact:vec.coarse")(buildCoarse(s, d))
-  }
+  def coarse(s: SparkSession, d: String): Coarse = Artifacts(s, d, "vec.coarse")(buildCoarse(s, d))
 
   private def buildCoarse(s: SparkSession, d: String): Coarse = {
     val c = corpus(s, d).localCheckpoint(true)
@@ -175,9 +156,7 @@ object VecIndex {
     Coarse(cent, lists)
   }
 
-  def pq(s: SparkSession, d: String): Pq = live(pqCache, d)(_.codes) {
-    Tables.withJobDescription(s, "artifact:vec.pq")(buildPq(s, d))
-  }
+  def pq(s: SparkSession, d: String): Pq = Artifacts(s, d, "vec.pq")(buildPq(s, d))
 
   private def buildPq(s: SparkSession, d: String): Pq = {
     val subv = subvectors(corpus(s, d).select(col("vec_id").as("id"), col("emb")))
@@ -210,28 +189,21 @@ object VecIndex {
       encodeAgainst(subvectors(nv.select(col("vec_id").as("id"), col("emb"))), p.codebooks))
       .localCheckpoint(true)
     Tables.freeCheckpoint(nv)
-    replace(d, Coarse(c.cent, lists), Pq(p.codebooks, codes))
+    replace(s, d, Coarse(c.cent, lists), Pq(p.codebooks, codes))
   }
 
-  /** Swap dataset `d`'s installed artifacts for `c`/`p`, synchronously
-    * freeing the checkpoint storage of whatever they displace (the same
-    * generation-swap bookkeeping [[append]] and [[load]] do). Callers keep
-    * responsibility for the NEW frames' lifecycle. */
-  private[graft] def replace(d: String, c: Coarse, p: Pq): Unit = {
-    coarseCache.put(d, c).foreach(old =>
-      if (!(old.lists eq c.lists)) Tables.freeCheckpoint(old.lists))
-    pqCache.put(d, p).foreach(old =>
-      if (!(old.codes eq p.codes)) Tables.freeCheckpoint(old.codes))
+  /** Install `c`/`p` as (s, d)'s index, synchronously freeing the
+    * checkpoint storage of whatever they displace (the generation swap
+    * [[append]] and [[load]] do). Callers keep responsibility for the NEW
+    * frames' lifecycle. */
+  private[graft] def replace(s: SparkSession, d: String, c: Coarse, p: Pq): Unit = {
+    Artifacts.put(s, d, "vec.coarse", c)
+    Artifacts.put(s, d, "vec.pq", p)
   }
 
   /** Drop every trained index and free its storage (test hook: forces the
     * next access to retrain from scratch). */
-  def reset(): Unit = {
-    coarseCache.values.foreach(c => Tables.freeCheckpoint(c.lists))
-    pqCache.values.foreach(p => Tables.freeCheckpoint(p.codes))
-    coarseCache.clear()
-    pqCache.clear()
-  }
+  def reset(): Unit = Artifacts.dropAll("vec.")
 
   // ------------------------------------------------- persistence ----------
   // The cluster shape: an index is BUILT by one job and SEARCHED by many.
@@ -267,10 +239,10 @@ object VecIndex {
   /** Install a saved index for dataset `d` — searches (q37/q37b/q58b) then
     * run against the loaded artifacts with no training jobs at all. */
   def load(s: SparkSession, d: String, dir: String): Unit =
-    // replace() evicts only dataset d (freeing its storage) — a global
+    // replace() evicts only (s, d) (freeing its storage) — a global
     // reset() would silently drop live trained indexes for every OTHER
     // dataset too
-    replace(d,
+    replace(s, d,
       Coarse(
         Tables.localize(s.read.parquet(s"$dir/cent")),
         s.read.parquet(s"$dir/lists")),

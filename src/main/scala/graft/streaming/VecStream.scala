@@ -34,7 +34,7 @@ object VecStream {
     // installed generation and frees the displaced frames' storage.
     val full = VecIndex.coarse(spark, sfDir)
     val fullPq = VecIndex.pq(spark, sfDir)
-    VecIndex.replace(sfDir,
+    VecIndex.replace(spark, sfDir,
       VecIndex.Coarse(full.cent,
         full.lists.filter(col("vec_id") % holdMod =!= 0).localCheckpoint(true)),
       VecIndex.Pq(fullPq.codebooks,

@@ -1,7 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -11,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * its jobs `artifact:<kind>`, so a listener counts the jobs each build
   * runs. The pins are the counts after the one-shuffle Lloyd rounds and
   * the one-aggregate postings stats; a change that adds a driver
-  * round-trip or a shuffle to a build fails here. */
+  * round-trip or a shuffle to a build fails here. The same count shows
+  * that concurrent first callers share one build, and that jobs run on
+  * helper threads carry their caller's description. */
 class BuildBudgetSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.builder("4").getOrCreate()
@@ -49,5 +53,59 @@ class BuildBudgetSpec extends AnyFunSuite {
     assert(text.size == 22, s"buildTextIndex jobs: $byKind")
     // the caller's own description is restored after each build
     assert(spark.sparkContext.getLocalProperty(queries.Tables.JobDescription) == null)
+  }
+
+  /** Run `f` on two threads released by one latch; both results. */
+  private def race[T](f: => T): (T, T) = {
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val both = Seq.fill(2)(Future { go.await(); f })
+      go.countDown()
+      (Await.result(both(0), Duration.Inf), Await.result(both(1), Duration.Inf))
+    } finally pool.shutdown()
+  }
+
+  test("two concurrent first callers of VecIndex.pq share one build") {
+    queries.VecIndex.reset()
+    var got: (queries.VecIndex.Pq, queries.VecIndex.Pq) = null
+    val pq = jobDescriptions { got = race(queries.VecIndex.pq(spark, sf)) }
+    assert(got._1 eq got._2, "both callers must read the same index")
+    assert(pq.count(_ == "artifact:vec.pq") == 12, pq)
+  }
+
+  test("another session builds its own VecIndex, bound to that session") {
+    val other = spark.newSession()
+    val mine = queries.VecIndex.coarse(spark, sf)
+    val theirs = queries.VecIndex.coarse(other, sf)
+    assert(!(theirs eq mine))
+    assert(theirs.lists.sparkSession eq other)
+    assert(queries.VecIndex.coarse(other, sf) eq theirs)
+    queries.VecIndex.reset()
+  }
+
+  test("two concurrent first callers of Bpe.model share one training") {
+    operators.Bpe.reset()
+    val before = queries.Artifacts.builds(spark, sf, "bpe.merges#40")
+    val (a, b) = race(operators.Bpe.model(spark, sf, nMerges = 40))
+    assert(a eq b, "both callers must read the same model")
+    assert(queries.Artifacts.builds(spark, sf, "bpe.merges#40") == before + 1)
+  }
+
+  test("every saveIndex job carries the caller's job description") {
+    queries.TextQueries.buildTextIndex(spark, sf)
+    // threads of a shared pool keep the local properties of whoever
+    // spawned them: spawn the global pool's threads under another
+    // description first
+    queries.Tables.withJobDescription(spark, "stale") {
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.sequence(Seq.fill(8)(Future(Thread.sleep(50)))), Duration.Inf)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_save_desc").toString
+    val saves = queries.Tables.withJobDescription(spark, "caller:save") {
+      jobDescriptions(queries.TextQueries.saveIndex(spark, sf, dir))
+    }
+    assert(saves.nonEmpty && saves.forall(_ == "caller:save"), saves)
   }
 }

@@ -325,7 +325,7 @@ class SketchSpec extends AnyFunSuite {
       full.lists.filter(col("vec_id") % 7 =!= 0).localCheckpoint(true))
     val reducedPq = queries.VecIndex.Pq(fullPq.codebooks,
       fullPq.codes.filter(col("vec_id") % 7 =!= 0).localCheckpoint(true))
-    queries.VecIndex.replace(sf, reduced, reducedPq)
+    queries.VecIndex.replace(spark, sf, reduced, reducedPq)
     val holdout = queries.Tables(spark, sf, "embeddings")
       .filter(col("vec_id") % 7 === 0)
       .select(col("vec_id"), col("embedding"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Unigram
+import graft.queries.Artifacts
 
 /** Pins for the unigram-LM (SentencePiece-family) tokenizer trainer — the
   * properties the q114 oracle's DuckDB relearn rests on. */
@@ -44,9 +45,10 @@ class UnigramSpec extends AnyFunSuite {
     Unigram.save(spark, sf, dir)
     Unigram.reset()
     Unigram.load(spark, sf, dir)
-    val before = Unigram.trainRuns.getOrElse(sf, 0)
+    val before = Artifacts.builds(spark, sf, "unigram.scores")
+    assert(before > 0, "the model was trained above, so it has a build count")
     val loaded = segs()
-    assert(Unigram.trainRuns.getOrElse(sf, 0) == before,
+    assert(Artifacts.builds(spark, sf, "unigram.scores") == before,
       "encode after load must run no training jobs")
     assert(loaded == trained, "installed-model encode diverged from encode-after-train")
   }

@@ -80,10 +80,11 @@ class WordPieceSpec extends AnyFunSuite {
     WordPiece.save(spark, sf, 40, dir)
     WordPiece.reset()
     WordPiece.load(spark, sf, 40, dir)
-    val before = WordPiece.trainRuns.getOrElse(sf, 0)
+    val before = queries.Artifacts.builds(spark, sf, "wordpiece.model#40")
+    assert(before > 0, "the model was trained above, so it has a build count")
     val got = WordPiece.tokenize(docsDf, WordPiece.model(spark, sf, nMerges = 40))
       .as[(Long, Seq[String])].collect().sortBy(_._1).toSeq
-    assert(WordPiece.trainRuns.getOrElse(sf, 0) == before,
+    assert(queries.Artifacts.builds(spark, sf, "wordpiece.model#40") == before,
       "encode after load must run no training jobs")
     assert(got == want, "installed-model encode diverged from encode-after-train")
     // a mismatched merge budget must be refused

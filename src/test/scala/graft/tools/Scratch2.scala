@@ -16,18 +16,19 @@ object Scratch2 {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = args(0)
+    def unigramBuilds() = graft.queries.Artifacts.builds(spark, sf, "unigram.scores")
     val ordered = graft.SparkEntry.queries.toSeq.sortBy(_._1)
     val t0 = System.nanoTime()
     ordered.foreach { case (_, fn) =>
       try fn(spark, sf).count()
       catch { case scala.util.control.NonFatal(e) => println(s"warmup fail: $e") }
     }
-    println(f"warmup: ${(System.nanoTime() - t0) / 1e9}%.1f s, gc ${gcMs / 1000.0}%.1f s, trainRuns ${graft.operators.Unigram.trainRuns.toMap}")
+    println(f"warmup: ${(System.nanoTime() - t0) / 1e9}%.1f s, gc ${gcMs / 1000.0}%.1f s, unigram builds ${unigramBuilds()}")
     (1 to 2).foreach { _ =>
       graft.queries.VecIndex.reset()
       graft.Bench.buildIndex(spark, sf)
     }
-    println(s"after buildIndex: trainRuns ${graft.operators.Unigram.trainRuns.toMap}")
+    println(s"after buildIndex: unigram builds ${unigramBuilds()}")
     val slow = collection.mutable.ArrayBuffer.empty[(String, Double)]
     // a broken query must FAIL the reproduction loudly, never be reported
     // as a (fast) timing — r18 ADVICE item (the warmup loop above keeps
@@ -43,7 +44,7 @@ object Scratch2 {
         (System.nanoTime() - s0) / 1e9
       }
       if (times.min > 0.9) slow += ((name, times.min))
-      if (name.startsWith("q114")) println(f"$name: ${times.mkString(", ")} trainRuns ${graft.operators.Unigram.trainRuns.toMap}")
+      if (name.startsWith("q114")) println(f"$name: ${times.mkString(", ")} unigram builds ${unigramBuilds()}")
     }
     println("slow (min>0.9s): " + slow.sortBy(-_._2).map { case (n, t) => f"$n=$t%.2f" }.mkString(" "))
     println(f"total gc ${gcMs / 1000.0}%.1f s")
