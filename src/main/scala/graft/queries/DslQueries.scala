@@ -1694,7 +1694,9 @@ object QueryDsl {
       if (keyed) ranked.withColumn("key_str",
         date_format(timestamp_millis(col("bucket_ms")), keyFmt))
       else ranked
-    if (keyAsc) presented.orderBy(col("bucket_ms").asc) else presented
+    // the bucket list is bounded by the grid (the window's argument above):
+    // sort it in one partition, with no range-partitioning exchange
+    if (keyAsc) presented.coalesce(1).sortWithinPartitions(col("bucket_ms").asc) else presented
   }
 
   /** The STREAMING subset of the proportional_sum wire grammar — the

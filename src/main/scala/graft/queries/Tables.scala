@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loader for the driver-generated TPC-H-ish test schema.
   *
@@ -9,7 +10,13 @@ import org.apache.spark.sql.functions._
   * nano-longs under `spark.sql.legacy.parquet.nanosAsLong` (set by
   * [[graft.GraftSession]]). This loader converts them back to TimestampType
   * (floor to micros — DuckDB's TIMESTAMP_NS→TIMESTAMP cast truncates the
-  * same way, keeping both engines bit-identical). */
+  * same way, keeping both engines bit-identical).
+  *
+  * Each table's schema is inferred once per (session, path) and reused by
+  * every later read in that session ([[schema]]): files are still listed
+  * on every read, so a file replaced under the same schema is seen, but a
+  * table whose schema is rewritten in place within a session is not
+  * supported. */
 object Tables {
 
   private val tsCols: Map[String, Seq[String]] = Map(
@@ -122,6 +129,16 @@ object Tables {
       else df
     }
 
+  /** `name`'s parquet schema as inferred under `sfDir`, before [[coerceTs]].
+    * Inference runs a Spark job, so it runs once per (session, sfDir): the
+    * schema is the build-once artifact `table.<name>`. The batch reader
+    * below and the streaming file sources
+    * ([[graft.streaming.FlowStream.tableStream]]) both read through it. */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    Artifacts(spark, sfDir, s"table.$name")(spark.read.parquet(s"$sfDir/$name.parquet").schema)
+
+  /** The `name` table under `sfDir`, timestamps coerced ([[coerceTs]]).
+    * Reads with the session's [[schema]], so a warm call runs no job. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    coerceTs(spark.read.parquet(s"$sfDir/$name.parquet"), name)
+    coerceTs(spark.read.schema(schema(spark, sfDir, name)).parquet(s"$sfDir/$name.parquet"), name)
 }

@@ -1304,7 +1304,7 @@ object TextQueries {
       Tables(s, d, "documents").repartition(4).write.mode("overwrite").parquet(p.toString)
     }
     s.readStream
-      .schema(Tables(s, d, "documents").schema)
+      .schema(Tables.schema(s, d, "documents"))
       .parquet(spool.toString)
       .withColumn("toks", text.tokens(col("text")))
   }

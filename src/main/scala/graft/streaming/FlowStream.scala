@@ -34,13 +34,13 @@ object FlowStream {
       dir.resolve(s"$table.parquet"), Paths.get(sfDir, s"$table.parquet"))
     dir.toFile.deleteOnExit()
     link.toFile.deleteOnExit()
-    val schema = spark.read.parquet(s"$sfDir/$table.parquet").schema
-    // same ts coercion as the batch reader (graft.queries.Tables): under a
-    // nanos drop the schema above carries LongType ts (nanosAsLong), and
-    // the downstream unix_micros(ts) would fail at analysis without this
+    // the batch reader's per-session schema and ts coercion
+    // (graft.queries.Tables): under a nanos drop the schema carries LongType
+    // ts (nanosAsLong), and the downstream unix_micros(ts) would fail at
+    // analysis without the coercion
     graft.queries.Tables.coerceTs(
       spark.readStream
-        .schema(schema)
+        .schema(graft.queries.Tables.schema(spark, sfDir, table))
         .parquet(dir.toString),
       table)
   }

@@ -1,12 +1,10 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors}
+import java.util.concurrent.{CountDownLatch, Executors}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Job budget of the build-once index rebuild: every artifact build tags
@@ -21,24 +19,13 @@ class BuildBudgetSpec extends AnyFunSuite {
   lazy val spark = GraftSession.builder("4").getOrCreate()
   private val sf = "/root/testdata/sf0.001"
 
-  /** Descriptions of the jobs `f` runs. */
-  private def jobDescriptions(f: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(queries.Tables.JobDescription))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.GraftListenerAccess.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    seen.asScala.toSeq
-  }
+  private def jobDescriptions(f: => Unit): Seq[String] = Jobs.descriptions(spark)(f)
 
   test("a full rebuild runs the pinned number of jobs per artifact") {
     queries.VecIndex.reset()
     queries.TextQueries.resetTextIndex(spark, sf)
+    // a rebuild reads tables whose schemas the session already resolved
+    Seq("embeddings", "documents").foreach(queries.Tables.schema(spark, sf, _))
     val coarse = jobDescriptions(queries.VecIndex.coarse(spark, sf))
     val pq = jobDescriptions(queries.VecIndex.pq(spark, sf))
     val text = jobDescriptions(queries.TextQueries.buildTextIndex(spark, sf))
@@ -48,9 +35,9 @@ class BuildBudgetSpec extends AnyFunSuite {
     assert(text.forall(_.startsWith("artifact:text.")), text)
     val byKind = text.groupBy(identity).map { case (k, v) => k -> v.size }
     info(s"coarse ${coarse.size}, pq ${pq.size}, text ${text.size} $byKind")
-    assert(coarse.size == 17, "VecIndex.coarse jobs")
-    assert(pq.size == 12, "VecIndex.pq jobs")
-    assert(text.size == 22, s"buildTextIndex jobs: $byKind")
+    assert(coarse.size == 16, "VecIndex.coarse jobs")
+    assert(pq.size == 11, "VecIndex.pq jobs")
+    assert(text.size == 21, s"buildTextIndex jobs: $byKind")
     // the caller's own description is restored after each build
     assert(spark.sparkContext.getLocalProperty(queries.Tables.JobDescription) == null)
   }
@@ -72,7 +59,7 @@ class BuildBudgetSpec extends AnyFunSuite {
     var got: (queries.VecIndex.Pq, queries.VecIndex.Pq) = null
     val pq = jobDescriptions { got = race(queries.VecIndex.pq(spark, sf)) }
     assert(got._1 eq got._2, "both callers must read the same index")
-    assert(pq.count(_ == "artifact:vec.pq") == 12, pq)
+    assert(pq.count(_ == "artifact:vec.pq") == 11, pq)
   }
 
   test("another session builds its own VecIndex, bound to that session") {

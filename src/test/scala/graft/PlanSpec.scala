@@ -38,6 +38,19 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial_count"), "partial aggregation before the agg exchange")
   }
 
+  test("q143: the agg body's _key asc order sorts locally, on q01's exchanges") {
+    val p = plan("q143_agg_body")
+    // the bucket list is grid-bounded: a one-partition local sort, never
+    // a range-partitioning exchange on top of q01's two
+    assert(!p.contains("rangepartitioning"), s"no range exchange for the bucket order:\n$p")
+    val exchanges = """\(\d+\) Exchange""".r
+    assert(exchanges.findAllIn(p).size == exchanges.findAllIn(plan("q01_prop_sum_basic")).size)
+    // same rows in the same order as the global sort of the typed twin
+    val rows = SparkEntry.queries("q143_agg_body")(spark, sf).collect().toSeq
+    val sorted = SparkEntry.queries("q01_prop_sum_basic")(spark, sf).orderBy("bucket_ms").collect().toSeq
+    assert(rows.nonEmpty && rows == sorted)
+  }
+
   test("q35: query side broadcast so the corpus streams without a vector shuffle") {
     val p = plan("q35_ann_bruteforce")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))

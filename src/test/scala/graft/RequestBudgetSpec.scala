@@ -1,0 +1,39 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Job budget of the serving requests that scan `events`: a table's schema
+  * is resolved once per session, so building a request's frame runs no
+  * job, and the action runs only its own. The pins count every job of a
+  * warm request's frame build plus `collect`; a change that adds a
+  * job or an exchange to one of them fails here. */
+class RequestBudgetSpec extends AnyFunSuite {
+
+  lazy val spark = GraftSession.builder("4").getOrCreate()
+  private val sf = s"${sys.props("user.home")}/testdata/sf0.001"
+
+  private def jobs(f: => Unit): Int = Jobs.descriptions(spark)(f).size
+
+  test("a second Tables call in a session runs no job and builds no schema") {
+    queries.Tables(spark, sf, "events")
+    assert(jobs(queries.Tables(spark, sf, "events")) == 0)
+    assert(queries.Artifacts.builds(spark, sf, "table.events") == 1)
+  }
+
+  test("another session resolves its own schema entry") {
+    queries.Tables(spark, sf, "events")
+    val other = spark.newSession()
+    assert(queries.Artifacts.builds(other, sf, "table.events") == 0)
+    assert(jobs(queries.Tables(other, sf, "events")) == 1)
+    assert(jobs(queries.Tables(other, sf, "events")) == 0)
+    assert(queries.Artifacts.builds(other, sf, "table.events") == 1)
+    assert(queries.Artifacts.builds(spark, sf, "table.events") == 1)
+  }
+
+  for ((q, pinned) <- Seq("q01_prop_sum_basic" -> 3, "q11_terms_topn" -> 2, "q143_agg_body" -> 3))
+    test(s"$q runs $pinned jobs per request") {
+      val run = () => SparkEntry.queries(q)(spark, sf).collect()
+      run() // warm: the session's schema is resolved
+      assert(jobs(run()) == pinned)
+    }
+}
