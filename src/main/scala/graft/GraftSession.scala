@@ -6,6 +6,29 @@ import org.apache.spark.sql.SparkSession
   * test suites. Mirrors what a cluster deployment would set via spark-submit:
   * AQE on, UTC session time, shuffle parallelism sized to the machine. */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100), sized so that each
+    * generated class compiles once per JVM.
+    *
+    * At 100 entries one warm `training_pipeline` pass at sf0.1 (text + coarse
+    * + PQ rebuild, q31, q66, mm06, st04) compiled 174 classes, about 3.2 s of
+    * Janino: each pass evicted the classes of the pass before it, so every
+    * warm rebuild recompiled all of its code. Both benchmark workloads
+    * together hold about 265 classes, but one `graft.Verify` run over the
+    * whole registry at sf0.01 compiles 3087 classes. A second pass
+    * over the registry in the same JVM recompiled 2526 classes at 2000
+    * entries and 87 at 8192, so the cache is sized to hold the registry.
+    *
+    * The cache is built when the JVM first generates code, from the conf of
+    * the session active then, so the size must be set before that: every
+    * session is built here. Memory, measured after GC against 100 entries
+    * (4 cores): after set-up, one `training_pipeline` pass and the five
+    * `es_serving` keys at sf0.1 (about 265 classes held), +3 MB heap and
+    * metaspace unchanged; after one pass over the whole registry at sf0.01
+    * (about 3100 classes held), +95 MB heap and +23 MB metaspace. */
+  val CodegenCacheEntries = 4096
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession
       .builder()
@@ -23,6 +46,14 @@ object GraftSession {
       // TIMESTAMP_NTZ, keeping unix_micros()/pushdown on the scan column
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the codegen cache is keyed by (class loader, code). With artifact
+      // isolation on, the tasks of every session run under a class loader
+      // of their own, and each stream run executes in a fresh clone of its
+      // session, so every stream run recompiled its task-side classes
+      // (st04: 12 a run). graft adds no session artifacts (jars, files), so
+      // the isolation buys nothing here.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -35,6 +35,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // every codegen cache miss compiles one class; the histogram samples
+    // each compile's milliseconds, so count x mean estimates Janino's total
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    System.err.println(f"[verify] codegen: ${compiles.getCount} classes compiled, " +
+      f"~${compiles.getCount * compiles.getSnapshot.getMean}%.0f ms Janino " +
+      s"(cache ${GraftSession.CodegenCacheEntries} entries)")
     spark.stop()
   }
 }

@@ -60,7 +60,6 @@ object IngestQueries {
   def netflowPackets(s: SparkSession, d: String): org.apache.spark.sql.Dataset[Packet] = {
     import s.implicits._
     val flows = Flows.df(s, d)
-      .repartition(col("event_id"))
       .select(
         col("event_id"), col("user_id"), col("v").as("value"),
         (col("rs") - lit(Flows.JAN_START_MS)).as("rel_first"),
@@ -104,7 +103,6 @@ object IngestQueries {
   private def q50b(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val flows = Flows.df(s, d)
-      .repartition(col("event_id"))
       .select(col("event_id"), col("user_id"), col("v").as("value"),
         col("rs").as("rel_first"), col("re").as("rel_last"))
       .as[FlowIn]
@@ -291,7 +289,6 @@ object IngestQueries {
   private def q50e(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val flows = Flows.df(s, d)
-      .repartition(col("event_id"))
       .select(col("event_id"), col("user_id"), col("v").as("value"),
         (col("rs") - lit(Flows.JAN_START_MS)).as("rel_first"),
         (col("re") - lit(Flows.JAN_START_MS)).as("rel_last"))
@@ -436,7 +433,6 @@ object IngestQueries {
     val ckpt = scratchDir("graft_ipfix_ckpt")
     val nDomains = 4L
     val flows = Flows.df(s, d)
-      .repartition(col("event_id"))
       .select(col("event_id"), col("user_id"), col("v").as("value"),
         col("rs").as("rel_first"), col("re").as("rel_last"))
       .as[FlowIn]

@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the one-aggregate postings stats; a change that adds a driver
   * round-trip or a shuffle to a build fails here. The same count shows
   * that concurrent first callers share one build, and that jobs run on
-  * helper threads carry their caller's description. */
+  * helper threads carry their caller's description. A warm rebuild
+  * compiles no generated class: the session's codegen cache holds the
+  * whole rebuild (see [[GraftSession.CodegenCacheEntries]]). */
 class BuildBudgetSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.builder("4").getOrCreate()
@@ -40,6 +42,31 @@ class BuildBudgetSpec extends AnyFunSuite {
     assert(text.size == 21, s"buildTextIndex jobs: $byKind")
     // the caller's own description is restored after each build
     assert(spark.sparkContext.getLocalProperty(queries.Tables.JobDescription) == null)
+  }
+
+  /** Drop and rebuild every build-once index of `d`: coarse, PQ, text. */
+  private def rebuild(d: String): Unit = {
+    queries.VecIndex.reset()
+    queries.TextQueries.resetTextIndex(spark, d)
+    queries.VecIndex.coarse(spark, d)
+    queries.VecIndex.pq(spark, d)
+    queries.TextQueries.buildTextIndex(spark, d)
+  }
+
+  test("a second full rebuild compiles no class") {
+    rebuild(sf)
+    assert(Jobs.compiled(rebuild(sf)) == 0)
+  }
+
+  test("a rebuild over another dataset compiles no class") {
+    // the generated code does not depend on the data (centroids enter the
+    // argmax kernels as reference objects, not literals); a larger dataset
+    // can still change plan shapes: sf0.1 -> sf0.01 compiles 5 classes
+    val other = s"${sys.props("user.home")}/testdata/sf0.01"
+    rebuild(sf)
+    val n = try Jobs.compiled(rebuild(other))
+    finally { queries.TextQueries.resetTextIndex(spark, other); queries.VecIndex.reset() }
+    assert(n == 0)
   }
 
   /** Run `f` on two threads released by one latch; both results. */

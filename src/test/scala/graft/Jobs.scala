@@ -4,11 +4,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Job counting for the budget specs: a listener records the description
-  * of every job started while `f` runs. */
+/** Job and compile counting for the budget specs: a listener records the
+  * description of every job started while `f` runs, and Spark's codegen
+  * metrics count the classes it compiles. */
 object Jobs {
 
   /** Descriptions of the jobs `f` runs on `spark`'s context. */
@@ -24,5 +26,14 @@ object Jobs {
       org.apache.spark.GraftListenerAccess.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     seen.asScala.toSeq
+  }
+
+  /** Generated classes compiled while `f` runs: every cache miss of Spark's
+    * codegen cache compiles one class, so a warm `f` compiles 0. The count
+    * is JVM-wide; nothing else may run concurrently. */
+  def compiled(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }

@@ -51,6 +51,14 @@ class PlanSpec extends AnyFunSuite {
     assert(rows.nonEmpty && rows == sorted)
   }
 
+  test("netflowPackets: the packet feed packs on Flows.df's spread (one exchange)") {
+    // Flows.df already hash-partitions by event_id with an explicit count;
+    // a second by-column spread would be an exchange of its own
+    val p = queries.IngestQueries.netflowPackets(spark, sf).queryExecution.explainString(FormattedMode)
+    val exchanges = """\(\d+\) Exchange""".r.findAllIn(p).size
+    assert(exchanges == 1, s"one exchange expected, found $exchanges:\n$p")
+  }
+
   test("q35: query side broadcast so the corpus streams without a vector shuffle") {
     val p = plan("q35_ann_bruteforce")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))

@@ -6,13 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * is resolved once per session, so building a request's frame runs no
   * job, and the action runs only its own. The pins count every job of a
   * warm request's frame build plus `collect`; a change that adds a
-  * job or an exchange to one of them fails here. */
+  * job or an exchange to one of them fails here. A warm request also
+  * compiles no generated class: its code is in the codegen cache. */
 class RequestBudgetSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.builder("4").getOrCreate()
   private val sf = s"${sys.props("user.home")}/testdata/sf0.001"
 
   private def jobs(f: => Unit): Int = Jobs.descriptions(spark)(f).size
+
+  private def request(q: String): Unit = SparkEntry.queries(q)(spark, sf).collect()
 
   test("a second Tables call in a session runs no job and builds no schema") {
     queries.Tables(spark, sf, "events")
@@ -32,8 +35,13 @@ class RequestBudgetSpec extends AnyFunSuite {
 
   for ((q, pinned) <- Seq("q01_prop_sum_basic" -> 3, "q11_terms_topn" -> 2, "q143_agg_body" -> 3))
     test(s"$q runs $pinned jobs per request") {
-      val run = () => SparkEntry.queries(q)(spark, sf).collect()
-      run() // warm: the session's schema is resolved
-      assert(jobs(run()) == pinned)
+      request(q) // warm: the session's schema is resolved
+      assert(jobs(request(q)) == pinned)
+    }
+
+  for (q <- Seq("q01_prop_sum_basic", "q11_terms_topn", "q143_agg_body"))
+    test(s"a warm $q request compiles no class") {
+      request(q) // warm: the request's classes are compiled
+      assert(Jobs.compiled(request(q)) == 0)
     }
 }

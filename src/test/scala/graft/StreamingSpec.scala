@@ -22,6 +22,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
   }
 
+  test("a second st04 run compiles no class (each run's cloned session shares the codegen cache)") {
+    val sf = "/root/testdata/sf0.001"
+    val run = () => queries.IngestQueries.queries("st04_netflow_pipeline")(spark, sf).collect()
+    assert(run().nonEmpty)
+    assert(Jobs.compiled(run()) == 0)
+  }
+
   test("st03b: watermarked dedup answers exactly st03 while its state store stays bounded") {
     val sf = "/root/testdata/sf0.001"
     val (out03, state03) =
