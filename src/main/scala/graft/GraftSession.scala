@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for local SparkSession config shared by Verify, Bench, and the
-  * test suites. Mirrors what a cluster deployment would set via spark-submit:
-  * AQE on, UTC session time, shuffle parallelism sized to the machine. */
+/** One place for local SparkSession config shared by Verify, the dev mains
+  * and the test suites. Mirrors what a cluster deployment would set via
+  * spark-submit: AQE on, UTC session time, shuffle parallelism sized to the
+  * machine. */
 object GraftSession {
 
   /** Entries of Spark's generated-class cache

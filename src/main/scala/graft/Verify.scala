@@ -2,17 +2,21 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare.
+  * Usage: `graft.Verify <sfDir> <outDir> [q1,q2,...]`; with the name
+  * filter, both the dumps and oracle_sql.json hold only those names, so
+  * `tools/check_oracle.py` checks exactly them. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter for fast
     // single-query iteration (the driver always runs the full dump)
     val only = args.lift(2).map(_.split(',').toSet)
+    def kept(name: String): Boolean = only.forall(_.contains(name))
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => kept(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -32,7 +36,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (name, _) => kept(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // every codegen cache miss compiles one class; the histogram samples

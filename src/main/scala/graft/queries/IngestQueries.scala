@@ -20,7 +20,7 @@ object IngestQueries {
     graft.functions.detsum.roundHalfUpLong(v)
 
   /** Scratch dir for spool/checkpoint scaffolding, deleted recursively at
-    * JVM exit so repeated Verify/Bench invocations don't accumulate disk.
+    * JVM exit so repeated Verify/perfbench runs don't accumulate disk.
     * ONE shutdown hook drains a shared queue — registering a hook thread
     * per invocation would accumulate live Threads over a long session. */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]

@@ -35,9 +35,9 @@ object Tables {
     *
     * NOT thread-safe: it mutates the shared session conf and restores it in
     * `finally`, so two concurrent callers on the same SparkSession race and
-    * one can run (or permanently restore) the wrong value. The Verify/Bench
-    * harnesses run queries strictly sequentially; a concurrent caller must
-    * pass a dedicated `spark.newSession()` instead. */
+    * one can run (or permanently restore) the wrong value. `graft.Verify`
+    * and perfbench's stream op run queries strictly sequentially; a
+    * concurrent caller must pass a dedicated `spark.newSession()` instead. */
   def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
     val old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)

@@ -867,9 +867,9 @@ object TextQueries {
       key
     }
 
-  /** Bench hook (the [[VecIndex.reset]] analog): drop every text-index
-    * artifact for (s, d) and free its checkpoint blocks, so the next
-    * [[buildTextIndex]] pays the full build from the parquet corpus.
+  /** perfbench's rebuild hook (the [[VecIndex.reset]] analog): drop every
+    * text-index artifact for (s, d) and free its checkpoint blocks, so the
+    * next [[buildTextIndex]] pays the full build from the parquet corpus.
     * Callers must be sequential with every artifact consumer. */
   private[graft] def resetTextIndex(s: SparkSession, d: String): Unit =
     Artifacts.drop(s, d, textIndex.map(_.kind))

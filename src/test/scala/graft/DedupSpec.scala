@@ -352,8 +352,8 @@ class DedupSpec extends AnyFunSuite {
   test("q32/q33 leave no cache blocks pinned after their actions complete") {
     // materializeAndFree unpersists the sketch checkpoint SYNCHRONOUSLY
     // (blocking) once the top-100 result is on the driver, so the assert
-    // needs no GC/ContextCleaner grace period — repeated Verify/Bench
-    // invocations can never accumulate pinned storage
+    // needs no GC/ContextCleaner grace period — repeated Verify/perfbench
+    // runs can never accumulate pinned storage
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
     queries.DedupQueries.queries("q32_dedup_minhash_lsh")(spark, "/root/testdata/sf0.001").count()

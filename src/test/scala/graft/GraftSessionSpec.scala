@@ -1,0 +1,33 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** What a `spark.newSession()` of the builder's session keeps. A caller
+  * that needs its own conf (e.g. a shuffle-partition count) can only use a
+  * child session in place of [[graft.queries.Tables.withShufflePartitions]]
+  * if the child still resolves graft's native functions and still runs
+  * under the builder's confs. */
+class GraftSessionSpec extends AnyFunSuite {
+
+  lazy val spark = GraftSession.builder("4").getOrCreate()
+
+  test("newSession() keeps the GraftExtensions functions") {
+    val child = spark.newSession()
+    val r = child.sql(
+      "SELECT vec_argmax_l2(array(1.0d, 0.0d), 0, map(0, array(" +
+        "named_struct('l', 1, 'c', array(0.0d, 1.0d), 'c2', 1.0d), " +
+        "named_struct('l', 2, 'c', array(1.0d, 0.0d), 'c2', 1.0d)))) AS a").collect()(0)
+    assert(r.getInt(0) == 2)
+  }
+
+  test("newSession() keeps the builder's confs") {
+    val child = spark.newSession()
+    val expected = Map(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.codegen.cache.maxEntries" -> GraftSession.CodegenCacheEntries.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false")
+    expected.foreach { case (k, v) =>
+      assert(child.conf.get(k) == v, s"$k in the child session")
+    }
+  }
+}

@@ -3,6 +3,8 @@ package graft
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ProportionalSum
@@ -227,5 +229,53 @@ class PropSumSpec extends AnyFunSuite {
         flows, col("rs"), col("re"), col("v"), None, Config(ms)))
       assert(cal == fixed, s"calendar '$unit' must equal the fixed ${ms}ms grid")
     }
+  }
+
+  // ---- properties over small seeded frames: fixed interval, no clamp ----
+
+  private val Itv = 100L
+
+  /** A flow on or off the bucket grid, instant or spanning up to ~10
+    * buckets, with a value of either sign. Grid-aligned ends exercise the
+    * closed-end bucket that counts the doc with 0 value. */
+  private val flowGen: Gen[(Long, Long, Double)] = for {
+    rs <- Gen.oneOf(Gen.choose(0L, 50L).map(_ * Itv), Gen.choose(0L, 5000L))
+    dur <- Gen.frequency(
+      1 -> Gen.const(0L), 1 -> Gen.choose(1L, 10L).map(_ * Itv), 3 -> Gen.choose(1L, 1000L))
+    v <- Gen.choose(-1000.0, 1000.0)
+  } yield (rs, rs + dur, v)
+
+  private val framesGen: Gen[List[(Long, Long, Double)]] =
+    Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, flowGen))
+
+  /** The frame's histogram with the input spread over `parts` partitions. */
+  private def histogram(flows: Seq[(Long, Long, Double)], parts: Int): Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    val df = spark.sparkContext.parallelize(flows, parts).toDF("rs", "re", "v")
+    ProportionalSum.run(df, col("rs"), col("re"), col("v"), None, Config(Itv))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sortBy(_._1)
+  }
+
+  test("properties: value total, doc_count per touched bucket, and partition-layout independence") {
+    // a flow's overlap ratios sum to 1 over its buckets, so Σ value = Σ v up
+    // to detsum's per-term rounding (half of 1e-10) plus double ulps; the
+    // closed end bucket counts too, so a doc adds floor(re/itv) − floor(rs/itv) + 1
+    val prop = Prop.forAllNoShrink(framesGen) { flows =>
+      val out = histogram(flows, 1)
+      val docCount = out.map(_._2).sum
+      val tol = docCount * 1e-10 + 1e-9
+      val total = out.map(_._3).sum
+      val inputTotal = flows.map(_._3).sum
+      val expectedCount = flows.map { case (rs, re, _) =>
+        Math.floorDiv(re, Itv) - Math.floorDiv(rs, Itv) + 1 }.sum
+      (Prop(math.abs(total - inputTotal) <= tol) :| s"value total $total vs $inputTotal") &&
+        (Prop(docCount == expectedCount) :| s"doc_count $docCount vs $expectedCount") &&
+        (Prop(out == histogram(flows, 7)) :| "rows differ between 1 and 7 input partitions")
+    }
+    // 15 cases: each runs two small queries (mostly planning), about 4 s
+    // of tier-1 time on 4 cores
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(15).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, res.status.toString)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** The ANN recall sweep behind `ANN_RECALL.md` and q37c's probe depth —
   * `sbt "Test/runMain graft.tools.AnnRecall"`, data dir from
   * SPARK_GRAFT_SF_DIR (default sf0.1; point it at a tools/make_sf10x.py
-  * derivation for the scale ladder).
+  * derivation for the scale ladder), cores from SPARK_GRAFT_CPUS.
   *
   * The WHOLE nprobe→recall@5 ladder comes from one pass, no per-depth
   * search runs: within-candidate ranking is exact, so a brute-force
@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.SimilarityQueries.queryCentroidRanks]]) is ≤ p — recall
   * at p is exactly the fraction of true pairs with crank ≤ p. Wall times
   * for the baseline and the two shipped depths are timed separately
-  * (warmup + min of 2, the QBench discipline). */
+  * (warmup + min of 2, QBudget's discipline). */
 object AnnRecall {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.builder("32").getOrCreate()
+    val spark = graft.GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val idx = graft.queries.VecIndex.coarse(spark, dir)
     val nlists = idx.cent.count().toInt

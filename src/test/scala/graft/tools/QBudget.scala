@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
   * generator ([[QBudgetPin]]) and the enforcing spec (graft.QBudgetSpec),
   * so the contract and its generator cannot drift.
   *
-  * Timing discipline (graft.Bench's, at test scale): one untimed warmup
-  * pass over the whole registry (JIT + codegen + parquet footers), then
-  * min-of-2 per query — the min is the plan's cost, not the JVM's mood.
+  * Timing discipline: one untimed warmup pass over the whole registry
+  * (JIT + codegen + parquet footers), then min-of-2 per query — the min is
+  * the plan's cost, not the JVM's mood.
   * The fixed-work LCG canary normalizes machine speed between the pin run
   * and the enforcing run. */
 object QBudget {
@@ -68,7 +68,7 @@ object QBudget {
     else if (name.startsWith("mm")) "multimodal"
     else "batch"
 
-  /** Fixed-work single-thread LCG probe (graft.Bench's canary, min-of-2):
+  /** Fixed-work single-thread LCG probe (perfbench Host's LCG, min-of-2):
     * same instructions every run, so pin-run vs enforce-run canary ratio
     * measures the MACHINE, not the engine. */
   def canary(): Double = {

@@ -7,10 +7,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * durationMs map (triggerExecution, addBatch, getBatch, walCommit,
   * commitOffsets, queryPlanning) and state-operator commit times, then
   * runs the named registry queries once (after one warmup run each).
-  * Usage: Test/runMain graft.tools.StreamProfile <q1,q2,...> */
+  * Usage: Test/runMain graft.tools.StreamProfile <q1,q2,...>; data dir
+  * from SPARK_GRAFT_SF_DIR (default sf0.1), cores from SPARK_GRAFT_CPUS. */
 object StreamProfile {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.builder("32").getOrCreate()
+    val spark = graft.GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     @volatile var tag = ""
     spark.streams.addListener(new StreamingQueryListener {
