@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Spark-native re-expression of the reference engine's `proportional_sum`
   * aggregation (see /root/reference/es-8.18.2/src/main/java/org/opennms/
@@ -10,9 +9,10 @@ import org.apache.spark.sql.types.DecimalType
   * ProportionalSumAggregator.java:136-228).
   *
   * Semantics: each input row carries a time range `[rangeStart, rangeEnd]`
-  * (epoch millis) and a value. Time is bucketed by a fixed `intervalMs`
-  * (shifted by `offsetMs`); the row's value is credited to every bucket it
-  * overlaps, proportionally to `overlap(bucket, range) / duration(range)`.
+  * (epoch millis) and a value. Time is bucketed by a fixed `intervalMs` or
+  * a calendar unit (shifted by `offsetMs`); the row's value is credited to
+  * every bucket it overlaps, proportionally to
+  * `overlap(bucket, range) / duration(range)`.
   * A zero-duration range contributes its full value to its single bucket
   * (ProportionalSumAggregator.java:198-200). Optional `startMs`/`endMs`
   * clamp WHICH buckets are emitted, but ratios keep using the unclamped
@@ -34,7 +34,13 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ProportionalSum {
 
-  /** Mirrors ProportionalSumAggregationBuilder's knobs (fixed-interval form).
+  /** Mirrors ProportionalSumAggregationBuilder's knobs. The grid is fixed
+    * (`intervalMs`) unless `calendarUnit` names a calendar unit (the
+    * reference's `dateHistogramInterval` form,
+    * ProportionalSumAggregationBuilder:104-116), in which case `intervalMs`
+    * is unused. `offsetMs` shifts either grid, as the reference applies it
+    * inside every rounding — `round(x - offset) + offset`
+    * (ProportionalSumAggregator.java:183-186).
     * `validate=true` reproduces the reference's hard failures on negative
     * range starts/ends and start-after-end rows
     * (ProportionalSumAggregator.java:143-159); off by default because the
@@ -45,7 +51,33 @@ object ProportionalSum {
       startMs: Option[Long] = None,
       endMs: Option[Long] = None,
       offsetMs: Long = 0L,
-      validate: Boolean = false)
+      validate: Boolean = false,
+      calendarUnit: Option[String] = None) {
+    require(calendarUnit.isDefined || intervalMs > 0, s"interval must be positive, got $intervalMs")
+    calendarUnit.foreach(u => require(calendarSteps.contains(u.toLowerCase), s"unsupported calendar unit: $u"))
+  }
+
+  /** A calendar-grid Config (the fixed width is unused there). */
+  def calendar(unit: String, startMs: Option[Long], endMs: Option[Long], offsetMs: Long = 0L): Config =
+    Config(0L, startMs, endMs, offsetMs, calendarUnit = Some(unit))
+
+  /** Step of each calendar unit: any unit Spark's date_trunc + interval
+    * arithmetic supports ("week", "month", "quarter", "year") — the
+    * reference accepts the full DateHistogramInterval family. The sub-day
+    * units of the reference's DATE_FIELD_UNITS family
+    * (ProportionalSumAggregationBuilder.java:78-97) are fixed-width under
+    * the pinned UTC session (tz hard-disabled by the reference —
+    * builder:434,492-493) and alias the fixed grid, but the builder accepts
+    * the calendar spelling, so this grid must too. */
+  private val calendarSteps: Map[String, String] = Map(
+    "week" -> "INTERVAL 7 DAY",
+    "month" -> "INTERVAL 1 MONTH",
+    "quarter" -> "INTERVAL 3 MONTH",
+    "year" -> "INTERVAL 1 YEAR",
+    "day" -> "INTERVAL 1 DAY",
+    "hour" -> "INTERVAL 1 HOUR",
+    "minute" -> "INTERVAL 1 MINUTE",
+    "second" -> "INTERVAL 1 SECOND")
 
   /** value scaled by the sampling multiplier when finite and non-zero
     * (ProportionalSumAggregator.java:171-180, SamplingIT). */
@@ -60,7 +92,7 @@ object ProportionalSum {
         ).otherwise(value)
     }
 
-  /** Floor `x` to the bucket grid: floor((x - offset) / interval) * interval + offset.
+  /** Floor `x` to the fixed grid: floor((x - offset) / interval) * interval + offset.
     * Double division then floor — bit-compatible with the DuckDB oracle SQL. */
   private def roundToBucket(x: Column, cfg: Config): Column = {
     val shifted = if (cfg.offsetMs == 0L) x else x - lit(cfg.offsetMs)
@@ -71,7 +103,12 @@ object ProportionalSum {
   /** One output row per (input row, overlapped bucket): adds
     * `bucket_ms` (bucket start, epoch millis) and `__contrib` (this row's
     * proportional value share in that bucket). All other input columns pass
-    * through untouched, so callers can group by arbitrary dimensions. */
+    * through untouched, so callers can group by arbitrary dimensions.
+    *
+    * Only the bucket rounding differs by grid: the fixed grid floors a
+    * double division, the calendar grid `date_trunc`s and steps by the
+    * unit, so its buckets vary in width; the overlap and ratio math is the
+    * same on the bucket-boundary epoch millis. */
   def explodeContrib(
       df: DataFrame,
       rangeStartMs: Column,
@@ -81,41 +118,46 @@ object ProportionalSum {
       cfg: Config): DataFrame = {
     val clampS = cfg.startMs.map(s => greatest(rangeStartMs, lit(s))).getOrElse(rangeStartMs)
     val clampE = cfg.endMs.map(e => least(rangeEndMs, lit(e))).getOrElse(rangeEndMs)
-    val itv = lit(cfg.intervalMs)
-    val rsChecked =
+    val rs =
       if (!cfg.validate) rangeStartMs.cast("long")
       else when(rangeStartMs < 0L, raise_error(concat(lit("Invalid range start: "), rangeStartMs)))
         .otherwise(rangeStartMs).cast("long")
-    val reChecked =
+    val re =
       if (!cfg.validate) rangeEndMs.cast("long")
       else when(rangeEndMs < 0L, raise_error(concat(lit("Invalid range end: "), rangeEndMs)))
         .when(rangeEndMs < rangeStartMs,
           raise_error(concat(lit("Start cannot be after end! start: "), rangeStartMs, lit(" end: "), rangeEndMs)))
         .otherwise(rangeEndMs).cast("long")
-    df.withColumn("__rs", rsChecked)
-      .withColumn("__re", reChecked)
-      .withColumn("__dur", col("__re") - col("__rs"))
-      .withColumn("__val", effectiveValue(value, sampling))
+    val v = effectiveValue(value, sampling)
+    // first/last bucket of the clamped range, the sequence step, and the
+    // bucket's start and end in epoch millis from the exploded `__b`
+    val (first, last, step, bucketMs, nextMs) = cfg.calendarUnit match {
+      case None =>
+        val itv = lit(cfg.intervalMs)
+        (roundToBucket(clampS, cfg), roundToBucket(clampE, cfg), itv, col("__b"), col("__b") + itv)
+      case Some(unit) =>
+        val stepSql = calendarSteps(unit.toLowerCase)
+        val off = lit(cfg.offsetMs)
+        (date_trunc(unit, timestamp_millis(clampS - off)), date_trunc(unit, timestamp_millis(clampE - off)),
+          expr(stepSql), expr("unix_micros(__b) DIV 1000") + off,
+          expr(s"unix_micros(__b + $stepSql) DIV 1000") + off)
+    }
+    val dur = col("__re") - col("__rs")
+    df
       // ES skips any doc missing one of the agg's fields (the values-source
       // advanceExact miss): null range or value ⇒ no buckets, no doc_count.
-      // (A null range already fails the __fb <= __lb filter via null
-      // comparison; the null VALUE case must not count the doc either.)
-      .filter(col("__rs").isNotNull && col("__re").isNotNull && col("__val").isNotNull)
-      .withColumn("__fb", roundToBucket(clampS, cfg))
-      .withColumn("__lb", roundToBucket(clampE, cfg))
-      // rows whose (clamped) bucket range is empty never enter the reference's
-      // bucket loop (ProportionalSumAggregator.java:189-190)
-      .filter(col("__fb") <= col("__lb"))
-      .withColumn("bucket_ms", explode(sequence(col("__fb"), col("__lb"), itv)))
+      // Rows whose (clamped) bucket range is empty never enter the
+      // reference's bucket loop (ProportionalSumAggregator.java:189-190).
+      .filter(rs.isNotNull && re.isNotNull && v.isNotNull && first <= last)
+      .select(col("*"), rs.as("__rs"), re.as("__re"), v.as("__val"),
+        explode(sequence(first, last, step)).as("__b"))
       // getTimeInWindow (ProportionalSumAggregator.java:222-228): overlap of
-      // [bucket, bucket+interval) with the UNCLAMPED range, floored at 0
-      .withColumn(
-        "__ov",
-        greatest(lit(0L), least(col("bucket_ms") + itv, col("__re")) - greatest(col("bucket_ms"), col("__rs"))))
-      .withColumn(
-        "__contrib",
-        when(col("__dur") === 0L, col("__val"))
-          .otherwise(col("__val") * (col("__ov") / col("__dur"))))
+      // [bucket, next bucket) with the UNCLAMPED range, floored at 0
+      .select(col("*"), bucketMs.as("bucket_ms"),
+        when(dur === 0L, col("__val"))
+          .otherwise(col("__val") *
+            (greatest(lit(0L), least(nextMs, col("__re")) - greatest(bucketMs, col("__rs"))) / dur))
+          .as("__contrib"))
   }
 
   /** Aggregate exploded contributions into histogram buckets, optionally per
@@ -167,87 +209,18 @@ object ProportionalSum {
       groupCols: Seq[Column] = Nil): DataFrame =
     aggregate(explodeContrib(df, rangeStartMs, rangeEndMs, value, sampling, cfg), groupCols)
 
-  /** Calendar-interval variant (the reference's `dateHistogramInterval(MONTH)`
-    * form, ProportionalSumAggregationBuilder.dateHistogramInterval): buckets
-    * are UTC calendar months, so widths vary and rounding goes through
-    * `date_trunc` instead of the fixed grid. Overlap/ratio math is identical
-    * to the fixed-interval path, on the month-boundary epoch millis. */
-  def explodeContribCalendarMonth(
-      df: DataFrame,
-      rangeStartMs: Column,
-      rangeEndMs: Column,
-      value: Column,
-      sampling: Option[Column],
-      startMs: Option[Long],
-      endMs: Option[Long]): DataFrame =
-    explodeContribCalendar(df, rangeStartMs, rangeEndMs, value, sampling, startMs, endMs, "month")
-
-  /** Any calendar unit Spark's date_trunc + interval arithmetic supports
-    * ("week", "month", "quarter", "year") — the reference accepts the full
-    * DateHistogramInterval family (ProportionalSumAggregationBuilder:104-116).
-    *
-    * `offsetMs` shifts the whole calendar grid, exactly as the reference
-    * applies it inside every rounding — `rounding.round(x - offset) + offset`
-    * (ProportionalSumAggregator.java:183-186) — so e.g. monthly buckets with
-    * a +6h offset start at 06:00 on the 1st, and the overlap window is the
-    * shifted `[boundary + offset, nextBoundary + offset)`. */
-  def explodeContribCalendar(
-      df: DataFrame,
-      rangeStartMs: Column,
-      rangeEndMs: Column,
-      value: Column,
-      sampling: Option[Column],
-      startMs: Option[Long],
-      endMs: Option[Long],
-      unit: String,
-      offsetMs: Long = 0L): DataFrame = {
-    val step = unit.toLowerCase match {
-      case "week" => "INTERVAL 7 DAY"
-      case "month" => "INTERVAL 1 MONTH"
-      case "quarter" => "INTERVAL 3 MONTH"
-      case "year" => "INTERVAL 1 YEAR"
-      // the sub-day units of the reference's DATE_FIELD_UNITS family
-      // (ProportionalSumAggregationBuilder.java:78-97); under the pinned UTC
-      // session (tz hard-disabled by the reference — builder:434,492-493)
-      // they are fixed-width and alias the fixed-interval path, but the
-      // builder accepts the calendar spelling, so this path must too
-      case "day" => "INTERVAL 1 DAY"
-      case "hour" => "INTERVAL 1 HOUR"
-      case "minute" => "INTERVAL 1 MINUTE"
-      case "second" => "INTERVAL 1 SECOND"
-      case other => throw new IllegalArgumentException(s"unsupported calendar unit: $other")
-    }
-    val off = lit(offsetMs)
-    val clampS = startMs.map(s => greatest(rangeStartMs, lit(s))).getOrElse(rangeStartMs)
-    val clampE = endMs.map(e => least(rangeEndMs, lit(e))).getOrElse(rangeEndMs)
-    df.withColumn("__rs", rangeStartMs.cast("long"))
-      .withColumn("__re", rangeEndMs.cast("long"))
-      .withColumn("__dur", col("__re") - col("__rs"))
-      .withColumn("__val", effectiveValue(value, sampling))
-      // same ES missing-field skip as the fixed-interval path: a null range
-      // or value field contributes neither buckets nor doc_count
-      .filter(col("__rs").isNotNull && col("__re").isNotNull && col("__val").isNotNull)
-      .withColumn("__fbts", date_trunc(unit, timestamp_millis(clampS - off)))
-      .withColumn("__lbts", date_trunc(unit, timestamp_millis(clampE - off)))
-      .filter(col("__fbts") <= col("__lbts"))
-      .withColumn(
-        "bucket_ts",
-        explode(sequence(col("__fbts"), col("__lbts"), expr(step))))
-      .withColumn("bucket_ms", expr("unix_micros(bucket_ts) DIV 1000") + off)
-      .withColumn("__next_ms", expr(s"unix_micros(bucket_ts + $step) DIV 1000") + off)
-      .withColumn(
-        "__ov",
-        greatest(lit(0L), least(col("__next_ms"), col("__re")) - greatest(col("bucket_ms"), col("__rs"))))
-      .withColumn(
-        "__contrib",
-        when(col("__dur") === 0L, col("__val"))
-          .otherwise(col("__val") * (col("__ov") / col("__dur"))))
-      .drop("bucket_ts")
-  }
-
-  /** Dense-bucket variant: min_doc_count=0 + extended bounds
-    * (InternalProportionalSumHistogram.EmptyBucketInfo) — every grid bucket in
-    * `[boundsStartMs, boundsEndMs]` appears, zero-filled when empty. */
+  /** `min_doc_count=0`: every grid bucket between the bounds appears,
+    * zero-filled when empty (InternalProportionalSumHistogram.EmptyBucketInfo).
+    * `bounds` given is `extended_bounds`; without them the bounds are the
+    * first and last POPULATED bucket — the ES default, whose reduce pass
+    * calls addEmptyBuckets over [minKey, maxKey]. Those bounds come from the
+    * aggregate itself, declaratively — a 1-row min/max explodes into the
+    * grid, no driver round-trip — and the populated aggregate (bounded by
+    * bucket count, not input rows) is broadcast into the fill join. With a
+    * group column (given bounds only) the reference fills empty buckets
+    * inside each terms parent bucket independently: the grid is (distinct
+    * groups × bucket range), broadcast-joined against the aggregate. Fixed
+    * grid only. */
   def runDense(
       df: DataFrame,
       rangeStartMs: Column,
@@ -255,85 +228,101 @@ object ProportionalSum {
       value: Column,
       sampling: Option[Column],
       cfg: Config,
-      boundsStartMs: Long,
-      boundsEndMs: Long): DataFrame = {
-    val agg = run(df, rangeStartMs, rangeEndMs, value, sampling, cfg)
-    val spark = df.sparkSession
-    val grid = spark
-      .range(1)
-      .select(explode(sequence(
-        roundToBucket(lit(boundsStartMs), cfg),
-        roundToBucket(lit(boundsEndMs), cfg),
-        lit(cfg.intervalMs))).as("bucket_ms"))
+      bounds: Option[(Long, Long)],
+      groupCol: Option[String] = None): DataFrame = {
+    require(cfg.calendarUnit.isEmpty, "the empty-bucket fill takes the fixed interval form")
+    require(bounds.isDefined || groupCol.isEmpty, "a grouped fill needs explicit bounds")
+    val agg = run(df, rangeStartMs, rangeEndMs, value, sampling, cfg, groupCol.map(col).toSeq)
+    val itv = lit(cfg.intervalMs)
+    val (buckets, filled) = bounds match {
+      case Some((lo, hi)) =>
+        (df.sparkSession.range(1).select(explode(sequence(
+          roundToBucket(lit(lo), cfg), roundToBucket(lit(hi), cfg), itv)).as("bucket_ms")), agg)
+      case None =>
+        // localCheckpoint, not persist: the result is referenced twice
+        // (bounds scan + fill join) but a persist() here would pin cached
+        // blocks for the session lifetime with no unpersist hook once this
+        // returns — checkpointed RDD blocks are instead freed by the
+        // ContextCleaner when the returned frame is dereferenced
+        val once = agg.localCheckpoint(true)
+        (once
+          .agg(min(col("bucket_ms")).as("__lo"), max(col("bucket_ms")).as("__hi"))
+          .filter(col("__lo").isNotNull) // empty input -> empty histogram
+          .select(explode(sequence(col("__lo"), col("__hi"), itv)).as("bucket_ms")),
+          broadcast(once))
+    }
+    val grid = groupCol match {
+      case Some(g) => broadcast(df.select(col(g)).distinct().crossJoin(buckets))
+      case None => buckets
+    }
     grid
-      .join(agg, Seq("bucket_ms"), "left")
-      .select(
+      .join(filled, groupCol.toSeq :+ "bucket_ms", "left")
+      .select(groupCol.map(col).toSeq ++ Seq(
         col("bucket_ms"),
         coalesce(col("doc_count"), lit(0L)).as("doc_count"),
-        coalesce(col("value"), lit(0.0d)).as("value"))
+        coalesce(col("value"), lit(0.0d)).as("value")): _*)
   }
 
-  /** `min_doc_count=0` WITHOUT extended bounds — the ES DEFAULT: empty grid
-    * buckets are materialized between the first and last POPULATED bucket
-    * (InternalProportionalSumHistogram.EmptyBucketInfo, whose reduce pass
-    * calls addEmptyBuckets over [minKey, maxKey] when no bounds are given).
-    * The bounds come from the aggregate itself, declaratively — a 1-row
-    * min/max explodes into the grid, no driver round-trip — and the
-    * populated aggregate (bounded by bucket count, not input rows) is
-    * broadcast into the fill join. */
-  def runDenseAuto(
-      df: DataFrame,
-      rangeStartMs: Column,
-      rangeEndMs: Column,
-      value: Column,
-      sampling: Option[Column],
-      cfg: Config): DataFrame = {
-    // localCheckpoint, not persist: the result is referenced twice (bounds
-    // scan + fill join) but a persist() here would pin cached blocks for
-    // the session lifetime with no unpersist hook once this returns —
-    // checkpointed RDD blocks are instead freed by the ContextCleaner when
-    // the returned frame is dereferenced
-    val agg = run(df, rangeStartMs, rangeEndMs, value, sampling, cfg).localCheckpoint(true)
-    val grid = agg
-      .agg(min(col("bucket_ms")).as("__lo"), max(col("bucket_ms")).as("__hi"))
-      .filter(col("__lo").isNotNull) // empty input -> empty histogram
-      .select(explode(sequence(col("__lo"), col("__hi"), lit(cfg.intervalMs))).as("bucket_ms"))
-    grid
-      .join(broadcast(agg), Seq("bucket_ms"), "left")
-      .select(
-        col("bucket_ms"),
-        coalesce(col("doc_count"), lit(0L)).as("doc_count"),
-        coalesce(col("value"), lit(0.0d)).as("value"))
-  }
-
-  /** Dense buckets PER GROUP — the reference fills empty buckets inside each
-    * terms parent bucket independently; the grid is (distinct groups ×
-    * bucket range), broadcast-joined against the aggregate. */
-  def runDenseGrouped(
-      df: DataFrame,
-      rangeStartMs: Column,
-      rangeEndMs: Column,
-      value: Column,
-      sampling: Option[Column],
+  /** A whole proportional_sum request as the reference's builder reads it
+    * (ProportionalSumAggregationBuilder.java:96-144): the fields by name
+    * (start, end, value and an optional sampling column), the grid, and
+    * what the bucket list keeps and shows — `min_doc_count`,
+    * `extended_bounds` (the dense fill), `order` as (path, ascending)
+    * entries over `_key`/`_count`/`_value`, the `keyed` response's key
+    * format, and per-field `missing` substitutes. */
+  final case class Spec(
+      fields: Seq[String],
       cfg: Config,
-      boundsStartMs: Long,
-      boundsEndMs: Long,
-      groupName: String): DataFrame = {
-    val agg = run(df, rangeStartMs, rangeEndMs, value, sampling, cfg, Seq(col(groupName)))
-    val spark = df.sparkSession
-    val buckets = spark
-      .range(1)
-      .select(explode(sequence(
-        roundToBucket(lit(boundsStartMs), cfg),
-        roundToBucket(lit(boundsEndMs), cfg),
-        lit(cfg.intervalMs))).as("bucket_ms"))
-    val groups = df.select(col(groupName)).distinct()
-    broadcast(groups.crossJoin(buckets))
-      .join(agg, Seq(groupName, "bucket_ms"), "left")
-      .select(
-        col(groupName),
-        col("bucket_ms"),
-        coalesce(col("doc_count"), lit(0L)).as("doc_count"),
-        coalesce(col("value"), lit(0.0d)).as("value"))
+      minDocCount: Long = 0L,
+      extendedBounds: Option[(Long, Long)] = None,
+      order: Seq[(String, Boolean)] = Nil,
+      keyFormat: Option[String] = None,
+      missing: Seq[(String, Double)] = Nil)
+
+  /** The keyed response's default object-key pattern (UTC). */
+  val IsoKeyFormat = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
+
+  /** `spec`'s fields as (start, end, value, sampling) columns of `df`. */
+  def specColumns(df: DataFrame, spec: Spec): (Column, Column, Column, Option[Column]) = {
+    spec.fields.foreach(f => require(df.columns.contains(f),
+      s"unknown flow field '$f' (have: ${df.columns.mkString(", ")})"))
+    (col(spec.fields(0)), col(spec.fields(1)), col(spec.fields(2)), spec.fields.lift(3).map(col))
+  }
+
+  /** Runs `spec` over `df`, per group when `groupCols` is given, and
+    * presents the bucket list:
+    *   - `missing` coalesces a value/sampling field at the values-source
+    *     boundary, so a doc missing it contributes the substitute;
+    *   - `min_doc_count` drops sparse buckets;
+    *   - an `order` other than `[_key asc]` ranks buckets into the
+    *     data-visible `order_rank` (bucket order must be a column to be
+    *     checkable, since rows are sorted before hashing), over the order
+    *     paths with `bucket_ms asc` as the total tiebreak;
+    *   - `keyed` renders the object key as `key_str`;
+    *   - `[_key asc]` sorts the bucket list in one partition.
+    * The bucket list is bounded by the grid, never by data size, so the
+    * single-partition window and sort need no range-partitioning exchange. */
+  def runSpec(df: DataFrame, spec: Spec, groupCols: Seq[Column] = Nil): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(spec.extendedBounds.isEmpty || groupCols.isEmpty, "extended_bounds takes no group")
+    val (s, e, v, sampling) = specColumns(df, spec)
+    val flows = spec.missing.foldLeft(df) { case (d, (f, m)) => d.withColumn(f, coalesce(col(f), lit(m))) }
+    val series = spec.extendedBounds match {
+      case Some(b) => runDense(flows, s, e, v, sampling, spec.cfg, Some(b))
+      case None => run(flows, s, e, v, sampling, spec.cfg, groupCols)
+    }
+    val kept = if (spec.minDocCount > 0) series.filter(col("doc_count") >= spec.minDocCount) else series
+    val keyAsc = spec.order == Seq(("_key", true))
+    val ranked =
+      if (spec.order.isEmpty || keyAsc) kept
+      else {
+        val paths = Map("_key" -> "bucket_ms", "_count" -> "doc_count", "_value" -> "value")
+        val sortCols = spec.order.map { case (p, asc) => if (asc) col(paths(p)).asc else col(paths(p)).desc }
+        kept.withColumn("order_rank",
+          row_number().over(Window.orderBy((sortCols :+ col("bucket_ms").asc): _*)).cast("long"))
+      }
+    val keyed = spec.keyFormat.fold(ranked)(fmt =>
+      ranked.withColumn("key_str", date_format(timestamp_millis(col("bucket_ms")), fmt)))
+    if (keyAsc) keyed.coalesce(1).sortWithinPartitions(col("bucket_ms").asc) else keyed
   }
 }

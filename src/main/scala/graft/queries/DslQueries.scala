@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
+import graft.operators.ProportionalSum
+
 /** The ES Query-DSL JSON entry point, compiled to Catalyst.
   *
   * Everything else in this engine exposes each ES query/agg as a named
@@ -228,8 +230,8 @@ object QueryDsl {
       .getOrElse {
         // "0ms"/"0s" parse to 0 via the TimeValue regex and would flow
         // into a floor-division by zero (nulls, silently empty buckets)
-        // — reject here so EVERY string-interval door (aggBody, nested
-        // propSumGrouped, the streaming spec) inherits the loud failure
+        // — reject here so EVERY string-interval door (each position of
+        // the proportional_sum parser) inherits the loud failure
         val ms = parseTimeValueMs(sp, "interval")
         require(ms > 0, s"query DSL: interval must be positive, got '$sp'")
         Right(ms)
@@ -975,7 +977,7 @@ object QueryDsl {
     }
     // NO eager free of the checkpointed blocks here: the returned frame
     // still reads them — the ContextCleaner releases the RDD when the
-    // result is dereferenced (the runDenseAuto discipline)
+    // result is dereferenced (ProportionalSum.runDense's discipline)
     spark.createDataFrame(out, scrollSchema(base, src))
   }
 
@@ -1109,6 +1111,15 @@ object QueryDsl {
     out
   }
 
+  /** An agg-only request's one top-level aggregation: (name, agg object). */
+  private def soleAgg(body: JsonNode): (String, JsonNode) = {
+    if (body.has("size"))
+      require(body.get("size").asInt == 0, "query DSL: agg-only request requires size 0")
+    require(body.has("aggs") && body.get("aggs").isObject && body.get("aggs").size == 1,
+      "query DSL: exactly one top-level aggregation expected under 'aggs'")
+    sole(body.get("aggs"), "aggs")
+  }
+
   /** The reference plugin's OWN request surface: a `_search` body whose one
     * aggregation is `proportional_sum` — exactly the wire grammar
     * `ProportionalSumAggregationBuilder` registers
@@ -1131,11 +1142,7 @@ object QueryDsl {
     * `query` section filtering the frame first. The compiled runs share
     * the typed entries' oracles verbatim. */
   def aggBody(frame: DataFrame, body: JsonNode): DataFrame = {
-    if (body.has("size"))
-      require(body.get("size").asInt == 0, "query DSL: agg-only request requires size 0")
-    require(body.has("aggs") && body.get("aggs").isObject && body.get("aggs").size == 1,
-      "query DSL: exactly one top-level aggregation expected under 'aggs'")
-    val (aggName, aggNode) = sole(body.get("aggs"), "aggs")
+    val (aggName, aggNode) = soleAgg(body)
     // the agg object may carry metric sub-aggregations next to its type key
     val typeKeys = aggNode.fieldNames().asScala.toSeq.filterNot(_ == "aggs")
     require(aggNode.isObject && typeKeys.size == 1,
@@ -1155,7 +1162,7 @@ object QueryDsl {
       case "proportional_sum" =>
         require(subAggs.isEmpty,
           "query DSL: proportional_sum takes no metric sub-aggregations (value IS the metric)")
-        propSumSpec(filtered, spec)
+        ProportionalSum.runSpec(filtered, propSum(spec, PropSumTopKeys))
       case "date_histogram" =>
         dateHistogramAgg(filtered, spec, subAggs, Nil)
       case "terms" if subAggs.exists(isBucketChild) =>
@@ -1201,7 +1208,8 @@ object QueryDsl {
         if (childNode.has("proportional_sum")) {
           require(childKeys == Seq("proportional_sum"),
             s"query DSL: a proportional_sum child takes no extra keys, got $childKeys")
-          withTermSize(propSumGrouped(filtered, childNode.get("proportional_sum"), f))
+          withTermSize(ProportionalSum.runSpec(filtered,
+            propSum(childNode.get("proportional_sum"), PropSumNestedKeys), Seq(col(f))))
         } else {
           require(childKeys == Seq("date_histogram") || childKeys == Seq("aggs", "date_histogram"),
             s"query DSL: bucket child of terms must be proportional_sum or date_histogram, got $childKeys")
@@ -1233,8 +1241,8 @@ object QueryDsl {
               s"query DSL: the tree's leaf must be exactly proportional_sum, got $gkeys")
             val withBucket = filtered.withColumn(midName,
               (floor(col(bf) / lit(itv)) * lit(itv)).cast("long"))
-            withTermSize(propSumGroupedBy(withBucket, gnode.get("proportional_sum"),
-              Seq(col(f), col(midName))))
+            withTermSize(ProportionalSum.runSpec(withBucket,
+              propSum(gnode.get("proportional_sum"), PropSumNestedKeys), Seq(col(f), col(midName))))
           } else
             withTermSize(dateHistogramAgg(filtered, dh, grand, Seq(col(f))))
         }
@@ -1271,7 +1279,8 @@ object QueryDsl {
           explode(array_compact(array(named.map { case (n, p) =>
             when(p, lit(n))
           }: _*))))
-        propSumGrouped(withName, fchildNode.get("proportional_sum"), aggName)
+        ProportionalSum.runSpec(withName,
+          propSum(fchildNode.get("proportional_sum"), PropSumNestedKeys), Seq(col(aggName)))
 
       case "histogram" =>
         // the plain NUMERIC histogram framework agg (the q10b recipe:
@@ -1435,59 +1444,6 @@ object QueryDsl {
       node.isObject && (node.has("proportional_sum") || node.has("date_histogram"))
     }
 
-  /** The nested child grammar: proportional_sum under bucket parents.
-    * Fixed-interval subset (fields/interval/start/end/offset/
-    * min_doc_count) — presentation knobs (keyed/order/extended_bounds/
-    * calendar) stay top-level-only and fail loudly here. */
-  private def propSumGrouped(flows: DataFrame, spec: JsonNode, groupField: String): DataFrame =
-    propSumGroupedBy(flows, spec, Seq(col(groupField)))
-
-  private def propSumGroupedBy(flows: DataFrame, spec: JsonNode, groupCols: Seq[Column]): DataFrame = {
-    import graft.operators.ProportionalSum
-    require(spec.has("fields") && spec.get("fields").isArray,
-      "query DSL: proportional_sum requires a fields array")
-    val fs = spec.get("fields").elements().asScala.toSeq.map(_.asText)
-    require(fs.size == 3 || fs.size == 4,
-      s"query DSL: fields must be [start, end, value(, sampling)], got $fs")
-    fs.foreach(f => require(flows.columns.contains(f),
-      s"query DSL: unknown flow field '$f' (have: ${flows.columns.mkString(", ")})"))
-    def longOpt(k: String): Option[Long] = Option(spec.get(k)).map { n =>
-      require(n.isIntegralNumber, s"query DSL: $k must be an integral number, got $n")
-      n.asLong
-    }
-    val known = Set("fields", "interval", "start", "end", "offset", "min_doc_count")
-    val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-    require(unknown.isEmpty, s"query DSL: unsupported nested proportional_sum keys: $unknown")
-    // the legacy string spellings reach the nested position too — FIXED
-    // spellings only ("1h", "90m"); calendar units under a bucket parent
-    // stay loudly rejected (the typed surface has no grouped calendar run)
-    val interval = Option(spec.get("interval")).map { n =>
-      if (n.isIntegralNumber) {
-        require(n.asLong > 0, s"query DSL: interval must be positive, got $n")
-        n.asLong
-      } else if (n.isTextual) parseIntervalString(n.asText) match {
-        case Right(ms) => ms
-        case Left(unit) => throw new IllegalArgumentException(
-          s"query DSL: nested proportional_sum supports fixed intervals only, got calendar '$unit'")
-      }
-      else throw new IllegalArgumentException(
-        s"query DSL: interval must be integral ms or an interval string, got $n")
-    }.getOrElse(
-      throw new IllegalArgumentException("query DSL: nested proportional_sum requires interval"))
-    val offsetMs = Option(spec.get("offset")).map { n =>
-      if (n.isIntegralNumber) n.asLong
-      else if (n.isTextual) parseStringOffset(n.asText)
-      else throw new IllegalArgumentException(
-        s"query DSL: offset must be integral ms or a time-value string, got $n")
-    }.getOrElse(0L)
-    val cfg = ProportionalSum.Config(
-      interval, longOpt("start"), longOpt("end"), offsetMs)
-    val out = ProportionalSum.run(
-      flows, col(fs(0)), col(fs(1)), col(fs(2)), fs.lift(3).map(col), cfg, groupCols)
-    longOpt("min_doc_count").filter(_ > 0)
-      .map(m => out.filter(col("doc_count") >= m)).getOrElse(out)
-  }
-
   /** Metric sub-aggregations of a bucket agg: {name: {sum|min|max|
     * value_count: {field}}} — sum goes through detsum (the partitioning-
     * independent exact-decimal sum every oracle-backed aggregate uses). */
@@ -1514,62 +1470,50 @@ object QueryDsl {
         }
     }
 
-  /** The proportional_sum spec body (see [[aggBody]]) — the COMPLETE parser
-    * field set `ProportionalSumAggregationBuilder` declares
+  /** The keys a proportional_sum body accepts at each position. The top
+    * level takes the builder's complete field set. Nested under a bucket
+    * parent (terms, filters, the agg tree) and at the streaming door only
+    * the grid keys are taken: the presentation knobs have no grouped or
+    * append-mode form here. A calendar grid comes with `calendar_interval`,
+    * so only the top level takes one, by either key. */
+  private val PropSumTopKeys = Set("fields", "interval", "calendar_interval", "start", "end",
+    "offset", "min_doc_count", "extended_bounds", "keyed", "order", "missing", "format")
+  private val PropSumNestedKeys = Set("fields", "interval", "start", "end", "offset", "min_doc_count")
+  private val PropSumStreamKeys = Set("fields", "interval", "start", "end", "offset")
+
+  /** The proportional_sum body parser for every position (see [[aggBody]]
+    * and [[streamingPropSum]]); `keys` is what the position accepts, and
+    * anything else fails loudly. The parser field set is the one
+    * `ProportionalSumAggregationBuilder` declares
     * (`ProportionalSumAggregationBuilder.java:96-144`):
     *   - `fields` [start, end, value(, sampling)] + fixed `interval` (ms)
     *     OR `calendar_interval` (the DateHistogramInterval family,
-    *     builder:104-117 — any unit [[graft.operators.ProportionalSum
-    *     .explodeContribCalendar]] supports), with `start`/`end` clamp and
-    *     `offset` (applied inside every rounding, builder's
-    *     round(x−offset)+offset formula — both grids);
+    *     builder:104-117), with `start`/`end` clamp and `offset` (applied
+    *     inside every rounding, builder's round(x−offset)+offset formula —
+    *     both grids);
+    *   - `min_doc_count` (sparse-bucket dropping; negative fails, as in
+    *     the ES histogram builders);
     *   - `extended_bounds` {min, max} (builder:130-131): dense zero-filled
-    *     grid over the bounds, q05's semantics ([[graft.operators
-    *     .ProportionalSum.runDense]]); fixed-interval only, like the ES
-    *     histogram framework requires min_doc_count 0 for the fill;
-    *   - `min_doc_count` (sparse-bucket dropping);
+    *     grid over the bounds, q05's semantics; fixed-interval only, like
+    *     the ES histogram framework requires min_doc_count 0 for the fill;
     *   - `keyed` (builder:126): the keyed response's formatted object key
-    *     rides along as `key_str` (data-visible presentation, the q01k
-    *     convention);
+    *     rides along as `key_str` (the q01k convention), in `format`;
     *   - `order` (builder:133-134): `[{_key: asc}]` sorts the bucket
-    *     table; `[{_value: desc}]` emits the data-visible `order_rank`
-    *     (q01k's convention — the driver sorts rows before hashing, so ES
-    *     bucket order must be a column to be checkable). Anything else
-    *     fails loudly. */
-  private def propSumSpec(flows: DataFrame, spec: JsonNode): DataFrame = {
-    import graft.operators.ProportionalSum
-    require(spec.has("fields") && spec.get("fields").isArray,
+    *     table; any other order emits the data-visible `order_rank`;
+    *   - `missing` (declareCommon, builder:102): per-field substitutes. */
+  private def propSum(spec: JsonNode, keys: Set[String]): ProportionalSum.Spec = {
+    require(spec.isObject && spec.has("fields") && spec.get("fields").isArray,
       "query DSL: proportional_sum requires a fields array")
+    val unknown = spec.fieldNames().asScala.toSeq.filterNot(keys)
+    require(unknown.isEmpty, s"query DSL: unsupported proportional_sum keys here: $unknown " +
+      s"(accepted: ${keys.toSeq.sorted.mkString(", ")})")
     val fs = spec.get("fields").elements().asScala.toSeq.map(_.asText)
     require(fs.size == 3 || fs.size == 4,
       s"query DSL: fields must be [start, end, value(, sampling)], got $fs")
-    fs.foreach(f => require(flows.columns.contains(f),
-      s"query DSL: unknown flow field '$f' (have: ${flows.columns.mkString(", ")})"))
     def longOpt(k: String): Option[Long] = Option(spec.get(k)).map { n =>
       require(n.isIntegralNumber, s"query DSL: $k must be an integral number, got $n")
       n.asLong
     }
-    val known = Set("fields", "interval", "calendar_interval", "start", "end", "offset",
-      "min_doc_count", "extended_bounds", "keyed", "order", "missing", "format")
-    val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-    require(unknown.isEmpty, s"query DSL: unsupported proportional_sum keys: $unknown")
-    // per-field `missing` (declareCommon's values-source substitution,
-    // builder:102): a doc missing a mapped field CONTRIBUTES with the
-    // substitute — coalesce at the values-source boundary (typed q07c's
-    // shape; the NO-missing default is q07b's skip). Value/sampling
-    // fields only: a missing range endpoint has no meaningful substitute
-    // semantics in this engine and stays the skip — loud, not silent.
-    val flowsM: DataFrame = Option(spec.get("missing")).map { m =>
-      require(m.isObject && m.size > 0,
-        "query DSL: missing must be a non-empty {field: value} object")
-      m.fields().asScala.foldLeft(flows) { (df, e) =>
-        val f = e.getKey
-        require(fs.drop(2).contains(f),
-          s"query DSL: missing supports the value/sampling fields ${fs.drop(2)}, got '$f'")
-        require(e.getValue.isNumber, s"query DSL: missing value for '$f' must be a number, got ${e.getValue}")
-        df.withColumn(f, coalesce(col(f), lit(e.getValue.asDouble)))
-      }
-    }.getOrElse(flows)
     // `interval` carries the builder's FULL legacy grammar (integral ms, a
     // DATE_FIELD_UNITS calendar spelling like "1M", or a fixed TimeValue
     // like "90m" — builder:104-116); `calendar_interval` stays the
@@ -1578,8 +1522,12 @@ object QueryDsl {
       if (n.isIntegralNumber) {
         require(n.asLong > 0, s"query DSL: interval must be positive, got $n")
         Right(n.asLong)
-      } else if (n.isTextual) parseIntervalString(n.asText)
-      else throw new IllegalArgumentException(
+      } else if (n.isTextual) {
+        val parsed = parseIntervalString(n.asText)
+        require(parsed.isRight || keys("calendar_interval"),
+          s"query DSL: proportional_sum takes fixed intervals only here, got calendar '${n.asText}'")
+        parsed
+      } else throw new IllegalArgumentException(
         s"query DSL: interval must be integral ms or an interval string, got $n")
     }
     val calKey: Option[String] = Option(spec.get("calendar_interval")).map { n =>
@@ -1588,10 +1536,6 @@ object QueryDsl {
     }
     require(legacyInterval.isDefined ^ calKey.isDefined,
       "query DSL: proportional_sum requires exactly one of interval / calendar_interval")
-    // Left(calendar unit) | Right(fixed ms), whichever key it arrived by
-    val resolved: Either[String, Long] = calKey.map(Left(_): Either[String, Long])
-      .getOrElse(legacyInterval.get)
-    val hasFixed = resolved.isRight
     val startMs = longOpt("start")
     val endMs = longOpt("end")
     // offset: integral ms or the "+6h"/"-30m" string form (builder:118-124)
@@ -1601,7 +1545,12 @@ object QueryDsl {
       else throw new IllegalArgumentException(
         s"query DSL: offset must be integral ms or a time-value string, got $n")
     }.getOrElse(0L)
+    val cfg = calKey.map(Left(_)).getOrElse(legacyInterval.get) match {
+      case Left(unit) => ProportionalSum.calendar(unit, startMs, endMs, offsetMs)
+      case Right(itv) => ProportionalSum.Config(itv, startMs, endMs, offsetMs)
+    }
     val minDoc = longOpt("min_doc_count").getOrElse(0L)
+    require(minDoc >= 0, s"query DSL: min_doc_count must be non-negative, got $minDoc")
     val extBounds: Option[(Long, Long)] = Option(spec.get("extended_bounds")).map { eb =>
       require(eb.isObject && eb.has("min") && eb.has("max"),
         s"query DSL: extended_bounds requires min + max, got $eb")
@@ -1620,7 +1569,7 @@ object QueryDsl {
       }
       val (mn, mx) = (boundMs("min"), boundMs("max"))
       require(mn <= mx, s"query DSL: extended_bounds min $mn > max $mx")
-      require(hasFixed, "query DSL: extended_bounds requires the fixed interval form")
+      require(cfg.calendarUnit.isEmpty, "query DSL: extended_bounds requires the fixed interval form")
       require(minDoc == 0,
         "query DSL: extended_bounds fills empty buckets — incompatible with min_doc_count > 0")
       (mn, mx)
@@ -1628,13 +1577,8 @@ object QueryDsl {
     // order: the builder's FULL grammar (builder:133-134 — an ARRAY of
     // order params, compounded via InternalOrder/CompoundOrder :333).
     // Paths: _key (bucket_ms), _count (doc_count), _value (the sum —
-    // the reference's single value path); each asc/desc. [{_key: asc}]
-    // alone keeps the sorted-table presentation (the response's natural
-    // order); ANY other spec emits the data-visible `order_rank` column
-    // (q01k's convention — the driver sorts rows before hashing, so ES
-    // bucket order must be a COLUMN to be checkable), ranked over the
-    // compound keys with bucket_ms asc appended as the total tiebreak.
-    val orderEntries: Seq[(String, Boolean)] = Option(spec.get("order")).map { o =>
+    // the reference's single value path); each asc/desc.
+    val order: Seq[(String, Boolean)] = Option(spec.get("order")).map { o =>
       val entries = (if (o.isArray) o.elements().asScala.toSeq else Seq(o)).map(sole(_, "order"))
       require(entries.nonEmpty, "query DSL: order must carry at least one entry")
       entries.map { case (k, v) =>
@@ -1646,38 +1590,10 @@ object QueryDsl {
         (k, dir == "asc")
       }
     }.getOrElse(Nil)
-    val keyAsc = orderEntries == Seq(("_key", true))
-    val keyed = Option(spec.get("keyed")).map { n =>
+    val keyed = Option(spec.get("keyed")).exists { n =>
       require(n.isBoolean, s"query DSL: keyed must be a boolean, got $n")
       n.asBoolean
-    }.getOrElse(false)
-    val (sCol, eCol, vCol, sampCol) = (col(fs(0)), col(fs(1)), col(fs(2)), fs.lift(3).map(col))
-    val series = resolved match {
-      case Left(unit) =>
-        ProportionalSum.aggregate(ProportionalSum.explodeContribCalendar(
-          flowsM, sCol, eCol, vCol, sampCol, startMs, endMs, unit, offsetMs))
-      case Right(itv) =>
-        val cfg = ProportionalSum.Config(itv, startMs, endMs, offsetMs)
-        extBounds match {
-          case Some((mn, mx)) => ProportionalSum.runDense(flowsM, sCol, eCol, vCol, sampCol, cfg, mn, mx)
-          case None => ProportionalSum.run(flowsM, sCol, eCol, vCol, sampCol, cfg)
-        }
     }
-    val filtered = if (minDoc > 0) series.filter(col("doc_count") >= minDoc) else series
-    val ranked =
-      if (orderEntries.nonEmpty && !keyAsc) {
-        import org.apache.spark.sql.expressions.Window
-        // series length is bounded by the bucket grid, never data size —
-        // the single-partition window is the q01k argument
-        val sortCols = orderEntries.map {
-          case ("_key", asc) => if (asc) col("bucket_ms").asc else col("bucket_ms").desc
-          case ("_count", asc) => if (asc) col("doc_count").asc else col("doc_count").desc
-          case ("_value", asc) => if (asc) col("value").asc else col("value").desc
-          case other => throw new IllegalStateException(s"unreachable order path $other")
-        } :+ col("bucket_ms").asc
-        filtered.withColumn("order_rank",
-          row_number().over(Window.orderBy(sortCols: _*)).cast("long"))
-      } else filtered
     // `format` (declareCommon, builder:102): the keyed response's object-
     // key pattern. A WHITELIST of patterns with known cross-engine
     // mirrors — a format this engine can't prove against the oracle's
@@ -1685,72 +1601,42 @@ object QueryDsl {
     val keyFmt = Option(spec.get("format")).map { n =>
       require(n.isTextual, s"query DSL: format must be a string, got $n")
       require(keyed, "query DSL: format renders the keyed object key — requires keyed: true")
-      val supported = Set("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'", "yyyy-MM-dd HH:mm", "yyyy-MM-dd")
+      val supported = Set(ProportionalSum.IsoKeyFormat, "yyyy-MM-dd HH:mm", "yyyy-MM-dd")
       require(supported(n.asText),
         s"query DSL: unsupported format '${n.asText}' (supported: ${supported.mkString(", ")})")
       n.asText
-    }.getOrElse("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-    val presented =
-      if (keyed) ranked.withColumn("key_str",
-        date_format(timestamp_millis(col("bucket_ms")), keyFmt))
-      else ranked
-    // the bucket list is bounded by the grid (the window's argument above):
-    // sort it in one partition, with no range-partitioning exchange
-    if (keyAsc) presented.coalesce(1).sortWithinPartitions(col("bucket_ms").asc) else presented
+    }.getOrElse(ProportionalSum.IsoKeyFormat)
+    // per-field `missing` (declareCommon's values-source substitution,
+    // builder:102): a doc missing a mapped field CONTRIBUTES with the
+    // substitute (typed q07c's shape; the NO-missing default is q07b's
+    // skip). Value/sampling fields only: a missing range endpoint has no
+    // meaningful substitute semantics in this engine and stays the skip —
+    // loud, not silent.
+    val missing = Option(spec.get("missing")).toSeq.flatMap { m =>
+      require(m.isObject && m.size > 0,
+        "query DSL: missing must be a non-empty {field: value} object")
+      m.fields().asScala.toSeq.map { e =>
+        val f = e.getKey
+        require(fs.drop(2).contains(f),
+          s"query DSL: missing supports the value/sampling fields ${fs.drop(2)}, got '$f'")
+        require(e.getValue.isNumber, s"query DSL: missing value for '$f' must be a number, got ${e.getValue}")
+        (f, e.getValue.asDouble)
+      }
+    }
+    ProportionalSum.Spec(fs, cfg, minDoc, extBounds, order, if (keyed) Some(keyFmt) else None, missing)
   }
 
-  /** The STREAMING subset of the proportional_sum wire grammar — the
-    * front-door form of the append-mode collector (st07's production
-    * shape driven by a JSON request): `fields` + fixed `interval` (ms or
-    * the legacy string spellings) + `start`/`end`/`offset` (string form
-    * included). Presentation knobs (keyed/order/extended_bounds/
-    * min_doc_count/missing) have no append-mode semantics here and fail
-    * loudly, as does a calendar interval (the streaming path is the
-    * fixed-grid collector). Returns (fields, Config) for the engine's
-    * streaming executor — the compiler owns the wire grammar, the engine
-    * owns the watermarked execution. */
-  def propSumStreamSpec(body: JsonNode): (Seq[String], graft.operators.ProportionalSum.Config) = {
-    if (body.has("size"))
-      require(body.get("size").asInt == 0, "query DSL: agg-only request requires size 0")
-    require(body.has("aggs") && body.get("aggs").isObject && body.get("aggs").size == 1,
-      "query DSL: exactly one top-level aggregation expected under 'aggs'")
-    val (_, aggNode) = sole(body.get("aggs"), "aggs")
+  /** The streaming door: a request body whose one aggregation is a
+    * proportional_sum in the streaming key set ([[PropSumStreamKeys]]) —
+    * the append-mode collector (st07's production shape) driven by a JSON
+    * request. The compiler owns the wire grammar, the engine
+    * ([[graft.streaming.FlowStream.runAppendMode]]) owns the watermarked
+    * execution. */
+  def streamingPropSum(body: JsonNode): ProportionalSum.Spec = {
+    val (_, aggNode) = soleAgg(body)
     require(aggNode.isObject && aggNode.size == 1 && aggNode.has("proportional_sum"),
       s"query DSL: streaming agg body must be exactly proportional_sum, got $aggNode")
-    val spec = aggNode.get("proportional_sum")
-    require(spec.has("fields") && spec.get("fields").isArray,
-      "query DSL: proportional_sum requires a fields array")
-    val fs = spec.get("fields").elements().asScala.toSeq.map(_.asText)
-    require(fs.size == 3 || fs.size == 4,
-      s"query DSL: fields must be [start, end, value(, sampling)], got $fs")
-    val known = Set("fields", "interval", "start", "end", "offset")
-    val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-    require(unknown.isEmpty,
-      s"query DSL: unsupported streaming proportional_sum keys: $unknown")
-    def longOpt(k: String): Option[Long] = Option(spec.get(k)).map { n =>
-      require(n.isIntegralNumber, s"query DSL: $k must be an integral number, got $n")
-      n.asLong
-    }
-    val interval = Option(spec.get("interval")).map { n =>
-      if (n.isIntegralNumber) n.asLong
-      else if (n.isTextual) parseIntervalString(n.asText) match {
-        case Right(ms) => ms
-        case Left(unit) => throw new IllegalArgumentException(
-          s"query DSL: streaming proportional_sum supports fixed intervals only, got calendar '$unit'")
-      }
-      else throw new IllegalArgumentException(
-        s"query DSL: interval must be integral ms or an interval string, got $n")
-    }.getOrElse(
-      throw new IllegalArgumentException("query DSL: streaming proportional_sum requires interval"))
-    require(interval > 0, "query DSL: interval must be positive")
-    val offsetMs = Option(spec.get("offset")).map { n =>
-      if (n.isIntegralNumber) n.asLong
-      else if (n.isTextual) parseStringOffset(n.asText)
-      else throw new IllegalArgumentException(
-        s"query DSL: offset must be integral ms or a time-value string, got $n")
-    }.getOrElse(0L)
-    (fs, graft.operators.ProportionalSum.Config(
-      interval, longOpt("start"), longOpt("end"), offsetMs))
+    propSum(aggNode.get("proportional_sum"), PropSumStreamKeys)
   }
 
   /** POST `_search/template`: mustache-parameter substitution into a
@@ -1841,8 +1727,8 @@ object DslQueries {
     }),
 
     // `_count` body with a `match` (operator and) clause — the analyzer
-    // path under the count envelope. Since round 16 the match leaf PROBES
-    // the materialized analyzed token frame (array_contains on the
+    // path under the count envelope. The match leaf PROBES the
+    // materialized analyzed token frame (array_contains on the
     // checkpointed toks column — the ES analyzed-index analog) instead of
     // regex-scanning raw text; identical semantics, identical oracle.
     "q139_count" -> ((s: SparkSession, d: String) => {
@@ -2267,7 +2153,7 @@ object DslQueries {
     }),
 
     // `filters` PARENT at the JSON door (SURVEY §1's "terms/filters
-    // parents", now both wire-reachable): named DSL predicates → one
+    // parents", both wire-reachable): named DSL predicates → one
     // conditional-explode scan → grouped proportional_sum — typed q04b's
     // plan and oracle VERBATIM (the agg's name is the bucket column, so
     // the request names it fname).
@@ -2437,7 +2323,8 @@ object DslQueries {
           |    "start": 1704412800000,
           |    "end": 1706140800000
           |  }}}}""".stripMargin)
-      graft.streaming.FlowStream.runAppendModeDsl(s, d, body, 2 * 3600000L, "st20_mem")
+      graft.streaming.FlowStream.runAppendMode(
+        graft.streaming.FlowStream.flowSource(s, d), QueryDsl.streamingPropSum(body), 2 * 3600000L, "st20_mem")
     }),
 
     // _mget: request-order multi-get with found=false rows for misses and

@@ -339,13 +339,8 @@ object IngestQueries {
         col("r.first_ms").as("rs"),
         col("r.last_ms").as("re"),
         col("r.octets").cast("double").as("v"))
-    val series = graft.operators.ProportionalSum
-      .explodeContrib(records, col("rs"), col("re"), col("v"), None,
-        graft.operators.ProportionalSum.Config(Flows.HOUR_MS, Some(0L), Some(31 * Flows.DAY_MS)))
-      .groupBy(col("bucket_ms"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        graft.functions.detsum.sumDet(col("__contrib")).as("value"))
+    val series = graft.operators.ProportionalSum.run(records, col("rs"), col("re"), col("v"), None,
+      graft.operators.ProportionalSum.Config(Flows.HOUR_MS, Some(0L), Some(31 * Flows.DAY_MS)))
     Tables.withShufflePartitions(s, 8) {
       val q = series.writeStream
         .format("memory").queryName("st04_mem")

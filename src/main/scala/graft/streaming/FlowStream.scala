@@ -17,9 +17,9 @@ import graft.operators.ProportionalSum.Config
   *
   * Demo/contract path uses complete-mode + memory sink over AvailableNow so
   * the result is the finished histogram (verifiable against the batch
-  * oracle). Production path: `withWatermark` on the bucket timestamp +
-  * append mode, which bounds state by `watermark / interval` buckets —
-  * noted in [[bucketedStream]]. */
+  * oracle, [[runToCompletion]]). Production path: `withWatermark` on the
+  * bucket timestamp + append mode, which bounds state by
+  * `watermark / interval` buckets ([[runAppendMode]]). */
 object FlowStream {
 
   /** Streaming file-source for ONE table: the file source wants a directory
@@ -61,18 +61,6 @@ object FlowStream {
         expr("unix_micros(ts) DIV 1000").as("rs"))
       .withColumn("re", col("rs") + (col("event_id") % 7200) * 1000)
   }
-
-  /** Streaming proportional-sum histogram. Watermark-ready: the bucket key
-    * is exposed as an event-time timestamp, so callers can switch to
-    * `.withWatermark("bucket_ts", ...)` + append for unbounded runs. */
-  def bucketedStream(flows: DataFrame, cfg: Config): DataFrame =
-    ProportionalSum
-      .explodeContrib(flows, col("rs"), col("re"), col("v"), None, cfg)
-      .withColumn("bucket_ts", timestamp_millis(col("bucket_ms")))
-      .groupBy(col("bucket_ms"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        graft.functions.detsum.sumDet(col("__contrib")).as("value"))
 
   /** Streaming exact-dedup: dropDuplicates on the content fingerprint keyed
     * per source — the always-on ingest-time form of batch dedup. State is
@@ -146,8 +134,8 @@ object FlowStream {
         // the file source orders batches by file mtime — stamp STRICTLY
         // increasing mtimes in part-file (= ts-range) order so arrival order
         // is deterministically the event-time order (equal mtimes leave the
-        // order to the filesystem listing, which round-13 testing showed
-        // does drop first-occurrences as late data)
+        // order to the filesystem listing, which can drop first-occurrences
+        // as late data)
         val now = System.currentTimeMillis()
         Option(p.toFile.listFiles()).foreach(
           _.filter(_.getName.startsWith("part-")).sortBy(_.getName).zipWithIndex
@@ -198,83 +186,32 @@ object FlowStream {
     * so an accepted row can always still reach live state). AvailableNow
     * runs one extra no-data micro-batch after the last file so the final
     * watermark's evictions flush — without it append mode would emit
-    * nothing on a single-file source. */
-  def runAppendMode(
-      spark: SparkSession, sfDir: String, cfg: Config, delayMs: Long, name: String): DataFrame =
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      appendSink(
-        ProportionalSum
-          .explodeContrib(flowSource(spark, sfDir), col("rs"), col("re"), col("v"), None, cfg),
-        delayMs, name)
-    }
-
-  /** st20's FRONT-DOOR form: the append-mode collector driven by the WIRE
-    * grammar — [[graft.queries.QueryDsl.propSumStreamSpec]] parses the
-    * proportional_sum request body into (fields, Config) and this runs
-    * st07's EXACT pipeline (same explode, same watermark contract, same
-    * sink), so the JSON-compiled stream shares st07's oracle verbatim. */
-  def runAppendModeDsl(spark: SparkSession, sfDir: String,
-      body: com.fasterxml.jackson.databind.JsonNode, delayMs: Long, name: String): DataFrame = {
-    val (fs, cfg) = graft.queries.QueryDsl.propSumStreamSpec(body)
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val src = flowSource(spark, sfDir)
-      fs.foreach(f => require(src.columns.contains(f),
-        s"query DSL: unknown flow field '$f' (have: ${src.columns.mkString(", ")})"))
-      appendSink(
-        ProportionalSum.explodeContrib(
-          src, col(fs(0)), col(fs(1)), col(fs(2)), fs.lift(3).map(col), cfg),
-        delayMs, name)
-    }
-  }
-
-  /** The ONE copy of the watermarked append-mode emission contract shared
-    * by the fixed-interval (st07) and calendar (st11) paths: watermark the
-    * bucket start timestamp with the EXACT delay (the oracle subtracts the
-    * full delayMs), aggregate per bucket, run AvailableNow to completion,
-    * and re-project the bucket back to epoch millis. */
-  private def appendSink(exploded: DataFrame, delayMs: Long, name: String): DataFrame = {
-    val spark = exploded.sparkSession
-    val series = exploded
+    * nothing on a single-file source.
+    *
+    * The spec's grid is fixed (st07, and st20 through the JSON door) or
+    * calendar (st11, q06's monthly series: the buckets vary in width, so
+    * state stays bounded by `delay / min-bucket-width` open buckets). */
+  def runAppendMode(flows: DataFrame, spec: ProportionalSum.Spec, delayMs: Long, name: String): DataFrame = {
+    require(spec == ProportionalSum.Spec(spec.fields, spec.cfg),
+      s"append mode takes the fields and the grid only, got $spec")
+    val spark = flows.sparkSession
+    val (rs, re, v, sampling) = ProportionalSum.specColumns(flows, spec)
+    // the watermark is on the bucket start timestamp with the EXACT delay
+    // (the oracle subtracts the full delayMs), so it joins the group key
+    val exploded = ProportionalSum.explodeContrib(flows, rs, re, v, sampling, spec.cfg)
       .withColumn("bucket_ts", timestamp_millis(col("bucket_ms")))
       .withWatermark("bucket_ts", s"$delayMs milliseconds")
-      .groupBy(col("bucket_ts"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        graft.functions.detsum.sumDet(col("__contrib")).as("value"))
-    val q = series.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).select(
-      expr("unix_micros(bucket_ts) DIV 1000").as("bucket_ms"),
-      col("doc_count"),
-      col("value"))
-  }
-
-  /** Calendar-interval (monthly) streaming proportional_sum in append mode —
-    * the always-on form of q06's batch series (the reference's continuous
-    * ProportionalSumAggregatorIT scenario). `explodeContribCalendar` is
-    * stateless, so the batch operator reuses unchanged; the groupBy key is
-    * the variable-width UTC month bucket, watermarked on its start
-    * timestamp. State stays bounded by `delay / min-bucket-width` open
-    * buckets per group; the emission boundary is the st07 contract
-    * (watermark = max bucket_ts − delay exactly, eviction NON-strict at
-    * `bucket_ts <= watermark` — empirically pinned in StreamingSpec), and
-    * the oracle applies the same cutoff to q06's batch series. */
-  def runCalendarAppendMode(
-      spark: SparkSession, sfDir: String, delayMs: Long, name: String): DataFrame =
     graft.queries.Tables.withShufflePartitions(spark, 8) {
-      import graft.queries.Flows.{DAY_MS, JAN_START_MS, MAY_START_MS}
-      val flows = flowSource(spark, sfDir)
-        .withColumn("re", col("rs") + (col("event_id") % 90) * lit(DAY_MS))
-      appendSink(
-        ProportionalSum.explodeContribCalendarMonth(flows, col("rs"), col("re"), col("v"), None,
-          Some(JAN_START_MS), Some(MAY_START_MS)),
-        delayMs, name)
+      val q = ProportionalSum.aggregate(exploded, Seq(col("bucket_ts"))).writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
     }
+    spark.table(name).select(col("bucket_ms"), col("doc_count"), col("value"))
+  }
 
   /** Always-on top-K talkers: the Space-Saving sketch
     * ([[graft.plans.TopKFreq]]) as a STREAMING aggregation — the state
@@ -331,7 +268,7 @@ object FlowStream {
     * result exactly, so it shares q01's DuckDB oracle. */
   def runToCompletion(spark: SparkSession, sfDir: String, cfg: Config, name: String): DataFrame =
     graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val result = bucketedStream(flowSource(spark, sfDir), cfg)
+      val result = ProportionalSum.run(flowSource(spark, sfDir), col("rs"), col("re"), col("v"), None, cfg)
       val q = result.writeStream
         .format("memory")
         .queryName(name)

@@ -224,6 +224,47 @@ class DslSpec extends AnyFunSuite {
              |  "aggs": {"s": {"proportional_sum": {"fields": ["rs","re","v"], "interval": "1M"}}}}}}""".stripMargin)
   }
 
+  test("proportional_sum grammar per position: each accepts exactly its keys; bad intervals and arity fail everywhere") {
+    val flows = queries.Flows.df(spark, sf)
+    def top(ps: String) = s"""{"aggs": {"h": {"proportional_sum": {$ps}}}}"""
+    val positions: Seq[(String, String => Unit)] = Seq(
+      "top level" -> (ps => QueryDsl.aggBody(flows, QueryDsl.parse(top(ps)))),
+      "under terms" -> (ps => QueryDsl.aggBody(flows, QueryDsl.parse(
+        s"""{"aggs": {"t": {"terms": {"field": "event_type"},
+           |  "aggs": {"s": {"proportional_sum": {$ps}}}}}}""".stripMargin))),
+      "streaming" -> (ps => QueryDsl.streamingPropSum(QueryDsl.parse(top(ps)))))
+    val all = positions.map(_._1).toSet
+    val fields = """"fields": ["rs","re","v"]"""
+    // (body keys after `fields`, the positions that compile it)
+    val cases: Seq[(String, Set[String])] = Seq(
+      // the top-level-only keys
+      """"calendar_interval": "month"""" -> Set("top level"),
+      """"interval": 3600000, "extended_bounds": {"min": 1704412800000, "max": 1704499200000}""" -> Set("top level"),
+      """"interval": 3600000, "keyed": true""" -> Set("top level"),
+      """"interval": 3600000, "order": [{"_key": "asc"}]""" -> Set("top level"),
+      """"interval": 3600000, "missing": {"v": 0}""" -> Set("top level"),
+      """"interval": 3600000, "keyed": true, "format": "yyyy-MM-dd"""" -> Set("top level"),
+      // min_doc_count has no append-mode form, and is never negative
+      """"interval": 3600000, "min_doc_count": 2""" -> Set("top level", "under terms"),
+      """"interval": 3600000, "min_doc_count": -1""" -> Set.empty,
+      // a zero or negative interval and a fifth field fail at every position
+      """"interval": 0""" -> Set.empty,
+      """"interval": -1""" -> Set.empty,
+      """"interval": "0ms"""" -> Set.empty,
+      """"interval": 3600000, "fields": ["rs","re","v","v","v"]""" -> Set.empty,
+      // the legacy string spellings compile at every position
+      """"interval": "1h"""" -> all,
+      """"interval": "1h", "offset": "+15m"""" -> all)
+    for ((keys, ok) <- cases; (at, compileAt) <- positions) {
+      val body = if (keys.contains("\"fields\"")) keys else s"$fields, $keys"
+      withClue(s"$at: {$body}") {
+        if (ok(at)) compileAt(body) else intercept[IllegalArgumentException](compileAt(body))
+      }
+    }
+    assert(QueryDsl.streamingPropSum(QueryDsl.parse(top(s"""$fields, "interval": "1h", "offset": "+15m""""))).cfg ==
+      graft.operators.ProportionalSum.Config(3600000L, offsetMs = 900000L))
+  }
+
   test("q163/q164: the full order grammar emits data-visible ranks; q165 filters parent ≡ typed q04b") {
     def rows(name: String) = SparkEntry.queries(name)(spark, sf).collect()
       .map(_.toSeq.toList).toSet

@@ -51,6 +51,40 @@ class PlanSpec extends AnyFunSuite {
     assert(rows.nonEmpty && rows == sorted)
   }
 
+  private def optimized(q: String) = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+
+  // each proportional_sum JSON-door entry runs its typed twin's plan; a
+  // pair that cannot records why (and fails once it does match)
+  for ((door, typed, differs) <- Seq(
+      ("q160_dsl_interval_string", "q01_prop_sum_basic", None),
+      ("q162_dsl_offset_string", "q02_prop_sum_offset", None),
+      ("q150_dsl_extended_bounds", "q05_prop_sum_empty_buckets", None),
+      ("q175_dsl_bounds_string", "q05_prop_sum_empty_buckets", None),
+      ("q151_dsl_calendar_interval", "q06_prop_sum_calendar", None),
+      ("q161_dsl_calendar_string", "q06_prop_sum_calendar", None),
+      ("q152_dsl_keyed_order", "q01k_prop_sum_keyed", None),
+      ("q153_dsl_nested_terms", "q04_prop_sum_grouped", None),
+      ("q159_dsl_agg_tree", "q04c_prop_sum_nested_tree", None),
+      ("q165_dsl_filters_parent", "q04b_prop_sum_filters_parent", Some(
+        "the DSL's term and range leaves guard nulls explicitly (isnotnull AND ...), where " +
+          "q04b's typed predicates leave a null to CASE WHEN; same rows (DslSpec), other expressions"))))
+    test(s"$door runs the optimized plan of its typed twin $typed${differs.fold("")(_ => " (or records why not)")}") {
+      val (d, t) = (optimized(door), optimized(typed))
+      differs match {
+        case None => assert(d.sameResult(t), s"\n$door:\n$d\n$typed:\n$t")
+        case Some(why) => assert(!d.sameResult(t), s"the plans now match; drop the recorded reason: $why")
+      }
+    }
+
+  test("q143 runs q01's optimized plan under the _key asc local sort it adds") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+    optimized("q143_agg_body") match {
+      case Sort(_, false, Repartition(1, false, below), _) =>
+        assert(below.sameResult(optimized("q01_prop_sum_basic")), s"\n$below")
+      case other => fail(s"expected a local sort over one partition:\n$other")
+    }
+  }
+
   test("netflowPackets: the packet feed packs on Flows.df's spread (one exchange)") {
     // Flows.df already hash-partitions by event_id with an explicit count;
     // a second by-column spread would be an exchange of its own

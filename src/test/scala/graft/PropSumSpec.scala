@@ -112,8 +112,8 @@ class PropSumSpec extends AnyFunSuite {
     val cal = Seq(
       (Some(jan), Some(feb), Some(8.0)),
       (Some(jan), Some(feb), None)).toDF("rs", "re", "v")
-    val gotCal = result(ProportionalSum.aggregate(ProportionalSum.explodeContribCalendarMonth(
-      cal, col("rs"), col("re"), col("v"), None, None, None)))
+    val gotCal = result(ProportionalSum.run(
+      cal, col("rs"), col("re"), col("v"), None, ProportionalSum.calendar("month", None, None)))
     assert(gotCal.values.map(_._1).sum == 2L,
       s"null-value doc must not inflate calendar doc_count: $gotCal")
   }
@@ -197,10 +197,10 @@ class PropSumSpec extends AnyFunSuite {
       (ms(1, 1), ms(4, 23), 6.0),
       (ms(1, 2), ms(1, 2), 7.0))
     val df = rows(docs)
-    val got = result(ProportionalSum.aggregate(ProportionalSum.explodeContribCalendarMonth(
-      df, col("rs"), col("re"), col("v"), None,
-      Some(Instant.parse("2012-01-01T00:00:00Z").toEpochMilli),
-      Some(Instant.parse("2012-05-01T00:00:00Z").toEpochMilli))))
+    val got = result(ProportionalSum.run(
+      df, col("rs"), col("re"), col("v"), None, ProportionalSum.calendar("month",
+        Some(Instant.parse("2012-01-01T00:00:00Z").toEpochMilli),
+        Some(Instant.parse("2012-05-01T00:00:00Z").toEpochMilli))))
     val expected = Map(
       ms(1, 1) -> (3L, 9.58), ms(2, 1) -> (4L, 4.97),
       ms(3, 1) -> (6L, 11.37), ms(4, 1) -> (4L, 8.07))
@@ -223,8 +223,8 @@ class PropSumSpec extends AnyFunSuite {
     })
     for ((unit, ms) <- Seq("day" -> 86400000L, "hour" -> 3600000L,
         "minute" -> 60000L, "second" -> 1000L)) {
-      val cal = result(ProportionalSum.aggregate(ProportionalSum.explodeContribCalendar(
-        flows, col("rs"), col("re"), col("v"), None, None, None, unit)))
+      val cal = result(ProportionalSum.run(
+        flows, col("rs"), col("re"), col("v"), None, ProportionalSum.calendar(unit, None, None)))
       val fixed = result(ProportionalSum.run(
         flows, col("rs"), col("re"), col("v"), None, Config(ms)))
       assert(cal == fixed, s"calendar '$unit' must equal the fixed ${ms}ms grid")
@@ -249,33 +249,79 @@ class PropSumSpec extends AnyFunSuite {
     Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, flowGen))
 
   /** The frame's histogram with the input spread over `parts` partitions. */
-  private def histogram(flows: Seq[(Long, Long, Double)], parts: Int): Seq[(Long, Long, Double)] = {
+  private def histogram(flows: Seq[(Long, Long, Double)], parts: Int, cfg: Config): Seq[(Long, Long, Double)] = {
     import spark.implicits._
     val df = spark.sparkContext.parallelize(flows, parts).toDF("rs", "re", "v")
-    ProportionalSum.run(df, col("rs"), col("re"), col("v"), None, Config(Itv))
+    ProportionalSum.run(df, col("rs"), col("re"), col("v"), None, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sortBy(_._1)
   }
 
+  /** Value total within detsum's per-term rounding (half of 1e-10) plus
+    * double ulps, the expected doc_count, and the same rows at each of
+    * `layouts` input partitions as at one. */
+  private def conserves(
+      flows: Seq[(Long, Long, Double)], cfg: Config, expectedCount: Long, layouts: Seq[Int]): Prop = {
+    val out = histogram(flows, 1, cfg)
+    val docCount = out.map(_._2).sum
+    val tol = docCount * 1e-10 + 1e-9
+    val total = out.map(_._3).sum
+    val inputTotal = flows.map(_._3).sum
+    (Prop(math.abs(total - inputTotal) <= tol) :| s"value total $total vs $inputTotal") &&
+      (Prop(docCount == expectedCount) :| s"doc_count $docCount vs $expectedCount") &&
+      layouts.map(n => Prop(out == histogram(flows, n, cfg)) :| s"rows differ between 1 and $n input partitions")
+        .reduce(_ && _)
+  }
+
   test("properties: value total, doc_count per touched bucket, and partition-layout independence") {
-    // a flow's overlap ratios sum to 1 over its buckets, so Σ value = Σ v up
-    // to detsum's per-term rounding (half of 1e-10) plus double ulps; the
-    // closed end bucket counts too, so a doc adds floor(re/itv) − floor(rs/itv) + 1
+    // a flow's overlap ratios sum to 1 over its buckets, so Σ value = Σ v;
+    // the closed end bucket counts too, so a doc adds
+    // floor(re/itv) − floor(rs/itv) + 1
     val prop = Prop.forAllNoShrink(framesGen) { flows =>
-      val out = histogram(flows, 1)
-      val docCount = out.map(_._2).sum
-      val tol = docCount * 1e-10 + 1e-9
-      val total = out.map(_._3).sum
-      val inputTotal = flows.map(_._3).sum
-      val expectedCount = flows.map { case (rs, re, _) =>
-        Math.floorDiv(re, Itv) - Math.floorDiv(rs, Itv) + 1 }.sum
-      (Prop(math.abs(total - inputTotal) <= tol) :| s"value total $total vs $inputTotal") &&
-        (Prop(docCount == expectedCount) :| s"doc_count $docCount vs $expectedCount") &&
-        (Prop(out == histogram(flows, 7)) :| "rows differ between 1 and 7 input partitions")
+      conserves(flows, Config(Itv), flows.map { case (rs, re, _) =>
+        Math.floorDiv(re, Itv) - Math.floorDiv(rs, Itv) + 1 }.sum, Seq(7))
     }
-    // 15 cases: each runs two small queries (mostly planning), about 4 s
+    // 15 cases: each runs two small queries (mostly planning), about 6 s
     // of tier-1 time on 4 cores
     val res = Test.check(
       Test.Parameters.default.withMinSuccessfulTests(15).withInitialSeed(Seed(20261019L)), prop)
     assert(res.passed, res.status.toString)
   }
+
+  // ---- the same properties on the calendar (month) grid ----
+
+  private val utc = java.time.ZoneOffset.UTC
+  private val Y2024 = Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+
+  /** A flow over 2024 whose start is a month boundary (shifted by the
+    * grid's offset) or any millisecond, lasting nothing, a whole number of
+    * months (ending on a boundary: the closed end bucket), or up to ~100
+    * days; the value has either sign. */
+  private def monthFlowGen(offsetMs: Long): Gen[(Long, Long, Double)] = for {
+    rs <- Gen.oneOf(
+      Gen.choose(0, 11).map(m => Instant.ofEpochMilli(Y2024).atZone(utc).plusMonths(m).toInstant.toEpochMilli + offsetMs),
+      Gen.choose(Y2024, Y2024 + 365L * 86400000L))
+    re <- Gen.frequency(
+      1 -> Gen.const(rs),
+      1 -> Gen.choose(1, 3).map(k => Instant.ofEpochMilli(rs).atZone(utc).plusMonths(k).toInstant.toEpochMilli),
+      3 -> Gen.choose(1L, 100L * 86400000L).map(rs + _))
+    v <- Gen.choose(-1000.0, 1000.0)
+  } yield (rs, re, v)
+
+  /** Calendar months from `a` to `b` (both shifted back by the offset). */
+  private def monthsSpanned(a: Long, b: Long, offsetMs: Long): Long = {
+    def ym(ms: Long) = java.time.YearMonth.from(Instant.ofEpochMilli(ms - offsetMs).atZone(utc))
+    java.time.temporal.ChronoUnit.MONTHS.between(ym(a), ym(b)) + 1
+  }
+
+  for ((label, offsetMs) <- Seq("no offset" -> 0L, "a +6h offset" -> 6 * 3600000L))
+    test(s"properties on the month grid with $label: value total, doc_count, partition-layout independence") {
+      val cfg = ProportionalSum.calendar("month", None, None, offsetMs)
+      val prop = Prop.forAllNoShrink(Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, monthFlowGen(offsetMs)))) {
+        flows => conserves(flows, cfg, flows.map { case (rs, re, _) => monthsSpanned(rs, re, offsetMs) }.sum, Seq(7, 32))
+      }
+      // 6 cases of three small queries: about 4 s on 4 cores
+      val res = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(6).withInitialSeed(Seed(20261020L)), prop)
+      assert(res.passed, res.status.toString)
+    }
 }

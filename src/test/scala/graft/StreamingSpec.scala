@@ -53,7 +53,6 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.ProportionalSum
     val sf = "/root/testdata/sf0.001"
     val cfg = ProportionalSum.Config(3600000L, Some(1704412800000L), Some(1706140800000L))
-    val wm = FlowStream.bucketedStream(FlowStream.flowSource(spark, sf), cfg)
     // production shape: bound state by event-time watermark, emit finalized buckets
     val appended = ProportionalSum
       .explodeContrib(FlowStream.flowSource(spark, sf), col("rs"), col("re"), col("v"), None, cfg)
@@ -144,12 +143,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows("st20_dsl_prop_sum_stream") == rows("st07_prop_sum_append"),
       "front-door streaming diverged from the typed append collector")
     // calendar intervals and presentation knobs have no append-mode form
-    intercept[IllegalArgumentException](queries.QueryDsl.propSumStreamSpec(queries.QueryDsl.parse(
+    intercept[IllegalArgumentException](queries.QueryDsl.streamingPropSum(queries.QueryDsl.parse(
       """{"aggs": {"h": {"proportional_sum": {"fields": ["rs","re","v"], "interval": "1M"}}}}""")))
-    intercept[IllegalArgumentException](queries.QueryDsl.propSumStreamSpec(queries.QueryDsl.parse(
+    intercept[IllegalArgumentException](queries.QueryDsl.streamingPropSum(queries.QueryDsl.parse(
       """{"aggs": {"h": {"proportional_sum": {"fields": ["rs","re","v"], "interval": 3600000,
         |  "keyed": true}}}}""".stripMargin)))
-    intercept[IllegalArgumentException](queries.QueryDsl.propSumStreamSpec(queries.QueryDsl.parse(
+    intercept[IllegalArgumentException](queries.QueryDsl.streamingPropSum(queries.QueryDsl.parse(
       """{"aggs": {"h": {"terms": {"field": "event_type"}}}}""")))
   }
 
