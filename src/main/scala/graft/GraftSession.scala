@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for local SparkSession config shared by Verify, the dev mains
   * and the test suites. Mirrors what a cluster deployment would set via
-  * spark-submit: AQE on, UTC session time, shuffle parallelism sized to the
-  * machine. */
+  * spark-submit: AQE on, UTC session time, batch shuffle parallelism sized
+  * to the machine, stream state sized once ([[StatePartitions]]). */
 object GraftSession {
 
   /** Entries of Spark's generated-class cache
@@ -30,12 +30,30 @@ object GraftSession {
     * (about 3100 classes held), +95 MB heap and +23 MB metaspace. */
   val CodegenCacheEntries = 4096
 
+  /** `spark.sql.shuffle.partitions`: the state-store count of every stateful
+    * stream, set once for the session. A stateful operator keeps one state
+    * store per shuffle partition and commits each of them every
+    * micro-batch, so the count is sized to the small state the `st*`
+    * entries keep (st14: 8 rules; st04: about 720 rows) rather than to the
+    * machine: st14 summed about 17 s of commit time a batch over 32 stores
+    * against under 1 s over 8.
+    *
+    * Batch plans do not read it: with AQE and partition coalescing on,
+    * `SQLConf.numShufflePartitions` returns
+    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum`, which the
+    * builder sets to the core count. A stream copies the raw value into its
+    * checkpointed state partition count when it first starts, and runs its
+    * stateful plans with AQE off, so all of a stateful stream's exchanges
+    * take it. The results do not depend on it (detsum). */
+  val StatePartitions = 8
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession
       .builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
+      .config("spark.sql.shuffle.partitions", StatePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // testdata parquet carries TIMESTAMP(NANOS); read as nano-longs and

@@ -39,9 +39,9 @@ object SparkEntry {
         // oracle verbatim: a hash match proves streaming decode emits
         // row-identical audits to the batch pipeline.
         "st16_media_info_stream" -> ((s, d) =>
-          TextQueries.streamToMemory(
-            graft.operators.Multimodal.mediaInfo(TextQueries.docStream(s, d, "st16")),
-            "st16_mem", "append")))
+          graft.streaming.Streams.run(
+            graft.operators.Multimodal.mediaInfo(TextQueries.docStream(s, d)),
+            "st16_mem", "append").frame))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the weaker rows-only check. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.NetFlowV5
+import graft.streaming.Streams
 
 /** Flow-ingestion path: synthesize NetFlow v5 export packets from the
   * events table (per-partition, ≤30 records each — the real wire chunking),
@@ -227,7 +228,6 @@ object IngestQueries {
     }
 
   private def st08(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val spool = netflowSpool(s, d)
     val agg = siteEnrich(s,
       s.readStream
@@ -235,15 +235,7 @@ object IngestQueries {
         .parquet(spool.toString)
         .select(call_function("parse_netflow_v5", col("bytes")).as("pkt"))
         .select(explode(col("pkt.records")).as("r")))
-    Tables.withShufflePartitions(s, 8) {
-      val q = agg.writeStream
-        .format("memory").queryName("st08_mem")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table("st08_mem")
+    Streams.run(agg, "st08_mem", "complete").frame
   }
 
   /** The spool WRITE path through the same DataSource V2 format: typed flow
@@ -328,7 +320,6 @@ object IngestQueries {
     * parse → proportional_sum end to end. Times are export-relative millis;
     * the oracle recomputes the histogram straight from events. */
   private def st04(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val spool = netflowSpool(s, d)
     val records = s.readStream
       .schema("bytes BINARY")
@@ -341,15 +332,7 @@ object IngestQueries {
         col("r.octets").cast("double").as("v"))
     val series = graft.operators.ProportionalSum.run(records, col("rs"), col("re"), col("v"), None,
       graft.operators.ProportionalSum.Config(Flows.HOUR_MS, Some(0L), Some(31 * Flows.DAY_MS)))
-    Tables.withShufflePartitions(s, 8) {
-      val q = series.writeStream
-        .format("memory").queryName("st04_mem")
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table("st04_mem")
+    Streams.run(series, "st04_mem", "complete").frame
   }
 
   /** Flow enrichment — the collector-side metadata join Drift does against
@@ -423,7 +406,7 @@ object IngestQueries {
     * oracle recomputed from raw events, proving the decode is lossless. */
   private def st05(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spool = scratchDir("graft_ipfix_spool")
     val ckpt = scratchDir("graft_ipfix_ckpt")
     val nDomains = 4L
@@ -465,17 +448,7 @@ object IngestQueries {
     val dataDir = spoolOnce(s, d, "ipfix_data") { p =>
       dataMsgs.repartition(1).write.mode("overwrite").parquet(p.toString)
     }
-    def arrive(src: java.nio.file.Path, tag: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files.list(src)
-      try files.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .foreach(f =>
-          java.nio.file.Files.createLink(spool.resolve(s"${tag}_${f.getFileName}"), f))
-      finally files.close()
-    }
-
-    def runOnce(): Unit = {
+    def runOnce(): DataFrame = {
       val msgs = s.readStream
         .schema("domain LONG, seq LONG, bytes BINARY")
         .parquet(spool.toString)
@@ -498,26 +471,27 @@ object IngestQueries {
           count(lit(1)).as("n_flows"),
           sum(col("octets")).as("total_octets"),
           sum(col("flow_end_ms") - col("flow_start_ms")).as("total_duration_ms"))
-      // consistent across BOTH runs: state partitioning is fixed by the
-      // checkpoint at first run
-      Tables.withShufflePartitions(s, 8) {
-        val q = agg.writeStream
-          .format("memory").queryName("st05_mem")
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      // the state partitioning is fixed by the checkpoint at the first run
+      Streams.run(agg, "st05_mem", "complete", Some(ckpt.toString)).frame
     }
     // PHASE 1: templates only — no decodable data yet
-    arrive(tmplDir, "t")
+    arrive(partFiles(tmplDir), spool, "t")
     runOnce()
     // PHASE 2: data-only messages — decodable only via checkpointed state
-    arrive(dataDir, "d")
+    arrive(partFiles(dataDir), spool, "d")
     runOnce()
-    s.table("st05_mem")
   }
+
+  /** The `part-` files a Spark write left in `dir`, in name order. */
+  private[graft] def partFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    Option(dir.toFile.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).map(_.toPath)
+
+  /** Hard-link `files` into the arrival directory `spool` as `<tag>_<name>`:
+    * they ARRIVE there together, keeping their mtimes (a file source's
+    * arrival order). */
+  private[graft] def arrive(files: Seq[java.nio.file.Path], spool: java.nio.file.Path, tag: String): Unit =
+    files.foreach(f => java.nio.file.Files.createLink(spool.resolve(s"${tag}_${f.getFileName}"), f))
 
   /** Source-format widening: events re-exported as JSON-lines (the other
     * wire format a collector/data-drop commonly lands) and read back through

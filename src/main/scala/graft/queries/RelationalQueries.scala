@@ -153,7 +153,6 @@ object RelationalQueries {
     // feed). Timestamps are ms-truncated on write so the result is exactly
     // the batch join the oracle computes.
     "st06_stream_stream_join" -> ((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.streaming.Trigger
       // the feed carries only the two topics the join consumes — the
       // filters would push into the scan anyway, but a smaller spool also
       // shrinks the streaming state both sides keep. Built once per
@@ -167,7 +166,6 @@ object RelationalQueries {
           .repartition(2)
           .write.mode("overwrite").parquet(p.toString)
       }
-      Tables.withShufflePartitions(s, 8) {
       val src = s.readStream
         .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
         .parquet(spool.toString)
@@ -180,14 +178,7 @@ object RelationalQueries {
       val joined = p.join(er,
         expr("user_id = e_user AND e_ts >= p_ts AND e_ts <= p_ts + interval 1 hour"))
         .select(col("purchase_id"), col("error_id"), col("user_id"))
-      val q = joined.writeStream
-        .format("memory").queryName("st06_mem")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("st06_mem")
-      }
+      graft.streaming.Streams.run(joined, "st06_mem", "append").frame
     }),
 
     // as-of/range join: last signup within 7 days before each purchase

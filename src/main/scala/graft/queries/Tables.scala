@@ -24,26 +24,6 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"),
     "orders" -> Seq("o_orderdate"))
 
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily set to `n`,
-    * restoring the previous value after. Streaming harness queries use this
-    * to size the STATE STORE shard count to the state they actually keep —
-    * a stateful operator spins up one store (with per-batch commit I/O) per
-    * shuffle partition, so a tiny-state query at 32 partitions pays 32
-    * store commits per side per batch for nothing. On a cluster the same
-    * knob tracks executor count; results are partitioning-independent
-    * (detsum) either way.
-    *
-    * NOT thread-safe: it mutates the shared session conf and restores it in
-    * `finally`, so two concurrent callers on the same SparkSession race and
-    * one can run (or permanently restore) the wrong value. `graft.Verify`
-    * and perfbench's stream op run queries strictly sequentially; a
-    * concurrent caller must pass a dedicated `spark.newSession()` instead. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", old)
-  }
-
   /** Run `f` with the calling thread's Spark job description set to
     * `desc`, restoring the caller's description after — so an event log
     * can attribute the jobs of concurrent builds (each on its own thread)

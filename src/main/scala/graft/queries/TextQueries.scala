@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
+import graft.streaming.Streams
 
 /** Text-analysis operators over `documents`: language ID, quality scoring,
   * token counting, fingerprinting. All integer/string arithmetic (or a single
@@ -1298,8 +1299,8 @@ object TextQueries {
     * multi-file spool gives several micro-batch splits. The spool is
     * written ONCE per (session, dataset) via [[IngestQueries.spoolOnce]];
     * tokenization stays IN the stream (`toks` is computed on the streamed
-    * rows per request); `name` identifies the consumer only. */
-  private[graft] def docStream(s: SparkSession, d: String, name: String): DataFrame = {
+    * rows per request). */
+  private[graft] def docStream(s: SparkSession, d: String): DataFrame = {
     val spool = IngestQueries.spoolOnce(s, d, "docs4") { p =>
       Tables(s, d, "documents").repartition(4).write.mode("overwrite").parquet(p.toString)
     }
@@ -1309,20 +1310,10 @@ object TextQueries {
       .withColumn("toks", text.tokens(col("text")))
   }
 
-  /** Run a streaming frame to completion into a memory sink and return the
-    * sink table — the shared AvailableNow harness tail. */
-  private[graft] def streamToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    df.sparkSession.table(name)
-  }
-
   /** st14's streaming aggregate, exposed unstarted so PlanSpec can gate the
     * physical join shape of the exact streaming DataFrame the query runs. */
   private[graft] def st14StreamAgg(s: SparkSession, d: String): DataFrame =
-    percolateInvertedAgg(docStream(s, d, "st14"), percolateRules(s, d))
+    percolateInvertedAgg(docStream(s, d), percolateRules(s, d))
 
   /** q95's query term (the top query-window term, rank QLo) — a driver
     * literal by the st15/centroids convention, so the streaming form needs
@@ -1649,7 +1640,7 @@ object TextQueries {
     // land. Append mode; shares q41's oracle, so a hash match proves the
     // streaming map is row-identical to the batch operator.
     "st13_stream_quality" -> ((s: SparkSession, d: String) =>
-      streamToMemory(qualityScore(docStream(s, d, "st13")), "st13_mem", "append")),
+      Streams.run(qualityScore(docStream(s, d)), "st13_mem", "append").frame),
 
     // terms_set alerting AT INGEST (the always-on form of q79): the tiny
     // deterministic term set enters the doc stream as a LITERAL array (the
@@ -1660,9 +1651,9 @@ object TextQueries {
     // deterministic, so the oracle is q79's SQL without the top-20 window
     // — a hash match proves streaming alerting equals the batch query.
     "st15_terms_set_stream" -> ((s: SparkSession, d: String) =>
-      streamToMemory(
-        termsSetAlerts(docStream(s, d, "st15"), termsSetQueryTerms(s, d)),
-        "st15_mem", "append")),
+      Streams.run(
+        termsSetAlerts(docStream(s, d), termsSetQueryTerms(s, d)),
+        "st15_mem", "append").frame),
 
     // INGEST-TIME decontamination — the streaming×curation cell q54
     // batch-covers: every arriving doc is checked against the benchmark
@@ -1673,9 +1664,9 @@ object TextQueries {
     // array_intersect against a plan literal — stateless append stream,
     // no state store, nothing stream-side shuffles at any corpus size.
     "st19_decontaminate_stream" -> ((s: SparkSession, d: String) =>
-      streamToMemory(
-        decontamAlerts(docStream(s, d, "st19"), decontamBench(s, d)),
-        "st19_mem", "append")),
+      Streams.run(
+        decontamAlerts(docStream(s, d), decontamBench(s, d)),
+        "st19_mem", "append").frame),
 
     // ES `_analyze` API — the index-time analysis chain made inspectable,
     // three analyzers over the 3 longest docs (the q104/q110 fixed-target
@@ -1828,7 +1819,7 @@ object TextQueries {
       val ws = w.collect().map(r => r.getString(0) ->
         graft.functions.detsum.roundHalfUpLong(r.getDouble(1) * 1e9)).toMap
       val p0 = prior.collect()(0).getDouble(0)
-      streamToMemory(qualityAlerts(docStream(s, d, "st18"), ws, p0), "st18_mem", "append")
+      Streams.run(qualityAlerts(docStream(s, d), ws, p0), "st18_mem", "append").frame
     }),
 
     "q45_length_histogram" -> ((s: SparkSession, d: String) =>
@@ -2785,9 +2776,9 @@ object TextQueries {
     // window as it arrives (stateless per-row match — no state store),
     // exactly the st15 alerting shape for the span family.
     "st17_span_first_stream" -> ((s: SparkSession, d: String) =>
-      streamToMemory(
-        spanFirstHits(docStream(s, d, "st17"), spanFirstTerm(s, d)),
-        "st17_mem", "append")),
+      Streams.run(
+        spanFirstHits(docStream(s, d), spanFirstTerm(s, d)),
+        "st17_mem", "append").frame),
 
     // ES `intervals` query, `all_of: {ordered: true, max_gaps: 10}` over
     // three terms — the modern positional DSL that succeeds the span
@@ -3612,23 +3603,12 @@ object TextQueries {
     // tokens that hit a rule, so a 10k-rule registry costs O(matching
     // tokens), not rules×docs row fan-out. The transform is stateless, so
     // it drops straight into the complete-mode agg; PlanSpec gates the
-    // plan against BroadcastNestedLoopJoin regressions.
-    "st14_percolate_stream" -> ((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.streaming.Trigger
-      // rule-count-sized state (8 rules) — shard the state store like every
-      // other stateful harness entry instead of inheriting the session's 32
-      // (32 store commits per batch for 8 rows of state; r19 profile read
-      // commitMs summed at 17s/batch under 32 shards vs <1s under 8)
-      Tables.withShufflePartitions(s, 8) {
-        val q = st14StreamAgg(s, d).writeStream
-          .format("memory").queryName("st14_mem")
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st14_mem")
-      }
-    }),
+    // plan against BroadcastNestedLoopJoin regressions. Its state is
+    // rule-count-sized (8 rules), kept in the session's 8 state stores
+    // (GraftSession.StatePartitions): at 32 stores the commits summed about
+    // 17 s a batch for those 8 rows, under 1 s at 8.
+    "st14_percolate_stream" -> ((s: SparkSession, d: String) =>
+      Streams.run(st14StreamAgg(s, d), "st14_mem", "complete").frame),
 
     // REAL BPE (Sennrich 2016): merges learned by distributed pair-count
     // rounds over the vocab-sized word-frequency table (train-once model,

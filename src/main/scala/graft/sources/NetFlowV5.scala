@@ -94,6 +94,9 @@ object NetFlowV5 {
   }
 
   /** Decode one export packet → Catalyst InternalRow matching [[packetType]].
+    * A packet of another version (v9 and IPFIX share the 2-byte version
+    * field) or one shorter than its header declares fails with
+    * IllegalArgumentException.
     * Called from both eval paths of [[ParseNetFlowV5]] (Scala objects emit
     * static forwarders, so generated Java calls this directly). */
   def parse(bytes: Array[Byte]): InternalRow = {
@@ -103,6 +106,9 @@ object NetFlowV5 {
     }
     val buf = ByteBuffer.wrap(bytes)
     val version = buf.getShort() & 0xffff
+    if (version != 5) {
+      throw new IllegalArgumentException(s"not a NetFlow v5 packet: version $version")
+    }
     val count = buf.getShort() & 0xffff
     if (bytes.length < 24 + 48 * count) {
       throw new IllegalArgumentException(

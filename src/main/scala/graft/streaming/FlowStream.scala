@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.ProportionalSum
 import graft.operators.ProportionalSum.Config
@@ -75,30 +74,21 @@ object FlowStream {
     * fingerprint FOREVER — the always-on-collector liability st03b fixes. */
   def streamingDedupCountsWithState(
       spark: SparkSession, sfDir: String, name: String): (DataFrame, Long) = {
-    // tiny state (one store per shuffle partition) -> size the shard count
-    // to it instead of paying 32 store commits per batch
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val docs = tableStream(spark, sfDir, "documents")
-        .withColumn("fp", md5(graft.functions.text.norm(col("text")).cast("binary")))
-        .dropDuplicates("source", "fp")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_distinct"))
-      val q = docs.writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      (spark.table(name), dedupStateRows(q))
-    }
+    val docs = tableStream(spark, sfDir, "documents")
+      .withColumn("fp", md5(graft.functions.text.norm(col("text")).cast("binary")))
+      .dropDuplicates("source", "fp")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_distinct"))
+    val done = Streams.run(docs, name, "complete")
+    (done.frame, dedupStateRows(done))
   }
 
-  /** Final state-store row count of a query's dedup operator (falls back to
+  /** Final state-store row count of a run's dedup operator (falls back to
     * the max across operators if the engine renames it) — read from the
     * LAST progress, i.e. after AvailableNow's trailing no-data batch has
     * applied the final watermark's evictions. */
-  private def dedupStateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long = {
-    val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
+  private def dedupStateRows(done: Streams.Finished): Long = {
+    val ops = Option(done.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
     val dedup = ops.filter(_.operatorName.toLowerCase.contains("dedupe"))
     (if (dedup.nonEmpty) dedup else ops).map(_.numRowsTotal).maxOption.getOrElse(0L)
   }
@@ -119,51 +109,49 @@ object FlowStream {
     * occurrence is emitted). */
   def streamingDedupBoundedWithState(
       spark: SparkSession, sfDir: String, name: String): (DataFrame, Long) = {
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val src = graft.queries.Tables(spark, sfDir, "documents")
+    val done = Streams.run(boundedDedup(spark, dedupTsSpool(spark, sfDir).toString), name, "complete")
+    (done.frame, dedupStateRows(done))
+  }
+
+  /** st03b's arrival feed: the documents' (source, fp, ts) in 4 ts-range
+    * part files, built (and mtime-stamped) once per (session, dataset) —
+    * spoolOnce; each run replays the same 4 files. */
+  private[graft] def dedupTsSpool(spark: SparkSession, sfDir: String): java.nio.file.Path =
+    graft.queries.IngestQueries.spoolOnce(spark, sfDir, "dedup_ts") { p =>
+      graft.queries.Tables(spark, sfDir, "documents")
         .withColumn("fp", md5(graft.functions.text.norm(col("text")).cast("binary")))
         .withColumn("ts", expr(
           s"timestamp_millis(${graft.queries.Flows.JAN_START_MS}L + " +
             "(cast(conv(substring(fp, 1, 6), 16, 10) as bigint) % 86400) * 1000)"))
         .select(col("source"), col("fp"), col("ts"))
-      // arrival feed built (and mtime-stamped) once per (session, dataset)
-      // — spoolOnce; each invocation replays the same 4 ts-range files
-      val spool = graft.queries.IngestQueries.spoolOnce(spark, sfDir, "dedup_ts") { p =>
-        src.repartitionByRange(4, col("ts"))
-          .write.mode("overwrite").parquet(p.toString)
-        // the file source orders batches by file mtime — stamp STRICTLY
-        // increasing mtimes in part-file (= ts-range) order so arrival order
-        // is deterministically the event-time order (equal mtimes leave the
-        // order to the filesystem listing, which can drop first-occurrences
-        // as late data)
-        val now = System.currentTimeMillis()
-        Option(p.toFile.listFiles()).foreach(
-          _.filter(_.getName.startsWith("part-")).sortBy(_.getName).zipWithIndex
-            .foreach { case (f, i) =>
-              // fail LOUDLY if the stamp doesn't take: on a filesystem that
-              // refuses setLastModified, arrival order silently degrades to
-              // listing order and st03b emits wrong counts with no error
-              require(f.setLastModified(now + i * 60000L),
-                s"setLastModified failed on $f — spool arrival order would be nondeterministic")
-            })
+        .repartitionByRange(4, col("ts"))
+        .write.mode("overwrite").parquet(p.toString)
+      // the file source orders batches by file mtime — stamp STRICTLY
+      // increasing mtimes in part-file (= ts-range) order so arrival order
+      // is deterministically the event-time order (equal mtimes leave the
+      // order to the filesystem listing, which can drop first-occurrences
+      // as late data)
+      val now = System.currentTimeMillis()
+      graft.queries.IngestQueries.partFiles(p).zipWithIndex.foreach { case (f, i) =>
+        // fail LOUDLY if the stamp doesn't take: on a filesystem that
+        // refuses setLastModified, arrival order silently degrades to
+        // listing order and st03b emits wrong counts with no error
+        require(f.toFile.setLastModified(now + i * 60000L),
+          s"setLastModified failed on $f — spool arrival order would be nondeterministic")
       }
-      val stream = spark.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(spool.toString)
-        .withWatermark("ts", "30 minutes")
-        .dropDuplicatesWithinWatermark("source", "fp")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_distinct"))
-      val q = stream.writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      (spark.table(name), dedupStateRows(q))
     }
-  }
+
+  /** st03b's stream over the arrival directory `dir` (files of
+    * [[dedupTsSpool]]), one file per micro-batch. */
+  private[graft] def boundedDedup(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream
+      .schema("source STRING, fp STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+      .withWatermark("ts", "30 minutes")
+      .dropDuplicatesWithinWatermark("source", "fp")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_distinct"))
 
   def streamingDedupBounded(spark: SparkSession, sfDir: String, name: String): DataFrame =
     streamingDedupBoundedWithState(spark, sfDir, name)._1
@@ -194,23 +182,14 @@ object FlowStream {
   def runAppendMode(flows: DataFrame, spec: ProportionalSum.Spec, delayMs: Long, name: String): DataFrame = {
     require(spec == ProportionalSum.Spec(spec.fields, spec.cfg),
       s"append mode takes the fields and the grid only, got $spec")
-    val spark = flows.sparkSession
     val (rs, re, v, sampling) = ProportionalSum.specColumns(flows, spec)
     // the watermark is on the bucket start timestamp with the EXACT delay
     // (the oracle subtracts the full delayMs), so it joins the group key
     val exploded = ProportionalSum.explodeContrib(flows, rs, re, v, sampling, spec.cfg)
       .withColumn("bucket_ts", timestamp_millis(col("bucket_ms")))
       .withWatermark("bucket_ts", s"$delayMs milliseconds")
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val q = ProportionalSum.aggregate(exploded, Seq(col("bucket_ts"))).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name).select(col("bucket_ms"), col("doc_count"), col("value"))
+    Streams.run(ProportionalSum.aggregate(exploded, Seq(col("bucket_ts"))), name, "append")
+      .frame.select(col("bucket_ms"), col("doc_count"), col("value"))
   }
 
   /** Always-on top-K talkers: the Space-Saving sketch
@@ -221,61 +200,38 @@ object FlowStream {
     * what makes the result independent of micro-batch arrival order; when
     * distinct keys fit the capacity the sketch is exact, so the finished
     * stream hash-matches q11c's exact DuckDB oracle. */
-  def streamingTopK(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val agg = eventsStream(spark, sfDir)
-        .groupBy(col("event_type"))
-        .agg(expr("topk_freq(CAST(user_id AS STRING), 200)").as("top_users"))
-      val q = agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .select(col("event_type"), posexplode(col("top_users")).as(Seq("pos", "tu")))
-        .select(
-          col("event_type"),
-          (col("pos") + 1).cast("long").as("rank"),
-          col("tu.item").as("item"),
-          col("tu.cnt").as("cnt"))
-        .filter(col("rank") <= 5)
-    }
+  def streamingTopK(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val agg = eventsStream(spark, sfDir)
+      .groupBy(col("event_type"))
+      .agg(expr("topk_freq(CAST(user_id AS STRING), 200)").as("top_users"))
+    Streams.run(agg, name, "complete").frame
+      .select(col("event_type"), posexplode(col("top_users")).as(Seq("pos", "tu")))
+      .select(
+        col("event_type"),
+        (col("pos") + 1).cast("long").as("rank"),
+        col("tu.item").as("item"),
+        col("tu.cnt").as("cnt"))
+      .filter(col("rank") <= 5)
+  }
 
   /** Always-on percentile monitoring: the mergeable binned-histogram
     * quantile sketch ([[graft.plans.HistQuantile]]) as a streaming
     * aggregation — bounded sketch state per group, the live latency/size
     * percentile view. Deterministic merge (spec-pinned) ⇒ the finished
     * stream equals the batch sketch exactly (StreamingSpec asserts it). */
-  def streamingQuantiles(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val agg = eventsStream(spark, sfDir)
-        .groupBy(col("event_type"))
-        .agg(
-          expr("hist_quantile(value, 0.5, 0.0, 1000.0, 1000)").as("p50"),
-          expr("hist_quantile(value, 0.95, 0.0, 1000.0, 1000)").as("p95"))
-      val q = agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    }
+  def streamingQuantiles(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val agg = eventsStream(spark, sfDir)
+      .groupBy(col("event_type"))
+      .agg(
+        expr("hist_quantile(value, 0.5, 0.0, 1000.0, 1000)").as("p50"),
+        expr("hist_quantile(value, 0.95, 0.0, 1000.0, 1000)").as("p95"))
+    Streams.run(agg, name, "complete").frame
+  }
 
   /** Run the stream to completion (AvailableNow) and return the final
     * histogram — the driver-contract entry point. Matches the batch q01
     * result exactly, so it shares q01's DuckDB oracle. */
   def runToCompletion(spark: SparkSession, sfDir: String, cfg: Config, name: String): DataFrame =
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      val result = ProportionalSum.run(flowSource(spark, sfDir), col("rs"), col("re"), col("v"), None, cfg)
-      val q = result.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    }
+    Streams.run(ProportionalSum.run(flowSource(spark, sfDir), col("rs"), col("re"), col("v"), None, cfg),
+      name, "complete").frame
 }

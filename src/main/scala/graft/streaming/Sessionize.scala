@@ -49,24 +49,13 @@ object Sessionize {
     * run to completion, return the CLOSED sessions (each user's still-open
     * last session stays in state — the oracle mirrors that by dropping the
     * max session index per user). */
-  def runStreamToCompletion(spark: SparkSession, sfDir: String, gapMs: Long, name: String): DataFrame =
-    graft.queries.Tables.withShufflePartitions(spark, 8) {
-      import spark.implicits._
-      val evs = FlowStream.eventsStream(spark, sfDir)
-        .select(
-          org.apache.spark.sql.functions.col("user_id"),
-          org.apache.spark.sql.functions.col("event_id"),
-          org.apache.spark.sql.functions.expr("unix_micros(ts) DIV 1000").as("ms"),
-          org.apache.spark.sql.functions.col("value"))
-        .as[Ev]
-      val q = statefulSessions(evs, gapMs).writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    }
+  def runStreamToCompletion(spark: SparkSession, sfDir: String, gapMs: Long, name: String): DataFrame = {
+    import spark.implicits._
+    val evs = FlowStream.eventsStream(spark, sfDir)
+      .select(col("user_id"), col("event_id"), expr("unix_micros(ts) DIV 1000").as("ms"), col("value"))
+      .as[Ev]
+    Streams.run(statefulSessions(evs, gapMs).toDF(), name, "append").frame
+  }
 
   /** Streaming sessionization with explicit per-user state. Emits sessions
     * when closed by a later event or by processing-time timeout. */

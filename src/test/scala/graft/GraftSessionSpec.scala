@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** What a `spark.newSession()` of the builder's session keeps. A caller
-  * that needs its own conf (e.g. a shuffle-partition count) can only use a
-  * child session in place of [[graft.queries.Tables.withShufflePartitions]]
-  * if the child still resolves graft's native functions and still runs
-  * under the builder's confs. */
+/** What a `spark.newSession()` of the builder's session keeps: graft's
+  * native functions and the builder's confs, among them the state-store
+  * partition count and the batch shuffle parallelism. (A stream run in such
+  * a child reports to the child's `streams` only, so graft starts streams
+  * in the caller's session; see StreamRunnerSpec.) */
 class GraftSessionSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.builder("4").getOrCreate()
@@ -25,7 +25,9 @@ class GraftSessionSpec extends AnyFunSuite {
     val expected = Map(
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.codegen.cache.maxEntries" -> GraftSession.CodegenCacheEntries.toString,
-      "spark.sql.artifact.isolation.enabled" -> "false")
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> GraftSession.StatePartitions.toString,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "4")
     expected.foreach { case (k, v) =>
       assert(child.conf.get(k) == v, s"$k in the child session")
     }

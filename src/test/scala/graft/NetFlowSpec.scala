@@ -48,6 +48,16 @@ class NetFlowSpec extends AnyFunSuite {
     assert(msgs(ex).exists(_.contains("truncated")), msgs(ex).mkString(" | "))
   }
 
+  test("a packet with a v9 header fails as not v5, even when its count fits its length") {
+    // a v9 (or IPFIX) export shares the 2-byte version field; a v5-sized
+    // body under a v9 header must not decode as v5 rows
+    val packet = NetFlowV5.pack(
+      Seq(Flow("1.2.3.4", "5.6.7.8", 1, 2, 6, 1L, 1L, 0L, 1L)), 0L, 0L, 0L)
+    packet(0) = 0; packet(1) = 9
+    val ex = intercept[IllegalArgumentException](NetFlowV5.parse(packet))
+    assert(ex.getMessage.contains("version 9"), ex.getMessage)
+  }
+
   test("IPFIX pack → parse round trip preserves flow fields") {
     import spark.implicits._
     import graft.sources.Ipfix
