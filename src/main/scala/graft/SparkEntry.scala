@@ -56,10 +56,10 @@ object SparkEntry {
         // a hash match proves the Spark-side writers+parsers round-trip
         // them. See graft.operators.Multimodal.mediaInfo. st16 shares it
         // verbatim (streaming decode must be row-identical to batch).
-        // mm03/mm04/mm05 (round 11) extend the same pattern to the resize
-        // grid, the aHash near-dup pipeline, and the audio windower —
-        // see graft.queries.MmOracle. mm01/mm02 joined in round 18 (the
-        // last 2 rows-only entries): lossless features — incl. mm01's
+        // mm03/mm04/mm05 extend the same pattern to the resize grid, the
+        // aHash near-dup pipeline, and the audio windower — see
+        // graft.queries.MmOracle. mm01/mm02 recompute their lossless
+        // features the same way — incl. mm01's
         // ORDER-SENSITIVE position-weighted checksum, which has a closed
         // form under byte cycling — recomputed arithmetically; lossy JPEG
         // feature cells NULL by the mm06 contract (its raster stays pinned

@@ -1916,7 +1916,7 @@ object DslQueries {
           |    "date_histogram": {"field": "ms", "fixed_interval": 3600000},
           |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
           |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.eventsMs(s, d), body)
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
     }),
 
     // the framework terms agg through the front door: size + _count order
@@ -1928,7 +1928,7 @@ object DslQueries {
           |    "terms": {"field": "event_type", "size": 10, "order": {"_count": "desc"}},
           |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
           |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.eventsMs(s, d), body)
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
     }),
 
     // extended_bounds through the front door (the builder's own parser
@@ -1972,8 +1972,7 @@ object DslQueries {
     // monthly UTC buckets over month-scale ranges — q06's semantics over
     // q06's own stretched-range frame, sharing q06's oracle verbatim.
     "q151_dsl_calendar_interval" -> ((s: SparkSession, d: String) => {
-      val flows = Flows.df(s, d)
-        .withColumn("re", col("rs") + (col("event_id") % 90) * lit(Flows.DAY_MS))
+      val flows = Flows.stretched(Flows.df(s, d), 90)
       val body = QueryDsl.parse(
         """{"size": 0,
           |  "aggs": {"histo": {"proportional_sum": {
@@ -2046,7 +2045,7 @@ object DslQueries {
           |      "aggs": {"sum_value": {"sum": {"field": "value"}}}
           |    }}
           |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.eventsMs(s, d), body)
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
     }),
 
     // the FULL 3-level agg tree at the JSON door: terms(event_type) →
@@ -2093,8 +2092,7 @@ object DslQueries {
     // explode exactly like the explicit calendar_interval key — q06's
     // semantics over q06's stretched frame, q06's oracle verbatim.
     "q161_dsl_calendar_string" -> ((s: SparkSession, d: String) => {
-      val flows = Flows.df(s, d)
-        .withColumn("re", col("rs") + (col("event_id") % 90) * lit(Flows.DAY_MS))
+      val flows = Flows.stretched(Flows.df(s, d), 90)
       val body = QueryDsl.parse(
         """{"size": 0,
           |  "aggs": {"histo": {"proportional_sum": {
@@ -2237,7 +2235,7 @@ object DslQueries {
           |                       "order": {"sum_value": "desc"}},
           |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
           |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.eventsMs(s, d), body)
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
     }),
 
     // the plain NUMERIC histogram framework agg at the door — the agg
@@ -2251,7 +2249,7 @@ object DslQueries {
           |  "aggs": {"by_value": {
           |    "histogram": {"field": "value", "interval": 25}
           |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.eventsMs(s, d), body)
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
     }),
 
     // the explicit-edges `range` framework agg at the door — typed
@@ -2268,7 +2266,7 @@ object DslQueries {
           |    ]},
           |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
           |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.eventsMs(s, d), body)
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
     }),
 
     "q170_dsl_terms_size" -> ((s: SparkSession, d: String) => {
@@ -2537,10 +2535,8 @@ object DslQueries {
     // q04's grouped series text + the parent-truncation mirror: top-2
     // terms by flows-row count (_count desc, key asc), rank joined back
     // onto the full nested series — ONE ORDER BY spelling on both sides
-    "q170_dsl_terms_size" -> {
-      val core = FlowQueries.oracleSql("q04_prop_sum_grouped")
-        .stripSuffix(" SELECT * FROM agg")
-      s"""$core,
+    "q170_dsl_terms_size" ->
+      s"""${FlowQueries.oracle(FlowQueries.basicCfg, groupCols = Seq("event_type"))},
          |tot AS (SELECT event_type, COUNT(*) AS term_doc_count FROM flows GROUP BY event_type),
          |topt AS (
          |  SELECT event_type, term_doc_count,
@@ -2550,20 +2546,16 @@ object DslQueries {
          |SELECT a.event_type, t.term_rank, t.term_doc_count,
          |       a.bucket_ms, a.doc_count, a.value
          |FROM agg a JOIN topt t ON a.event_type = t.event_type
-         |WHERE t.term_rank <= 2""".stripMargin
-    },
+         |WHERE t.term_rank <= 2""".stripMargin,
 
     // q07c's substitution mirror + the whitelisted strftime key — the
     // missing-contributes rows and the formatted keyed object key in one
     // oracle-backed entry
-    "q169_dsl_missing_format" -> {
-      val core = FlowQueries.oracleSql("q07c_prop_sum_missing_value")
-        .stripSuffix(" SELECT * FROM agg")
-      s"""$core
+    "q169_dsl_missing_format" ->
+      s"""${FlowQueries.oracle(FlowQueries.basicCfg, flows = FlowQueries.missingValueFlowsSql)}
          |SELECT bucket_ms, doc_count, value,
          |       strftime(epoch_ms(bucket_ms), '%Y-%m-%d %H:%M') AS key_str
-         |FROM agg""".stripMargin
-    },
+         |FROM agg""".stripMargin,
 
     // q86b/q86c/q86d oracles WRAPPED (projection only — the text is
     // shared, so the JSON-compiled type combines can never drift from

@@ -17,26 +17,22 @@ object EsAggQueries {
   private val S = JAN_START_MS + 4 * DAY_MS
   private val E = JAN_START_MS + 24 * DAY_MS
 
-  /** events with epoch-millis `ms` alongside the raw columns. */
-  private def ev(spark: SparkSession, dir: String): DataFrame =
+  /** events with epoch-millis `ms` alongside the raw columns: the frame
+    * every q10-family typed entry and its JSON-door twin aggregate, so the
+    * twins share the typed oracles verbatim. */
+  private[graft] def ev(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "events")
       .withColumn("ms", expr("unix_micros(ts) DIV 1000"))
-
-  /** q146/q147's bridge: the shared events frame (ms = epoch millis) the
-    * DSL agg-body entries aggregate — same derivation as every q10-family
-    * typed entry, so the front door shares their oracles verbatim. */
-  private[graft] def eventsMs(spark: SparkSession, dir: String): DataFrame = ev(spark, dir)
 
   /** The per-basket sorted item lists both itemset levels enumerate from —
     * ONE lineitem scan + ONE basket-keyed shuffle, eagerly checkpointed so
     * every consumer (pair triangle, triple triangle, basket count) probes
-    * the materialized frame. r18 built this per CONSUMER (a `def`): q64b
-    * paid the scan+shuffle twice for its two levels, plus a THIRD full
-    * lineitem scan + countDistinct shuffle just for n_baskets — which is,
-    * by definition, the checkpointed frame's row count (one row per
-    * distinct l_orderkey), so it is derived here for free (r19, guide
-    * §1.2/§2.4; q64b plan: 5 parquet scans + 10 Exchanges → 1 scan + 4
-    * Exchanges, see plans/r19). Callers free the frame via
+    * the materialized frame. Built per consumer, q64b would pay the
+    * scan+shuffle once per level, plus a full lineitem scan +
+    * countDistinct shuffle for n_baskets — which is, by definition, the
+    * checkpointed frame's row count (one row per distinct l_orderkey), so
+    * it is derived here for free (q64b's plan: 1 parquet scan and 4
+    * Exchanges instead of 5 and 10). Callers free the frame via
     * materializeAndFree once the coordinator-sized result is localized. */
   private def basketLists(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "lineitem")
@@ -54,7 +50,7 @@ object EsAggQueries {
     * so PlanSpec gates the REAL plan — the registry entry localizes the
     * 25-row result and frees the lists (the dsirDistributed discipline).
     * Pair candidates are the i<j triangle enumerated INSIDE each basket's
-    * item array (r18 shape, unchanged). */
+    * item array. */
   private[graft] def q64Distributed(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val lists = basketLists(s, d)
     val result = lists
@@ -77,9 +73,9 @@ object EsAggQueries {
     * checkpointed basket-list frame. The size-2 survivor table is bounded
     * by construction (items are l_partkey % 50, so ≤ C(50,2) = 1225 rows
     * at ANY scale factor) and is LOCALIZED before its three broadcast
-    * left-semi prune variants — r18 re-executed the p2 probe+aggregate
-    * subtree once per variant. Prune semantics unchanged: all three
-    * 2-subsets frequent, applied BELOW the (a,b,c) counting exchange. */
+    * left-semi prune variants, so the p2 probe+aggregate subtree runs
+    * once, not once per variant. Prune semantics: all three 2-subsets
+    * frequent, applied BELOW the (a,b,c) counting exchange. */
   private[graft] def q64bDistributed(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val lists = basketLists(s, d)
     val p2 = Tables.localize(lists
@@ -464,7 +460,7 @@ object EsAggQueries {
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"))),
 
-    // ES `cardinality` is HLL-approximate. Round 10: our own deterministic
+    // ES `cardinality` is HLL-approximate. Our own deterministic
     // HLL (graft.operators.Hll — md5 hash, exact integer register sums,
     // detlog linear-counting branch) instead of Spark's opaque
     // approx_count_distinct, so DuckDB replays the sketch bit-for-bit and

@@ -28,27 +28,74 @@ object FlowQueries {
       sampling: Option[Column] = None,
       rowFilter: Option[Column] = None,
       groupCols: Seq[Column] = Nil,
-      dense: Option[(Long, Long)] = None)(spark: SparkSession, dir: String): DataFrame = {
-    val flows = flowsWithFilter(spark, dir, rowFilter)
+      dense: Option[(Long, Long)] = None,
+      stretchDays: Option[Int] = None)(spark: SparkSession, dir: String): DataFrame = {
+    val base = flowsWithFilter(spark, dir, rowFilter)
+    val flows = stretchDays.fold(base)(Flows.stretched(base, _))
     if (dense.isDefined) ProportionalSum.runDense(flows, col("rs"), col("re"), col("v"), sampling, cfg, dense)
     else ProportionalSum.run(flows, col("rs"), col("re"), col("v"), sampling, cfg, groupCols)
   }
 
-  /** DuckDB mirror of [[q]]. Arithmetic shapes (floor of double division,
-    * decimal-cast-then-sum) match the Spark plan operation-for-operation so
-    * results are bit-identical. */
-  private def oracle(
+  /** A flow's contribution to one bucket it overlaps: its value times the
+    * overlap / duration ratio, the whole value for a zero-duration flow. */
+  private val contribSql = "CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END"
+
+  /** The DuckDB step of each calendar unit [[Config]] accepts. Spelled here,
+    * apart from the engine's own step table, so a wrong step on either side
+    * shows as a mismatch instead of hiding on both. */
+  private val calendarIntervals: Map[String, String] = Map(
+    "week" -> "INTERVAL 7 DAY",
+    "month" -> "INTERVAL 1 MONTH",
+    "quarter" -> "INTERVAL 3 MONTH",
+    "year" -> "INTERVAL 1 YEAR",
+    "day" -> "INTERVAL 1 DAY",
+    "hour" -> "INTERVAL 1 HOUR",
+    "minute" -> "INTERVAL 1 MINUTE",
+    "second" -> "INTERVAL 1 SECOND")
+
+  /** `x` floored to `cfg`'s fixed grid, as [[ProportionalSum]] rounds it. */
+  private def bucketSql(cfg: Config, x: String): String = {
+    val itv = cfg.intervalMs
+    if (cfg.offsetMs == 0L) s"CAST(floor(($x) / $itv) AS BIGINT) * $itv"
+    else s"CAST(floor((($x) - ${cfg.offsetMs}) / $itv) AS BIGINT) * $itv + ${cfg.offsetMs}"
+  }
+
+  /** The DuckDB mirror of [[ProportionalSum.explodeContrib]] and
+    * [[ProportionalSum.aggregate]] on either grid, over the `flows` CTE
+    * (columns rs, re, v and any the sampling, filter and group SQL read).
+    * Arithmetic shapes (floor of double division, decimal-cast-then-sum)
+    * match the Spark plan operation-for-operation so results are
+    * bit-identical. Like `explodeContrib`, only the bucket rounding differs
+    * by grid: the fixed grid floors a double division, the calendar grid
+    * `date_trunc`s the offset-shifted instant and steps by the unit.
+    *
+    * Returns the CTE chain `flows, ranged, ex, ovl, agg` with no final
+    * SELECT: `ovl` holds one row per (flow, overlapped bucket) with the
+    * group columns, `bucket_ms`, `dur`, `eff_v` and the overlap `ov`;
+    * `agg` the per-bucket `doc_count` and `value`. */
+  private[queries] def oracle(
       cfg: Config,
       samplingSql: Option[String] = None,
       rowFilterSql: Option[String] = None,
       groupCols: Seq[String] = Nil,
-      dense: Option[(Long, Long)] = None): String = {
-    val itv = cfg.intervalMs
-    def bucketOf(x: String): String =
-      if (cfg.offsetMs == 0L) s"CAST(floor(($x) / $itv) AS BIGINT) * $itv"
-      else s"CAST(floor((($x) - ${cfg.offsetMs}) / $itv) AS BIGINT) * $itv + ${cfg.offsetMs}"
+      flows: String = Flows.sqlCte): String = {
     val clampS = cfg.startMs.map(s => s"GREATEST(rs, $s)").getOrElse("rs")
     val clampE = cfg.endMs.map(e => s"LEAST(re, $e)").getOrElse("re")
+    // first/last bucket of the clamped range, the series step, the
+    // exploded column, and the bucket's start and end in epoch millis
+    val (first, last, step, exploded, bucketMs, nextMs) = cfg.calendarUnit match {
+      case None =>
+        val itv = cfg.intervalMs
+        (bucketSql(cfg, clampS), bucketSql(cfg, clampE), itv.toString, "bucket_ms", "bucket_ms", s"bucket_ms + $itv")
+      case Some(unit) =>
+        val u = unit.toLowerCase
+        val itv = calendarIntervals(u)
+        val off = cfg.offsetMs
+        def trunc(x: String) = s"date_trunc('$u', make_timestamp(${if (off == 0L) x else s"($x - $off)"} * 1000))"
+        def epoch(ts: String) = if (off == 0L) s"epoch_ms($ts)" else s"epoch_ms($ts) + $off"
+        (trunc(clampS), trunc(clampE), itv, "bts", epoch("bts"), epoch(s"bts + $itv"))
+    }
+    val bucketCol = if (bucketMs == exploded) bucketMs else s"$bucketMs AS bucket_ms"
     val eff = samplingSql match {
       case None => "v"
       case Some(s) =>
@@ -56,41 +103,53 @@ object FlowQueries {
     }
     val where = rowFilterSql.map(f => s"WHERE $f").getOrElse("")
     val grp = groupCols.map(c => s"$c, ").mkString
-    val core =
-      s"""WITH $sqlCte,
-         |ranged AS (
-         |  SELECT *, re - rs AS dur, ($eff) AS eff_v,
-         |         ${bucketOf(clampS)} AS fb,
-         |         ${bucketOf(clampE)} AS lb
-         |  FROM flows $where
-         |),
-         |ex AS (
-         |  SELECT *, UNNEST(generate_series(fb, lb, $itv)) AS bucket_ms
-         |  FROM ranged WHERE fb <= lb
-         |),
-         |ovl AS (
-         |  SELECT ${grp}bucket_ms, dur, eff_v,
-         |         GREATEST(0, LEAST(bucket_ms + $itv, re) - GREATEST(bucket_ms, rs)) AS ov
-         |  FROM ex
-         |),
-         |agg AS (
-         |  SELECT ${grp}bucket_ms, COUNT(*) AS doc_count,
-         |         ${graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")} AS value
-         |  FROM ovl GROUP BY ${grp}bucket_ms
-         |)""".stripMargin
-    dense match {
-      case None => s"$core SELECT * FROM agg"
-      case Some((bs, be)) =>
-        s"""$core,
-           |grid AS (
-           |  SELECT UNNEST(generate_series(${bucketOf(bs.toString)}, ${bucketOf(be.toString)}, $itv)) AS bucket_ms
-           |)
-           |SELECT grid.bucket_ms AS bucket_ms,
-           |       COALESCE(agg.doc_count, 0) AS doc_count,
-           |       COALESCE(agg.value, 0.0) AS value
-           |FROM grid LEFT JOIN agg ON grid.bucket_ms = agg.bucket_ms""".stripMargin
-    }
+    s"""WITH $flows,
+       |ranged AS (
+       |  SELECT *, re - rs AS dur, ($eff) AS eff_v,
+       |         $first AS fb,
+       |         $last AS lb
+       |  FROM flows $where
+       |),
+       |ex AS (
+       |  SELECT *, UNNEST(generate_series(fb, lb, $step)) AS $exploded
+       |  FROM ranged WHERE fb <= lb
+       |),
+       |ovl AS (
+       |  SELECT $grp$bucketCol, dur, eff_v,
+       |         GREATEST(0, LEAST($nextMs, re) - GREATEST($bucketMs, rs)) AS ov
+       |  FROM ex
+       |),
+       |agg AS (
+       |  SELECT ${grp}bucket_ms, COUNT(*) AS doc_count,
+       |         ${graft.functions.detsum.sumDetSql(contribSql)} AS value
+       |  FROM ovl GROUP BY ${grp}bucket_ms
+       |)""".stripMargin
   }
+
+  /** [[oracle]]'s per-bucket series. */
+  private def series(chain: String): String = s"$chain SELECT * FROM agg"
+
+  /** The empty-bucket fill over [[oracle]]'s chain: every bucket (per group)
+    * `grid` selects, zero-filled where `agg` has none. */
+  private def filled(chain: String, grid: String, groupCols: Seq[String] = Nil): String = {
+    val keys = groupCols :+ "bucket_ms"
+    s"""$chain,
+       |grid AS (
+       |  $grid
+       |)
+       |SELECT ${keys.map(k => s"grid.$k AS $k").mkString(", ")},
+       |       COALESCE(agg.doc_count, 0) AS doc_count,
+       |       COALESCE(agg.value, 0.0) AS value
+       |FROM grid LEFT JOIN agg ON ${keys.map(k => s"grid.$k = agg.$k").mkString(" AND ")}""".stripMargin
+  }
+
+  /** A watermarked append stream's output over [[oracle]]'s chain: the
+    * batch series up to the final watermark, max bucket − `delayMs`
+    * (eviction is non-strict). */
+  private def untilWatermark(chain: String, delayMs: Long): String =
+    s"""$chain,
+       |wm AS (SELECT max(bucket_ms) - $delayMs AS w FROM agg)
+       |SELECT agg.* FROM agg, wm WHERE agg.bucket_ms <= wm.w""".stripMargin
 
   /** q09e's scalar chain: (column, SQL expression) steps over the lag
     * columns `l0..l6` (l0 = current bucket, l6 = oldest) and the frame
@@ -158,25 +217,33 @@ object FlowQueries {
     u ++ avg ++ d ++ std ++ lw ++ e ++ sb ++ smooth
   }
 
-  private val basicCfg = Config(HOUR_MS, Some(S), Some(E))
+  private[queries] val basicCfg = Config(HOUR_MS, Some(S), Some(E))
 
   /** q143's bridge: q01's oracle SQL shared verbatim with the DSL agg-body
     * entry — the JSON-compiled run (QueryDsl.propSumAgg with interval
     * 3600000, start/end = this S/E) must hash-match the same oracle the
     * typed q01 pipeline matches. */
-  private[queries] def basicOracleSql: String = oracle(basicCfg)
+  private[queries] def basicOracleSql: String = series(oracle(basicCfg))
 
   /** q144's bridge: the same generated oracle with the purchase-rows
     * parent filter — the DSL query section must reproduce exactly the
     * WHERE this mirror applies. */
   private[queries] def purchaseOracleSql: String =
-    oracle(basicCfg, rowFilterSql = Some("event_type = 'purchase'"))
+    series(oracle(basicCfg, rowFilterSql = Some("event_type = 'purchase'")))
   private val offsetCfg = Config(HOUR_MS, Some(S), Some(E), offsetMs = 900000L) // :15 grid
   private val denseBounds = (JAN_START_MS, JAN_START_MS + DAY_MS - 1)
   private val denseCfg = Config(60000L, Some(JAN_START_MS), Some(JAN_START_MS + DAY_MS))
+  // every bucket of the dense grid between the bounds
+  private val denseGrid = s"SELECT UNNEST(generate_series(${bucketSql(denseCfg, denseBounds._1.toString)}, " +
+    s"${bucketSql(denseCfg, denseBounds._2.toString)}, ${denseCfg.intervalMs})) AS bucket_ms"
 
-  // q06's monthly grid over month-scale ranges, shared by st11
+  // the calendar grids, each over stretched ranges; q06's monthly grid is
+  // shared by st11
   private val monthCfg = ProportionalSum.calendar("month", Some(JAN_START_MS), Some(MAY_START_MS))
+  private val quarterCfg = ProportionalSum.calendar("quarter", Some(JAN_START_MS), Some(1735689600000L))
+  private val dayCfg = ProportionalSum.calendar("day", Some(JAN_START_MS), Some(MAY_START_MS))
+  private val monthOffsetCfg =
+    ProportionalSum.calendar("month", Some(JAN_START_MS), Some(MAY_START_MS), offsetMs = 6 * HOUR_MS)
   private val flowFields = Seq("rs", "re", "v")
 
   private val samplingCol: Column = (col("event_id") % 5).cast("double")
@@ -243,37 +310,17 @@ object FlowQueries {
         Flows.df(spark, dir), col("rs"), col("re"), col("v"), None,
         denseCfg, Some(denseBounds), Some("event_type"))),
     // quarterly calendar buckets over year-long ranges
-    "q06b_prop_sum_quarter" -> ((spark: SparkSession, dir: String) => {
-      val flows = Flows.df(spark, dir)
-        .withColumn("re", col("rs") + (col("event_id") % 360) * lit(DAY_MS))
-      ProportionalSum.run(flows, col("rs"), col("re"), col("v"), None,
-        ProportionalSum.calendar("quarter", Some(JAN_START_MS), Some(1735689600000L)))
-    }),
-    "q06_prop_sum_calendar" -> ((spark: SparkSession, dir: String) => {
-      // month-scale ranges: stretch durations to 0..90 days so flows span
-      // calendar buckets (events alone only cover January)
-      val flows = Flows.df(spark, dir)
-        .withColumn("re", col("rs") + (col("event_id") % 90) * lit(DAY_MS))
-      ProportionalSum.run(flows, col("rs"), col("re"), col("v"), None, monthCfg)
-    }),
+    "q06b_prop_sum_quarter" -> (q(quarterCfg, stretchDays = Some(360)) _),
+    // monthly calendar buckets over month-scale (0..90 day) ranges
+    "q06_prop_sum_calendar" -> (q(monthCfg, stretchDays = Some(90)) _),
     // sub-day calendar-unit spelling ("day" here; hour/minute/second are
     // spec-pinned to alias the fixed path under UTC) — DATE_FIELD_UNITS
     // accepts them and the reference pins tz=null, so they are fixed-width
-    "q06d_prop_sum_calendar_day" -> ((spark: SparkSession, dir: String) => {
-      val flows = Flows.df(spark, dir)
-        .withColumn("re", col("rs") + (col("event_id") % 10) * lit(DAY_MS))
-      ProportionalSum.run(flows, col("rs"), col("re"), col("v"), None,
-        ProportionalSum.calendar("day", Some(JAN_START_MS), Some(MAY_START_MS)))
-    }),
+    "q06d_prop_sum_calendar_day" -> (q(dayCfg, stretchDays = Some(10)) _),
     // calendar interval COMBINED with offset — the reference applies offset
     // inside every rounding (round(x - offset) + offset), so monthly buckets
     // shifted +6h start at 06:00 on the 1st
-    "q06c_prop_sum_calendar_offset" -> ((spark: SparkSession, dir: String) => {
-      val flows = Flows.df(spark, dir)
-        .withColumn("re", col("rs") + (col("event_id") % 90) * lit(DAY_MS))
-      ProportionalSum.run(flows, col("rs"), col("re"), col("v"), None,
-        ProportionalSum.calendar("month", Some(JAN_START_MS), Some(MAY_START_MS), offsetMs = 6 * HOUR_MS))
-    }),
+    "q06c_prop_sum_calendar_offset" -> (q(monthOffsetCfg, stretchDays = Some(90)) _),
     // ES missing-field semantics: a doc whose range or VALUE field is
     // absent contributes nothing — no bucket, no doc_count (the values
     // source's advanceExact miss skips it). Nulls are derived identically
@@ -366,8 +413,7 @@ object FlowQueries {
     // the st07 watermark cutoff to the batch series
     "st11_prop_sum_calendar" -> ((spark: SparkSession, dir: String) =>
       graft.streaming.FlowStream.runAppendMode(
-        graft.streaming.FlowStream.flowSource(spark, dir)
-          .withColumn("re", col("rs") + (col("event_id") % 90) * lit(DAY_MS)),
+        Flows.stretched(graft.streaming.FlowStream.flowSource(spark, dir), 90),
         ProportionalSum.Spec(flowFields, monthCfg), 20 * DAY_MS, "st11_mem")),
     // ingest-time dedup on the document stream (state = distinct fingerprints)
     "st03_stream_dedup" -> ((spark: SparkSession, dir: String) =>
@@ -541,46 +587,26 @@ object FlowQueries {
       ProportionalSum.aggregate(labeled, Seq(col("series_key")))
     }))
 
-  // q06's oracle body — shared verbatim by st11 (which only adds the
-  // watermark cutoff), so the batch and streaming forms can never drift
-  private val q06Oracle: String = {
-    val det = graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")
-    s"""WITH flows AS (
-       |  SELECT event_id, value AS v,
-       |         epoch_ms(ts) AS rs,
-       |         epoch_ms(ts) + (event_id % 90) * 86400000 AS re
-       |  FROM events
-       |),
-       |ranged AS (
-       |  SELECT *, re - rs AS dur, v AS eff_v,
-       |         date_trunc('month', make_timestamp(GREATEST(rs, $JAN_START_MS) * 1000)) AS fbts,
-       |         date_trunc('month', make_timestamp(LEAST(re, $MAY_START_MS) * 1000)) AS lbts
-       |  FROM flows
-       |),
-       |ex AS (
-       |  SELECT *, UNNEST(generate_series(fbts, lbts, INTERVAL 1 MONTH)) AS bts
-       |  FROM ranged WHERE fbts <= lbts
-       |),
-       |ovl AS (
-       |  SELECT epoch_ms(bts) AS bucket_ms, dur, eff_v,
-       |         GREATEST(0, LEAST(epoch_ms(bts + INTERVAL 1 MONTH), re) - GREATEST(epoch_ms(bts), rs)) AS ov
-       |  FROM ex
-       |)
-       |SELECT bucket_ms, COUNT(*) AS doc_count, $det AS value
-       |FROM ovl GROUP BY bucket_ms""".stripMargin
-  }
+  /** q07c's input: the null-derivation rows' value substituted by 25.0. */
+  private[queries] val missingValueFlowsSql: String = Flows.sqlCteOver(
+    """SELECT * REPLACE (
+      |    CASE WHEN event_id % 11 = 0 THEN CAST(25.0 AS DOUBLE) ELSE v END AS v)""".stripMargin)
 
-  val oracles: Map[String, String] = Map(
-    "q01_prop_sum_basic" -> oracle(basicCfg),
-    "q01k_prop_sum_keyed" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
-      s"""$core
+  // q18's per-user totals over the exploded contributions, top 5 first
+  private val q18Top: String =
+    s"""SELECT user_id, ${graft.functions.detsum.sumDetSql(contribSql)} AS total_value
+       |FROM ovl GROUP BY user_id
+       |ORDER BY total_value DESC, user_id ASC LIMIT 5""".stripMargin
+
+  val oracleSql: Map[String, String] = Map(
+    "q01_prop_sum_basic" -> series(oracle(basicCfg)),
+    "q01k_prop_sum_keyed" ->
+      s"""${oracle(basicCfg)}
          |SELECT bucket_ms, doc_count, value,
          |       CAST(ROW_NUMBER() OVER (ORDER BY value DESC, bucket_ms ASC) AS BIGINT) AS order_rank,
          |       strftime(epoch_ms(bucket_ms), '%Y-%m-%dT%H:%M:%S.%gZ') AS key_str
-         |FROM agg""".stripMargin
-    },
-    "st01_prop_sum_stream" -> oracle(basicCfg),
+         |FROM agg""".stripMargin,
+    "st01_prop_sum_stream" -> series(oracle(basicCfg)),
     // the finished stream equals the batch sketch, which is exact at this
     // cardinality — q11c's oracle verbatim
     "st09_stream_topk" -> EsAggQueries.oracleSql("q11c_terms_sketch"),
@@ -591,12 +617,7 @@ object FlowQueries {
     // aliases differ
     "st10_stream_quantile" -> EsAggQueries.oracleSql("q15b_percentiles_sketch")
       .replace("AS p50_sketch", "AS p50").replace("AS p95_sketch", "AS p95"),
-    "st07_prop_sum_append" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
-      s"""$core,
-         |wm AS (SELECT max(bucket_ms) - ${2 * HOUR_MS} AS w FROM agg)
-         |SELECT agg.* FROM agg, wm WHERE agg.bucket_ms <= wm.w""".stripMargin
-    },
+    "st07_prop_sum_append" -> untilWatermark(oracle(basicCfg), 2 * HOUR_MS),
     "st03_stream_dedup" ->
       """SELECT source,
         |       COUNT(DISTINCT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))) AS n_distinct
@@ -608,71 +629,59 @@ object FlowQueries {
         |       COUNT(DISTINCT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))) AS n_distinct
         |FROM documents GROUP BY source""".stripMargin,
     "q05b_prop_sum_min_doc_count" ->
-      s"${oracle(basicCfg).stripSuffix(" SELECT * FROM agg")} SELECT * FROM agg WHERE doc_count >= 15",
-    "q51_rollup_daily" -> {
-      val core = oracle(Config(HOUR_MS)).stripSuffix(" SELECT * FROM agg")
-      s"""$core
+      s"${series(oracle(basicCfg))} WHERE doc_count >= 15",
+    "q51_rollup_daily" ->
+      s"""${oracle(Config(HOUR_MS))}
          |SELECT CAST(floor(bucket_ms / $DAY_MS) AS BIGINT) * $DAY_MS AS day_ms,
          |       COUNT(*) AS n_slots,
          |       CAST(SUM(doc_count) AS BIGINT) AS slot_doc_count,
          |       ${graft.functions.detsum.sumDetSql("value")} AS value
-         |FROM agg GROUP BY day_ms""".stripMargin
-    },
-    "q08_derivative" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
-      s"""$core
+         |FROM agg GROUP BY day_ms""".stripMargin,
+    "q08_derivative" ->
+      s"""${oracle(basicCfg)}
          |SELECT * FROM (
          |  SELECT bucket_ms, value,
          |         value - lag(value) OVER (ORDER BY bucket_ms) AS deriv
          |  FROM agg
-         |) WHERE deriv IS NOT NULL""".stripMargin
-    },
-    "q08b_serial_diff" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
-      s"""$core
+         |) WHERE deriv IS NOT NULL""".stripMargin,
+    "q08b_serial_diff" ->
+      s"""${oracle(basicCfg)}
          |SELECT * FROM (
          |  SELECT bucket_ms, value,
          |         value - lag(value, 24) OVER (ORDER BY bucket_ms) AS sdiff
          |  FROM agg
-         |) WHERE sdiff IS NOT NULL""".stripMargin
-    },
+         |) WHERE sdiff IS NOT NULL""".stripMargin,
     "q09_cumulative_window" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
       val scaled = "CAST(round(value * 1.0e6) AS DECIMAL(27,0))"
-      s"""$core
+      s"""${oracle(basicCfg)}
          |SELECT bucket_ms, value,
          |       CAST(SUM($scaled) OVER (ORDER BY bucket_ms ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 1.0e6 AS cum_value,
          |       round(CAST(SUM($scaled) OVER (ORDER BY bucket_ms ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) / 1.0e6
          |             / COUNT(*) OVER (ORDER BY bucket_ms ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS moving_avg
          |FROM agg""".stripMargin
     },
-    "q01r_prop_sum_rate" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
-      s"""$core
+    "q01r_prop_sum_rate" ->
+      s"""${oracle(basicCfg)}
          |SELECT bucket_ms, doc_count, value,
          |       value / ${basicCfg.intervalMs / 1000.0} AS rate_per_sec
-         |FROM agg""".stripMargin
-    },
+         |FROM agg""".stripMargin,
     "q09c_moving_percentiles" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
       val frame = "ORDER BY bucket_ms ROWS BETWEEN 6 PRECEDING AND CURRENT ROW"
-      s"""$core
+      s"""${oracle(basicCfg)}
          |SELECT bucket_ms, value,
          |       round(quantile_cont(value, 0.5) OVER ($frame), 6) AS moving_p50,
          |       round(quantile_cont(value, 0.9) OVER ($frame), 6) AS moving_p90
          |FROM agg""".stripMargin
     },
     "q09d_moving_fn" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
       val frame = "ORDER BY bucket_ms ROWS BETWEEN 6 PRECEDING AND CURRENT ROW"
-      s"""$core
+      s"""${oracle(basicCfg)}
          |SELECT bucket_ms, value,
          |       max(value) OVER ($frame) AS mov_max,
          |       min(value) OVER ($frame) AS mov_min
          |FROM agg""".stripMargin
     },
     "q09e_moving_fn_builtins" -> {
-      val core = oracle(basicCfg).stripSuffix(" SELECT * FROM agg")
       val lags = (1 to 6)
         .map(j => s"lag(value, $j) OVER (ORDER BY bucket_ms) AS l$j")
         .mkString(", ")
@@ -682,14 +691,13 @@ object FlowQueries {
       val chained = movFnSteps.foldLeft(base) { case (inner, (name, sqlExpr)) =>
         s"SELECT *, $sqlExpr AS $name FROM ($inner)"
       }
-      s"""$core
+      s"""${oracle(basicCfg)}
          |SELECT bucket_ms, value, mov_avg, mov_sum, mov_stddev, mov_lwavg, mov_ewma, mov_holt
          |FROM ($chained)""".stripMargin
     },
     "q51b_time_series_downsample" -> {
-      val core = oracle(basicCfg, groupCols = Seq("event_type")).stripSuffix(" SELECT * FROM agg")
       val slotMs = 6 * HOUR_MS
-      s"""$core
+      s"""${oracle(basicCfg, groupCols = Seq("event_type"))}
          |SELECT *, v_sum / ${slotMs / 1000.0} AS rate_per_sec FROM (
          |  SELECT event_type,
          |         CAST(floor(bucket_ms / $slotMs) AS BIGINT) * $slotMs AS slot_ms,
@@ -701,12 +709,11 @@ object FlowQueries {
          |  FROM agg GROUP BY event_type, slot_ms
          |)""".stripMargin
     },
-    "q02_prop_sum_offset" -> oracle(offsetCfg),
-    "q03_prop_sum_sampling" -> oracle(basicCfg, samplingSql = Some(samplingSql)),
-    "q04_prop_sum_grouped" -> oracle(basicCfg, groupCols = Seq("event_type")),
-    "q11h_terms_order_subagg" -> {
-      val core = oracle(basicCfg, groupCols = Seq("event_type")).stripSuffix(" SELECT * FROM agg")
-      s"""$core,
+    "q02_prop_sum_offset" -> series(oracle(offsetCfg)),
+    "q03_prop_sum_sampling" -> series(oracle(basicCfg, samplingSql = Some(samplingSql))),
+    "q04_prop_sum_grouped" -> series(oracle(basicCfg, groupCols = Seq("event_type"))),
+    "q11h_terms_order_subagg" ->
+      s"""${oracle(basicCfg, groupCols = Seq("event_type"))},
          |totals AS (
          |  SELECT event_type, ${graft.functions.detsum.sumDetSql("value")} AS total_value
          |  FROM agg GROUP BY event_type
@@ -720,256 +727,72 @@ object FlowQueries {
          |  ) WHERE term_rank <= 3
          |)
          |SELECT agg.event_type AS event_type, term_rank, total_value, bucket_ms, doc_count, value
-         |FROM agg JOIN top ON agg.event_type = top.event_type""".stripMargin
-    },
-    "q04b_prop_sum_filters_parent" ->
-      oracle(basicCfg, groupCols = Seq("fname"))
-        .replace("FROM flows", "FROM f") // ranged now reads the exploded view
-        .replace("ranged AS (",
-          """f AS (
-            |  SELECT *, UNNEST(list_filter([
-            |    CASE WHEN event_type = 'purchase' THEN 'purchases' END,
-            |    CASE WHEN v > 50.0 THEN 'high_value' END], x -> x IS NOT NULL)) AS fname
-            |  FROM flows
-            |),
-            |ranged AS (""".stripMargin),
+         |FROM agg JOIN top ON agg.event_type = top.event_type""".stripMargin,
+    // each flow once per named filter it matches
+    "q04b_prop_sum_filters_parent" -> series(oracle(basicCfg, groupCols = Seq("fname"),
+      flows = Flows.sqlCteOver(
+        """SELECT *, UNNEST(list_filter([
+          |    CASE WHEN event_type = 'purchase' THEN 'purchases' END,
+          |    CASE WHEN v > 50.0 THEN 'high_value' END], x -> x IS NOT NULL)) AS fname""".stripMargin))),
     // null v (id%11=0) and null re (id%13=0) rows contribute nothing — the
     // oracle simply excludes them before aggregating
     "q07b_prop_sum_missing_fields" ->
-      oracle(basicCfg, rowFilterSql = Some("event_id % 11 <> 0 AND event_id % 13 <> 0")),
+      series(oracle(basicCfg, rowFilterSql = Some("event_id % 11 <> 0 AND event_id % 13 <> 0"))),
     // the `missing` SUBSTITUTION mirror: the same null-derivation rows
     // contribute v := 25.0 instead of dropping (q07c ↔ q07b contrast)
-    "q07c_prop_sum_missing_value" ->
-      oracle(basicCfg)
-        .replace("FROM flows", "FROM fm")
-        .replace("ranged AS (",
-          """fm AS (
-            |  SELECT * REPLACE (
-            |    CASE WHEN event_id % 11 = 0 THEN CAST(25.0 AS DOUBLE) ELSE v END AS v)
-            |  FROM flows
-            |),
-            |ranged AS (""".stripMargin),
+    "q07c_prop_sum_missing_value" -> series(oracle(basicCfg, flows = missingValueFlowsSql)),
     // the LITERAL-fidelity mirror: endpoint→0 / value→NaN defaults, with
     // the collector's IEEE NaN propagation spelled as the explicit
     // any-NaN poison over the masked exact sum (x + NaN = NaN ∀x)
-    "q07d_prop_sum_literal" ->
-      s"""WITH ${Flows.sqlCte},
-         |fm AS (
-         |  SELECT * REPLACE (
-         |    CASE WHEN event_id % 11 = 0 AND rs < ${S + 3 * DAY_MS} THEN 'NaN'::DOUBLE ELSE v END AS v,
-         |    CASE WHEN event_id % 17 = 0 OR event_id % 19 = 0 THEN 0 ELSE rs END AS rs,
-         |    CASE WHEN event_id % 19 = 0 THEN 0 ELSE re END AS re)
-         |  FROM flows
-         |),
-         |ranged AS (
-         |  SELECT *, re - rs AS dur, v AS eff_v,
-         |         CAST(floor(GREATEST(rs, $S) / ${Flows.HOUR_MS}) AS BIGINT) * ${Flows.HOUR_MS} AS fb,
-         |         CAST(floor(LEAST(re, $E) / ${Flows.HOUR_MS}) AS BIGINT) * ${Flows.HOUR_MS} AS lb
-         |  FROM fm
-         |),
-         |ex AS (
-         |  SELECT *, UNNEST(generate_series(fb, lb, ${Flows.HOUR_MS})) AS bucket_ms
-         |  FROM ranged WHERE fb <= lb
-         |),
-         |ovl AS (
-         |  SELECT bucket_ms, dur, eff_v,
-         |         GREATEST(0, LEAST(bucket_ms + ${Flows.HOUR_MS}, re) - GREATEST(bucket_ms, rs)) AS ov
-         |  FROM ex
-         |)
+    "q07d_prop_sum_literal" -> {
+      val literal = Flows.sqlCteOver(
+        s"""SELECT * REPLACE (
+           |    CASE WHEN event_id % 11 = 0 AND rs < ${S + 3 * DAY_MS} THEN 'NaN'::DOUBLE ELSE v END AS v,
+           |    CASE WHEN event_id % 17 = 0 OR event_id % 19 = 0 THEN 0 ELSE rs END AS rs,
+           |    CASE WHEN event_id % 19 = 0 THEN 0 ELSE re END AS re)""".stripMargin)
+      val masked = graft.functions.detsum.sumDetSql(s"CASE WHEN isnan(eff_v) THEN 0.0 ELSE ($contribSql) END")
+      s"""${oracle(basicCfg, flows = literal)}
          |SELECT bucket_ms, COUNT(*) AS doc_count,
          |       CASE WHEN MAX(CASE WHEN isnan(eff_v) THEN 1 ELSE 0 END) = 1 THEN 'NaN'::DOUBLE
-         |            ELSE ${graft.functions.detsum.sumDetSql(
-                        "CASE WHEN isnan(eff_v) THEN 0.0 ELSE (CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END) END")}
+         |            ELSE $masked
          |       END AS value
-         |FROM ovl GROUP BY bucket_ms""".stripMargin,
-    "q04c_prop_sum_nested_tree" ->
-      oracle(basicCfg, groupCols = Seq("event_type", "doc_day"))
-        .replace("FROM flows", "FROM f")
-        .replace("ranged AS (",
-          """f AS (
-            |  SELECT *, CAST(floor(rs / 86400000) AS BIGINT) * 86400000 AS doc_day FROM flows
-            |),
-            |ranged AS (""".stripMargin),
-    "q05_prop_sum_empty_buckets" -> oracle(denseCfg, dense = Some(denseBounds)),
+         |FROM ovl GROUP BY bucket_ms""".stripMargin
+    },
+    "q04c_prop_sum_nested_tree" -> series(oracle(basicCfg, groupCols = Seq("event_type", "doc_day"),
+      flows = Flows.sqlCteOver(s"SELECT *, CAST(floor(rs / $DAY_MS) AS BIGINT) * $DAY_MS AS doc_day"))),
+    "q05_prop_sum_empty_buckets" -> filled(oracle(denseCfg), denseGrid),
     "q07_prop_sum_zero_duration" ->
-      oracle(Config(HOUR_MS), rowFilterSql = Some("event_id % 7200 = 0")),
-    "q05c_prop_sum_dense_grouped" -> {
-      val inner = oracle(denseCfg, groupCols = Seq("event_type")).stripSuffix(" SELECT * FROM agg")
-      val itv = denseCfg.intervalMs
-      s"""$inner,
-         |grid AS (
-         |  SELECT t.event_type, b.bucket_ms
+      series(oracle(Config(HOUR_MS), rowFilterSql = Some("event_id % 7200 = 0"))),
+    "q05c_prop_sum_dense_grouped" -> filled(oracle(denseCfg, groupCols = Seq("event_type")),
+      s"""SELECT t.event_type, b.bucket_ms
          |  FROM (SELECT DISTINCT event_type FROM events) t
-         |  CROSS JOIN (SELECT UNNEST(generate_series(
-         |    CAST(floor(${denseBounds._1} / $itv) AS BIGINT) * $itv,
-         |    CAST(floor(${denseBounds._2} / $itv) AS BIGINT) * $itv, $itv)) AS bucket_ms) b
-         |)
-         |SELECT grid.event_type AS event_type, grid.bucket_ms AS bucket_ms,
-         |       COALESCE(agg.doc_count, 0) AS doc_count,
-         |       COALESCE(agg.value, 0.0) AS value
-         |FROM grid LEFT JOIN agg
-         |  ON grid.event_type = agg.event_type AND grid.bucket_ms = agg.bucket_ms""".stripMargin
-    },
-    "q06b_prop_sum_quarter" -> {
-      val det = graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")
-      s"""WITH flows AS (
-         |  SELECT event_id, value AS v,
-         |         epoch_ms(ts) AS rs,
-         |         epoch_ms(ts) + (event_id % 360) * 86400000 AS re
-         |  FROM events
-         |),
-         |ranged AS (
-         |  SELECT *, re - rs AS dur, v AS eff_v,
-         |         date_trunc('quarter', make_timestamp(GREATEST(rs, $JAN_START_MS) * 1000)) AS fbts,
-         |         date_trunc('quarter', make_timestamp(LEAST(re, 1735689600000) * 1000)) AS lbts
-         |  FROM flows
-         |),
-         |ex AS (
-         |  SELECT *, UNNEST(generate_series(fbts, lbts, INTERVAL 3 MONTH)) AS bts
-         |  FROM ranged WHERE fbts <= lbts
-         |),
-         |ovl AS (
-         |  SELECT epoch_ms(bts) AS bucket_ms, dur, eff_v,
-         |         GREATEST(0, LEAST(epoch_ms(bts + INTERVAL 3 MONTH), re) - GREATEST(epoch_ms(bts), rs)) AS ov
-         |  FROM ex
-         |)
-         |SELECT bucket_ms, COUNT(*) AS doc_count, $det AS value
-         |FROM ovl GROUP BY bucket_ms""".stripMargin
-    },
-    "q05d_prop_sum_gap_fill" -> {
-      val core = oracle(Config(HOUR_MS), rowFilterSql = Some("event_id % 3600 = 0"))
-        .stripSuffix(" SELECT * FROM agg")
-      s"""$core,
-         |bounds AS (SELECT MIN(bucket_ms) AS lo, MAX(bucket_ms) AS hi FROM agg),
-         |grid AS (
-         |  SELECT UNNEST(generate_series(lo, hi, $HOUR_MS)) AS bucket_ms
-         |  FROM bounds WHERE lo IS NOT NULL
-         |)
-         |SELECT grid.bucket_ms AS bucket_ms,
-         |       COALESCE(agg.doc_count, 0) AS doc_count,
-         |       COALESCE(agg.value, 0.0) AS value
-         |FROM grid LEFT JOIN agg ON grid.bucket_ms = agg.bucket_ms""".stripMargin
-    },
-    "q06c_prop_sum_calendar_offset" -> {
-      val det = graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")
-      val off = 6 * HOUR_MS
-      s"""WITH flows AS (
-         |  SELECT event_id, value AS v,
-         |         epoch_ms(ts) AS rs,
-         |         epoch_ms(ts) + (event_id % 90) * 86400000 AS re
-         |  FROM events
-         |),
-         |ranged AS (
-         |  SELECT *, re - rs AS dur, v AS eff_v,
-         |         date_trunc('month', make_timestamp((GREATEST(rs, $JAN_START_MS) - $off) * 1000)) AS fbts,
-         |         date_trunc('month', make_timestamp((LEAST(re, $MAY_START_MS) - $off) * 1000)) AS lbts
-         |  FROM flows
-         |),
-         |ex AS (
-         |  SELECT *, UNNEST(generate_series(fbts, lbts, INTERVAL 1 MONTH)) AS bts
-         |  FROM ranged WHERE fbts <= lbts
-         |),
-         |ovl AS (
-         |  SELECT epoch_ms(bts) + $off AS bucket_ms, dur, eff_v,
-         |         GREATEST(0, LEAST(epoch_ms(bts + INTERVAL 1 MONTH) + $off, re)
-         |                   - GREATEST(epoch_ms(bts) + $off, rs)) AS ov
-         |  FROM ex
-         |)
-         |SELECT bucket_ms, COUNT(*) AS doc_count, $det AS value
-         |FROM ovl GROUP BY bucket_ms""".stripMargin
-    },
-    "q06d_prop_sum_calendar_day" -> {
-      val det = graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")
-      s"""WITH flows AS (
-         |  SELECT event_id, value AS v,
-         |         epoch_ms(ts) AS rs,
-         |         epoch_ms(ts) + (event_id % 10) * 86400000 AS re
-         |  FROM events
-         |),
-         |ranged AS (
-         |  SELECT *, re - rs AS dur, v AS eff_v,
-         |         date_trunc('day', make_timestamp(GREATEST(rs, $JAN_START_MS) * 1000)) AS fbts,
-         |         date_trunc('day', make_timestamp(LEAST(re, $MAY_START_MS) * 1000)) AS lbts
-         |  FROM flows
-         |),
-         |ex AS (
-         |  SELECT *, UNNEST(generate_series(fbts, lbts, INTERVAL 1 DAY)) AS bts
-         |  FROM ranged WHERE fbts <= lbts
-         |),
-         |ovl AS (
-         |  SELECT epoch_ms(bts) AS bucket_ms, dur, eff_v,
-         |         GREATEST(0, LEAST(epoch_ms(bts + INTERVAL 1 DAY), re) - GREATEST(epoch_ms(bts), rs)) AS ov
-         |  FROM ex
-         |)
-         |SELECT bucket_ms, COUNT(*) AS doc_count, $det AS value
-         |FROM ovl GROUP BY bucket_ms""".stripMargin
-    },
-    "q06_prop_sum_calendar" -> q06Oracle,
+         |  CROSS JOIN ($denseGrid) b""".stripMargin, Seq("event_type")),
+    // the fill's bounds are the first and last populated bucket
+    "q05d_prop_sum_gap_fill" -> filled(
+      s"""${oracle(Config(HOUR_MS), rowFilterSql = Some("event_id % 3600 = 0"))},
+         |bounds AS (SELECT MIN(bucket_ms) AS lo, MAX(bucket_ms) AS hi FROM agg)""".stripMargin,
+      s"""SELECT UNNEST(generate_series(lo, hi, $HOUR_MS)) AS bucket_ms
+         |  FROM bounds WHERE lo IS NOT NULL""".stripMargin),
+    "q06_prop_sum_calendar" -> series(oracle(monthCfg, flows = Flows.stretchedSqlCte(90))),
+    "q06b_prop_sum_quarter" -> series(oracle(quarterCfg, flows = Flows.stretchedSqlCte(360))),
+    "q06c_prop_sum_calendar_offset" -> series(oracle(monthOffsetCfg, flows = Flows.stretchedSqlCte(90))),
+    "q06d_prop_sum_calendar_day" -> series(oracle(dayCfg, flows = Flows.stretchedSqlCte(10))),
     // st11 = q06's batch series with the st07 watermark cutoff applied: the
     // final watermark is max(bucket) − delay exactly, eviction non-strict
-    "st11_prop_sum_calendar" ->
-      s"""WITH base AS ($q06Oracle),
-         |wm AS (SELECT max(bucket_ms) - ${20 * DAY_MS} AS w FROM base)
-         |SELECT base.* FROM base, wm WHERE base.bucket_ms <= wm.w""".stripMargin)
+    "st11_prop_sum_calendar" -> untilWatermark(oracle(monthCfg, flows = Flows.stretchedSqlCte(90)), 20 * DAY_MS),
+    // per-user totals over the exploded contributions, not per bucket
+    "q18_topk_talkers" -> s"${oracle(basicCfg, groupCols = Seq("user_id"))}\n$q18Top",
+    // the same contributions labeled by membership in q18's top-5 set
+    "q18b_topn_other_series" ->
+      s"""${oracle(basicCfg, groupCols = Seq("user_id"))},
+         |top AS (
+         |  SELECT user_id FROM (
+         |    $q18Top
+         |  )
+         |)
+         |SELECT CASE WHEN user_id IN (SELECT user_id FROM top)
+         |            THEN CAST(user_id AS VARCHAR) ELSE 'Other' END AS series_key,
+         |       bucket_ms, COUNT(*) AS doc_count, ${graft.functions.detsum.sumDetSql(contribSql)} AS value
+         |FROM ovl GROUP BY 1, 2""".stripMargin)
 
-  // q18's oracle shares the exploded core but aggregates per user, not per bucket.
-  private val q18Oracle: String = {
-    val itv = basicCfg.intervalMs
-    s"""WITH $sqlCte,
-       |ranged AS (
-       |  SELECT *, re - rs AS dur, v AS eff_v,
-       |         CAST(floor((GREATEST(rs, $S)) / $itv) AS BIGINT) * $itv AS fb,
-       |         CAST(floor((LEAST(re, $E)) / $itv) AS BIGINT) * $itv AS lb
-       |  FROM flows
-       |),
-       |ex AS (
-       |  SELECT *, UNNEST(generate_series(fb, lb, $itv)) AS bucket_ms
-       |  FROM ranged WHERE fb <= lb
-       |),
-       |ovl AS (
-       |  SELECT user_id, dur, eff_v,
-       |         GREATEST(0, LEAST(bucket_ms + $itv, re) - GREATEST(bucket_ms, rs)) AS ov
-       |  FROM ex
-       |)
-       |SELECT user_id,
-       |       ${graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")} AS total_value
-       |FROM ovl GROUP BY user_id
-       |ORDER BY total_value DESC, user_id ASC LIMIT 5""".stripMargin
-  }
-
-  // q18b: same exploded core, but labeled by membership in the top-5 set.
-  private val q18bOracle: String = {
-    val itv = basicCfg.intervalMs
-    val det = graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")
-    s"""WITH $sqlCte,
-       |ranged AS (
-       |  SELECT *, re - rs AS dur, v AS eff_v,
-       |         CAST(floor((GREATEST(rs, $S)) / $itv) AS BIGINT) * $itv AS fb,
-       |         CAST(floor((LEAST(re, $E)) / $itv) AS BIGINT) * $itv AS lb
-       |  FROM flows
-       |),
-       |ex AS (
-       |  SELECT *, UNNEST(generate_series(fb, lb, $itv)) AS bucket_ms
-       |  FROM ranged WHERE fb <= lb
-       |),
-       |ovl AS (
-       |  SELECT user_id, bucket_ms, dur, eff_v,
-       |         GREATEST(0, LEAST(bucket_ms + $itv, re) - GREATEST(bucket_ms, rs)) AS ov
-       |  FROM ex
-       |),
-       |top AS (
-       |  SELECT user_id FROM (
-       |    SELECT user_id, $det AS total_value
-       |    FROM ovl GROUP BY user_id
-       |    ORDER BY total_value DESC, user_id ASC LIMIT 5
-       |  )
-       |)
-       |SELECT CASE WHEN user_id IN (SELECT user_id FROM top)
-       |            THEN CAST(user_id AS VARCHAR) ELSE 'Other' END AS series_key,
-       |       bucket_ms, COUNT(*) AS doc_count, $det AS value
-       |FROM ovl GROUP BY 1, 2""".stripMargin
-  }
-
-  val oracleSql: Map[String, String] =
-    oracles + ("q18_topk_talkers" -> q18Oracle) + ("q18b_topn_other_series" -> q18bOracle)
 }

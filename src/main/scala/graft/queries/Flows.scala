@@ -36,14 +36,28 @@ object Flows {
       expr("unix_micros(ts) DIV 1000").as("rs"),
       (expr("unix_micros(ts) DIV 1000") + (col("event_id") % 7200) * 1000).as("re"))
 
-  /** DuckDB CTE body equivalent to [[df]] (tables are registered by bare name). */
-  val sqlCte: String =
-    """flows AS (
-      |  SELECT event_id, user_id, event_type, value AS v,
+  /** DuckDB SELECT equivalent to [[df]] (tables are registered by bare name). */
+  private val sqlRows: String =
+    """SELECT event_id, user_id, event_type, value AS v,
       |         epoch_ms(ts) AS rs,
       |         epoch_ms(ts) + (event_id % 7200) * 1000 AS re
-      |  FROM events
-      |)""".stripMargin
+      |  FROM events""".stripMargin
+
+  /** DuckDB CTE body equivalent to [[df]]. */
+  val sqlCte: String = s"flows AS (\n  $sqlRows\n)"
+
+  /** A `flows` CTE whose rows derive from [[sqlCte]]'s: `select` is a
+    * SELECT clause, without FROM, over them. */
+  def sqlCteOver(select: String): String = s"flows AS (\n  $select\n  FROM ($sqlRows) base\n)"
+
+  /** Flows whose range end is stretched to 0..days-1 whole days, so the
+    * ranges span calendar buckets (the events alone cover only January). */
+  def stretched(flows: DataFrame, days: Int): DataFrame =
+    flows.withColumn("re", col("rs") + (col("event_id") % days) * lit(DAY_MS))
+
+  /** DuckDB CTE body equivalent to [[stretched]] over [[df]]. */
+  def stretchedSqlCte(days: Int): String =
+    sqlCteOver(s"SELECT * REPLACE (rs + (event_id % $days) * $DAY_MS AS re)")
 
   /** 2024-01-01T00:00:00Z .. 2024-02-01T00:00:00Z — the events table's span. */
   val JAN_START_MS: Long = 1704067200000L

@@ -314,6 +314,10 @@ object IngestQueries {
         sum(col("r.last_sw_ms") - col("r.first_sw_ms")).as("total_duration_ms"))
   }
 
+  // st04's hourly grid over January's export-relative millis
+  private val st04Grid =
+    graft.operators.ProportionalSum.Config(Flows.HOUR_MS, Some(0L), Some(31 * Flows.DAY_MS))
+
   /** The COMPLETE reference pipeline, streaming: a binary NetFlow v5 feed
     * (written once to a spool dir, as a collector would) is stream-read,
     * decoded, and proportionally bucketed into the hourly series — ingest →
@@ -330,8 +334,7 @@ object IngestQueries {
         col("r.first_ms").as("rs"),
         col("r.last_ms").as("re"),
         col("r.octets").cast("double").as("v"))
-    val series = graft.operators.ProportionalSum.run(records, col("rs"), col("re"), col("v"), None,
-      graft.operators.ProportionalSum.Config(Flows.HOUR_MS, Some(0L), Some(31 * Flows.DAY_MS)))
+    val series = graft.operators.ProportionalSum.run(records, col("rs"), col("re"), col("v"), None, st04Grid)
     Streams.run(series, "st04_mem", "complete").frame
   }
 
@@ -533,32 +536,11 @@ object IngestQueries {
     "st05_ipfix_session_stream" -> (st05 _))
 
   val oracleSql: Map[String, String] = Map(
-    "st04_netflow_pipeline" -> {
-      val det = graft.functions.detsum.sumDetSql("CASE WHEN dur = 0 THEN eff_v ELSE eff_v * (ov / dur) END")
-      s"""WITH flows AS (
-         |  SELECT epoch_ms(ts) - ${Flows.JAN_START_MS} AS rs,
-         |         epoch_ms(ts) - ${Flows.JAN_START_MS} + (event_id % 7200) * 1000 AS re,
-         |         CAST(CAST(round(value) AS BIGINT) AS DOUBLE) AS v
-         |  FROM events
-         |),
-         |ranged AS (
-         |  SELECT *, re - rs AS dur, v AS eff_v,
-         |         CAST(floor((GREATEST(rs, 0)) / ${Flows.HOUR_MS}) AS BIGINT) * ${Flows.HOUR_MS} AS fb,
-         |         CAST(floor((LEAST(re, ${31 * Flows.DAY_MS})) / ${Flows.HOUR_MS}) AS BIGINT) * ${Flows.HOUR_MS} AS lb
-         |  FROM flows
-         |),
-         |ex AS (
-         |  SELECT *, UNNEST(generate_series(fb, lb, ${Flows.HOUR_MS})) AS bucket_ms
-         |  FROM ranged WHERE fb <= lb
-         |),
-         |ovl AS (
-         |  SELECT bucket_ms, dur, eff_v,
-         |         GREATEST(0, LEAST(bucket_ms + ${Flows.HOUR_MS}, re) - GREATEST(bucket_ms, rs)) AS ov
-         |  FROM ex
-         |)
-         |SELECT bucket_ms, COUNT(*) AS doc_count, $det AS value
-         |FROM ovl GROUP BY bucket_ms""".stripMargin
-    },
+    // the spool's flows as `netflowPackets` encodes them: export-relative
+    // millis and whole octets
+    "st04_netflow_pipeline" -> s"${FlowQueries.oracle(st04Grid, flows = Flows.sqlCteOver(
+      s"SELECT rs - ${Flows.JAN_START_MS} AS rs, re - ${Flows.JAN_START_MS} AS re, " +
+        "CAST(CAST(round(v) AS BIGINT) AS DOUBLE) AS v"))} SELECT * FROM agg",
     "q59_jsonl_ingest" ->
       s"""SELECT event_type, COUNT(*) AS n,
          |       ${graft.functions.detsum.sumDetSql("value")} AS sum_value,

@@ -184,6 +184,9 @@ object NetFlowV9 {
     val unixSecs = buf.getInt() & 0xffffffffL
     val sequence = buf.getInt() & 0xffffffffL
     val sourceId = buf.getInt() & 0xffffffffL
+    if (count > 0 && bytes.length < 24)
+      throw new IllegalArgumentException(
+        s"NetFlow v9 packet truncated: $count records declared, no FlowSet after the header")
 
     val records = mutable.ArrayBuffer.empty[Record]
     while (buf.position() + 4 <= bytes.length) {

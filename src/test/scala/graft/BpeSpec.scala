@@ -52,7 +52,7 @@ class BpeSpec extends AnyFunSuite {
     val trained = Bpe.model(spark, sf, nMerges = 40)
     val want = Bpe.tokenize(docs, trained)
       .as[(Long, Seq[String])].collect().sortBy(_._1).toSeq
-    val dirPath = java.nio.file.Files.createTempDirectory("graft_bpe")
+    val dirPath = queries.IngestQueries.scratchDir("graft_bpe")
     try {
       Bpe.save(spark, sf, 40, dirPath.toString)
       Bpe.reset() // drop the trained model: load must be the only source
@@ -70,9 +70,6 @@ class BpeSpec extends AnyFunSuite {
       assert(ex.getMessage.contains("n_merges"))
     } finally {
       Bpe.reset()
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 

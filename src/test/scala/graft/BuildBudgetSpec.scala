@@ -116,7 +116,7 @@ class BuildBudgetSpec extends AnyFunSuite {
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(Future.sequence(Seq.fill(8)(Future(Thread.sleep(50)))), Duration.Inf)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_save_desc").toString
+    val dir = queries.IngestQueries.scratchDir("graft_save_desc").toString
     val saves = queries.Tables.withJobDescription(spark, "caller:save") {
       jobDescriptions(queries.TextQueries.saveIndex(spark, sf, dir))
     }

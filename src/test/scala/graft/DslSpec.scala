@@ -375,7 +375,7 @@ class DslSpec extends AnyFunSuite {
     val out = SparkEntry.queries("q158_dsl_terms_date_histogram")(spark, sf).collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("bucket_ms"),
         r.getAs[Long]("doc_count"), r.getAs[Double]("sum_value"))).toSet
-    val ev = queries.EsAggQueries.eventsMs(spark, sf)
+    val ev = queries.EsAggQueries.ev(spark, sf)
     val typed = ev.groupBy(col("event_type"),
         (floor(col("ms") / lit(3600000L)) * lit(3600000L)).as("bucket_ms"))
       .agg(count(lit(1)).as("doc_count"),
@@ -615,7 +615,7 @@ class DslSpec extends AnyFunSuite {
       .map(r => r.toSeq.toList).toSet
     assert(rows("q146_dsl_date_histogram") == rows("q10_date_histogram"))
     assert(rows("q147_dsl_terms_agg") == rows("q11_terms_topn"))
-    val ev = queries.EsAggQueries.eventsMs(spark, sf)
+    val ev = queries.EsAggQueries.ev(spark, sf)
     def badAgg(body: String): Unit =
       intercept[IllegalArgumentException](QueryDsl.aggBody(ev, QueryDsl.parse(body)))
     // metric sub-agg on proportional_sum (value IS its metric)
@@ -657,7 +657,7 @@ class DslSpec extends AnyFunSuite {
       assert(rs.forall(r => r.getAs[Long]("doc_id") % 4 == sid), s"slice $sid assignment")
     }
     // loud rejections
-    val ev = queries.EsAggQueries.eventsMs(spark, sf)
+    val ev = queries.EsAggQueries.ev(spark, sf)
     def badAgg(body: String): Unit =
       intercept[IllegalArgumentException](QueryDsl.aggBody(ev, QueryDsl.parse(body)))
     // order path naming no declared metric

@@ -58,6 +58,21 @@ class NetFlowSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("version 9"), ex.getMessage)
   }
 
+  test("a v9 packet cut after its header fails when the header declares records") {
+    import graft.sources.NetFlowV9
+    val packet = NetFlowV9.pack(
+      Seq(NetFlowV9.Flow("1.2.3.4", "5.6.7.8", 1, 2, 6, 1L, 1L, 0L, 1L)), 0L, 0L, 0L, 0L)
+    for (len <- 20 to 23) {
+      val ex = intercept[IllegalArgumentException](
+        NetFlowV9.decode(packet.take(len), NetFlowV9.newTemplateCache(), strict = true))
+      assert(ex.getMessage.contains("truncated"), ex.getMessage)
+    }
+    // a header declaring no records is a complete (empty) packet
+    val empty = packet.take(20)
+    empty(2) = 0; empty(3) = 0
+    assert(NetFlowV9.decode(empty, NetFlowV9.newTemplateCache(), strict = true).records.isEmpty)
+  }
+
   test("IPFIX pack → parse round trip preserves flow fields") {
     import spark.implicits._
     import graft.sources.Ipfix
@@ -103,7 +118,7 @@ class NetFlowSpec extends AnyFunSuite {
 
   test("DSv2 source: concatenated packets in one file; garbage fails loudly") {
     import graft.sources.NetFlowV5
-    val dir = java.nio.file.Files.createTempDirectory("nf_dsv2_spec")
+    val dir = queries.IngestQueries.scratchDir("nf_dsv2_spec")
     val f1 = NetFlowV5.Flow("1.2.3.4", "5.6.7.8", 1, 2, 6, 10L, 100L, 0L, 1000L)
     val f2 = NetFlowV5.Flow("9.9.9.9", "8.8.8.8", 3, 4, 17, 20L, 200L, 500L, 1500L)
     val p1 = NetFlowV5.pack(Seq(f1), 0L, 1704067200L, 0L)
@@ -117,14 +132,14 @@ class NetFlowSpec extends AnyFunSuite {
     assert(df.filter(org.apache.spark.sql.functions.col("src_ip") === "9.9.9.9")
       .select("octets").head().getLong(0) == 200L)
     // trailing bytes that are not a packet header must fail, not silently drop
-    val bad = java.nio.file.Files.createTempDirectory("nf_dsv2_bad")
+    val bad = queries.IngestQueries.scratchDir("nf_dsv2_bad")
     java.nio.file.Files.write(bad.resolve("bad.nf5"), p1 ++ Array[Byte](1, 2, 3))
     intercept[org.apache.spark.SparkException] {
       spark.read.format("graft.sources.NetFlowDataSource").load(bad.toString).count()
     }
     // a packet TRUNCATED mid-record (header declares more than remains) must
     // also fail loudly — zero-padding it would emit silent 0.0.0.0 rows
-    val trunc = java.nio.file.Files.createTempDirectory("nf_dsv2_trunc")
+    val trunc = queries.IngestQueries.scratchDir("nf_dsv2_trunc")
     java.nio.file.Files.write(trunc.resolve("t.nf5"), p1 ++ p2.take(p2.length - 10))
     intercept[org.apache.spark.SparkException] {
       spark.read.format("graft.sources.NetFlowDataSource").load(trunc.toString).count()
@@ -134,7 +149,7 @@ class NetFlowSpec extends AnyFunSuite {
   test("DSv2 source: numeric filters push into the reader (no post-scan Filter)") {
     import org.apache.spark.sql.functions.col
     import graft.sources.NetFlowV5
-    val dir = java.nio.file.Files.createTempDirectory("nf_dsv2_pushdown")
+    val dir = queries.IngestQueries.scratchDir("nf_dsv2_pushdown")
     val flows = Seq(
       NetFlowV5.Flow("1.1.1.1", "2.2.2.2", 1, 2, 6, 1L, 10L, 0L, 10L),
       NetFlowV5.Flow("3.3.3.3", "4.4.4.4", 3, 4, 17, 2L, 20L, 0L, 10L),
@@ -302,7 +317,7 @@ class NetFlowSpec extends AnyFunSuite {
 
   test("DSv2 sink: rows write as v5 packets, read back identically (incl. tcp_flags)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("nf_dsv2_write").toString
+    val dir = queries.IngestQueries.scratchDir("nf_dsv2_write").toString
     val rows = Seq(
       (1704067200L, 5L, "1.2.3.4", "5.6.7.8", 1000, 443, 6, 18, 10L, 999L, 0L, 1500L),
       (1704067200L, 5L, "9.9.9.9", "8.8.8.8", 2000, 53, 17, 0, 1L, 76L, 100L, 100L))
@@ -335,7 +350,7 @@ class NetFlowSpec extends AnyFunSuite {
     // unix_secs/flow_sequence live in the v5 PACKET header; a mid-buffer
     // change must flush the open packet so each row keeps its own values —
     // not silently collapse to the first row's
-    val dir = java.nio.file.Files.createTempDirectory("nf_dsv2_hdr").toString
+    val dir = queries.IngestQueries.scratchDir("nf_dsv2_hdr").toString
     val rows = (1 to 5).map(i =>
       (1704067200L + i, 100L + i, s"10.0.0.$i", "8.8.8.8", 1000 + i, 53, 17, 0,
         i.toLong, 100L * i, 0L, 1000L))

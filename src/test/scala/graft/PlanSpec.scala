@@ -53,8 +53,9 @@ class PlanSpec extends AnyFunSuite {
 
   private def optimized(q: String) = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
 
-  // each proportional_sum JSON-door entry runs its typed twin's plan; a
-  // pair that cannot records why (and fails once it does match)
+  // each proportional_sum and framework-agg JSON-door entry runs its
+  // typed twin's plan; a pair that cannot records why (and fails once it
+  // does match)
   for ((door, typed, differs) <- Seq(
       ("q160_dsl_interval_string", "q01_prop_sum_basic", None),
       ("q162_dsl_offset_string", "q02_prop_sum_offset", None),
@@ -67,7 +68,14 @@ class PlanSpec extends AnyFunSuite {
       ("q159_dsl_agg_tree", "q04c_prop_sum_nested_tree", None),
       ("q165_dsl_filters_parent", "q04b_prop_sum_filters_parent", Some(
         "the DSL's term and range leaves guard nulls explicitly (isnotnull AND ...), where " +
-          "q04b's typed predicates leave a null to CASE WHEN; same rows (DslSpec), other expressions"))))
+          "q04b's typed predicates leave a null to CASE WHEN; same rows (DslSpec), other expressions")),
+      ("q146_dsl_date_histogram", "q10_date_histogram", None),
+      ("q147_dsl_terms_agg", "q11_terms_topn", None),
+      ("q172_dsl_histogram", "q10b_numeric_histogram", None),
+      ("q173_dsl_range", "q10c_range_agg", Some(
+        "ES ranges may overlap, so the door explodes each doc over every range it matches, where " +
+          "q10c's disjoint, contiguous ranges pick one key by CASE WHEN; same rows (shared oracle), other plan")),
+      ("q174_dsl_order_agg_path", "q10f_histogram_order_agg", None)))
     test(s"$door runs the optimized plan of its typed twin $typed${differs.fold("")(_ => " (or records why not)")}") {
       val (d, t) = (optimized(door), optimized(typed))
       differs match {

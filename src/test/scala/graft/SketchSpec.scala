@@ -266,7 +266,7 @@ class SketchSpec extends AnyFunSuite {
       SparkEntry.queries(q)(spark, sf).collect().map(_.toString).sorted.toSeq
     queries.VecIndex.reset()
     val before = Seq("q37_ann_ivf", "q37b_ann_ivfpq", "q58b_pq_quantize").map(q => q -> run(q))
-    val dirPath = java.nio.file.Files.createTempDirectory("graft_vecidx")
+    val dirPath = queries.IngestQueries.scratchDir("graft_vecidx")
     try {
       val dir = dirPath.toString
       queries.VecIndex.save(spark, sf, dir)
@@ -281,9 +281,6 @@ class SketchSpec extends AnyFunSuite {
       assert(run("q37_ann_ivf") == before.head._2)
     } finally {
       queries.VecIndex.reset() // leave no parquet-backed index for later suites
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 
@@ -340,7 +337,7 @@ class SketchSpec extends AnyFunSuite {
     assert(queries.VecIndex.coarse(spark, sf).cent eq full.cent)
     assert(queries.VecIndex.pq(spark, sf).codebooks eq fullPq.codebooks)
     // save/load round-trips the appended index
-    val dirPath = java.nio.file.Files.createTempDirectory("graft_vecidx_app")
+    val dirPath = queries.IngestQueries.scratchDir("graft_vecidx_app")
     try {
       queries.VecIndex.save(spark, sf, dirPath.toString)
       queries.VecIndex.reset()
@@ -352,9 +349,6 @@ class SketchSpec extends AnyFunSuite {
       queries.VecIndex.reset()
       queries.Tables.freeCheckpoint(full.lists) // pre-install generation
       queries.Tables.freeCheckpoint(fullPq.codes)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 

@@ -46,7 +46,7 @@ class TextIndexSpec extends AnyFunSuite {
   }
 
   test("the saved index round-trips byte-identically and serves probes with zero build jobs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_index_spec").toString
+    val dir = queries.IngestQueries.scratchDir("graft_index_spec").toString
     queries.TextQueries.saveIndex(spark, sf, dir)
     val key = s"$dir::loaded"
     queries.TextQueries.loadIndex(spark, key, dir)

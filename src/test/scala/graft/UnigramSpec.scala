@@ -37,7 +37,7 @@ class UnigramSpec extends AnyFunSuite {
   }
 
   test("save/load: encode after load is identical to encode after train, with zero training jobs") {
-    val dir = java.nio.file.Files.createTempDirectory("unigram_model").toString
+    val dir = queries.IngestQueries.scratchDir("unigram_model").toString
     def segs() = Unigram.segmentations(spark, sf)
       .select(col("word"), col("pieces")).collect()
       .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap

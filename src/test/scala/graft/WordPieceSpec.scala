@@ -76,7 +76,7 @@ class WordPieceSpec extends AnyFunSuite {
       .withColumn("toks", graft.functions.text.tokens(col("text")))
     val want = WordPiece.tokenize(docsDf, WordPiece.model(spark, sf, nMerges = 40))
       .as[(Long, Seq[String])].collect().sortBy(_._1).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_wp").toString
+    val dir = queries.IngestQueries.scratchDir("graft_wp").toString
     WordPiece.save(spark, sf, 40, dir)
     WordPiece.reset()
     WordPiece.load(spark, sf, 40, dir)
