@@ -33,10 +33,20 @@ object GraftSession {
   /** `spark.sql.shuffle.partitions`: the state-store count of every stateful
     * stream, set once for the session. A stateful operator keeps one state
     * store per shuffle partition and commits each of them every
-    * micro-batch, so the count is sized to the small state the `st*`
-    * entries keep (st14: 8 rules; st04: about 720 rows) rather than to the
-    * machine: st14 summed about 17 s of commit time a batch over 32 stores
-    * against under 1 s over 8.
+    * micro-batch, so the count is a fixed cost per batch. It is sized to the
+    * small state the `st*` entries keep (st04: 722 rows; st14: 8 rules)
+    * rather than to the machine: st14 summed about 17 s of commit time a
+    * batch over 32 stores.
+    *
+    * The count is the smallest at which no `st*` key is slower than at 8,
+    * from timing all 21 keys warm at 1, 2 and 8 stores (sf0.1, 4 cores,
+    * median of 3, two alternating rounds). At 2 the keys sum 17.7–20.6 s
+    * against 24.5–27.7 s at 8 (st03b 3.6 → 1.9 s, st06 2.9 → 1.7 s, st04
+    * 0.87 → 0.59 s). At 1, st02 is the one key that slows: 1.01–1.22 s
+    * against 0.81–0.86 s at 2 and 0.88–1.15 s at 8. Its
+    * `flatMapGroupsWithState` sorts and folds all 100,000 events of its one
+    * batch, per user, work that grows with the input rather than with its
+    * 1,500 state rows, and one store runs it as one task on one core.
     *
     * Batch plans do not read it: with AQE and partition coalescing on,
     * `SQLConf.numShufflePartitions` returns
@@ -45,7 +55,7 @@ object GraftSession {
     * checkpointed state partition count when it first starts, and runs its
     * stateful plans with AQE off, so all of a stateful stream's exchanges
     * take it. The results do not depend on it (detsum). */
-  val StatePartitions = 8
+  val StatePartitions = 2
 
   def builder(cpus: String): SparkSession.Builder =
     SparkSession

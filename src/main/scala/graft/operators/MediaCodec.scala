@@ -192,9 +192,9 @@ object MediaCodec {
     * every chunk's CRC32 validated per spec §5.3), zlib inflate via
     * `java.util.zip.Inflater`, and FULL filter reconstruction — types 0-4
     * None/Sub/Up/Average/Paeth (PNG spec §9, Paeth predictor §9.4). Returns
-    * None for malformed files (including CRC mismatches) and variants
-    * outside this profile (palette, alpha, 16-bit, interlaced) so callers
-    * can fall back. */
+    * None for malformed files (including CRC mismatches and a file cut
+    * before its IEND chunk) and variants outside this profile (palette,
+    * alpha, 16-bit, interlaced) so callers can fall back. */
   def decodePng(bytes: Array[Byte]): Option[DecodedImage] = {
     if (bytes.length < PngSig.length + 12) return None
     var i = 0
@@ -238,7 +238,7 @@ object MediaCodec {
       }
       pos = body + len + 4 // body + CRC
     }
-    if (!seenIhdr || idat.size() == 0) return None
+    if (!seenIhdr || idat.size() == 0 || !ended) return None
     val stride = width * 3
     val rawLen = height * (stride + 1)
     val raw = new Array[Byte](rawLen)

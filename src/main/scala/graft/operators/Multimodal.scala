@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Tables
+
 /** Multimodal column plumbing: media as opaque `binary` payloads with typed
   * metadata, processed in per-partition batches.
   *
@@ -120,10 +122,8 @@ object Multimodal {
     * opens any of them). */
   def attachPayload(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    // scan-spreading repartition: the per-row encode/decode is CPU-bound,
-    // and a single-row-group documents file is one input split — without
-    // the spread the whole corpus encodes on one core
-    docs.repartition(col("doc_id"))
+    // the per-row encode/decode is CPU-bound: spread it over the cores
+    Tables.spread(docs, "doc_id")
       .select(col("doc_id").cast("long"), col("text"), col("n_chars").cast("long"))
       .as[(Long, String, Long)]
       .map { case (id, text, nChars) =>
@@ -177,8 +177,8 @@ object Multimodal {
     * and an ORDER-SENSITIVE position-weighted checksum Σ(i+1)·px[i] — a
     * reversed/permuted row order changes it, so the audit proves the
     * parsers round-trip pixel ORDER, not just the multiset; rolling-hash
-    * fingerprinting proper is q43's oracle-backed operator). Since round
-    * 18 ORACLE-BACKED on the mm06 contract: the strict per-sniff decode
+    * fingerprinting proper is q43's oracle-backed operator).
+    * ORACLE-BACKED on the mm06 contract: the strict per-sniff decode
     * (never the metadata-echoing stub), lossless rasters recomputed
     * arithmetically from the planted cycled text (the checksum has a
     * closed form under byte cycling), lossy JPEG feature cells NULL (its
@@ -227,8 +227,8 @@ object Multimodal {
   /** Video-style frame sampling: treat the decoded raster as `height`
     * scanline frames of width·3 bytes each, keep every `stride`-th frame,
     * and extract per-frame features. One input row fans out to its sampled
-    * frames — the explode/batch shape a real video pipeline has. Since
-    * round 18 ORACLE-BACKED on the mm06 contract (strict sniffed decode;
+    * frames — the explode/batch shape a real video pipeline has.
+    * ORACLE-BACKED on the mm06 contract (strict sniffed decode;
     * lossless frame windows recomputed arithmetically from the planted
     * cycled text; JPEG frames keep their planted grid but NULL feature
     * cells; a parse failure emits one frame_idx = -1 row the oracle can
@@ -421,7 +421,7 @@ object Multimodal {
     * [[MediaCodec.decodeWavPcm16]] parses chunk-by-chunk. */
   def attachAudioPayload(docs: DataFrame): Dataset[MediaRow] = {
     import docs.sparkSession.implicits._
-    docs.repartition(col("doc_id")) // spread the CPU-bound per-row encode
+    Tables.spread(docs, "doc_id") // spread the CPU-bound per-row encode
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -490,7 +490,7 @@ object Multimodal {
     * reports its candidate count and closest match by full Hamming. Same
     * bucketed shape as SimHash text dedup: only (chunk, key, id) crosses the
     * shuffle, never pixels. One row per doc — byte-identical images show
-    * best_hamming 0. ORACLE-BACKED since round 11: the containers cycle
+    * best_hamming 0. ORACLE-BACKED: the containers cycle
     * over the LOSSLESS pair (PNG/BMP) only, so every decoded raster is the
     * planted cycled-text bytes and a DuckDB oracle replays the whole
     * pipeline — aHash bits, chunk buckets, candidate join, best-match
@@ -503,8 +503,7 @@ object Multimodal {
     // media dims AND container format derive from CONTENT (not doc_id) so
     // duplicate text makes byte-identical files — the property image dedup
     // actually relies on; both lossless parsers are exercised across the corpus
-    val media = docs
-      .repartition(col("doc_id")) // spread the CPU-bound per-row encode+hash
+    val media = Tables.spread(docs, "doc_id") // spread the CPU-bound per-row encode+hash
       .select(col("doc_id").cast("long"), col("text"), col("n_chars").cast("long"))
       .as[(Long, String, Long)]
       .map { case (id, text, nChars) =>

@@ -287,9 +287,11 @@ object EsAggQueries {
             Window.orderBy(col("sum_value").desc, col("bucket_ms").asc)).cast("long"))
     }),
 
-    // ES `range` agg: explicit bucket edges [0,50), [50,200), [200,inf)
+    // ES `range` agg: explicit bucket edges [0,50), [50,200), [200,inf);
+    // like ES, a doc missing the field falls in no range
     "q10c_range_agg" -> ((s: SparkSession, d: String) =>
       ev(s, d)
+        .filter(col("value").isNotNull)
         .withColumn(
           "range_key",
           when(col("value") < 50.0, "lo").when(col("value") < 200.0, "mid").otherwise("hi"))
@@ -1004,17 +1006,12 @@ object EsAggQueries {
       // item_count > parent_doc_count for real rows, which is the whole
       // reverse_nested distinction (a %7 period made the two counts
       // provably equal and the semantics vacuously tested).
-      // Scan-spreading repartition (the Flows.df discipline) BEFORE the
-      // JSON parse + 5× explode: a single-row-group events file is one
-      // input split, and without it the whole nested-doc fan-out runs on
-      // one core (measured 27s → 9.2s at 10×-sf0.1; the remainder is the
-      // unavoidably serial single-split scan). Explicit partition count so
-      // AQE's small-exchange coalescing can't fold the spread back to one
-      // task — derived from the cluster's parallelism, not a literal, so
-      // the stage scales with the executor count. Two exchanges by design:
-      // the narrow-row spread, then the (sku, parent) aggregation.
-      val items = ev(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("event_id"))
+      // Spread (Tables.spread) BEFORE the JSON parse + 5× explode, or the
+      // whole nested-doc fan-out runs on one core (measured 27s → 9.2s at
+      // 10×-sf0.1; the remainder is the unavoidably serial single-split
+      // scan). Two exchanges by design: the narrow-row spread, then the
+      // (sku, parent) aggregation.
+      val items = Tables.spread(ev(s, d), "event_id")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .withColumn("items", expr(
           """transform(sequence(0, CAST(event_id % 5 AS INT)),
@@ -1051,8 +1048,7 @@ object EsAggQueries {
     // inner_hits reuse the SAME filtered array the match computed — one
     // scan, no re-scan to fetch payloads (PlanSpec gates both).
     "q113_nested_inner_hits" -> ((s: SparkSession, d: String) => {
-      val matched = ev(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("event_id"))
+      val matched = Tables.spread(ev(s, d), "event_id")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .withColumn("items", expr(
           """transform(sequence(0, CAST(event_id % 5 AS INT)),
@@ -1454,7 +1450,7 @@ object EsAggQueries {
     "q10c_range_agg" ->
       s"""SELECT CASE WHEN value < 50.0 THEN 'lo' WHEN value < 200.0 THEN 'mid' ELSE 'hi' END AS range_key,
          |       COUNT(*) AS doc_count, ${sumDetSql("value")} AS sum_value
-         |FROM events GROUP BY 1""".stripMargin,
+         |FROM events WHERE value IS NOT NULL GROUP BY 1""".stripMargin,
     "q10g_variable_width_histogram" -> {
       // op-for-op mirror of the quantile-init Lloyd rounds (see the query
       // comment): ROW_NUMBER OVER (ORDER BY abs(x-c), list_id) = the Spark

@@ -217,7 +217,7 @@ object FlowQueries {
     u ++ avg ++ d ++ std ++ lw ++ e ++ sb ++ smooth
   }
 
-  private[queries] val basicCfg = Config(HOUR_MS, Some(S), Some(E))
+  private[graft] val basicCfg = Config(HOUR_MS, Some(S), Some(E))
 
   /** q143's bridge: q01's oracle SQL shared verbatim with the DSL agg-body
     * entry — the JSON-compiled run (QueryDsl.propSumAgg with interval

@@ -20,14 +20,8 @@ import org.apache.spark.sql.functions._
 object Flows {
 
   def df(spark: SparkSession, sfDir: String): DataFrame =
-    Tables(spark, sfDir, "events")
-      // locally a single parquet file scans as ONE partition; spread the
-      // explode/bucket work the way a many-split cluster scan would. The
-      // partition count is explicit because AQE may coalesce a by-column
-      // repartition that has none: at small scale it merges the spread
-      // back into ONE partition, so the query pays for the shuffle and the
-      // explode still runs on one core.
-      .repartition(spark.sparkContext.defaultParallelism, col("event_id"))
+    // spread the explode/bucket work over the cores
+    Tables.spread(Tables(spark, sfDir, "events"), "event_id")
       .select(
       col("event_id"),
       col("user_id"),

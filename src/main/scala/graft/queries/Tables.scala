@@ -38,6 +38,16 @@ object Tables {
   /** The local property `SparkContext.setJobDescription` writes. */
   private[graft] val JobDescription = "spark.job.description"
 
+  /** `df` hash-spread by `key` over the cluster's parallelism. Locally a
+    * single-row-group parquet file scans as ONE partition, so a CPU-bound
+    * per-row step after the scan runs on one core unless it is spread the
+    * way a many-split cluster scan would be. The partition count is
+    * explicit because AQE may coalesce a by-column repartition that has
+    * none: at small scale it merges the spread back into ONE partition, so
+    * the query pays for the shuffle and the work still runs on one core. */
+  def spread(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
+
   /** Collect `df` (coordinator-sized by contract) to the driver and return
     * it as a LocalRelation — the ES coordinator-materialization analog.
     * Shared by materializeAndFree, VecIndex, and the one-row-aggregate

@@ -49,8 +49,12 @@ object FlowStream {
     tableStream(spark, sfDir, "events")
 
   /** Streaming version of [[graft.queries.Flows.df]] over the events file. */
-  def flowSource(spark: SparkSession, sfDir: String): DataFrame = {
-    eventsStream(spark, sfDir)
+  def flowSource(spark: SparkSession, sfDir: String): DataFrame =
+    flows(eventsStream(spark, sfDir))
+
+  /** [[flowSource]]'s flow rows over a stream of `events` rows. */
+  private[graft] def flows(events: DataFrame): DataFrame =
+    events
       .select(
         col("event_id"),
         col("user_id"),
@@ -59,7 +63,6 @@ object FlowStream {
         // ts arrives as TimestampType (see GraftSession); floor to millis
         expr("unix_micros(ts) DIV 1000").as("rs"))
       .withColumn("re", col("rs") + (col("event_id") % 7200) * 1000)
-  }
 
   /** Streaming exact-dedup: dropDuplicates on the content fingerprint keyed
     * per source — the always-on ingest-time form of batch dedup. State is
@@ -232,6 +235,9 @@ object FlowStream {
     * histogram — the driver-contract entry point. Matches the batch q01
     * result exactly, so it shares q01's DuckDB oracle. */
   def runToCompletion(spark: SparkSession, sfDir: String, cfg: Config, name: String): DataFrame =
-    Streams.run(ProportionalSum.run(flowSource(spark, sfDir), col("rs"), col("re"), col("v"), None, cfg),
-      name, "complete").frame
+    Streams.run(series(flowSource(spark, sfDir), cfg), name, "complete").frame
+
+  /** The proportional_sum series of a flow stream under `cfg`. */
+  private[graft] def series(flows: DataFrame, cfg: Config): DataFrame =
+    ProportionalSum.run(flows, col("rs"), col("re"), col("v"), None, cfg)
 }

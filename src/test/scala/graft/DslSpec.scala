@@ -629,6 +629,19 @@ class DslSpec extends AnyFunSuite {
     badAgg("""{"aggs": {"h": {"significant_terms": {"field": "event_type"}}}}""")
   }
 
+  test("q10c and q173 skip a doc without a value, as ES's range agg does") {
+    val dir = queries.IngestQueries.scratchDir("graft_null_value").toString
+    val some = queries.Tables(spark, sf, "events").limit(40)
+    some.union(some.limit(1).withColumn("value", lit(null).cast(some.schema("value").dataType)))
+      .write.parquet(s"$dir/events.parquet")
+    def rows(name: String) = SparkEntry.queries(name)(spark, dir).collect().map(_.toSeq.toList).toSet
+    val typed = rows("q10c_range_agg")
+    assert(rows("q173_dsl_range") == typed)
+    val valued = queries.Tables(spark, dir, "events").filter(col("value").isNotNull).count()
+    assert(valued == 40)
+    assert(SparkEntry.queries("q10c_range_agg")(spark, dir).agg(sum("doc_count")).head.getLong(0) == valued)
+  }
+
   test("r18 framework aggs at the door: histogram/range/order-path/bounds-string ≡ typed; slices partition q140b") {
     def rows(name: String) = SparkEntry.queries(name)(spark, sf).collect()
       .map(r => r.toSeq.toList).toSet

@@ -5,21 +5,34 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Job and compile counting for the budget specs: a listener records the
-  * description of every job started while `f` runs, and Spark's codegen
-  * metrics count the classes it compiles. */
+/** Job, stage and compile counting for the budget specs: a listener
+  * records the description of every job started while `f` runs, or the
+  * task count of every stage it completes, and Spark's codegen metrics
+  * count the classes it compiles. */
 object Jobs {
 
   /** Descriptions of the jobs `f` runs on `spark`'s context. */
-  def descriptions(spark: SparkSession)(f: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
+  def descriptions(spark: SparkSession)(f: => Unit): Seq[String] =
+    recorded[String](spark, seen => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(queries.Tables.JobDescription))).getOrElse(""))
-    }
+    })(f)
+
+  /** Task count of each stage `f` completes on `spark`'s context, in
+    * completion order: an action's result stage comes last. */
+  def stageTasks(spark: SparkSession)(f: => Unit): Seq[Int] =
+    recorded[Int](spark, seen => new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = seen.add(e.stageInfo.numTasks)
+    })(f)
+
+  /** What `listener` records while `f` runs, every event of `f` delivered. */
+  private def recorded[T](spark: SparkSession, listener: ConcurrentLinkedQueue[T] => SparkListener)(
+      f: => Unit): Seq[T] = {
+    val seen = new ConcurrentLinkedQueue[T]()
+    val l = listener(seen)
     spark.sparkContext.addSparkListener(l)
     try {
       f

@@ -186,6 +186,8 @@ class MediaCodecSpec extends AnyFunSuite {
       png
     }
     assert(MediaCodec.decodePng(good.take(30)).isEmpty, "truncated file")
+    // every chunk intact, IEND (the last 12 bytes) cut off
+    assert(MediaCodec.decodePng(good.dropRight(12)).isEmpty, "a file cut before IEND")
     assert(MediaCodec.decodePng("definitely not a png".getBytes("UTF-8")).isEmpty)
     assert(MediaCodec.decodePng(Array.emptyByteArray).isEmpty)
     val pal = good.clone(); pal(25) = 3

@@ -7,14 +7,15 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.IngestQueries
+import graft.queries.{FlowQueries, IngestQueries}
 import graft.streaming.{FlowStream, Streams}
 
 /** The one stream runner ([[graft.streaming.Streams]]): concurrent runs of
-  * one entry on one session, a restart from a shared checkpoint, and the
+  * one entry on one session, restarts from a shared checkpoint, and the
   * split between the state-store partition count and the batch shuffle
   * parallelism that [[GraftSession]] sets once. */
 class StreamRunnerSpec extends AnyFunSuite {
@@ -60,6 +61,28 @@ class StreamRunnerSpec extends AnyFunSuite {
     // state: it went on from the first run's batches and reports every row
     assert(second.lastProgress.batchId > first.lastProgress.batchId)
     assert(rows(second.frame) == rows(whole))
+  }
+
+  test("st01 restarted from its checkpoint after half its feed equals an uninterrupted run") {
+    val events = queries.Tables(spark, sf, "events")
+    val spool = IngestQueries.scratchDir("graft_restart_events")
+    events.repartitionByRange(2, col("event_id")).write.mode("overwrite").parquet(spool.toString)
+    val parts = IngestQueries.partFiles(spool)
+    assert(parts.size == 2, s"the events spool should hold 2 event_id-range files, got $parts")
+    val feed = IngestQueries.scratchDir("graft_restart_events_feed")
+    val ckpt = IngestQueries.scratchDir("graft_restart_st01_ckpt").toString
+    def runFeed() = Streams.run(
+      FlowStream.series(FlowStream.flows(spark.readStream.schema(events.schema).parquet(feed.toString)),
+        FlowQueries.basicCfg),
+      "st01_restart", "complete", Some(ckpt))
+    IngestQueries.arrive(parts.take(1), feed, "a")
+    val first = runFeed()
+    IngestQueries.arrive(parts.drop(1), feed, "b")
+    val second = runFeed()
+    val whole = entry("st01_prop_sum_stream")
+    assert(rows(first.frame) != whole, "the first half alone must not already give the whole series")
+    assert(second.lastProgress.batchId > first.lastProgress.batchId)
+    assert(rows(second.frame) == whole)
   }
 
   test("a listener on the caller's session sees st04's state stores at StatePartitions; batch keeps the cores") {
