@@ -166,19 +166,7 @@ object RelationalQueries {
           .repartition(2)
           .write.mode("overwrite").parquet(p.toString)
       }
-      val src = s.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
-        .parquet(spool.toString)
-      val p = src.filter(col("event_type") === "purchase" && col("value") > 300)
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-      val er = src.filter(col("event_type") === "error")
-        .select(col("event_id").as("error_id"), col("user_id").as("e_user"), col("ts").as("e_ts"))
-        .withWatermark("e_ts", "2 hours")
-      val joined = p.join(er,
-        expr("user_id = e_user AND e_ts >= p_ts AND e_ts <= p_ts + interval 1 hour"))
-        .select(col("purchase_id"), col("error_id"), col("user_id"))
-      graft.streaming.Streams.run(joined, "st06_mem", "append").frame
+      graft.streaming.Streams.run(purchaseErrorJoin(s, spool.toString), "st06_mem", "append").frame
     }),
 
     // as-of/range join: last signup within 7 days before each purchase
@@ -193,6 +181,23 @@ object RelationalQueries {
         .groupBy(col("purchase_id"))
         .agg(max(col("s_ms")).as("last_signup_ms"))
     }))
+
+  /** st06's watermarked interval join, not yet run, over the feed
+    * directory `dir` of (event_id, user_id, event_type, value, ts) files. */
+  private[graft] def purchaseErrorJoin(s: SparkSession, dir: String): DataFrame = {
+    val src = s.readStream
+      .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
+      .parquet(dir)
+    val p = src.filter(col("event_type") === "purchase" && col("value") > 300)
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "2 hours")
+    val er = src.filter(col("event_type") === "error")
+      .select(col("event_id").as("error_id"), col("user_id").as("e_user"), col("ts").as("e_ts"))
+      .withWatermark("e_ts", "2 hours")
+    p.join(er,
+      expr("user_id = e_user AND e_ts >= p_ts AND e_ts <= p_ts + interval 1 hour"))
+      .select(col("purchase_id"), col("error_id"), col("user_id"))
+  }
 
   val oracleSql: Map[String, String] = Map(
     "q27_bucketed_join" ->

@@ -205,7 +205,7 @@ object TextQueries {
     * made its oracle vacuous; TextSurfaceSpec now asserts non-emptiness).
     * A build-once artifact derived from the [[dfVocab]] dictionary (ES has
     * ONE terms dictionary per index, built at index time): filtering the
-    * dictionary ≡ filtering the tf aggregate, so df values equal a
+    * dictionary ≡ filtering the postings aggregate, so df values equal a
     * per-request aggregation's, and the vocab-bounded single-partition
     * rank window runs once per (session, dataset). */
   private[graft] val rankedVocab: IndexPart[DataFrame] = table("ranked_vocab") { (s, d) =>
@@ -223,9 +223,10 @@ object TextQueries {
     * a term-set against the dictionary, so the doc stream only ever pays
     * an equi-join on expanded terms — never a per-row pattern/
     * edit-distance scan. A build-once artifact: the ES terms dictionary
-    * is index-time state, not request-time work. */
+    * is index-time state, not request-time work. The postings frame is
+    * already clustered by `tok`, so the count runs without an exchange. */
   private val dfVocab: IndexPart[DataFrame] = table("vocab") { (s, d) =>
-    tfArtifact(s, d)
+    postings(s, d).frame
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .select(col("tok").as("term"), col("df"))
       .localCheckpoint(true)
@@ -235,9 +236,9 @@ object TextQueries {
     * docs whose first-8 window (the derived title field, q86's
     * convention) contains it. ES keeps one terms dictionary PER FIELD at
     * index time; field-scoped clauses (q106's `title:term`) probe this
-    * instead of re-aggregating the tf frame per request. */
+    * instead of re-aggregating the postings per request. */
   private val titleVocab: IndexPart[DataFrame] = table("title_vocab") { (s, d) =>
-    tfArtifact(s, d).filter(col("tf_t") > 0)
+    postings(s, d).frame.filter(col("tf_t") > 0)
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .select(col("tok").as("term"), col("df"))
       .localCheckpoint(true)
@@ -259,24 +260,15 @@ object TextQueries {
       .localCheckpoint(true)
   }
 
-  /** The per-(doc, term) frame q86d/q92/q102/... share — the build-once
-    * [[tfArtifact]] (doc_id-clustered: the aggregate
-    * completed map-side under the artifact's repartition and the
-    * checkpoint preserves the partitioning), not a per-call rebuild;
-    * every per-field statistic (dl = Σtf, df = frame rows per term) is
-    * integer-identical to a per-field token-stream pass. */
-  private def perDocTermTf(s: SparkSession, d: String): DataFrame =
-    tfArtifact(s, d).select(col("doc_id"), col("tok"), col("tf_b"), col("tf_t"))
-
-  /** rankedVocab's [QLo, QHi] query window as a (tok, df) table — since
-    * round 18 a PROBE of the build-once [[rankedVocab]] dictionary
-    * artifact (df = frame rows per length≥4 term = distinct docs per term
-    * — identical integers to the per-call tf aggregation this replaced,
-    * which re-ranked the whole vocabulary on every request). */
+  /** rankedVocab's [QLo, QHi] query window as a (tok, df) table — a PROBE
+    * of the build-once [[rankedVocab]] dictionary artifact (df = frame
+    * rows per length≥4 term = distinct docs per term — the integers a
+    * per-call tf aggregation gives, without re-ranking the whole
+    * vocabulary on every request). */
   private def qselWindow(s: SparkSession, d: String): DataFrame =
     // broadcast hint: the window is ≤(QHi−QLo+1) rows by construction, but
     // the checkpointed dictionary scan carries no stats for Catalyst to
-    // discover that (the pre-r18 aggregate form auto-broadcast)
+    // discover that
     broadcast(rankedVocab(s, d).filter(col("r") >= QLo && col("r") <= QHi)
       .select(col("term").as("tok"), col("df")))
 
@@ -294,25 +286,40 @@ object TextQueries {
 
   /** Per-doc BM25 score for the deterministic 5-term query (vocab ranks
     * [[QLo]]..[[QHi]]) against the BODY field — the first-pass retrieval
-    * shared by q76/q76b/q76c/q80/q82/q83/q84. ONE scoring definition: the
-    * shared tf-normalization/idf chain over the [[postings]] probe
-    * (probe-derived statistics equal the round-16 token-stream pass's
-    * exactly — df is distinct docs per term, dl the doc's token count —
-    * so [[bm25PerCtes]] stays the verbatim mirror).
+    * shared by q76/q76b/q76c/q80/q82/q83/q84: [[bm25Body]] over the
+    * [[qselWindow]] terms. Probe-derived statistics equal a token-stream
+    * pass's exactly (df is distinct docs per term, dl the doc's token
+    * count), so [[bm25PerCtes]] stays the verbatim mirror.
     * Returns (doc_id, n_terms_hit, score). */
-  private def bm25PerDoc(s: SparkSession, d: String): DataFrame = {
-    // since round 17: a PROBE of the posting-list artifact — df straight
-    // from the ranked vocab (= artifact rows per term), tf/dl carried on
-    // the probed rows, idf from the build-time stats; identical integers
-    // to the round-16 token-stream pass, zero corpus-sized work per call
-    val art = postings(s, d)
-    val qdf = rankedVocab(s, d).filter(col("r") >= QLo && col("r") <= QHi)
-      .select(col("term").as("tok"), col("df"))
-    val probe = art.frame.join(broadcast(qdf.select(col("tok"))), Seq("tok"))
-    bm25ScoreTfCarried(
-      probe.select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
-      bm25QIdfStats(art.statsBody, qdf))
-  }
+  private def bm25PerDoc(s: SparkSession, d: String): DataFrame =
+    bm25Body(postings(s, d), qselWindow(s, d))
+
+  /** THE body-field scorer: BM25 of the query terms in `qdf` (tok, df —
+    * df must be the body df, distinct docs per term) against the body
+    * field, as a PROBE of the posting-list artifact — tf/dl carried on the
+    * probed rows, idf from the build-time stats, nothing corpus-sized at
+    * request time. Terms absent from the corpus have no postings and
+    * contribute nothing. Returns (doc_id, n_terms_hit, score). */
+  private def bm25Body(art: Postings, qdf: DataFrame): DataFrame =
+    bm25Score(
+      art.frame.join(broadcast(qdf.select(col("tok"))), Seq("tok"))
+        .select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
+      bm25Idf(art.statsBody, qdf))
+
+  /** The doc side of a Lucene multi-term rewrite (q87 fuzzy, q88 prefix,
+    * q89 wildcard, q91 regexp): the (`key`, term) expansion PROBES the
+    * postings — one row per (doc, term), so the rewrite hits postings,
+    * never the stored fields — and each key reports its distinct docs,
+    * distinct terms and (doc, term) rows. */
+  private def rewriteHits(s: SparkSession, d: String, expansion: DataFrame, key: String): DataFrame =
+    postings(s, d).frame
+      .select(col("doc_id"), col("tok").as("term"))
+      .join(broadcast(expansion), Seq("term"))
+      .groupBy(col(key))
+      .agg(
+        countDistinct(col("doc_id")).as("n_docs"),
+        countDistinct(col("term")).as("n_terms"),
+        count(lit(1)).as("n_term_docs"))
 
   /** Exact adjacent-pair count of (w1, w2) in a token array — ES
     * match_phrase tf at slop 0. A pure array HOF: positions never leave
@@ -354,10 +361,10 @@ object TextQueries {
           .otherwise("und"))
 
   /* Field-generic BM25 — THE scoring definition lives in the
-   * [[bm25QIdfStats]] + [[bm25TermScoresCarried]] chain below (every BM25
-   * consumer, q76-family, q86's per-field instances, and the front door
-   * alike, goes through it — since round 17 as PROBES of the [[postings]]
-   * artifact, which carries each field's tf and dl on the probed rows).
+   * [[bm25Idf]] + [[bm25TermScores]] chain below (every BM25 consumer,
+   * q76-family, q86's per-field instances, and the front door alike, goes
+   * through it as PROBES of the [[postings]] artifact, which carries each
+   * field's tf and dl on the probed rows).
    * The query-term df table (tok, df) is INJECTED and PAIRING IS THE
    * CALLER'S CONTRACT: `qdf` must be the df of the same field the tf/dl
    * columns came from — a mis-paired call (body df with title tf) scores
@@ -369,19 +376,13 @@ object TextQueries {
    * `k1 + 1` computes 2.1999…956, a DIFFERENT double than the parsed
    * literal 2.2 — the oracle must see the identical bits). */
 
-  /** The idf half of the scoring definition: (field dl table, field query
-    * df) → (tok, idf, avgdl). Lucene's smoothed idf via the integer
-    * identity (2N+2)/(2df+1), detlog-computed. */
-  private def bm25QIdf(dl: DataFrame, qdf: DataFrame): DataFrame =
-    bm25QIdfStats(dl.agg(
-      count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl")), qdf)
-
-  /** [[bm25QIdf]] with the field statistics INJECTED as a 1-row frame —
-    * the postings-artifact path: (n_docs, avgdl) were collected once at
-    * build with the exact aggregate above, so the idf integers (and the
-    * avgdl double) are bit-identical to the stream-derived form. */
-  private def bm25QIdfStats(stats: DataFrame, qdf: DataFrame): DataFrame = {
+  /** The idf half of the scoring definition: (field stats, field query df)
+    * → (tok, idf, avgdl). `stats` is a 1-row (n_docs, avgdl) frame — a
+    * field's build-time [[Postings]] stats, aggregated as count and sum
+    * cast double / count, the arithmetic [[bm25CtesOver]] mirrors.
+    * Lucene's smoothed idf via the integer identity (2N+2)/(2df+1),
+    * detlog-computed. */
+  private def bm25Idf(stats: DataFrame, qdf: DataFrame): DataFrame = {
     val qterms = qdf
       .crossJoin(broadcast(stats))
       .withColumn("num", lit(2L) * col("n_docs") + lit(2L))
@@ -391,39 +392,26 @@ object TextQueries {
       .select(col("tok"), (col("lgn") - col("lgd")).as("idf"), col("avgdl"))
   }
 
-  /** The tf-normalization half: score a per-(doc_id, tok, tf) frame
-    * already restricted to query terms against its field's dl/idf tables.
-    * Split out so a caller that PRE-AGGREGATED tf
-    * (q86's one-scan per-(doc, term) frame) scores through the identical
-    * expression — the formula exists once. */
-  private def bm25ScoreTf(tfq: DataFrame, dl: DataFrame, qIdf: DataFrame): DataFrame =
-    bm25ScoreTfCarried(tfq.join(dl, Seq("doc_id")), qIdf)
-
-  /** [[bm25ScoreTf]] for a frame that already CARRIES its field length
-    * (`dl` column — the postings artifact's norms-analog): no per-doc dl
-    * join at request time; the grouping runs over the hit-sized probe. */
-  private def bm25ScoreTfCarried(tfqDl: DataFrame, qIdf: DataFrame): DataFrame =
-    bm25TermScoresCarried(tfqDl, qIdf)
+  /** Per-doc BM25: [[bm25TermScores]] reduced per doc (hit count and the
+    * detsum of the term scores); the grouping runs over the hit-sized
+    * probe. */
+  private def bm25Score(tfDl: DataFrame, qIdf: DataFrame): DataFrame =
+    bm25TermScores(tfDl, qIdf)
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_terms_hit"),
         graft.functions.detsum.sumDet(col("score_t"), 9).as("score"))
 
-  /** The per-(doc, term) half of [[bm25ScoreTf]] — the ONE tf-normalization
-    * formula, split out so q86d's term-centric cross_fields combine (which
-    * needs per-term scores from BOTH fields before any per-doc grouping)
-    * scores through the identical expression. Returns the input rows with
-    * `score_t` (and idf/avgdl/dl in scope). */
-  private def bm25TermScores(tfq: DataFrame, dl: DataFrame, qIdf: DataFrame): DataFrame =
-    bm25TermScoresCarried(tfq.join(dl, Seq("doc_id")), qIdf)
-
-  /** The carried-dl half of [[bm25TermScores]] — THE tf-normalization
-    * formula (join order is value-irrelevant; the dl join moved to the
-    * compatibility wrapper above so the postings path can skip it). */
-  private def bm25TermScoresCarried(tfqDl: DataFrame, qIdf: DataFrame): DataFrame = {
+  /** THE tf-normalization formula over a per-(doc_id, tok, tf, dl) frame
+    * already restricted to query terms (`dl` is the field length the
+    * postings carry on each row). Per-term, so q86d's cross_fields
+    * combine (which needs per-term scores from BOTH fields before any
+    * per-doc grouping) scores through the identical expression. Returns
+    * the input rows with `score_t` (and idf/avgdl in scope). */
+  private def bm25TermScores(tfDl: DataFrame, qIdf: DataFrame): DataFrame = {
     val k1 = 1.2
     val b = 0.75
-    tfqDl
+    tfDl
       .join(broadcast(qIdf), Seq("tok"))
       .withColumn("score_t",
         col("idf") * ((col("tf").cast("double") * lit(2.2)) /
@@ -434,7 +422,7 @@ object TextQueries {
   /** The multi_match per-field score frame q86 (best_fields/dis_max) and
     * q86b (most_fields/sum) share — ONLY the combine differs between the
     * two ES types, so the field scoring exists once. Fields [title^2,
-    * body] from the ONE-scan [[perDocTermTf]] frame; each field scores the
+    * body] from ONE [[postings]] probe; each field scores the
     * 5-term query with its OWN statistics (df/dl/avgdl — the ES per-field
     * scoring contract); FULL OUTER over the per-field hit sets (a doc
     * matching only one field still ranks). Returns (doc_id, s_body,
@@ -449,22 +437,19 @@ object TextQueries {
     * the generic df equals qselWindow's df — distinct docs per term either
     * way — so front door ≡ typed q86 row-identically). */
   private def multiMatchFieldsFrom(art: Postings, qsel: DataFrame, titleBoost: Double): DataFrame = {
-    // ONE probe of the term-partitioned artifact serves both fields:
-    // tf_b/tf_t and both field lengths (dl_b/dl_t) ride on each probed
-    // row, field statistics come from the build-time 1-row frames — no
-    // corpus-sized dl aggregation at request time (the round-16 shape)
-    val probe = art.frame.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
-    val perB = bm25ScoreTfCarried(
-      probe.select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
-      bm25QIdfStats(art.statsBody, qsel))
-      .select(col("doc_id"), col("score").as("s_body0"))
+    // both fields probe the term-partitioned artifact: tf_b/tf_t and both
+    // field lengths (dl_b/dl_t) ride on each probed row, field statistics
+    // come from the build-time 1-row frames — no corpus-sized dl
+    // aggregation at request time
+    val perB = bm25Body(art, qsel).select(col("doc_id"), col("score").as("s_body0"))
     // title field: rows with a first-8 occurrence; df from the title
     // probe itself (the ES per-field statistics contract)
-    val probeT = probe.filter(col("tf_t") > 0)
+    val probeT = art.frame.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
+      .filter(col("tf_t") > 0)
     val titleDf = probeT.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val perT = bm25ScoreTfCarried(
+    val perT = bm25Score(
       probeT.select(col("doc_id"), col("tok"), col("tf_t").as("tf"), col("dl_t").as("dl")),
-      bm25QIdfStats(art.statsTitle, titleDf))
+      bm25Idf(art.statsTitle, titleDf))
       .select(col("doc_id"), (lit(titleBoost) * col("score")).as("s_title0"))
     perB.join(perT, Seq("doc_id"), "full_outer")
       .withColumn("s_body", coalesce(col("s_body0"), lit(0.0)))
@@ -478,17 +463,15 @@ object TextQueries {
     * (tok, df): typed q86d passes the window terms, the FRONT DOOR an
     * arbitrary analyzed term set — ONE scoring definition. Fields are the
     * head/tail split (head = first 8 tokens ^2, tail = tokens 9+), both
-    * falling out of the shared [[perDocTermTf]] artifact (tail tf = tf_b
-    * − tf_t). Returns (doc_id, n_terms_hit, final). */
+    * falling out of the [[postings]] rows (tail tf = tf_b − tf_t).
+    * Returns (doc_id, n_terms_hit, final). */
   private def crossFieldsScored(s: SparkSession, d: String, qsel: DataFrame): DataFrame = {
-    // since round 18: a postings PROBE — both derived fields' tf and dl
-    // fall out of the carried columns (head tf = tf_t / dl = dl_t; tail
-    // tf = tf_b − tf_t / dl = dl_l = dl_b − dl_t) and both fields'
-    // avgdl/n_docs come from the build-time stats rows (statsTitle's doc
-    // set IS gH's — docs with a first-8 token — and statsTail's IS gL's,
-    // Σ(tf_b − tf_t) > 0 ⟺ ∃ term with tf_b > tf_t). The pre-r18 form
-    // re-aggregated per-doc lengths three times per request (q168 read
-    // 5.8× at the 100× derivation).
+    // a postings PROBE — both derived fields' tf and dl fall out of the
+    // carried columns (head tf = tf_t / dl = dl_t; tail tf = tf_b − tf_t /
+    // dl = dl_l = dl_b − dl_t) and both fields' avgdl/n_docs come from the
+    // build-time stats rows (statsTitle's doc set IS gH's — docs with a
+    // first-8 token — and statsTail's IS gL's, Σ(tf_b − tf_t) > 0 ⟺ ∃
+    // term with tf_b > tf_t), so no request re-aggregates per-doc lengths
     val art = postings(s, d)
     val g = art.frame
     val gH = g.filter(col("tf_t") > 0)
@@ -513,15 +496,15 @@ object TextQueries {
     // frame — a superset of each field's doc set, so blended df can
     // never exceed it); each field instance swaps in its OWN avgdl for
     // tf-normalization (statsBody's avgdl is dropped unused)
-    val qIdf = bm25QIdfStats(art.statsBody, blended)
+    val qIdf = bm25Idf(art.statsBody, blended)
     def withAvgdl(fieldStats: DataFrame): DataFrame =
       qIdf.drop("avgdl").crossJoin(broadcast(fieldStats.select(col("avgdl"))))
-    val scH = bm25TermScoresCarried(
+    val scH = bm25TermScores(
       gH.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
         .select(col("doc_id"), col("tok"), col("tf_t").as("tf"), col("dl_t").as("dl")),
       withAvgdl(art.statsTitle))
       .select(col("doc_id"), col("tok"), (lit(2.0) * col("score_t")).as("sh"))
-    val scL = bm25TermScoresCarried(
+    val scL = bm25TermScores(
       gL.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
         .select(col("doc_id"), col("tok"), col("tf_l").as("tf"), col("dl_l").as("dl")),
       withAvgdl(art.statsTail))
@@ -535,11 +518,11 @@ object TextQueries {
   }
 
   /** [[phraseFieldScore]]'s exact numbers from a POSITIONAL-POSTINGS probe
-    * — the phrase family's scale path: the tf postings carry each term's
+    * — the phrase family's scale path: the postings carry each term's
     * sorted 0-based positions, so the adjacent-pair count is an array
     * intersection over the TWO probed terms' rows and the corpus is never
-    * re-scanned (round 17's q167 read 17.3s / factor 10.7 at 100× on the
-    * scan form). Returns (doc_id, s_body0, s_title0) — title UNboosted,
+    * re-scanned (the scan form read factor 10.7 for q167 at the 100×
+    * derivation). Returns (doc_id, s_body0, s_title0) — title UNboosted,
     * per-field hit docs only, FULL OUTER (callers coalesce + boost).
     * Bit-identity with the scan form: tf = |{i : i ∈ ps(w1), i+1 ∈
     * ps(w2)}| = phraseTf's adjacent pairs; title pairs additionally need
@@ -559,7 +542,7 @@ object TextQueries {
       count(when(col("tok") === w1 && col("tf_t") > 0, 1)).as("df1t"),
       count(when(col("tok") === w2 && col("tf_t") > 0, 1)).as("df2t"))
     def pseudo(stats: DataFrame, c1: String, c2: String): DataFrame =
-      bm25QIdfStats(stats, dfs.select(explode(array(
+      bm25Idf(stats, dfs.select(explode(array(
         struct(lit(w1).as("tok"), col(c1).as("df")),
         struct(lit(w2).as("tok"), col(c2).as("df")))).as("kv"))
         .select(col("kv.tok").as("tok"), col("kv.df").as("df")))
@@ -575,13 +558,13 @@ object TextQueries {
         size(filter(col("p1"), i => array_contains(col("p2"), i + 1))).cast("long"))
       .withColumn("tf_title",
         size(filter(col("p1"), i => i <= 6 && array_contains(col("p2"), i + 1))).cast("long"))
-    val scB = bm25ScoreTfCarried(
+    val scB = bm25Score(
       pairs.filter(col("tf_body") > 0)
         .select(col("doc_id"), lit("phrase").as("tok"),
           col("tf_body").as("tf"), col("dl_b").as("dl")),
       pseudo(art.statsBody, "df1b", "df2b"))
       .select(col("doc_id"), col("score").as("s_body0"))
-    val scT = bm25ScoreTfCarried(
+    val scT = bm25Score(
       pairs.filter(col("tf_title") > 0)
         .select(col("doc_id"), lit("phrase").as("tok"),
           col("tf_title").as("tf"), col("dl_t").as("dl")),
@@ -630,15 +613,10 @@ object TextQueries {
     * definition: ±3 tokens around the FIRST occurrence of any query term,
     * match wrapped in <em> tags, computed with pure array HOFs over the
     * broadcast-joined hit page only (the corpus never re-scans for
-    * highlighting — ES's hit-phase cost model). `hits` = (rank, doc_id);
-    * `qarr` = a 1-row (qterms array<string>) frame; hits must contain ≥1
-    * query term (the scorer's contract), so the first position exists. */
-  private def highlightFragments(s: SparkSession, d: String, hits: DataFrame, qarr: DataFrame): DataFrame =
-    highlightOver(docsAnalyzed(s, d), hits, qarr)
-
-  /** [[highlightFragments]] over an explicit tokenized frame — the front
-    * door passes the build-once analyzed artifact, typed q82 the per-call
-    * tokenized scan; ONE fragment definition either way. */
+    * highlighting — ES's hit-phase cost model). `toksFrame` is the
+    * analyzed corpus; `hits` = (rank, doc_id); `qarr` = a 1-row (qterms
+    * array<string>) frame; hits must contain ≥1 query term (the scorer's
+    * contract), so the first position exists. */
   private def highlightOver(toksFrame: DataFrame, hits: DataFrame, qarr: DataFrame): DataFrame =
     toksFrame
       .join(broadcast(hits), Seq("doc_id"))
@@ -654,34 +632,6 @@ object TextQueries {
         trim(concat(col("pre"), lit(" <em>"), element_at(col("toks"), col("p")),
           lit("</em> "), col("post"))).as("fragment"))
 
-  /** BM25 for an ARBITRARY analyzed term set over the body field — the
-    * front door's `match` scorer. Same chain as [[bm25PerDoc]] (THE shared
-    * formula via the shared carried chain); the query-term df probes the cached
-    * [[dfVocab]] dictionary (distinct docs per term — for the q76 window
-    * terms these are exactly rankedVocab's df values, which is what makes
-    * the q148 front-door ranking row-identical to typed q76). Terms absent
-    * from the dictionary contribute nothing (no doc contains them). */
-  private def bm25ForTerms(s: SparkSession, d: String, terms: Seq[String]): DataFrame = {
-    val tset = terms.distinct
-    require(tset.nonEmpty, "query DSL: scored match requires a non-empty analyzed query")
-    // A PROBE of the posting-list artifact (the ES request cost model: a
-    // match request touches its query terms' postings and NOTHING
-    // corpus-sized — round 16 re-exploded the whole analyzed corpus per
-    // request). df = probe rows per term = distinct docs per term,
-    // integer-identical to dfVocab/rankedVocab's; tf/dl carried; terms
-    // absent from the corpus have no postings and contribute nothing.
-    val art = postings(s, d)
-    val probe = art.frame.filter(col("tok").isin(tset: _*))
-    val qdf = probe.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    bm25ScoreTfCarried(
-      probe.select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
-      bm25QIdfStats(art.statsBody, qdf))
-  }
-
-  /** The deterministic 5-term query string (vocab ranks [[QLo]]..[[QHi]])
-    * — the front-door registry entries' request text, derived driver-side
-    * from the vocab (coordinator-sized), so the JSON-compiled ranking can
-    * be proven row-identical to the typed q76/q86 entries. */
   /** The top corpus bigram as a query STRING — the front-door phrase
     * request's text ([[windowQueryString]]'s convention for q86c's
     * phrase type: derive driver-side so the JSON-compiled scoring can be
@@ -691,6 +641,10 @@ object TextQueries {
     s"${r.getAs[String]("w1")} ${r.getAs[String]("w2")}"
   }
 
+  /** The deterministic 5-term query string (vocab ranks [[QLo]]..[[QHi]])
+    * — the front-door registry entries' request text, derived driver-side
+    * from the vocab (coordinator-sized), so the JSON-compiled ranking can
+    * be proven row-identical to the typed q76/q86 entries. */
   private[graft] def windowQueryString(s: SparkSession, d: String): String =
     rankedVocab(s, d).filter(col("r") >= QLo && col("r") <= QHi)
       .orderBy(col("r").asc).collect().map(_.getAs[String]("term")).mkString(" ")
@@ -728,77 +682,69 @@ object TextQueries {
     docs(s, d).repartition(col("doc_id")).localCheckpoint(true)
   }
 
-  /** The build-once per-(doc, term) tf frame — the "doc values" layout:
-    * (doc_id, tok, tf_b = body occurrences, tf_t = first-8 occurrences),
-    * doc_id-clustered (groupBy under the artifact's repartition completes
-    * map-side and the checkpoint preserves the partitioning), shared by
-    * every doc-centric consumer via [[perDocTermTf]]. */
-  private val tfArtifact: IndexPart[DataFrame] = table("tf", "doc_id") { (s, d) =>
-    docsAnalyzed(s, d)
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
-      .groupBy(col("doc_id"), col("tok"))
-      // ps = the term's sorted 0-based positions — the POSITIONAL half
-      // of the posting (Lucene's positions list): phrase/near scoring
-      // probes it per query term instead of re-scanning token arrays
-      .agg(count(lit(1)).as("tf_b"), count(when(col("pos") < 8, 1)).as("tf_t"),
-        sort_array(collect_list(col("pos"))).as("ps"))
-      .localCheckpoint(true)
-  }
-
-  /** The POSTING-LIST artifact: the inverted layout of [[tfArtifact]],
-    * partitioned BY TERM (at 100 TB: a term-bucketed table, so a request's probe prunes to its
-    * query terms' buckets; locally: one hash exchange at build), with each
-    * doc's field lengths CARRIED on every posting row (the Lucene norms
-    * analog) and the corpus-level field statistics collected ONCE at build
-    * (ES index metadata). A scored `match`/`multi_match` request then
-    * touches NOTHING corpus-sized at request time: its term probe yields
-    * df (rows per term) and tf/dl (carried) directly, idf comes from the
-    * broadcast 1-row stats, and the per-doc grouping runs over the
-    * hit-sized probe — ES's postings cost model, not a per-request corpus
-    * re-aggregation. Bit-identity with a token-stream pass, so every
-    * oracle hash holds: df(term) = frame rows per tok = distinct docs per
-    * term; dl_b = Σtf_b per doc = the exploded token count; dl_t = Σtf_t; the
-    * stats use bm25QIdf's exact arithmetic (count, sum cast double /
-    * count) over the same per-doc rows. */
+  /** The POSTING-LIST artifact — the text index's one per-(doc, term)
+    * table: (doc_id, tok, tf_b = body occurrences, tf_t = first-8
+    * occurrences, ps = the term's sorted 0-based positions, the
+    * POSITIONAL half of the posting that phrase/near scoring probes),
+    * partitioned BY TERM (at 100 TB: a term-bucketed table, so a
+    * request's probe prunes to its query terms' buckets; locally: one
+    * hash exchange at build), with each doc's field lengths CARRIED on
+    * every posting row (the Lucene norms analog: dl_b = the token count,
+    * dl_t = min(dl_b, 8), dl_l = dl_b − dl_t) and the corpus-level field
+    * statistics collected ONCE at build (ES index metadata). A scored
+    * `match`/`multi_match` request then touches NOTHING corpus-sized at
+    * request time: its term probe yields df (rows per term) and tf/dl
+    * (carried) directly, idf comes from the broadcast 1-row stats, and
+    * the per-doc grouping runs over the hit-sized probe — ES's postings
+    * cost model, not a per-request corpus re-aggregation. Bit-identity
+    * with a token-stream pass, so every oracle hash holds: df(term) =
+    * frame rows per tok = distinct docs per term; dl_b = Σtf_b per doc;
+    * dl_t = Σtf_t; the stats use [[bm25CtesOver]]'s arithmetic (count,
+    * sum cast double / count) over the docs with tokens. */
   private[graft] final case class Postings(
       frame: DataFrame, statsBody: DataFrame, statsTitle: DataFrame,
       statsTail: DataFrame)
   private[graft] val postings: IndexPart[Postings] = new IndexPart[Postings](
     Seq("postings" -> Seq("tok"), "stats_body" -> Nil, "stats_title" -> Nil, "stats_tail" -> Nil),
     t => Postings(t(0), t(1), t(2), t(3)))((s, d) => {
-    val g = tfArtifact(s, d)
-    // per-doc field lengths: map-side over the doc_id-clustered artifact
-    val dl = g.groupBy(col("doc_id"))
-      .agg(sum(col("tf_b")).as("dl_b"), sum(col("tf_t")).as("dl_t"))
+    // per-doc field lengths, taken before the explode
+    val lens = docsAnalyzed(s, d)
+      .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl_b"),
+        least(size(col("toks")), lit(8)).cast("long").as("dl_t"))
       .withColumn("dl_l", col("dl_b") - col("dl_t"))
-    // ONE aggregate over dl: the zero-token check's doc count and the
-    // n_docs/avgdl of all three fields (count/sum over a field's doc set
-    // through when(), the same integers a filter-then-aggregate gives)
-    def field(name: String, dlCol: String, in: Column): Seq[Column] = Seq(
-      count(when(in, 1)).as(s"n_$name"),
-      (sum(when(in, col(dlCol))).cast("double") / count(when(in, 1))).as(s"avgdl_$name"))
-    val st = dl.agg(count(lit(1)).as("n_dl"),
-      field("body", "dl_b", lit(true)) ++
-        // the title field's doc set = docs with ≥1 first-8 token (the
-        // gT = g.filter(tf_t > 0) contract)
-        field("title", "dl_t", col("dl_t") > 0) ++
-        // the TAIL field (tokens 9+, q86d's head/tail split): per-doc
-        // length = dl_b − dl_t, doc set = docs with ≥1 token past the
-        // first 8 (Σ(tf_b − tf_t) > 0 ⟺ ∃ term with tf_b > tf_t, since
-        // tf_t ≤ tf_b per term)
-        field("tail", "dl_l", col("dl_l") > 0): _*).head()
-    // the stats aggregate only docs PRESENT in the tf artifact, while the
-    // scan forms they replaced (and the unchanged DuckDB oracles)
+    // ONE aggregate over the analyzed corpus: the zero-token check's doc
+    // counts and the n_docs/avgdl of all three fields (count/sum over a
+    // field's doc set through when(), the same integers a
+    // filter-then-aggregate gives)
+    def field(name: String, dlCol: String): Seq[Column] = {
+      val in = col(dlCol) > 0
+      Seq(count(when(in, 1)).as(s"n_$name"),
+        (sum(when(in, col(dlCol))).cast("double") / count(when(in, 1))).as(s"avgdl_$name"))
+    }
+    val st = lens.agg(count(lit(1)).as("n_all"),
+      // the title field's doc set = docs with ≥1 first-8 token; the TAIL
+      // field (tokens 9+, q86d's head/tail split) = docs with ≥1 token
+      // past the first 8
+      field("body", "dl_b") ++ field("title", "dl_t") ++ field("tail", "dl_l"): _*).head()
+    // the stats aggregate only docs WITH tokens, while the DuckDB oracles
     // aggregate over every doc — identical ONLY under the
     // no-zero-token-docs invariant. Assert it at build so a future corpus
     // with an empty text field fails LOUDLY here instead of silently
     // shifting n_docs/avgdl for every scored request.
-    val nDl = st.getAs[Long]("n_dl")
-    val nDocs = docsAnalyzed(s, d).count()
+    val (nDl, nDocs) = (st.getAs[Long]("n_body"), st.getAs[Long]("n_all"))
     require(nDl == nDocs,
       s"postings build: $nDocs analyzed docs but only $nDl with tokens — " +
         "a zero-token doc breaks the stats identity with the full-corpus scan forms")
-    val frame = g.join(dl, Seq("doc_id"))
+    // the (doc, term) aggregate completes map-side: the analyzed corpus is
+    // doc_id-clustered and the checkpoint keeps that partitioning
+    val frame = lens
+      .select(col("doc_id"), col("dl_b"), col("dl_t"), col("dl_l"),
+        posexplode(col("toks")).as(Seq("pos", "tok")))
+      .groupBy(col("doc_id"), col("tok"), col("dl_b"), col("dl_t"), col("dl_l"))
+      .agg(count(lit(1)).as("tf_b"), count(when(col("pos") < 8, 1)).as("tf_t"),
+        sort_array(collect_list(col("pos"))).as("ps"))
+      .select(col("doc_id"), col("tok"), col("tf_b"), col("tf_t"), col("ps"),
+        col("dl_b"), col("dl_t"), col("dl_l"))
       .repartition(col("tok"))
       .localCheckpoint(true)
     def statsOf(name: String): DataFrame =
@@ -812,11 +758,11 @@ object TextQueries {
   /** The text index, in dependency order. Build, save, load and reset all
     * run over this one list. */
   private lazy val textIndex: Seq[IndexPart[_]] =
-    Seq(docsAnalyzed, tfArtifact, postings, dfVocab, rankedVocab, titleVocab, topBigram)
+    Seq(docsAnalyzed, postings, dfVocab, rankedVocab, titleVocab, topBigram)
 
   /** Persist the ENTIRE text index of dataset `d` as parquet tables —
-    * analyzed corpus, per-(doc, term) tf with positions, term-partitioned
-    * postings with carried field lengths, the three 1-row field-stats
+    * analyzed corpus, term-partitioned postings with positions and
+    * carried field lengths, the three 1-row field-stats
     * tables, the per-field term dictionaries and the phrase dictionary.
     * The durable half of the build-once claim (the `VecIndex.save`
     * discipline): at 100 TB the analyzed corpus and postings are TABLES
@@ -879,8 +825,8 @@ object TextQueries {
     * [[saveIndex]] persists. Every frame is localCheckpoint(true) (eager)
     * and the postings stats collect at build, so returning means every
     * build job ran. The parts build concurrently: each waits in its lazy
-    * slot for the parts it reads, and once tf exists the builds that read
-    * only tf or the analyzed corpus fill the cores each other's tails
+    * slot for the parts it reads, and the builds that read only the
+    * postings or the analyzed corpus fill the cores each other's tails
     * leave idle. */
   private[graft] def buildTextIndex(s: SparkSession, d: String): Unit =
     Artifacts.concurrently(textIndex.map(p => () => p(s, d)): _*)
@@ -892,12 +838,21 @@ object TextQueries {
     * (q86's documented convention), body boost fixed at 1 (the typed
     * stack's shape — a non-1 body boost is loudly rejected rather than
     * silently approximated). */
-  private[graft] def dslRelevance(s: SparkSession, d: String): QueryDsl.Relevance =
+  private[graft] def dslRelevance(s: SparkSession, d: String): QueryDsl.Relevance = {
+    // an analyzed term set's (tok, df) table as a PROBE of the posting-list
+    // artifact: df = probe rows per term = distinct docs per term, the
+    // integers dfVocab/rankedVocab hold (so the window terms score exactly
+    // as typed q76/q86); terms absent from the corpus get no row
+    def termDf(art: Postings, terms: Seq[String]): DataFrame =
+      art.frame.filter(col("tok").isin(terms.distinct: _*))
+        .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     QueryDsl.Relevance(
       matchScorer = (field, terms) => {
         require(field == "text",
           s"query DSL: scored match supports the analyzed corpus field 'text', got '$field'")
-        bm25ForTerms(s, d, terms)
+        require(terms.nonEmpty, "query DSL: scored match requires a non-empty analyzed query")
+        val art = postings(s, d)
+        bm25Body(art, termDf(art, terms))
       },
       multiMatchScorer = (fields, terms, tieBreaker, mtype) => {
         val fm = fields.toMap
@@ -905,14 +860,10 @@ object TextQueries {
           s"query DSL: multi_match supports fields [title^B, body], got $fields")
         require(fm("body") == 1.0,
           "query DSL: multi_match body boost must be 1 (the typed q86 stack's shape)")
-        // a PROBE of the posting-list artifact: qsel's df = probe rows per
-        // term (identical integers to the round-16 per-request tf frame),
-        // both fields' tf/dl carried — the request touches nothing
-        // corpus-sized
+        // both fields' tf/dl carried on the probed postings — the request
+        // touches nothing corpus-sized
         val art = postings(s, d)
-        val tset = terms.distinct
-        def qsel = art.frame.filter(col("tok").isin(tset: _*))
-          .groupBy(col("tok")).agg(count(lit(1)).as("df"))
+        def qsel = termDf(art, terms)
         mtype match {
           case "best_fields" =>
             multiMatchFieldsFrom(art, qsel, titleBoost = fm("title"))
@@ -962,6 +913,7 @@ object TextQueries {
           .select(array(terms.distinct.sorted.map(lit): _*).as("qterms"))
         highlightOver(docsAnalyzed(s, d), hits, qarr)
       })
+  }
 
   /** [[bm25PerDoc]] joined with the detlog length factor log2(1+doc_length)
     * — ONE definition shared by q76c (function_score) and q83 (the second
@@ -2097,9 +2049,9 @@ object TextQueries {
         .select(col("rank"), col("doc_id"), col("n_terms_hit"), col("score"))
     }),
 
-    // The STEADY-STATE serving path of the persisted index (r18 verdict
-    // item 4): q171 times save+load+probe in one request; THIS entry is
-    // what every request after the first looks like on a node that opened
+    // The STEADY-STATE serving path of the persisted index: q171 times
+    // save+load+probe in one request; THIS entry is what every request
+    // after the first looks like on a node that opened
     // an existing index — the postings/dictionary probes run against the
     // q171-persisted PARQUET tables (real scans: term pushdown + column
     // pruning apply), with zero build or save jobs in the request path.
@@ -2179,18 +2131,19 @@ object TextQueries {
       val terms = rankedVocab(s, d)
         .filter(col("r") >= QLo && col("r") <= QHi)
         .select(col("term").as("tok"))
-      // the tf artifact is one row per (doc, term) — probing it and
+      // the postings are one row per (doc, term) — probing them and
       // counting rows per doc IS the distinct-token hit count the
       // exploded token stream gave, without re-exploding anything;
-      // `source` attaches to the hit-sized survivor set afterwards
-      tfArtifact(s, d)
+      // `source` attaches to the 20-row page afterwards
+      val top = postings(s, d).frame
         .join(broadcast(terms), Seq("tok"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_matched"))
         .filter(col("n_matched") >= 3)
-        .join(docsAnalyzed(s, d).select(col("doc_id"), col("source")), Seq("doc_id"))
         .orderBy(col("n_matched").desc, col("doc_id").asc)
         .limit(20)
+      docsAnalyzed(s, d).select(col("doc_id"), col("source"))
+        .join(broadcast(top), Seq("doc_id"))
         .select(col("doc_id"), col("source"), col("n_matched"))
     }),
 
@@ -2253,8 +2206,8 @@ object TextQueries {
     // Typos derive from a POOL of the 10 rarest terms and the first 3
     // surviving the vocab anti-join become the queries — on a corpus where
     // some deletions collide with real terms the query set stays non-empty
-    // instead of going silently vacuous (round-10 ADVICE; the shipped
-    // corpus' 3 rarest all survive, so results are unchanged).
+    // instead of going silently vacuous (the shipped corpus' 3 rarest all
+    // survive, so the pool changes no result here).
     "q87_fuzzy" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
       val vocab = dfVocab(s, d)
@@ -2271,18 +2224,7 @@ object TextQueries {
       val expansion = vocab.crossJoin(broadcast(fq))
         .filter(levenshtein(col("q"), col("term")) <= 1)
         .select(col("q"), col("term"))
-      // the doc side is a PROBE of the build-once tf artifact — one row
-      // per (doc, term) by construction, identical to the distinct-explode
-      // of the token stream this replaced, without re-scanning/tokenizing
-      // the corpus per request (the Lucene rewrite hits postings, not docs)
-      tfArtifact(s, d)
-        .select(col("doc_id"), col("tok").as("term"))
-        .join(broadcast(expansion), Seq("term"))
-        .groupBy(col("q"))
-        .agg(
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("term")).as("n_terms"),
-          count(lit(1)).as("n_term_docs"))
+      rewriteHits(s, d, expansion, "q")
     }),
 
     // ES `prefix` query (Lucene MultiTermQuery rewrite): RETRIEVAL by term
@@ -2307,18 +2249,7 @@ object TextQueries {
       val expansion = vocab.crossJoin(broadcast(pool))
         .filter(col("term").startsWith(col("q")))
         .select(col("q"), col("term"))
-      // the doc side is a PROBE of the build-once tf artifact — one row
-      // per (doc, term) by construction, identical to the distinct-explode
-      // of the token stream this replaced, without re-scanning/tokenizing
-      // the corpus per request (the Lucene rewrite hits postings, not docs)
-      tfArtifact(s, d)
-        .select(col("doc_id"), col("tok").as("term"))
-        .join(broadcast(expansion), Seq("term"))
-        .groupBy(col("q"))
-        .agg(
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("term")).as("n_terms"),
-          count(lit(1)).as("n_term_docs"))
+      rewriteHits(s, d, expansion, "q")
     }),
 
     // ES `_terms_enum` API — the autocomplete endpoint over the term
@@ -2415,18 +2346,7 @@ object TextQueries {
       val expansion = vocab.crossJoin(broadcast(pool))
         .filter(expr("term LIKE replace(replace(pat, '*', '%'), '?', '_')"))
         .select(col("pat"), col("term"))
-      // the doc side is a PROBE of the build-once tf artifact — one row
-      // per (doc, term) by construction, identical to the distinct-explode
-      // of the token stream this replaced, without re-scanning/tokenizing
-      // the corpus per request (the Lucene rewrite hits postings, not docs)
-      tfArtifact(s, d)
-        .select(col("doc_id"), col("tok").as("term"))
-        .join(broadcast(expansion), Seq("term"))
-        .groupBy(col("pat"))
-        .agg(
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("term")).as("n_terms"),
-          count(lit(1)).as("n_term_docs"))
+      rewriteHits(s, d, expansion, "pat")
     }),
 
     // ES `match_phrase_prefix`: the phrase query whose LAST term is a
@@ -2440,8 +2360,8 @@ object TextQueries {
     // word's FIRST CHAR as the prefix — single-char so the expansion is
     // multi-term by construction on this sparse dictionary.
     "q90_match_phrase_prefix" -> ((s: SparkSession, d: String) => {
-      // since round 18: the POSITIONAL-POSTINGS probe (the r17 phrase-
-      // family path) — the HOF-scan form paid |expansion| full token-array
+      // the POSITIONAL-POSTINGS probe (the phrase family's path) — a
+      // HOF-scan form pays |expansion| full token-array
       // scans per doc (52s / factor 286 at the 100× derivation); here p1 =
       // w1's position lists, p2 = each expansion term's, adjacency is an
       // array intersection per probed (doc, term) pair and Σ over the
@@ -2499,12 +2419,8 @@ object TextQueries {
       import s.implicits._
       val qdf = terms.filter(_._1 != last).toSeq.toDF("tok", "df")
       // term clauses probe the postings artifact, the prefix clause the
-      // analyzed frame — same integers as the round-16 token-stream pass
-      val art = postings(s, d)
-      val sc = bm25ScoreTfCarried(
-        art.frame.join(broadcast(qdf.select(col("tok"))), Seq("tok"))
-          .select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
-        bm25QIdfStats(art.statsBody, qdf))
+      // analyzed frame — the integers a token-stream pass gives
+      val sc = bm25Body(postings(s, d), qdf)
       val ph = docsAnalyzed(s, d)
         .select(col("doc_id"), arrays_overlap(col("toks"), typedLit(expTerms)).as("hp"))
         .filter(col("hp"))
@@ -2557,18 +2473,7 @@ object TextQueries {
       val expansion = vocab.crossJoin(broadcast(pat))
         .filter(expr("term RLIKE pat"))
         .select(col("pat"), col("term"))
-      // the doc side is a PROBE of the build-once tf artifact — one row
-      // per (doc, term) by construction, identical to the distinct-explode
-      // of the token stream this replaced, without re-scanning/tokenizing
-      // the corpus per request (the Lucene rewrite hits postings, not docs)
-      tfArtifact(s, d)
-        .select(col("doc_id"), col("tok").as("term"))
-        .join(broadcast(expansion), Seq("term"))
-        .groupBy(col("pat"))
-        .agg(
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("term")).as("n_terms"),
-          count(lit(1)).as("n_term_docs"))
+      rewriteHits(s, d, expansion, "pat")
     }),
 
     // ES `combined_fields` query (the principled multi-field alternative
@@ -2578,17 +2483,21 @@ object TextQueries {
     // field (= body df: the derived title is a subset of body) — then a
     // SINGLE BM25 pass over the combined statistics (the BM25F
     // simplification ES documents; integer weights keep tf'/dl' exact).
-    // Reads the SAME one-scan per-(doc, term) frame as q86 — no second
-    // corpus pass — and scores through the shared formula.
+    // Probes the SAME postings as q86 — tf' and dl' fall out of the
+    // carried columns — and scores through the shared formula; the
+    // combined field's statistics are one 1-row aggregate of
+    // dl' = len + 2·min(len, 8) over the analyzed corpus.
     "q92_combined_fields" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      val g = perDocTermTf(s, d)
+      val art = postings(s, d)
       val qsel = qselWindow(s, d)
-      val dlC = g.groupBy(col("doc_id"))
-        .agg((sum(col("tf_b")) + lit(2L) * sum(col("tf_t"))).as("dl"))
-      val tfq = g.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
-        .select(col("doc_id"), col("tok"), (col("tf_b") + lit(2L) * col("tf_t")).as("tf"))
-      bm25ScoreTf(tfq, dlC, bm25QIdf(dlC, qsel))
+      val dlC = (size(col("toks")) + lit(2) * least(size(col("toks")), lit(8))).cast("long")
+      val stats = docsAnalyzed(s, d)
+        .agg(count(lit(1)).as("n_docs"), (sum(dlC).cast("double") / count(lit(1))).as("avgdl"))
+      val tfq = art.frame.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
+        .select(col("doc_id"), col("tok"), (col("tf_b") + lit(2L) * col("tf_t")).as("tf"),
+          (col("dl_b") + lit(2L) * col("dl_t")).as("dl"))
+      bm25Score(tfq, bm25Idf(stats, qsel))
         .withColumn("rank",
           row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
         .filter(col("rank") <= 20)
@@ -2598,7 +2507,7 @@ object TextQueries {
     // ES `_rank_eval` API — the ranking-EVALUATION endpoint next to the
     // ranking itself: each of the 5 window terms ([[QLo]]..[[QHi]]) is one
     // rated request (a single-term match on the body), rated docs derive
-    // deterministically from the SAME one-scan frame (rating 2 = the term
+    // deterministically from the SAME postings rows (rating 2 = the term
     // appears in the title/first-8, rating 1 = body tf ≥ 2, else 0 — the
     // graded-relevance shape the endpoint exists for), and the ranking
     // under evaluation is THE shared BM25 formula ([[bm25TermScores]] —
@@ -2612,13 +2521,12 @@ object TextQueries {
     // reduces per term to a 5-row result.
     "q105_rank_eval" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      val g = perDocTermTf(s, d)
+      val art = postings(s, d)
       val qsel = qselWindow(s, d)
-      val dl = g.groupBy(col("doc_id")).agg(sum(col("tf_b")).as("dl"))
       val per = bm25TermScores(
-        g.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
-          .select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("tf_t")),
-        dl, bm25QIdf(dl, qsel))
+        art.frame.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
+          .select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("tf_t"), col("dl_b").as("dl")),
+        bm25Idf(art.statsBody, qsel))
         .withColumn("rating",
           when(col("tf_t") > 0, lit(2L)).when(col("tf") >= 2, lit(1L)).otherwise(lit(0L)))
         .select(col("doc_id"), col("tok"), col("rating"), col("score_t"))
@@ -2709,23 +2617,22 @@ object TextQueries {
     // doc, df, the doc's length norm inputs, idf, and the term's score
     // contribution), for the 3 longest docs (the q110 fixed-target shape)
     // against THE q76 5-term query. Everything flows through the ONE
-    // shared BM25 chain (bm25TermScores over the one-scan per-(doc, term)
-    // frame), so the explain rows are by construction the same numbers
+    // shared BM25 chain (bm25TermScores over the postings probe), so the
+    // explain rows are by construction the same numbers
     // q76's ranking summed — idf and score_t emitted UNROUNDED (the q35
     // convention; both engines run the identical op sequence). The
     // 3-row target set broadcasts; per-request work is request-sized.
     "q127_explain" -> ((s: SparkSession, d: String) => {
-      val g = perDocTermTf(s, d)
+      val art = postings(s, d)
       val qsel = qselWindow(s, d)
-      val dlB = g.groupBy(col("doc_id")).agg(sum(col("tf_b")).as("dl"))
       val targets = Tables(s, d, "documents")
         .orderBy(col("n_chars").desc, col("doc_id").asc).limit(3)
         .select(col("doc_id"))
       bm25TermScores(
-        g.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
+        art.frame.join(broadcast(qsel.select(col("tok"))), Seq("tok"))
           .join(broadcast(targets), Seq("doc_id"))
-          .select(col("doc_id"), col("tok"), col("tf_b").as("tf")),
-        dlB, bm25QIdf(dlB, qsel))
+          .select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
+        bm25Idf(art.statsBody, qsel))
         .join(broadcast(qsel.select(col("tok"), col("df"))), Seq("tok"))
         .select(col("doc_id"), col("tok").as("term"), col("tf").cast("long").as("tf"),
           col("df").cast("long").as("df"), col("dl").cast("long").as("dl"),
@@ -2935,19 +2842,15 @@ object TextQueries {
       // every clause reads a build-once artifact: the phrase pass the
       // positional-postings probe, the AND clause the tf-postings probe,
       // the NOT clause an array_contains probe — probe-derived statistics
-      // are integer-identical to the round-16 token-stream pass, so the
-      // oracle is unchanged
+      // are integer-identical to a token-stream pass, so the oracle's
+      // stream-shaped chain mirrors them
       val Array(w1, w2) = topBigramString(s, d).split(" ")
       val phr = phraseProbeScores(s, d, w1, w2)
         .filter(col("s_body0").isNotNull)
         .select(col("doc_id"), col("s_body0").as("p0"))
       val qdf2 = rankedVocab(s, d).filter(col("r") === QLo || col("r") === QLo + 1)
         .select(col("term").as("tok"), col("df"))
-      val art = postings(s, d)
-      val sAnd = bm25ScoreTfCarried(
-        art.frame.join(broadcast(qdf2.select(col("tok"))), Seq("tok"))
-          .select(col("doc_id"), col("tok"), col("tf_b").as("tf"), col("dl_b").as("dl")),
-        bm25QIdfStats(art.statsBody, qdf2))
+      val sAnd = bm25Body(postings(s, d), qdf2)
         .filter(col("n_terms_hit") === 2)
         .select(col("doc_id"), col("score").as("a0"))
       phr.join(sAnd, Seq("doc_id"), "full_outer")
@@ -2973,39 +2876,35 @@ object TextQueries {
     // composition), explicit boolean PRECEDENCE (the parenthesized OR
     // group sums its matching SHOULD clauses; the top-level ANDs are
     // MUST = inner joins of clause hit sets; NOT = an anti-join on tX
-    // membership). Every clause reads the ONE-scan per-(doc, term) frame
-    // — the plan's only corpus exchange is its scan-spreading
-    // repartition — and all scoring flows through THE shared BM25
-    // formula ([[bm25ScoreTf]]/[[bm25TermScores]]).
+    // membership). Every clause PROBES the build-once artifacts — the
+    // field-scoped title clause reads the titleVocab dictionary + the
+    // carried dl_t/build-time statsTitle, the boolean group reads
+    // rankedVocab + carried dl_b/statsBody, and the NOT clause probes the
+    // postings rows — and all scoring flows through THE shared BM25
+    // formula ([[bm25Score]]/[[bm25TermScores]]).
     "q106_query_string" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      // since round 18: every clause PROBES the build-once artifacts —
-      // the field-scoped title clause reads the titleVocab dictionary +
-      // the carried dl_t/build-time statsTitle, the boolean group reads
-      // rankedVocab + carried dl_b/statsBody, and the NOT clause probes
-      // the postings rows; the pre-r18 form re-aggregated the tf frame
-      // four times and re-ranked the whole vocabulary per request
-      // (8.6× at the 100× derivation). Probe statistics are
-      // integer-identical (df = frame rows per term, dl carried = Σtf,
-      // stats = the build-time count/sum-cast-double/count).
+      // probe statistics are integer-identical to a per-request
+      // aggregation (df = frame rows per term, dl carried = Σtf, stats =
+      // the build-time count/sum-cast-double/count)
       val art = postings(s, d)
       val tT = broadcast(titleVocab(s, d).filter(length(col("term")) >= 4)
         .orderBy(col("df").desc, col("term").asc).limit(1)
         .select(col("term").as("tok"), col("df")))
-      val sT = bm25ScoreTfCarried(
+      val sT = bm25Score(
         art.frame.filter(col("tf_t") > 0)
           .join(tT.select(col("tok")), Seq("tok"))
           .select(col("doc_id"), col("tok"), col("tf_t").as("tf"), col("dl_t").as("dl")),
-        bm25QIdfStats(art.statsTitle, tT))
+        bm25Idf(art.statsTitle, tT))
         .select(col("doc_id"), col("score").as("s_title"))
       val qg = broadcast(rankedVocab(s, d)
         .filter(col("r") === QLo || col("r") === QLo + 1)
         .select(col("term").as("tok"), col("df"), col("r")))
-      val sG = bm25TermScoresCarried(
+      val sG = bm25TermScores(
         art.frame.join(qg.select(col("tok"), col("r")), Seq("tok"))
           .select(col("doc_id"), col("tok"), col("tf_b").as("tf"),
             col("dl_b").as("dl"), col("r")),
-        bm25QIdfStats(art.statsBody, qg.select(col("tok"), col("df"))))
+        bm25Idf(art.statsBody, qg.select(col("tok"), col("df"))))
         .withColumn("ws",
           when(col("r") === QLo + 1, lit(2.0)).otherwise(lit(1.0)) * col("score_t"))
         .groupBy(col("doc_id"))
@@ -3032,24 +2931,24 @@ object TextQueries {
     // (n_chars ≥ 200 — matches REQUIRED but score NOT affected, the
     // filter-context half of the contract). _score = must + Σ matching
     // should (fixed textual order — engine-exact). All clause scoring is
-    // THE shared BM25 chain over the one-scan per-(doc, term) frame; the
+    // THE shared BM25 chain over the postings probe; the
     // must_not exclusion is a hit-sized anti-join; the filter reaches the
     // documents scan as a pushed range predicate.
     "q119_bool" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
       // clause terms/df from the build-once rankedVocab dictionary, tf/dl
       // carried on the probed postings rows, idf from the build-time
-      // stats — the pre-r18 form re-ranked the vocabulary and
-      // re-aggregated per-doc lengths per request (same integers)
+      // stats — no request re-ranks the vocabulary or re-aggregates
+      // per-doc lengths
       val art = postings(s, d)
       val clause = broadcast(rankedVocab(s, d)
         .filter(col("r") >= QLo && col("r") <= QLo + 2)
         .select(col("term").as("tok"), col("df"), col("r")))
-      val sc = bm25TermScoresCarried(
+      val sc = bm25TermScores(
         art.frame.join(clause.select(col("tok"), col("r")), Seq("tok"))
           .select(col("doc_id"), col("tok"), col("tf_b").as("tf"),
             col("dl_b").as("dl"), col("r")),
-        bm25QIdfStats(art.statsBody, clause.select(col("tok"), col("df"))))
+        bm25Idf(art.statsBody, clause.select(col("tok"), col("df"))))
       // pivot the ≤3 clause rows per doc into fixed columns: each (doc, r)
       // is unique, so min() just carries the value
       val per = sc.groupBy(col("doc_id")).agg(
@@ -3089,7 +2988,7 @@ object TextQueries {
     // hits: the OR contract (a doc matching EITHER clause qualifies —
     // unlike q119's must gate) and the tie_breaker are each visible in
     // the result. Clause scoring is THE shared BM25 chain over the
-    // one-scan per-(doc, term) frame.
+    // postings probe.
     "q123_dis_max" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
       // clause A from the rankedVocab dictionary, clause B (the corpus's
@@ -3103,11 +3002,11 @@ object TextQueries {
         .orderBy(col("df").asc, col("term").asc).limit(1)
         .select(col("term").as("tok"), col("df"), lit(2).as("r"))
       val clause = broadcast(a.union(rare))
-      val sc = bm25TermScoresCarried(
+      val sc = bm25TermScores(
         art.frame.join(clause.select(col("tok"), col("r")), Seq("tok"))
           .select(col("doc_id"), col("tok"), col("tf_b").as("tf"),
             col("dl_b").as("dl"), col("r")),
-        bm25QIdfStats(art.statsBody, clause.select(col("tok"), col("df"))))
+        bm25Idf(art.statsBody, clause.select(col("tok"), col("df"))))
       sc.groupBy(col("doc_id")).agg(
           min(when(col("r") === 1, col("score_t"))).as("s_a"),
           min(when(col("r") === 2, col("score_t"))).as("s_b"))
@@ -3233,29 +3132,30 @@ object TextQueries {
     // df(seed), so original terms keep the highest weight exactly as
     // ELSER emits them. All weights and scores are INTEGER (counts ·
     // counts), so both engines compare exact longs; no float discipline
-    // needed. Scale shape: the expansion table (≤16 rows) BROADCASTS
-    // under the scoring join; the seed-doc lists join the shared
-    // one-scan frame doc-keyed (the frame is already doc_id-partitioned),
-    // and the corpus is touched once beyond that shared frame.
+    // needed. Scale shape: the co-document counts come from the seed
+    // docs' own token arrays (the analyzed corpus, row-local: no join on
+    // doc_id), the expansion table (≤16 rows) BROADCASTS under the
+    // postings probe, and only the probed hit rows shuffle to the per-doc
+    // sum.
     "q136_sparse_retrieval" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      val g = perDocTermTf(s, d)
-      val len4 = g.filter(length(col("tok")) >= 4)
-      // seeds from the build-once dictionary (the pre-r18 form re-ranked
-      // the vocabulary per request; same terms)
+      // seeds from the build-once dictionary
       val seeds = rankedVocab(s, d)
         .filter(col("r") >= QLo && col("r") <= QLo + 1)
         .select(col("term").as("seed"))
-      val seedDocs = g.join(broadcast(seeds), col("tok") === col("seed"))
-        .select(col("seed"), col("doc_id"))
-      val expn = seedDocs
-        .join(len4.select(col("doc_id"), col("tok")), Seq("doc_id"))
+      // per seed doc, each distinct length-≥4 term once: codoc = the docs
+      // holding both the seed and the term
+      val expn = docsAnalyzed(s, d)
+        .crossJoin(broadcast(seeds))
+        .filter(array_contains(col("toks"), col("seed")))
+        .select(col("seed"),
+          explode(array_distinct(filter(col("toks"), t => length(t) >= 4))).as("tok"))
         .groupBy(col("seed"), col("tok")).agg(count(lit(1)).as("codoc"))
         .withColumn("er",
           row_number().over(Window.partitionBy(col("seed")).orderBy(col("codoc").desc, col("tok").asc)))
         .filter(col("er") <= 8)
       val wq = expn.groupBy(col("tok")).agg(sum(col("codoc")).as("w"))
-      val scored = g.join(broadcast(wq), Seq("tok"))
+      val scored = postings(s, d).frame.join(broadcast(wq), Seq("tok"))
         .groupBy(col("doc_id"))
         .agg(sum(col("w") * col("tf_b")).as("score"), count(lit(1)).as("n_terms"))
       scored.orderBy(col("score").desc, col("doc_id").asc).limit(20)
@@ -3391,17 +3291,12 @@ object TextQueries {
     // contract), the title score carries boost 2, and dis_max combines
     // best + tie_breaker(0.5) × other. FULL OUTER over the per-field hit
     // sets: a doc matching only one field still ranks.
-    // ONE corpus scan (round-11 ran two full per-field scan+score passes
-    // plus the vocab scan): tokenize once into the per-(doc, term) frame
-    // both fields share — tf_b counts all occurrences, tf_t the first-8
-    // ones — and materialize it; EVERY downstream frame (vocab ranks,
-    // per-field dl/df/tf, both scores) derives from that artifact. The
-    // aggregate completes map-side (the stream is doc_id-partitioned, a
-    // subset of the (doc, term) grouping key), so the plan's only corpus
-    // exchange is the scan-spreading repartition; PlanSpec gates zero
-    // parquet re-scans. Field values are INTEGER-identical to the
-    // two-pass form (dl = Σtf, df = frame rows per term), so the oracle
-    // is unchanged.
+    // Both fields probe the ONE posting-list artifact — tf_b counts all
+    // occurrences, tf_t the first-8 ones, and both field lengths ride on
+    // each row — so no request re-scans the corpus (PlanSpec gates zero
+    // parquet re-scans). Field values are INTEGER-identical to two
+    // per-field token-stream passes (dl = Σtf, df = frame rows per term),
+    // which is what the oracle computes.
     "q86_multi_match" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
       multiMatchPerField(s, d)
@@ -3416,7 +3311,7 @@ object TextQueries {
 
     // ES `multi_match` type `most_fields`: the SAME per-field BM25 scores
     // as q86 (same fields [title^2, body], same per-field statistics, same
-    // one-scan frame) but combined by SUM instead of dis_max — the type
+    // postings probe) but combined by SUM instead of dis_max — the type
     // for "same text analyzed different ways", where every matching field
     // adds evidence. q86/q86b/q92 now cover three of ES's four multi_match
     // types over ONE shared scoring stack; only the combine differs.
@@ -3443,7 +3338,7 @@ object TextQueries {
     // [[phraseTf]] over the sliced array.
     "q86c_multi_match_phrase" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
-      // since r17: the positional-postings probe (phraseProbeScores —
+      // the positional-postings probe (phraseProbeScores —
       // phraseFieldScore's exact numbers from the 2-term probe; the
       // corpus never re-scans). The query bigram derives driver-side.
       val Array(w1, w2) = topBigramString(s, d).split(" ")
@@ -3477,8 +3372,8 @@ object TextQueries {
     // DISJOINT parts of one value, the shape cross_fields exists for
     // (q86's title is a PREFIX of body, where max-blending would be
     // vacuous: df_title ≤ df_body always). Both fields' tf/dl fall out of
-    // the ONE-scan perDocTermTf frame (tail tf = tf_b − tf_t); the only
-    // new exchanges are over hit-sized score tables.
+    // the postings rows (tail tf = tf_b − tf_t); the only new exchanges
+    // are over hit-sized score tables.
     "q86d_multi_match_cross_fields" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.expressions.Window
       crossFieldsScored(s, d, qselWindow(s, d))
@@ -3533,7 +3428,7 @@ object TextQueries {
       bm25PerDoc(s, d)
         .withColumn("rank",
           row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        // EXPLICIT empty-page contract (round-10 ADVICE): with fewer than
+        // EXPLICIT empty-page contract: with fewer than
         // 20 scored docs there is no rank-20 cursor — the sentinel
         // (-inf, MinValue) makes the keyset predicate false for every row
         // by construction instead of by NULL-propagation
@@ -3566,7 +3461,7 @@ object TextQueries {
       val qarr = rankedVocab(s, d)
         .filter(col("r") >= QLo && col("r") <= QHi)
         .groupBy().agg(sort_array(collect_list(col("term"))).as("qterms"))
-      highlightFragments(s, d, hits, qarr)
+      highlightOver(docsAnalyzed(s, d), hits, qarr)
     }),
 
     // ES `percolate`: REVERSE search — a registry of stored queries, each
@@ -3614,7 +3509,7 @@ object TextQueries {
     // REAL BPE (Sennrich 2016): merges learned by distributed pair-count
     // rounds over the vocab-sized word-frequency table (train-once model,
     // [[graft.operators.Bpe]]), then documents encoded with the learned
-    // merge priorities. Oracle-backed since round 10: `bpeSql` unrolls all
+    // merge priorities. Oracle-backed: `bpeSql` unrolls all
     // 40 training rounds as DuckDB CTEs over unit-delimited segmentation
     // strings (replace() == mergeOnce, see the oracle's scaladoc), so DuckDB
     // RELEARNS the identical merge table and replays the encode; BpeSpec
@@ -3962,7 +3857,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_kept"), min(col("doc_id")).as("first_doc"))
     }),
 
-    // EXTENDED CAPSTONE: q48 plus the round-2 stages — repetition gate,
+    // EXTENDED CAPSTONE: q48 plus the later stages — repetition gate,
     // benchmark decontamination (raw-corpus benchmark shingles, broadcast),
     // benchmark holdout — in the realistic order: quality/lang/repetition
     // filters -> drop benchmark docs -> drop contaminated docs -> exact

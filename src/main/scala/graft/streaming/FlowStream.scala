@@ -182,7 +182,12 @@ object FlowStream {
     * The spec's grid is fixed (st07, and st20 through the JSON door) or
     * calendar (st11, q06's monthly series: the buckets vary in width, so
     * state stays bounded by `delay / min-bucket-width` open buckets). */
-  def runAppendMode(flows: DataFrame, spec: ProportionalSum.Spec, delayMs: Long, name: String): DataFrame = {
+  def runAppendMode(flows: DataFrame, spec: ProportionalSum.Spec, delayMs: Long, name: String): DataFrame =
+    Streams.run(appendSeries(flows, spec, delayMs), name, "append")
+      .frame.select(col("bucket_ms"), col("doc_count"), col("value"))
+
+  /** [[runAppendMode]]'s watermarked streaming aggregate, not yet run. */
+  private[graft] def appendSeries(flows: DataFrame, spec: ProportionalSum.Spec, delayMs: Long): DataFrame = {
     require(spec == ProportionalSum.Spec(spec.fields, spec.cfg),
       s"append mode takes the fields and the grid only, got $spec")
     val (rs, re, v, sampling) = ProportionalSum.specColumns(flows, spec)
@@ -191,8 +196,7 @@ object FlowStream {
     val exploded = ProportionalSum.explodeContrib(flows, rs, re, v, sampling, spec.cfg)
       .withColumn("bucket_ts", timestamp_millis(col("bucket_ms")))
       .withWatermark("bucket_ts", s"$delayMs milliseconds")
-    Streams.run(ProportionalSum.aggregate(exploded, Seq(col("bucket_ts"))), name, "append")
-      .frame.select(col("bucket_ms"), col("doc_count"), col("value"))
+    ProportionalSum.aggregate(exploded, Seq(col("bucket_ts")))
   }
 
   /** Always-on top-K talkers: the Space-Saving sketch

@@ -39,7 +39,7 @@ class BuildBudgetSpec extends AnyFunSuite {
     info(s"coarse ${coarse.size}, pq ${pq.size}, text ${text.size} $byKind")
     assert(coarse.size == 16, "VecIndex.coarse jobs")
     assert(pq.size == 11, "VecIndex.pq jobs")
-    assert(text.size == 21, s"buildTextIndex jobs: $byKind")
+    assert(text.size == 15, s"buildTextIndex jobs: $byKind")
     // the caller's own description is restored after each build
     assert(spark.sparkContext.getLocalProperty(queries.Tables.JobDescription) == null)
   }

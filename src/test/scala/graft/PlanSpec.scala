@@ -53,9 +53,9 @@ class PlanSpec extends AnyFunSuite {
 
   private def optimized(q: String) = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
 
-  // each proportional_sum and framework-agg JSON-door entry runs its
-  // typed twin's plan; a pair that cannot records why (and fails once it
-  // does match)
+  // each proportional_sum, framework-agg and scored-search JSON-door entry
+  // runs its typed twin's plan; a pair that cannot records why (and fails
+  // once it does match)
   for ((door, typed, differs) <- Seq(
       ("q160_dsl_interval_string", "q01_prop_sum_basic", None),
       ("q162_dsl_offset_string", "q02_prop_sum_offset", None),
@@ -75,7 +75,18 @@ class PlanSpec extends AnyFunSuite {
       ("q173_dsl_range", "q10c_range_agg", Some(
         "ES ranges may overlap, so the door explodes each doc over every range it matches, where " +
           "q10c's disjoint, contiguous ranges pick one key by CASE WHEN; same rows (shared oracle), other plan")),
-      ("q174_dsl_order_agg_path", "q10f_histogram_order_agg", None)))
+      ("q174_dsl_order_agg_path", "q10f_histogram_order_agg", None),
+      ("q148_dsl_match_scored", "q76_bm25_search", Some(
+        "the door scores a driver-side literal term set (the analyzed query string) and collects its " +
+          "ranked page to the driver (the coordinator response), where q76 ranks the rankedVocab " +
+          "window inside the plan; same rows (DslScoredSpec)")),
+      ("q149_dsl_multi_match", "q86_multi_match", Some(
+        "the door scores a driver-side literal term set and collects its ranked page to the driver, " +
+          "where q86 ranks the rankedVocab window inside the plan; same rows (DslScoredSpec)")),
+      ("q155_dsl_highlight", "q82_highlight", Some(
+        "the door fragments a page already collected to the driver with a literal query-term array, " +
+          "where q82 fragments its in-plan top-20 with the rankedVocab window's array; same rows " +
+          "(DslScoredSpec)"))))
     test(s"$door runs the optimized plan of its typed twin $typed${differs.fold("")(_ => " (or records why not)")}") {
       val (d, t) = (optimized(door), optimized(typed))
       differs match {
@@ -572,7 +583,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q86d_multi_match_cross_fields")
     // same one-scan contract as q86/q86b: vocab ranks, blended df, both
     // fields' dl/tf and both per-term score tables all derive from the
-    // checkpointed perDocTermTf artifact
+    // checkpointed postings artifact
     assert(!p.contains("documents.parquet"),
       "a cross_fields pass re-scanned the corpus parquet")
     assert(p.contains("Scan ExistingRDD"), "the shared materialized scan artifact is missing")
@@ -673,7 +684,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q123/q127: the new BM25 consumers read the ONE materialized corpus scan") {
     // q123 (dis_max) and q127 (_explain) join the shared checkpointed
-    // perDocTermTf artifact — adding a consumer must never re-scan the
+    // postings artifact — adding a consumer must never re-scan the
     // corpus parquet or materialize a second frame (the q86 gate's
     // contract extended to the round-14 additions)
     for (q <- Seq("q123_dis_max", "q127_explain")) {
@@ -765,7 +776,7 @@ class PlanSpec extends AnyFunSuite {
     // round-18: the multi-term-rewrite family (fuzzy/prefix/wildcard/
     // match_phrase_prefix/regexp/terms_enum) expands against the
     // BUILD-ONCE term dictionary (dfVocab/rankedVocab artifacts) and its
-    // doc side probes the tf artifact — the Lucene rewrite hits postings,
+    // doc side probes the postings artifact — the Lucene rewrite hits postings,
     // never the stored fields. Same contract for the window-term scorers
     // (match_bool_prefix, simple_query_string, query_string) whose
     // 100× factors (5.8-6.1×) were the last family outside the

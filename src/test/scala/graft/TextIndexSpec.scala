@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The durable half of the build-once artifact claim: the text index
-  * (analyzed corpus, tf, postings + field stats, dictionaries) must
+  * (analyzed corpus, postings + field stats, dictionaries) must
   * round-trip through parquet BYTE-IDENTICALLY — a session that
   * `loadIndex`es the saved tables serves the exact rows and scores the
   * building session computed, with zero build jobs (the `VecIndex`
@@ -36,7 +36,7 @@ class TextIndexSpec extends AnyFunSuite {
     queries.TextQueries.buildTextIndex(spark, sf)
     val concurrent = snapshot()
     assert(sequential.map(_._1) == concurrent.map(_._1))
-    assert(sequential.size == 10)
+    assert(sequential.size == 9)
     sequential.zip(concurrent).foreach { case ((name, (rows, bits)), (_, (cRows, cBits))) =>
       assert(rows.nonEmpty, s"$name is empty")
       assert(cRows == rows, s"$name rows differ between concurrent and sequential builds")
