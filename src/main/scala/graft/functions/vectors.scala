@@ -58,9 +58,6 @@ object vectors {
   def dotSql(a: String, b: String, dim: Int): String =
     (1 to dim).map(i => s"$a[$i]*$b[$i]").mkString(" + ")
 
-  def cosineSql(a: String, b: String, dim: Int): String =
-    s"(${dotSql(a, b, dim)}) / (sqrt(${dotSql(a, a, dim)}) * sqrt(${dotSql(b, b, dim)}))"
-
   /** All `tables` RHP-LSH buckets in one compiled pass (native expression;
     * table t uses seed t*seedStride — elementwise identical to `tables`
     * separate [[rhpBucket]] calls, parity spec-checked). */

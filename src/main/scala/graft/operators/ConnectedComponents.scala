@@ -19,7 +19,7 @@ object ConnectedComponents {
   /** edges: two long columns (src, dst). Returns (id, component) where
     * component = min vertex id reachable.
     *
-    * CALLER CONTRACT (r18 dropped the internal `.distinct()`): `edges` is
+    * CALLER CONTRACT (there is no internal `.distinct()`): `edges` is
     * expected to be UNIQUE pairs with src < dst — every in-repo caller's
     * edge set is (a<b)-deduped by construction. Correctness survives
     * violations (min-label propagation is multiset-safe, and symmetrization
@@ -36,8 +36,8 @@ object ConnectedComponents {
     val e = edges.toDF("src", "dst").persist()
     // no distinct: every caller's edge set is (a<b)-deduped by
     // construction, and the min-label aggregation is multiset-safe anyway
-    // — the old distinct paid one full exchange of the edge set per run
-    // for nothing (r18 opt)
+    // — a distinct would pay one full exchange of the edge set per run
+    // for nothing
     val sym = e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
@@ -67,10 +67,10 @@ object ConnectedComponents {
         .union(neighborLabels)
         .groupBy(col("id"))
         .agg(min(col("component")).as("component"))
-      // r18 opt: the pointer-jump join is FOLDED into the same round's
-      // plan, so each round pays ONE localCheckpoint job + ONE scalar
-      // aggregate (the old shape materialized prop, aggregated it, then
-      // ran jump as a second checkpoint + aggregate — 4 blocking jobs per
+      // the pointer-jump join is FOLDED into the same round's plan, so
+      // each round pays ONE localCheckpoint job + ONE scalar aggregate
+      // (materializing prop, aggregating it, then running jump as a
+      // second checkpoint + aggregate would cost 4 blocking jobs per
       // jumped round instead of 2). `prop` appears as both jump sides; the
       // two subtrees are identical, so AQE's exchange reuse computes the
       // propagation once. Convergence soundness is unchanged: labels only

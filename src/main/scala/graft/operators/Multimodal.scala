@@ -308,10 +308,6 @@ object Multimodal {
     }
   }
 
-  /** Resize pipeline over documents (16×16 thumbnails). */
-  def resizePipeline(docs: DataFrame): DataFrame =
-    resize(attachPayload(docs), outW = 16, outH = 16).toDF()
-
   /** ORACLE-BACKED resize audit (the mm06 planted-geometry pattern applied
     * to mm03): per doc, STRICT per-format decode (parse failure ⇒ -1s, the
     * mediaInfo discipline — never the metadata-echoing stub), then the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the sketch/vector hot paths.
+/* Native Catalyst expressions for the sketch/vector hot paths.
   *
   * The composable higher-order-function forms (graft.functions.text/vectors)
   * are interpreted per element and re-hash their inputs once per signature
@@ -21,10 +21,6 @@ import org.apache.spark.sql.types._
   * fallback that boxes every row of the surrounding stage. The interpreted
   * `nullSafeEval` path calls the same kernel — parity by construction
   * (NativeExprSpec additionally asserts it against the HOF forms). */
-object NativeExpressions {
-  /** SplitMix64 finalizer (kept as a public alias — see [[NativeKernels.mix64]]). */
-  @inline def mix64(z0: Long): Long = NativeKernels.mix64(z0)
-}
 
 /** minhash_sig(shingles, k): k-component MinHash signature in one pass over
   * the shingle array (vs k array traversals with k string re-hashes each). */

@@ -185,7 +185,7 @@ object DedupQueries {
     * Candidates = pairs sharing ≥1 band bucket; verified by true Jaccard on
     * shingle sets. Bucket join means no O(n²) pair scan — the scale path.
     *
-    * ORACLE-BACKED since round 5: the signature is the md5-based affine
+    * ORACLE-BACKED: the signature is the md5-based affine
     * family ([[graft.plans.NativeKernels.minhashSig]] — base = high 60 md5
     * bits mod 2³¹−1, h_j = (a_j·base+b_j) mod p), which DuckDB can compute
     * verbatim, and the band bucket is an md5 prefix of the component
@@ -231,8 +231,8 @@ object DedupQueries {
 
   /** SimHash near-dup: 60-bit md5-based signatures; candidates share one of
     * four 15-bit chunks (pigeonhole: any pair within Hamming distance 3
-    * shares a chunk); verified by Hamming ≤ 12. Oracle-backed since round 5:
-    * the per-token hash is md5's first 15 hex chars, so DuckDB recomputes
+    * shares a chunk); verified by Hamming ≤ 12. Oracle-backed: the
+    * per-token hash is md5's first 15 hex chars, so DuckDB recomputes
     * the identical sketch, chunks, and distances. */
   private def q33(s: SparkSession, d: String): DataFrame = {
     val docs = TextQueries.docsAnalyzed(s, d)
@@ -325,8 +325,8 @@ object DedupQueries {
 
   /** Dedup clusters: MinHash-LSH pairs (verified Jaccard ≥ 0.5) become
     * edges; connected components pick one canonical doc per group — the
-    * final step of a real near-dup removal pipeline. Oracle-backed since
-    * round 5 (the md5-affine MinHash is engine-independent): DuckDB closes
+    * final step of a real near-dup removal pipeline. Oracle-backed (the
+    * md5-affine MinHash is engine-independent): DuckDB closes
     * the same edge set transitively with a recursive CTE. */
   private def q38(s: SparkSession, d: String): DataFrame = {
     val edges = q32(s, d).filter(col("jacc") >= 0.5).select(col("doc_a"), col("doc_b"))

@@ -123,9 +123,68 @@ object QueryDsl {
         case e: Exception =>
           throw new IllegalArgumentException(s"query DSL: malformed JSON: ${e.getMessage}")
       }
-    require(n != null && n.isObject, "query DSL: root must be a JSON object")
+    entries(n, "the request root")
     n
   }
+
+  // ----- the body reader: every value the door reads is typed here -----
+  // Each accessor takes the value node (null when the key is absent) and
+  // the name of the field it fills, and throws IllegalArgumentException
+  // naming that field and the JSON type it got: a body value is never
+  // coerced (Jackson's lenient asDouble reads "x" as 0.0, asInt reads a
+  // long past 2^31 as its low bits).
+
+  private def typeError(what: String, want: String, v: JsonNode): Nothing = {
+    val got = if (v == null) "nothing" else s"${v.getNodeType.toString.toLowerCase(java.util.Locale.ROOT)} $v"
+    throw new IllegalArgumentException(s"query DSL: $what must be $want, got $got")
+  }
+
+  private def text(v: JsonNode, what: String): String =
+    if (v != null && v.isTextual) v.textValue else typeError(what, "a string", v)
+
+  private def long(v: JsonNode, what: String): Long =
+    if (v != null && v.isIntegralNumber && v.canConvertToLong) v.longValue
+    else typeError(what, "an integer", v)
+
+  private def int(v: JsonNode, what: String): Int =
+    if (v != null && v.isIntegralNumber && v.canConvertToInt) v.intValue
+    else typeError(what, "a 32-bit integer", v)
+
+  private def double(v: JsonNode, what: String): Double =
+    if (v != null && v.isNumber && java.lang.Double.isFinite(v.doubleValue)) v.doubleValue
+    else typeError(what, "a finite number", v)
+
+  private def bool(v: JsonNode, what: String): Boolean =
+    if (v != null && v.isBoolean) v.booleanValue else typeError(what, "a boolean", v)
+
+  private def items(v: JsonNode, what: String): Seq[JsonNode] =
+    if (v != null && v.isArray) v.elements().asScala.toSeq else typeError(what, "an array", v)
+
+  private def texts(v: JsonNode, what: String): Seq[String] = items(v, what).map(text(_, s"$what entry"))
+
+  /** One value or an array of them (clause lists, knn clauses, orders). */
+  private def oneOrMany(v: JsonNode, what: String): Seq[JsonNode] = if (v.isArray) items(v, what) else Seq(v)
+
+  /** An object whose keys are names the body chooses (aggs, filters, runtime fields). */
+  private def entries(v: JsonNode, what: String): Seq[(String, JsonNode)] =
+    if (v != null && v.isObject) v.fields().asScala.toSeq.map(e => (e.getKey, e.getValue))
+    else typeError(what, "an object", v)
+
+  /** An object holding every `required` key and no key outside `required ++ optional`. */
+  private def obj(v: JsonNode, what: String, required: Set[String],
+      optional: Set[String] = Set.empty): JsonNode = {
+    val keys = entries(v, what).map(_._1)
+    val absent = required.toSeq.sorted.filterNot(v.has)
+    require(absent.isEmpty, s"query DSL: $what requires ${absent.mkString(", ")}")
+    val unknown = keys.filterNot(k => required(k) || optional(k))
+    require(unknown.isEmpty, s"query DSL: unsupported $what keys: ${unknown.mkString(", ")} " +
+      s"(accepted: ${(required ++ optional).toSeq.sorted.mkString(", ")})")
+    v
+  }
+
+  /** `read` of key `k` of `n`, when `n` has it. */
+  private def opt[T](n: JsonNode, k: String)(read: (JsonNode, String) => T): Option[T] =
+    Option(n.get(k)).map(read(_, k))
 
   /** The (name, body) of an ES clause object — exactly one key. */
   private def sole(n: JsonNode, what: String): (String, JsonNode) = {
@@ -135,24 +194,16 @@ object QueryDsl {
     (name, n.get(name))
   }
 
-  private def boostOf(n: JsonNode): Double =
-    if (n.isObject && n.has("boost")) n.get("boost").asDouble else 1.0
+  private def boostOf(n: JsonNode): Double = opt(n, "boost")(double).getOrElse(1.0)
 
   /** Typed literal for `field`: long fields take integral JSON numbers,
-    * double fields any JSON number, string fields JSON strings — anything
-    * else is a loud mismatch. */
-  private def typedLit(field: String, v: JsonNode)(implicit cat: Catalog): Column =
-    if (cat.longs(field)) {
-      require(v.isIntegralNumber,
-        s"query DSL: field '$field' is numeric, got non-integral value $v")
-      lit(v.asLong)
-    } else if (cat.doubles(field)) {
-      require(v.isNumber, s"query DSL: field '$field' is a double, got $v")
-      lit(v.asDouble)
-    } else {
-      require(v.isTextual, s"query DSL: field '$field' is a string, got $v")
-      lit(v.asText)
-    }
+    * double fields any finite JSON number, string fields JSON strings. */
+  private def typedLit(field: String, v: JsonNode)(implicit cat: Catalog): Column = {
+    val what = s"a value of field '$field'"
+    if (cat.longs(field)) lit(long(v, what))
+    else if (cat.doubles(field)) lit(double(v, what))
+    else lit(text(v, what))
+  }
 
   private def stringField(f: String, q: String)(implicit cat: Catalog): String = {
     checkField(f)
@@ -168,10 +219,20 @@ object QueryDsl {
     val (f, v) = sole(body, q)
     checkField(f)
     if (v.isObject) {
-      require(v.has("value"), s"query DSL: $q object form requires 'value'")
+      obj(v, s"$q object form", Set("value"), Set("boost"))
       (f, v.get("value"), boostOf(v))
     } else (f, v, 1.0)
   }
+
+  /** A `match` value: `"text"` or `{"query": text, "operator": and|or,
+    * "boost": b}` → (query, operator, boost). */
+  private def matchValue(v: JsonNode): (String, String, Double) =
+    if (v.isObject) {
+      obj(v, "match object form", Set("query"), Set("operator", "boost"))
+      val o = opt(v, "operator")(text).getOrElse("or")
+      require(o == "or" || o == "and", s"query DSL: match operator must be and/or, got '$o'")
+      (text(v.get("query"), "match query"), o, boostOf(v))
+    } else (text(v, "match value"), "or", 1.0)
 
   /** ES wildcard → SQL LIKE: `*`→`%`, `?`→`_`; literal `%`/`_`/`\` escaped
     * (backslash in the pattern is treated literally — the compiler does not
@@ -301,10 +362,7 @@ object QueryDsl {
   }
 
   private def clauseList(body: JsonNode, key: String)(implicit cat: Catalog): Seq[Compiled] =
-    Option(body.get(key)).toSeq.flatMap { n =>
-      val items = if (n.isArray) n.elements().asScala.toSeq else Seq(n)
-      items.map(compile)
-    }
+    Option(body.get(key)).toSeq.flatMap(oneOrMany(_, key)).map(compile)
 
   /** Compile one ES query clause to (predicate, constant-score). */
   def compile(q: JsonNode)(implicit cat: Catalog): Compiled = {
@@ -319,64 +377,53 @@ object QueryDsl {
         val keys = body.fieldNames().asScala.toSeq.filterNot(_ == "boost")
         require(keys.size == 1, s"query DSL: terms requires exactly one field, got $keys")
         val f = checkField(keys.head)
-        val arr = body.get(f)
-        require(arr.isArray && arr.size > 0, "query DSL: terms requires a non-empty array")
-        val vs = arr.elements().asScala.toSeq.map(typedLit(f, _))
+        val vs = items(body.get(f), "terms values").map(typedLit(f, _))
+        require(vs.nonEmpty, "query DSL: terms requires a non-empty array")
         leaf(col(f).isNotNull && col(f).isin(vs: _*), boostOf(body))
 
       case "range" =>
         val (f, spec) = sole(body, "range")
         checkField(f)
-        require(spec.isObject, s"query DSL: range body must be an object, got $spec")
+        obj(spec, "range", Set.empty, Set("gte", "gt", "lte", "lt", "boost"))
         val ops = spec.fieldNames().asScala.toSeq.filterNot(_ == "boost")
         require(ops.nonEmpty, "query DSL: range requires at least one bound")
-        val preds = ops.map {
-          case "gte" => col(f) >= typedLit(f, spec.get("gte"))
-          case "gt" => col(f) > typedLit(f, spec.get("gt"))
-          case "lte" => col(f) <= typedLit(f, spec.get("lte"))
-          case "lt" => col(f) < typedLit(f, spec.get("lt"))
-          case o => throw new IllegalArgumentException(s"query DSL: unsupported range op '$o'")
+        val preds = ops.map { o =>
+          val v = typedLit(f, spec.get(o))
+          o match {
+            case "gte" => col(f) >= v
+            case "gt" => col(f) > v
+            case "lte" => col(f) <= v
+            case "lt" => col(f) < v
+          }
         }
         leaf(col(f).isNotNull && preds.reduce(_ && _), boostOf(spec))
 
       case "exists" =>
-        require(body.isObject && body.has("field"), "query DSL: exists requires 'field'")
-        val f = checkField(body.get("field").asText)
+        obj(body, "exists", Set("field"), Set("boost"))
+        val f = checkField(text(body.get("field"), "exists field"))
         leaf(col(f).isNotNull, boostOf(body))
 
       case "ids" =>
-        require(body.isObject && body.has("values"), "query DSL: ids requires 'values'")
-        val arr = body.get("values")
-        require(arr.isArray && arr.size > 0, "query DSL: ids requires a non-empty array")
+        obj(body, "ids", Set("values"), Set("boost"))
         checkField("doc_id") // ids addresses the corpus identity column
-        val vs = arr.elements().asScala.toSeq.map(typedLit("doc_id", _))
+        val vs = items(body.get("values"), "ids values").map(typedLit("doc_id", _))
+        require(vs.nonEmpty, "query DSL: ids requires a non-empty array")
         leaf(col("doc_id").isNotNull && col("doc_id").isin(vs: _*), boostOf(body))
 
       case "prefix" =>
         val (f, v, b) = valueForm(body, "prefix")
         stringField(f, "prefix")
-        require(v.isTextual, s"query DSL: prefix value must be a string, got $v")
-        leaf(col(f).isNotNull && col(f).like(prefixToLike(v.asText)), b)
+        leaf(col(f).isNotNull && col(f).like(prefixToLike(text(v, "prefix value"))), b)
 
       case "wildcard" =>
         val (f, v, b) = valueForm(body, "wildcard")
         stringField(f, "wildcard")
-        require(v.isTextual, s"query DSL: wildcard value must be a string, got $v")
-        leaf(col(f).isNotNull && col(f).like(wildcardToLike(v.asText)), b)
+        leaf(col(f).isNotNull && col(f).like(wildcardToLike(text(v, "wildcard value"))), b)
 
       case "match" =>
         val (f, v) = sole(body, "match")
         stringField(f, "match")
-        val (qstr, op, b) =
-          if (v.isObject) {
-            require(v.has("query"), "query DSL: match object form requires 'query'")
-            val o = if (v.has("operator")) v.get("operator").asText else "or"
-            require(o == "or" || o == "and", s"query DSL: match operator must be and/or, got '$o'")
-            (v.get("query").asText, o, boostOf(v))
-          } else {
-            require(v.isTextual, s"query DSL: match value must be a string, got $v")
-            (v.asText, "or", 1.0)
-          }
+        val (qstr, op, b) = matchValue(v)
         val qtoks = analyze(qstr)
         require(qtoks.nonEmpty, "query DSL: match requires a non-empty query string")
         val contains = cat.analyzed.get(f) match {
@@ -402,14 +449,12 @@ object QueryDsl {
           (if (op == "and") contains.reduce(_ && _) else contains.reduce(_ || _)), b)
 
       case "match_all" =>
-        require(body.isObject, s"query DSL: match_all body must be an object, got $body")
+        obj(body, "match_all", Set.empty, Set("boost"))
         Compiled(lit(true), lit(boostOf(body)))
 
       case "bool" =>
-        require(body.isObject, s"query DSL: bool body must be an object, got $body")
-        val known = Set("must", "filter", "should", "must_not", "minimum_should_match", "boost")
-        val unknown = body.fieldNames().asScala.toSeq.filterNot(known)
-        require(unknown.isEmpty, s"query DSL: unsupported bool keys: $unknown")
+        obj(body, "bool", Set.empty,
+          Set("must", "filter", "should", "must_not", "minimum_should_match", "boost"))
         val must = clauseList(body, "must")
         val filt = clauseList(body, "filter")
         val mustNot = clauseList(body, "must_not")
@@ -417,11 +462,7 @@ object QueryDsl {
         // ES default: should is optional when must/filter anchor the query,
         // required (>=1) when it is the only positive context
         val msmDefault = if (must.nonEmpty || filt.nonEmpty) 0 else 1
-        val msmRaw = Option(body.get("minimum_should_match")).map { m =>
-          require(m.isIntegralNumber,
-            s"query DSL: minimum_should_match must be an integer, got $m")
-          m.asInt
-        }.getOrElse(msmDefault)
+        val msmRaw = opt(body, "minimum_should_match")(int).getOrElse(msmDefault)
         // ES's negative form: "the total is equal to the number of optional
         // clauses minus this number" — a raw negative value would otherwise
         // compile to a vacuously-true nShould >= negative and silently
@@ -451,13 +492,13 @@ object QueryDsl {
         Compiled(pred, when(pred, lit(boostOf(body)) * childSum).otherwise(lit(0.0)))
 
       case "constant_score" =>
-        require(body.isObject && body.has("filter"), "query DSL: constant_score requires 'filter'")
+        obj(body, "constant_score", Set("filter"), Set("boost"))
         val inner = compile(body.get("filter"))
         leaf(inner.pred, boostOf(body))
 
       case "wrapper" =>
-        require(body.isObject && body.has("query"), "query DSL: wrapper requires 'query'")
-        val b64 = body.get("query").asText
+        obj(body, "wrapper", Set("query"))
+        val b64 = text(body.get("query"), "wrapper query")
         val decoded =
           try new String(Base64.getDecoder.decode(b64), "UTF-8")
           catch {
@@ -490,32 +531,51 @@ object QueryDsl {
       .select((col("rank") +: col("score") +: src.map(col)): _*)
   }
 
+  /** The page envelope: (`from` default 0, `size` default 10). */
+  private def fromSize(body: JsonNode): (Int, Int) = {
+    val from = opt(body, "from")(int).getOrElse(0)
+    val size = opt(body, "size")(int).getOrElse(10)
+    require(from >= 0 && size > 0 && from.toLong + size <= Int.MaxValue,
+      s"query DSL: bad page from=$from size=$size")
+    (from, size)
+  }
+
+  /** The `sort` entries as (field, ascending): `{"f": "asc"}` or
+    * `{"f": {"order": "desc"}}`; fields are checked by the caller. */
+  private def sortKeys(body: JsonNode): Seq[(String, Boolean)] =
+    items(body.get("sort"), "sort").map { s =>
+      val (f, spec) = sole(s, "sort entry")
+      val order =
+        if (spec.isObject) text(obj(spec, "sort entry", Set("order")).get("order"), "sort order")
+        else text(spec, "sort order")
+      require(order == "asc" || order == "desc", s"query DSL: sort order must be asc/desc, got '$order'")
+      (f, order == "asc")
+    }
+
+  /** The `_source` field list (default: doc_id). */
+  private def sourceList(body: JsonNode): Seq[String] =
+    opt(body, "_source")(texts).map { fs =>
+      require(fs.nonEmpty, "query DSL: _source must list at least one field")
+      fs
+    }.getOrElse(Seq("doc_id"))
+
   /** The distributed part of [[search]] — everything up to (excluding) the
     * coordinator materialization — exposed so PlanSpec can gate its shape
     * (filter pushed below the scan, TakeOrdered page, no shuffle). */
   private[graft] def pageQuery(docs0: DataFrame, body: JsonNode,
       analyzed: Map[String, String] = Map.empty)
       : (DataFrame, Seq[Column], Int, Seq[String]) = {
-    require(body.has("query"), "query DSL: search body requires 'query'")
+    obj(body, "search body", Set("query"),
+      Set("sort", "from", "size", "_source", "search_after", "runtime_mappings"))
     val (docs, rtSet) = applyRuntimeMappings(docs0, body)
     implicit val cat: Catalog =
       checkedAnalyzed(catalogOf(docs0).withRuntime(rtSet), docs0, analyzed)
     val c = compile(body.get("query"))
-    val from = if (body.has("from")) body.get("from").asInt else 0
-    val size = if (body.has("size")) body.get("size").asInt else 10
-    require(from >= 0 && size > 0, s"query DSL: bad page from=$from size=$size")
+    val (from, size) = fromSize(body)
     val explicit: Seq[(String, Boolean)] = // (field, asc)
-      if (body.has("sort")) body.get("sort").elements().asScala.toSeq.map { s =>
-        val (f, spec) = sole(s, "sort entry")
-        val order =
-          if (spec.isTextual) spec.asText
-          else {
-            require(spec.isObject && spec.has("order"), s"query DSL: sort entry needs an order: $s")
-            spec.get("order").asText
-          }
-        require(order == "asc" || order == "desc", s"query DSL: sort order must be asc/desc, got '$order'")
+      if (body.has("sort")) sortKeys(body).map { case (f, asc) =>
         if (f != "_score") checkField(f)
-        (f, order == "asc")
+        (f, asc)
       }
       else Seq(("_score", false))
     // `search_after`: ES's deep-paging form (from/size deep pages re-sort
@@ -526,15 +586,13 @@ object QueryDsl {
     // scan like scroll's. Requires an explicit field sort including the
     // doc_id tiebreak (totality) and non-null sort fields (the scroll
     // contract — a null cursor comparison silently drops the tail).
-    val afterPred: Option[Column] = Option(body.get("search_after")).map { sa =>
-      require(sa.isArray, "query DSL: search_after must be an array of sort values")
+    val afterPred: Option[Column] = opt(body, "search_after")(items).map { vals =>
       require(body.has("sort"), "query DSL: search_after requires an explicit sort")
       require(!explicit.exists(_._1 == "_score"),
         "query DSL: search_after pages on field sorts (relevance paging is the typed q84 surface)")
       require(explicit.exists(_._1 == "doc_id"),
         "query DSL: search_after requires the unique doc_id tiebreak in the sort")
       require(from == 0, "query DSL: search_after and from are mutually exclusive")
-      val vals = sa.elements().asScala.toSeq
       require(vals.size == explicit.size,
         s"query DSL: search_after carries ${vals.size} values for ${explicit.size} sort fields")
       val typed = explicit.zip(vals).map { case ((f, asc), v) => (f, asc, typedLit(f, v)) }
@@ -551,10 +609,7 @@ object QueryDsl {
       val cc = if (f == "_score") col("score") else col(f)
       if (asc) cc.asc else cc.desc
     }
-    val src: Seq[String] =
-      if (body.has("_source")) body.get("_source").elements().asScala.toSeq.map(_.asText)
-      else Seq("doc_id")
-    src.foreach(checkField)
+    val src = sourceList(body).map(checkField)
     // prune before the page fetch: only _source + sort fields + score reach
     // the coordinator (a filter on `text` must not DRAG text into the page)
     val need = (src ++ keys.map(_._1).filter(_ != "_score")).distinct
@@ -567,7 +622,7 @@ object QueryDsl {
     * count response (relation "eq": this engine never early-terminates). */
   def count(docs0: DataFrame, body: JsonNode,
       analyzed: Map[String, String] = Map.empty): DataFrame = {
-    require(body.has("query"), "query DSL: count body requires 'query'")
+    obj(body, "count body", Set("query"), Set("runtime_mappings"))
     val (docs, rtSet) = applyRuntimeMappings(docs0, body)
     implicit val cat: Catalog =
       checkedAnalyzed(catalogOf(docs0).withRuntime(rtSet), docs0, analyzed)
@@ -616,52 +671,35 @@ object QueryDsl {
     * orderBy+limit = TakeOrderedAndProject over it; only the ≤from+size
     * page joins back for projection/highlighting. */
   def searchScored(docs: DataFrame, body: JsonNode, rel: Relevance): DataFrame = {
-    require(body.has("query"), "query DSL: search body requires 'query'")
+    obj(body, "search body", Set("query"), Set("sort", "from", "size", "_source", "highlight"))
     val (qtype, qbody) = sole(body.get("query"), "query clause")
     implicit val cat: Catalog = catalogOf(docs)
     // ----- the full-text clause -----
     val (scoreTable, matchField, terms) = qtype match {
       case "match" =>
         val (f, v) = sole(qbody, "match")
-        val (qstr, op) =
-          if (v.isObject) {
-            require(v.has("query"), "query DSL: match object form requires 'query'")
-            val o = if (v.has("operator")) v.get("operator").asText else "or"
-            require(o == "or" || o == "and", s"query DSL: match operator must be and/or, got '$o'")
-            (v.get("query").asText, o)
-          } else {
-            require(v.isTextual, s"query DSL: match value must be a string, got $v")
-            (v.asText, "or")
-          }
+        val (qstr, op, boost) = matchValue(v)
+        require(boost == 1.0, "query DSL: query-context match ranks by BM25 alone; drop its boost")
         val ts = analyze(qstr)
         require(ts.nonEmpty, "query DSL: match requires a non-empty query string")
         val st0 = rel.matchScorer(f, ts)
         val st = if (op == "and") st0.filter(col("n_terms_hit") === lit(ts.distinct.size)) else st0
         (st.select(col("doc_id"), col("score")), Some(f), ts)
       case "multi_match" =>
-        require(qbody.isObject && qbody.has("query") && qbody.has("fields"),
-          "query DSL: multi_match requires query + fields")
-        val known = Set("query", "fields", "type", "tie_breaker")
-        val unknown = qbody.fieldNames().asScala.toSeq.filterNot(known)
-        require(unknown.isEmpty, s"query DSL: unsupported multi_match keys: $unknown")
-        val mtype = Option(qbody.get("type")).map(_.asText).getOrElse("best_fields")
+        obj(qbody, "multi_match", Set("query", "fields"), Set("type", "tie_breaker"))
+        val mtype = opt(qbody, "type")(text).getOrElse("best_fields")
         require(Set("best_fields", "most_fields", "phrase", "cross_fields")(mtype),
           s"query DSL: unsupported multi_match type '$mtype' " +
             "(supported: best_fields, most_fields, phrase, cross_fields)")
-        val tb = Option(qbody.get("tie_breaker")).map { n =>
-          require(n.isNumber, s"query DSL: tie_breaker must be a number, got $n")
-          n.asDouble
-        }.getOrElse(0.0)
-        val fields = qbody.get("fields").elements().asScala.toSeq.map { fn =>
-          require(fn.isTextual, s"query DSL: multi_match fields must be strings, got $fn")
-          fn.asText.split("\\^") match {
+        val tb = opt(qbody, "tie_breaker")(double).getOrElse(0.0)
+        val fields = texts(qbody.get("fields"), "multi_match fields").map { fn =>
+          fn.split("\\^") match {
             case Array(f) => (f, 1.0)
-            case Array(f, bs) => (f, bs.toDouble)
-            case _ => throw new IllegalArgumentException(
-              s"query DSL: bad multi_match field spec '${fn.asText}'")
+            case Array(f, bs) if bs.toDoubleOption.exists(java.lang.Double.isFinite) => (f, bs.toDouble)
+            case _ => throw new IllegalArgumentException(s"query DSL: bad multi_match field spec '$fn'")
           }
         }
-        val ts = analyze(qbody.get("query").asText)
+        val ts = analyze(text(qbody.get("query"), "multi_match query"))
         require(ts.nonEmpty, "query DSL: multi_match requires a non-empty query string")
         (rel.multiMatchScorer(fields, ts, tb, mtype), None, ts)
       case other =>
@@ -670,21 +708,11 @@ object QueryDsl {
             "(filter-context bodies go through search())")
     }
     // ----- envelope -----
-    val from = if (body.has("from")) body.get("from").asInt else 0
-    val size = if (body.has("size")) body.get("size").asInt else 10
-    require(from >= 0 && size > 0, s"query DSL: bad page from=$from size=$size")
-    if (body.has("sort")) {
-      val entries = body.get("sort").elements().asScala.toSeq.map(sole(_, "sort entry"))
-      val scoreDesc = entries.map { case (f, spec) =>
-        (f, if (spec.isTextual) spec.asText else Option(spec.get("order")).map(_.asText).getOrElse(""))
-      }
-      require(scoreDesc == Seq(("_score", "desc")),
+    val (from, size) = fromSize(body)
+    if (body.has("sort"))
+      require(sortKeys(body) == Seq(("_score", false)),
         "query DSL: query-context search ranks by _score desc (field sorts are filter-context)")
-    }
-    val src: Seq[String] =
-      if (body.has("_source")) body.get("_source").elements().asScala.toSeq.map(_.asText)
-      else Seq("doc_id")
-    src.foreach(checkField)
+    val src = sourceList(body).map(checkField)
     val hl: Option[String] = Option(body.get("highlight")).map { h =>
       // the highlight response is the fragment payload (rank, doc_id,
       // frag_pos, fragment) — a _source projection would be silently
@@ -692,9 +720,10 @@ object QueryDsl {
       // unsupported combination)
       require(!body.has("_source"),
         "query DSL: highlight returns the fragment payload — a _source list is not projected; drop it")
-      require(h.isObject && h.has("fields") && h.get("fields").isObject
-        && h.get("fields").size == 1, "query DSL: highlight requires exactly one field")
-      val hf = h.get("fields").fieldNames().next()
+      val hfs = entries(obj(h, "highlight", Set("fields")).get("fields"), "highlight fields")
+      require(hfs.size == 1, "query DSL: highlight requires exactly one field")
+      val (hf, options) = hfs.head
+      obj(options, s"highlight field '$hf'", Set.empty)
       require(matchField.contains(hf),
         s"query DSL: highlight field '$hf' must be the match query's field")
       hf
@@ -732,30 +761,18 @@ object QueryDsl {
     * execution lives in [[SimilarityQueries.dslKnn]] — the compiler owns
     * the wire grammar, the engine owns the IVF search. */
   def knnClauses(body: JsonNode): Seq[KnnClause] = {
-    require(body.has("knn"), "query DSL: knn search requires a 'knn' section")
-    val extra = body.fieldNames().asScala.toSeq.filterNot(_ == "knn")
-    require(extra.isEmpty, s"query DSL: unsupported keys next to knn: $extra")
-    val kn = body.get("knn")
-    val items = if (kn.isArray) kn.elements().asScala.toSeq else Seq(kn)
-    require(items.nonEmpty, "query DSL: knn requires at least one clause")
-    items.map { c =>
-      require(c.isObject, s"query DSL: knn clause must be an object, got $c")
-      val known = Set("field", "k", "num_candidates", "query_vector", "filter")
-      val unknown = c.fieldNames().asScala.toSeq.filterNot(known)
-      require(unknown.isEmpty, s"query DSL: unsupported knn keys: $unknown")
-      require(c.has("field") && c.has("k") && c.has("num_candidates") && c.has("query_vector"),
-        "query DSL: knn clause requires field, k, num_candidates, query_vector")
-      val k = c.get("k").asInt
-      val nc = c.get("num_candidates").asInt
+    obj(body, "knn search", Set("knn"))
+    val clauses = oneOrMany(body.get("knn"), "knn")
+    require(clauses.nonEmpty, "query DSL: knn requires at least one clause")
+    clauses.map { c =>
+      obj(c, "knn clause", Set("field", "k", "num_candidates", "query_vector"), Set("filter"))
+      val k = int(c.get("k"), "knn k")
+      val nc = int(c.get("num_candidates"), "knn num_candidates")
       require(k > 0 && nc >= k,
         s"query DSL: knn requires k > 0 and num_candidates >= k, got k=$k num_candidates=$nc")
-      val qv = c.get("query_vector")
-      require(qv.isArray && qv.size > 0, "query DSL: query_vector must be a non-empty array")
-      val vec = qv.elements().asScala.toSeq.map { n =>
-        require(n.isNumber, s"query DSL: query_vector entries must be numbers, got $n")
-        n.asDouble
-      }
-      KnnClause(c.get("field").asText, k, nc, vec, Option(c.get("filter")))
+      val vec = items(c.get("query_vector"), "query_vector").map(double(_, "query_vector entry"))
+      require(vec.nonEmpty, "query DSL: query_vector must be a non-empty array")
+      KnnClause(text(c.get("field"), "knn field"), k, nc, vec, Option(c.get("filter")))
     }
   }
 
@@ -768,10 +785,7 @@ object QueryDsl {
   def msearch(docs: DataFrame, bodies: Seq[JsonNode],
       analyzed: Map[String, String] = Map.empty): DataFrame = {
     require(bodies.nonEmpty, "query DSL: _msearch requires at least one body")
-    val srcs = bodies.map { b =>
-      if (b.has("_source")) b.get("_source").elements().asScala.toSeq.map(_.asText)
-      else Seq("doc_id")
-    }
+    val srcs = bodies.map(sourceList)
     require(srcs.distinct.size == 1,
       s"query DSL: _msearch bodies must share one _source list, got $srcs")
     bodies.zipWithIndex.map { case (b, i) =>
@@ -789,18 +803,12 @@ object QueryDsl {
     * assembles in request order on the driver — exactly an ES
     * coordinator's scatter-gather. */
   def mget(docs: DataFrame, body: JsonNode): DataFrame = {
-    require(body.has("ids") && body.get("ids").isArray && body.get("ids").size > 0,
-      "query DSL: _mget requires a non-empty ids array")
-    val ids = body.get("ids").elements().asScala.toSeq.map { n =>
-      require(n.isIntegralNumber, s"query DSL: _mget ids must be integral, got $n")
-      n.asLong
-    }
+    obj(body, "_mget body", Set("ids"), Set("_source"))
+    val ids = items(body.get("ids"), "_mget ids").map(long(_, "_mget id"))
+    require(ids.nonEmpty, "query DSL: _mget requires a non-empty ids array")
     implicit val cat: Catalog = catalogOf(docs)
     checkField("doc_id")
-    val src: Seq[String] =
-      if (body.has("_source")) body.get("_source").elements().asScala.toSeq.map(_.asText)
-      else Seq("doc_id")
-    src.foreach(checkField)
+    val src = sourceList(body).map(checkField)
     val spark = docs.sparkSession
     import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
     val req = spark.createDataFrame(
@@ -844,31 +852,17 @@ object QueryDsl {
     * exclusion explicit instead of silent. */
   private def scrollSpec(docs0: DataFrame, body: JsonNode)
       : (DataFrame, Seq[(String, Boolean)], Seq[Column], Seq[String]) = {
-    require(body.has("query") && body.has("sort"),
-      "query DSL: scroll requires 'query' and an explicit 'sort'")
+    obj(body, "scroll body", Set("query", "sort"), Set("_source", "runtime_mappings"))
     val (docs, rtSet) = applyRuntimeMappings(docs0, body)
     implicit val cat: Catalog = catalogOf(docs0).withRuntime(rtSet)
     val c = compile(body.get("query"))
-    val keys: Seq[(String, Boolean)] =
-      body.get("sort").elements().asScala.toSeq.map { s =>
-        val (f, spec) = sole(s, "sort entry")
-        val order =
-          if (spec.isTextual) spec.asText
-          else {
-            require(spec.isObject && spec.has("order"), s"query DSL: sort entry needs an order: $s")
-            spec.get("order").asText
-          }
-        require(order == "asc" || order == "desc",
-          s"query DSL: sort order must be asc/desc, got '$order'")
-        require(f != "_score", "query DSL: scroll sorts on fields, not _score")
-        (checkField(f), order == "asc")
-      }
+    val keys = sortKeys(body).map { case (f, asc) =>
+      require(f != "_score", "query DSL: scroll sorts on fields, not _score")
+      (checkField(f), asc)
+    }
     require(keys.map(_._1).contains("doc_id"),
       "query DSL: scroll sort must include the unique doc_id tiebreak")
-    val src: Seq[String] =
-      if (body.has("_source")) body.get("_source").elements().asScala.toSeq.map(_.asText)
-      else Seq("doc_id")
-    src.foreach(checkField)
+    val src = sourceList(body).map(checkField)
     val sortCols = keys.map { case (f, asc) => if (asc) col(f).asc else col(f).desc }
     val proj = (keys.map(_._1) ++ src).distinct // the cursor needs the sort fields
     val notNull = keys.map { case (f, _) => col(f).isNotNull }.reduce(_ && _)
@@ -1020,25 +1014,23 @@ object QueryDsl {
     Option(body.get("runtime_mappings")) match {
       case None => (docs, Set.empty)
       case Some(rm) =>
-        require(rm.isObject && rm.size > 0,
-          "query DSL: runtime_mappings must be a non-empty object")
+        val fields = entries(rm, "runtime_mappings")
+        require(fields.nonEmpty, "query DSL: runtime_mappings must be a non-empty object")
         val base = catalogOf(docs)
         var d = docs
         val names = scala.collection.mutable.LinkedHashSet.empty[String]
-        rm.fields().asScala.foreach { e =>
-          val name = e.getKey
+        fields.foreach { case (name, spec) =>
           require(!base.has(name),
             s"query DSL: runtime field '$name' shadows a mapped field")
-          val spec = e.getValue
-          require(spec.isObject && spec.has("type") && spec.get("type").asText == "long",
+          val what = s"runtime field '$name'"
+          obj(spec, what, Set("type", "script"))
+          require(text(spec.get("type"), s"$what type") == "long",
             s"query DSL: runtime field '$name' must declare type long")
-          require(spec.has("script") && spec.get("script").isObject
-            && spec.get("script").has("source"),
-            s"query DSL: runtime field '$name' needs script.source")
+          val script = obj(spec.get("script"), s"$what script", Set("source"))
           // a script may reference earlier runtime fields (they are columns
           // of d by now and longs of the extended catalog)
           d = d.withColumn(name,
-            parseEmitScript(spec.get("script").get("source").asText)(base.withRuntime(names.toSet)))
+            parseEmitScript(text(script.get("source"), s"$what script source"))(base.withRuntime(names.toSet)))
           names += name
         }
         (d, names.toSet)
@@ -1113,11 +1105,48 @@ object QueryDsl {
 
   /** An agg-only request's one top-level aggregation: (name, agg object). */
   private def soleAgg(body: JsonNode): (String, JsonNode) = {
-    if (body.has("size"))
-      require(body.get("size").asInt == 0, "query DSL: agg-only request requires size 0")
-    require(body.has("aggs") && body.get("aggs").isObject && body.get("aggs").size == 1,
-      "query DSL: exactly one top-level aggregation expected under 'aggs'")
-    sole(body.get("aggs"), "aggs")
+    obj(body, "aggregation request", Set("aggs"), Set("size", "query"))
+    opt(body, "size")(int).foreach(n => require(n == 0, "query DSL: agg-only request requires size 0"))
+    val aggs = entries(body.get("aggs"), "aggs")
+    require(aggs.size == 1, "query DSL: exactly one top-level aggregation expected under 'aggs'")
+    aggs.head
+  }
+
+  /** Field `field` of an agg body `spec`: a column of `frame`. */
+  private def column(frame: DataFrame, spec: JsonNode, what: String): String = {
+    val f = text(spec.get("field"), s"$what field")
+    require(frame.columns.contains(f), s"query DSL: unknown field '$f'")
+    f
+  }
+
+  /** A bucket agg's (field, interval) — `field` a column of `frame`,
+    * `itvKey` a positive integral width — for the histogram and the
+    * fixed-interval date_histogram at every position. */
+  private def bucketGrid(frame: DataFrame, spec: JsonNode, what: String, itvKey: String,
+      optional: Set[String]): (String, Long) = {
+    obj(spec, what, Set("field", itvKey), optional)
+    val itv = long(spec.get(itvKey), s"$what $itvKey")
+    require(itv > 0, s"query DSL: $what $itvKey must be positive, got $itv")
+    (column(frame, spec, what), itv)
+  }
+
+  /** A terms agg's `size`: a positive count when given. */
+  private def termsSize(spec: JsonNode): Option[Int] =
+    opt(spec, "size")(int).map { n =>
+      require(n > 0, s"query DSL: terms size must be positive, got $n")
+      n
+    }
+
+  /** A bucket `order`: one `{path: asc|desc}` object or an array of them,
+    * as (path, ascending) entries; the caller checks the paths. */
+  private def orderEntries(o: JsonNode, what: String): Seq[(String, Boolean)] = {
+    val es = oneOrMany(o, what).map(sole(_, what))
+    require(es.nonEmpty, s"query DSL: $what must carry at least one entry")
+    es.map { case (path, v) =>
+      val dir = text(v, s"$what direction of '$path'")
+      require(dir == "asc" || dir == "desc", s"query DSL: order direction must be asc/desc, got '$dir'")
+      (path, dir == "asc")
+    }
   }
 
   /** The reference plugin's OWN request surface: a `_search` body whose one
@@ -1144,8 +1173,8 @@ object QueryDsl {
   def aggBody(frame: DataFrame, body: JsonNode): DataFrame = {
     val (aggName, aggNode) = soleAgg(body)
     // the agg object may carry metric sub-aggregations next to its type key
-    val typeKeys = aggNode.fieldNames().asScala.toSeq.filterNot(_ == "aggs")
-    require(aggNode.isObject && typeKeys.size == 1,
+    val typeKeys = entries(aggNode, s"aggregation '$aggName'").map(_._1).filterNot(_ == "aggs")
+    require(typeKeys.size == 1,
       s"query DSL: aggregation '$aggName' must have exactly one type key, got $typeKeys")
     val aggType = typeKeys.head
     val spec = aggNode.get(aggType)
@@ -1172,12 +1201,8 @@ object QueryDsl {
         // tree compiles to ONE grouped run (compound-key groupBy, single
         // partial-aggregated exchange — typed q04's plan), never a
         // per-bucket re-scan.
-        require(spec.isObject && spec.has("field"), "query DSL: terms agg requires field")
-        val f = spec.get("field").asText
-        require(filtered.columns.contains(f), s"query DSL: unknown field '$f'")
-        val extra = spec.fieldNames().asScala.toSeq.filterNot(Set("field", "size"))
-        require(extra.isEmpty,
-          s"query DSL: terms with a bucket sub-agg supports 'field' and 'size', got extra keys $extra")
+        obj(spec, "terms with a bucket sub-agg", Set("field"), Set("size"))
+        val f = column(filtered, spec, "terms")
         // `size` under a bucket child: the ES terms truncation — keep the
         // top-k terms by the PARENT bucket's doc_count (_count desc, key
         // asc tiebreak, the ES default order), rank data-visible (q11h's
@@ -1186,10 +1211,7 @@ object QueryDsl {
         // FULL nested series. Applied below over the one-grouped-run
         // result: the totals table is term-cardinality-sized, so ranking
         // it and broadcasting it back are both tiny.
-        val sizeOpt = Option(spec.get("size")).map { n =>
-          require(n.isIntegralNumber && n.asInt > 0, s"query DSL: bad terms size $n")
-          n.asInt
-        }
+        val sizeOpt = termsSize(spec)
         def withTermSize(res: DataFrame): DataFrame = sizeOpt match {
           case None => res
           case Some(k) =>
@@ -1204,15 +1226,12 @@ object QueryDsl {
                 res.columns.filterNot(_ == f).map(col).toSeq): _*)
         }
         val (midName, childNode) = sole(subAggs.get, "sub-aggs")
-        val childKeys = childNode.fieldNames().asScala.toSeq.sorted
         if (childNode.has("proportional_sum")) {
-          require(childKeys == Seq("proportional_sum"),
-            s"query DSL: a proportional_sum child takes no extra keys, got $childKeys")
+          obj(childNode, "a proportional_sum child", Set("proportional_sum"))
           withTermSize(ProportionalSum.runSpec(filtered,
             propSum(childNode.get("proportional_sum"), PropSumNestedKeys), Seq(col(f))))
         } else {
-          require(childKeys == Seq("date_histogram") || childKeys == Seq("aggs", "date_histogram"),
-            s"query DSL: bucket child of terms must be proportional_sum or date_histogram, got $childKeys")
+          obj(childNode, "a date_histogram child of terms", Set("date_histogram"), Set("aggs"))
           val dh = childNode.get("date_histogram")
           val grand = Option(childNode.get("aggs"))
           val isTree = grand.exists(g => g.isObject && g.size == 1 && {
@@ -1226,19 +1245,9 @@ object QueryDsl {
             // buckets under the agg's NAME, so the middle agg's key is
             // the column) and the whole tree stays ONE compound-key
             // grouped run — single partial-aggregated exchange
-            require(dh.isObject && dh.has("field") && dh.has("fixed_interval"),
-              "query DSL: date_histogram requires field + fixed_interval")
-            val bf = dh.get("field").asText
-            require(filtered.columns.contains(bf), s"query DSL: unknown field '$bf'")
-            require(dh.get("fixed_interval").isIntegralNumber && dh.get("fixed_interval").asLong > 0,
-              "query DSL: fixed_interval must be positive integral epoch-ms")
-            val itv = dh.get("fixed_interval").asLong
-            val extraDh = dh.fieldNames().asScala.toSeq.filterNot(Set("field", "fixed_interval"))
-            require(extraDh.isEmpty, s"query DSL: unsupported date_histogram keys: $extraDh")
+            val (bf, itv) = bucketGrid(filtered, dh, "date_histogram", "fixed_interval", Set.empty)
             val (_, gnode) = sole(grand.get, "sub-aggs")
-            val gkeys = gnode.fieldNames().asScala.toSeq
-            require(gkeys == Seq("proportional_sum"),
-              s"query DSL: the tree's leaf must be exactly proportional_sum, got $gkeys")
+            obj(gnode, "the tree's leaf", Set("proportional_sum"))
             val withBucket = filtered.withColumn(midName,
               (floor(col(bf) / lit(itv)) * lit(itv)).cast("long"))
             withTermSize(ProportionalSum.runSpec(withBucket,
@@ -1255,20 +1264,13 @@ object QueryDsl {
         // (ONE conditional scan, never a per-filter re-scan). The agg's
         // NAME becomes the bucket column (the ES response nests buckets
         // under the agg name — q159's convention).
-        require(spec.isObject && spec.has("filters") && spec.get("filters").isObject
-          && spec.get("filters").size > 0,
-          "query DSL: filters agg requires a non-empty named 'filters' object")
-        val extraF = spec.fieldNames().asScala.toSeq.filterNot(_ == "filters")
-        require(extraF.isEmpty,
-          s"query DSL: filters parent supports only named 'filters', got extra keys $extraF")
+        obj(spec, "filters parent", Set("filters"))
+        val filters = entries(spec.get("filters"), "filters")
+        require(filters.nonEmpty, "query DSL: filters agg requires a non-empty named 'filters' object")
         implicit val cat: Catalog = catalogOf(filtered)
-        val named = spec.get("filters").fields().asScala.toSeq.map { e =>
-          (e.getKey, compile(e.getValue).pred)
-        }
+        val named = filters.map { case (n, q) => (n, compile(q).pred) }
         val (_, fchildNode) = sole(subAggs.get, "sub-aggs")
-        val fchildKeys = fchildNode.fieldNames().asScala.toSeq.sorted
-        require(fchildKeys == Seq("proportional_sum"),
-          s"query DSL: bucket child of filters must be proportional_sum, got $fchildKeys")
+        obj(fchildNode, "bucket child of filters", Set("proportional_sum"))
         // DOCUMENTED DIVERGENCE: a named filter matching ZERO rows emits
         // no bucket here (when(p, n) is null for every row and the
         // compact+explode erases it), whereas ES's filters aggregation
@@ -1288,17 +1290,7 @@ object QueryDsl {
         // `<field>_bucket` so the door shares the typed oracle verbatim).
         // ES also allows fractional intervals/offset/min_doc_count —
         // loudly rejected until a consumer needs them.
-        require(spec.isObject && spec.has("field") && spec.has("interval"),
-          "query DSL: histogram requires field + interval")
-        val f = spec.get("field").asText
-        require(filtered.columns.contains(f), s"query DSL: unknown field '$f'")
-        require(spec.get("interval").isIntegralNumber,
-          s"query DSL: histogram interval must be integral, got ${spec.get("interval")}")
-        val itv = spec.get("interval").asLong
-        require(itv > 0, s"query DSL: histogram interval must be positive, got $itv")
-        val known = Set("field", "interval")
-        val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-        require(unknown.isEmpty, s"query DSL: unsupported histogram keys: $unknown")
+        val (f, itv) = bucketGrid(filtered, spec, "histogram", "interval", Set.empty)
         filtered
           .groupBy(((floor(col(f) / lit(itv.toDouble)) * lit(itv)).cast("long"))
             .as(s"${f}_bucket"))
@@ -1312,25 +1304,14 @@ object QueryDsl {
         // explode erases ranges matching zero rows, the same DOCUMENTED
         // divergence as the filters parent (ES answers doc_count 0).
         // Keys must be explicit (ES's auto "from-to" spellings rejected).
-        require(spec.isObject && spec.has("field") && spec.has("ranges")
-          && spec.get("ranges").isArray && spec.get("ranges").size > 0,
-          "query DSL: range agg requires field + non-empty ranges array")
-        val f = spec.get("field").asText
-        require(filtered.columns.contains(f), s"query DSL: unknown field '$f'")
-        val known = Set("field", "ranges")
-        val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-        require(unknown.isEmpty, s"query DSL: unsupported range keys: $unknown")
-        val rs = spec.get("ranges").elements().asScala.toSeq.map { r =>
-          require(r.isObject && r.has("key"),
-            "query DSL: each range requires an explicit key")
-          val extra = r.fieldNames().asScala.toSeq.filterNot(Set("key", "from", "to"))
-          require(extra.isEmpty, s"query DSL: unsupported range entry keys: $extra")
-          require(r.has("from") || r.has("to"),
-            "query DSL: a range needs from and/or to")
-          (r.get("key").asText,
-            Option(r.get("from")).map(_.asDouble),
-            Option(r.get("to")).map(_.asDouble))
+        obj(spec, "range agg", Set("field", "ranges"))
+        val f = column(filtered, spec, "range agg")
+        val rs = items(spec.get("ranges"), "range agg ranges").map { r =>
+          obj(r, "range", Set("key"), Set("from", "to"))
+          require(r.has("from") || r.has("to"), "query DSL: a range needs from and/or to")
+          (text(r.get("key"), "range key"), opt(r, "from")(double), opt(r, "to")(double))
         }
+        require(rs.nonEmpty, "query DSL: range agg requires a non-empty ranges array")
         require(rs.map(_._1).distinct.size == rs.size, "query DSL: duplicate range keys")
         filtered
           .withColumn("range_key",
@@ -1343,25 +1324,14 @@ object QueryDsl {
             metricCols(subAggs, filtered): _*)
 
       case "terms" =>
-        require(spec.isObject && spec.has("field"), "query DSL: terms agg requires field")
-        val f = spec.get("field").asText
-        require(filtered.columns.contains(f), s"query DSL: unknown field '$f'")
-        val size = Option(spec.get("size")).map { n =>
-          require(n.isIntegralNumber && n.asInt > 0, s"query DSL: bad terms size $n")
-          n.asInt
-        }.getOrElse(10)
-        val byCount = Option(spec.get("order")).forall { o =>
-          val (k, v) = sole(o, "terms order")
-          (k, v.asText) match {
-            case ("_count", "desc") => true
-            case ("_key", "asc") => false
-            case other =>
-              throw new IllegalArgumentException(s"query DSL: unsupported terms order $other")
-          }
+        obj(spec, "terms agg", Set("field"), Set("size", "order"))
+        val f = column(filtered, spec, "terms")
+        val size = termsSize(spec).getOrElse(10)
+        val byCount = opt(spec, "order")(orderEntries).forall {
+          case Seq(("_count", false)) => true
+          case Seq(("_key", true)) => false
+          case other => throw new IllegalArgumentException(s"query DSL: unsupported terms order $other")
         }
-        val known = Set("field", "size", "order")
-        val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-        require(unknown.isEmpty, s"query DSL: unsupported terms keys: $unknown")
         val grouped = filtered.groupBy(col(f))
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("doc_count"), metricCols(subAggs, filtered): _*)
         val ordered =
@@ -1380,17 +1350,7 @@ object QueryDsl {
     * map-side — never a per-bucket re-scan). */
   private def dateHistogramAgg(frame: DataFrame, spec: JsonNode,
       subAggs: Option[JsonNode], groupCols: Seq[Column]): DataFrame = {
-    require(spec.isObject && spec.has("field") && spec.has("fixed_interval"),
-      "query DSL: date_histogram requires field + fixed_interval")
-    val f = spec.get("field").asText
-    require(frame.columns.contains(f), s"query DSL: unknown field '$f'")
-    require(spec.get("fixed_interval").isIntegralNumber,
-      "query DSL: fixed_interval must be integral epoch-ms")
-    val itv = spec.get("fixed_interval").asLong
-    require(itv > 0, "query DSL: fixed_interval must be positive")
-    val known = Set("field", "fixed_interval", "order")
-    val unknown = spec.fieldNames().asScala.toSeq.filterNot(known)
-    require(unknown.isEmpty, s"query DSL: unsupported date_histogram keys: $unknown")
+    val (f, itv) = bucketGrid(frame, spec, "date_histogram", "fixed_interval", Set("order"))
     // the q10 bucket recipe verbatim: floor(ms / interval) * interval
     val agged = frame
       .groupBy((groupCols :+ (floor(col(f) / lit(itv)) * lit(itv)).as("bucket_ms")): _*)
@@ -1404,18 +1364,12 @@ object QueryDsl {
     // tiebreak; unknown paths are loud. Nested (terms-parent) runs keep
     // their own presentation — order there is rejected, not silently
     // dropped.
-    Option(spec.get("order")).map { o =>
+    opt(spec, "order")(orderEntries).map { order =>
       require(groupCols.isEmpty,
         "query DSL: date_histogram order under a bucket parent is not supported")
       val metricNames: Set[String] = subAggs.map(sa =>
         sa.fieldNames().asScala.toSet).getOrElse(Set.empty)
-      val entries = (if (o.isArray) o.elements().asScala.toSeq else Seq(o))
-        .map(sole(_, "order"))
-      require(entries.nonEmpty, "query DSL: order must carry at least one entry")
-      val sortCols = entries.map { case (k, v) =>
-        val dir = v.asText
-        require(dir == "asc" || dir == "desc",
-          s"query DSL: order direction must be asc/desc, got '$dir'")
+      val sortCols = order.map { case (k, asc) =>
         val c = k match {
           case "_key" => col("bucket_ms")
           case "_count" => col("doc_count")
@@ -1427,7 +1381,7 @@ object QueryDsl {
                 s"(declared: ${metricNames.toSeq.sorted.mkString(", ")})")
             col(name)
         }
-        if (dir == "asc") c.asc else c.desc
+        if (asc) c.asc else c.desc
       } :+ col("bucket_ms").asc
       import org.apache.spark.sql.expressions.Window
       // bucket-grid-sized window (the q01k single-partition argument)
@@ -1451,14 +1405,12 @@ object QueryDsl {
     subAggs match {
       case None => Nil
       case Some(sa) =>
-        require(sa.isObject && sa.size > 0, "query DSL: empty sub-aggs object")
-        sa.fields().asScala.toSeq.map { e =>
-          val name = e.getKey
-          val (mType, mSpec) = sole(e.getValue, s"metric sub-agg '$name'")
-          require(mSpec.isObject && mSpec.has("field"),
-            s"query DSL: metric '$name' requires a field")
-          val f = mSpec.get("field").asText
-          require(frame.columns.contains(f), s"query DSL: unknown metric field '$f'")
+        val metrics = entries(sa, "sub-aggs")
+        require(metrics.nonEmpty, "query DSL: empty sub-aggs object")
+        metrics.map { case (name, m) =>
+          val (mType, mSpec) = sole(m, s"metric sub-agg '$name'")
+          obj(mSpec, s"metric '$name'", Set("field"))
+          val f = column(frame, mSpec, s"metric '$name'")
           mType match {
             case "sum" => graft.functions.detsum.sumDet(col(f)).as(name)
             case "min" => min(col(f)).as(name)
@@ -1502,70 +1454,53 @@ object QueryDsl {
     *     table; any other order emits the data-visible `order_rank`;
     *   - `missing` (declareCommon, builder:102): per-field substitutes. */
   private def propSum(spec: JsonNode, keys: Set[String]): ProportionalSum.Spec = {
-    require(spec.isObject && spec.has("fields") && spec.get("fields").isArray,
-      "query DSL: proportional_sum requires a fields array")
-    val unknown = spec.fieldNames().asScala.toSeq.filterNot(keys)
-    require(unknown.isEmpty, s"query DSL: unsupported proportional_sum keys here: $unknown " +
-      s"(accepted: ${keys.toSeq.sorted.mkString(", ")})")
-    val fs = spec.get("fields").elements().asScala.toSeq.map(_.asText)
+    obj(spec, "proportional_sum", Set("fields"), keys)
+    val fs = texts(spec.get("fields"), "proportional_sum fields")
     require(fs.size == 3 || fs.size == 4,
       s"query DSL: fields must be [start, end, value(, sampling)], got $fs")
-    def longOpt(k: String): Option[Long] = Option(spec.get(k)).map { n =>
-      require(n.isIntegralNumber, s"query DSL: $k must be an integral number, got $n")
-      n.asLong
-    }
     // `interval` carries the builder's FULL legacy grammar (integral ms, a
     // DATE_FIELD_UNITS calendar spelling like "1M", or a fixed TimeValue
     // like "90m" — builder:104-116); `calendar_interval` stays the
     // explicit calendar key. Exactly one of the two.
-    val legacyInterval: Option[Either[String, Long]] = Option(spec.get("interval")).map { n =>
-      if (n.isIntegralNumber) {
-        require(n.asLong > 0, s"query DSL: interval must be positive, got $n")
-        Right(n.asLong)
-      } else if (n.isTextual) {
-        val parsed = parseIntervalString(n.asText)
+    val legacyInterval: Option[Either[String, Long]] = opt(spec, "interval") { (n, k) =>
+      if (n.isTextual) {
+        val parsed = parseIntervalString(n.textValue)
         require(parsed.isRight || keys("calendar_interval"),
-          s"query DSL: proportional_sum takes fixed intervals only here, got calendar '${n.asText}'")
+          s"query DSL: proportional_sum takes fixed intervals only here, got calendar '${n.textValue}'")
         parsed
-      } else throw new IllegalArgumentException(
-        s"query DSL: interval must be integral ms or an interval string, got $n")
+      } else {
+        val ms = long(n, s"$k (ms, or an interval string)")
+        require(ms > 0, s"query DSL: interval must be positive, got $ms")
+        Right(ms)
+      }
     }
-    val calKey: Option[String] = Option(spec.get("calendar_interval")).map { n =>
-      require(n.isTextual, s"query DSL: calendar_interval must be a string, got $n")
-      n.asText
-    }
+    val calKey = opt(spec, "calendar_interval")(text)
     require(legacyInterval.isDefined ^ calKey.isDefined,
       "query DSL: proportional_sum requires exactly one of interval / calendar_interval")
-    val startMs = longOpt("start")
-    val endMs = longOpt("end")
+    val startMs = opt(spec, "start")(long)
+    val endMs = opt(spec, "end")(long)
     // offset: integral ms or the "+6h"/"-30m" string form (builder:118-124)
-    val offsetMs = Option(spec.get("offset")).map { n =>
-      if (n.isIntegralNumber) n.asLong
-      else if (n.isTextual) parseStringOffset(n.asText)
-      else throw new IllegalArgumentException(
-        s"query DSL: offset must be integral ms or a time-value string, got $n")
+    val offsetMs = opt(spec, "offset") { (n, k) =>
+      if (n.isTextual) parseStringOffset(n.textValue) else long(n, s"$k (ms, or a time-value string)")
     }.getOrElse(0L)
     val cfg = calKey.map(Left(_)).getOrElse(legacyInterval.get) match {
       case Left(unit) => ProportionalSum.calendar(unit, startMs, endMs, offsetMs)
       case Right(itv) => ProportionalSum.Config(itv, startMs, endMs, offsetMs)
     }
-    val minDoc = longOpt("min_doc_count").getOrElse(0L)
+    val minDoc = opt(spec, "min_doc_count")(long).getOrElse(0L)
     require(minDoc >= 0, s"query DSL: min_doc_count must be non-negative, got $minDoc")
-    val extBounds: Option[(Long, Long)] = Option(spec.get("extended_bounds")).map { eb =>
-      require(eb.isObject && eb.has("min") && eb.has("max"),
-        s"query DSL: extended_bounds requires min + max, got $eb")
+    val extBounds: Option[(Long, Long)] = opt(spec, "extended_bounds") { (eb, k) =>
+      obj(eb, k, Set("min", "max"))
       // LongBounds.PARSER (builder:130-131) also accepts FORMATTED DATE
       // STRINGS for min/max — the Grafana/Kibana spelling. Accepted here
       // for the same whitelisted formats the `format` knob proves DuckDB
       // mirrors for; parsed driver-side (UTC) to the identical epoch-ms
       // the integral spelling carries, so the oracle is unchanged.
       // Anything unparseable is loud, never silently approximated.
-      def boundMs(k: String): Long = {
-        val n = eb.get(k)
-        if (n.isIntegralNumber) n.asLong
-        else if (n.isTextual) parseBoundDateMs(n.asText, k)
-        else throw new IllegalArgumentException(
-          s"query DSL: extended_bounds $k must be integral ms or a whitelisted date string, got $n")
+      def boundMs(b: String): Long = {
+        val n = eb.get(b)
+        if (n.isTextual) parseBoundDateMs(n.textValue, b)
+        else long(n, s"extended_bounds $b (ms, or a whitelisted date string)")
       }
       val (mn, mx) = (boundMs("min"), boundMs("max"))
       require(mn <= mx, s"query DSL: extended_bounds min $mn > max $mx")
@@ -1578,33 +1513,21 @@ object QueryDsl {
     // order params, compounded via InternalOrder/CompoundOrder :333).
     // Paths: _key (bucket_ms), _count (doc_count), _value (the sum —
     // the reference's single value path); each asc/desc.
-    val order: Seq[(String, Boolean)] = Option(spec.get("order")).map { o =>
-      val entries = (if (o.isArray) o.elements().asScala.toSeq else Seq(o)).map(sole(_, "order"))
-      require(entries.nonEmpty, "query DSL: order must carry at least one entry")
-      entries.map { case (k, v) =>
-        require(Set("_key", "_count", "_value")(k),
-          s"query DSL: unsupported order path '$k' (supported: _key, _count, _value)")
-        val dir = v.asText
-        require(dir == "asc" || dir == "desc",
-          s"query DSL: order direction must be asc/desc, got '$dir'")
-        (k, dir == "asc")
-      }
-    }.getOrElse(Nil)
-    val keyed = Option(spec.get("keyed")).exists { n =>
-      require(n.isBoolean, s"query DSL: keyed must be a boolean, got $n")
-      n.asBoolean
+    val order = opt(spec, "order")(orderEntries).getOrElse(Nil)
+    order.foreach { case (k, _) =>
+      require(Set("_key", "_count", "_value")(k),
+        s"query DSL: unsupported order path '$k' (supported: _key, _count, _value)")
     }
+    val keyed = opt(spec, "keyed")(bool).getOrElse(false)
     // `format` (declareCommon, builder:102): the keyed response's object-
     // key pattern. A WHITELIST of patterns with known cross-engine
     // mirrors — a format this engine can't prove against the oracle's
     // strftime is loudly rejected rather than silently approximated.
-    val keyFmt = Option(spec.get("format")).map { n =>
-      require(n.isTextual, s"query DSL: format must be a string, got $n")
+    val keyFmt = opt(spec, "format")(text).map { fmt =>
       require(keyed, "query DSL: format renders the keyed object key — requires keyed: true")
       val supported = Set(ProportionalSum.IsoKeyFormat, "yyyy-MM-dd HH:mm", "yyyy-MM-dd")
-      require(supported(n.asText),
-        s"query DSL: unsupported format '${n.asText}' (supported: ${supported.mkString(", ")})")
-      n.asText
+      require(supported(fmt), s"query DSL: unsupported format '$fmt' (supported: ${supported.mkString(", ")})")
+      fmt
     }.getOrElse(ProportionalSum.IsoKeyFormat)
     // per-field `missing` (declareCommon's values-source substitution,
     // builder:102): a doc missing a mapped field CONTRIBUTES with the
@@ -1612,15 +1535,12 @@ object QueryDsl {
     // skip). Value/sampling fields only: a missing range endpoint has no
     // meaningful substitute semantics in this engine and stays the skip —
     // loud, not silent.
-    val missing = Option(spec.get("missing")).toSeq.flatMap { m =>
-      require(m.isObject && m.size > 0,
-        "query DSL: missing must be a non-empty {field: value} object")
-      m.fields().asScala.toSeq.map { e =>
-        val f = e.getKey
+    val missing = opt(spec, "missing")(entries).toSeq.flatMap { m =>
+      require(m.nonEmpty, "query DSL: missing must be a non-empty {field: value} object")
+      m.map { case (f, v) =>
         require(fs.drop(2).contains(f),
           s"query DSL: missing supports the value/sampling fields ${fs.drop(2)}, got '$f'")
-        require(e.getValue.isNumber, s"query DSL: missing value for '$f' must be a number, got ${e.getValue}")
-        (f, e.getValue.asDouble)
+        (f, double(v, s"missing value for '$f'"))
       }
     }
     ProportionalSum.Spec(fs, cfg, minDoc, extBounds, order, if (keyed) Some(keyFmt) else None, missing)
@@ -1633,9 +1553,9 @@ object QueryDsl {
     * ([[graft.streaming.FlowStream.runAppendMode]]) owns the watermarked
     * execution. */
   def streamingPropSum(body: JsonNode): ProportionalSum.Spec = {
+    require(!body.has("query"), "query DSL: the streaming door takes no query section")
     val (_, aggNode) = soleAgg(body)
-    require(aggNode.isObject && aggNode.size == 1 && aggNode.has("proportional_sum"),
-      s"query DSL: streaming agg body must be exactly proportional_sum, got $aggNode")
+    obj(aggNode, "streaming agg", Set("proportional_sum"))
     propSum(aggNode.get("proportional_sum"), PropSumStreamKeys)
   }
 
@@ -1646,7 +1566,7 @@ object QueryDsl {
     * stringly typing; an EMBEDDED placeholder interpolates as text. Any
     * unresolved `{{` surviving substitution fails loudly. */
   def renderTemplate(tmpl: JsonNode, params: JsonNode): JsonNode = {
-    require(params != null && params.isObject, "query DSL: template params must be an object")
+    entries(params, "template params")
     val whole = """\{\{(\w+)\}\}""".r
     def param(name: String): JsonNode = {
       require(params.has(name), s"query DSL: missing template param '$name'")
@@ -1654,11 +1574,15 @@ object QueryDsl {
     }
     def walk(n: JsonNode): JsonNode =
       if (n.isTextual) {
-        n.asText match {
+        n.textValue match {
           case whole(name) => param(name)
           case s =>
-            val out = whole.replaceAllIn(s,
-              m => scala.util.matching.Regex.quoteReplacement(param(m.group(1)).asText))
+            val out = whole.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+              param(m.group(1)) match {
+                case p if p.isTextual => p.textValue
+                case p if p.isNumber || p.isBoolean => p.toString
+                case p => typeError(s"embedded template param '${m.group(1)}'", "a string, number or boolean", p)
+              }))
             require(!out.contains("{{"), s"query DSL: unresolved template placeholder in: $s")
             new com.fasterxml.jackson.databind.node.TextNode(out)
         }
@@ -1697,6 +1621,63 @@ object DslQueries {
       |  "must_not": [{"wildcard": {"source": {"value": "src1?"}}}],
       |  "minimum_should_match": 1
       |}}""".stripMargin
+
+  /** The request bodies of the door entries that DoorMutantSpec mutates,
+    * kept as text so the spec mutates exactly what the registry sends. */
+  private[graft] val DoorBodies: Map[String, String] = Map(
+    "q143_agg_body" ->
+      """{"size": 0,
+        |  "aggs": {"histo": {"proportional_sum": {
+        |    "fields": ["rs", "re", "v"],
+        |    "interval": 3600000,
+        |    "start": 1704412800000,
+        |    "end": 1706140800000,
+        |    "order": [{"_key": "asc"}]
+        |  }}}}""".stripMargin,
+    "q146_dsl_date_histogram" ->
+      """{"size": 0,
+        |  "aggs": {"by_hour": {
+        |    "date_histogram": {"field": "ms", "fixed_interval": 3600000},
+        |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
+        |  }}}""".stripMargin,
+    "q147_dsl_terms_agg" ->
+      """{"size": 0,
+        |  "aggs": {"types": {
+        |    "terms": {"field": "event_type", "size": 10, "order": {"_count": "desc"}},
+        |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
+        |  }}}""".stripMargin,
+    "q153_dsl_nested_terms" ->
+      """{"size": 0,
+        |  "aggs": {"types": {
+        |    "terms": {"field": "event_type"},
+        |    "aggs": {"series": {"proportional_sum": {
+        |      "fields": ["rs", "re", "v"],
+        |      "interval": 3600000,
+        |      "start": 1704412800000,
+        |      "end": 1706140800000
+        |    }}}
+        |  }}}""".stripMargin,
+    "q157_dsl_search_after" ->
+      """{"query": {"range": {"n_chars": {"gte": 150}}},
+        |  "sort": [{"n_chars": "asc"}, {"doc_id": "asc"}],
+        |  "search_after": [250, 100],
+        |  "size": 20,
+        |  "_source": ["doc_id", "n_chars"]}""".stripMargin,
+    "q172_dsl_histogram" ->
+      """{"size": 0,
+        |  "aggs": {"by_value": {
+        |    "histogram": {"field": "value", "interval": 25}
+        |  }}}""".stripMargin,
+    "q173_dsl_range" ->
+      """{"size": 0,
+        |  "aggs": {"by_range": {
+        |    "range": {"field": "value", "ranges": [
+        |      {"key": "lo", "to": 50},
+        |      {"key": "mid", "from": 50, "to": 200},
+        |      {"key": "hi", "from": 200}
+        |    ]},
+        |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
+        |  }}}""".stripMargin)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ES `wrapper` query — the base64-wrapped DSL, decoded and compiled at
@@ -1877,18 +1858,8 @@ object DslQueries {
     // ProportionalSumAggregationBuilder's wire grammar, compiled onto the
     // same operator q01 runs — and sharing q01's oracle verbatim, so the
     // hash match proves front door ≡ typed API.
-    "q143_agg_body" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"size": 0,
-          |  "aggs": {"histo": {"proportional_sum": {
-          |    "fields": ["rs", "re", "v"],
-          |    "interval": 3600000,
-          |    "start": 1704412800000,
-          |    "end": 1706140800000,
-          |    "order": [{"_key": "asc"}]
-          |  }}}}""".stripMargin)
-      QueryDsl.aggBody(Flows.df(s, d), body)
-    }),
+    "q143_agg_body" -> ((s: SparkSession, d: String) => 
+      QueryDsl.aggBody(Flows.df(s, d), QueryDsl.parse(DoorBodies("q143_agg_body")))),
 
     // filtered agg body: the DSL query section gates the flow rows BEFORE
     // the proportional_sum (the parent-filter shape) — compiled against
@@ -1909,27 +1880,13 @@ object DslQueries {
 
     // the framework date_histogram agg through the front door: q10's
     // bucket recipe + a detsum metric sub-agg, sharing q10's oracle.
-    "q146_dsl_date_histogram" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"size": 0,
-          |  "aggs": {"by_hour": {
-          |    "date_histogram": {"field": "ms", "fixed_interval": 3600000},
-          |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
-          |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
-    }),
+    "q146_dsl_date_histogram" -> ((s: SparkSession, d: String) => 
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), QueryDsl.parse(DoorBodies("q146_dsl_date_histogram")))),
 
     // the framework terms agg through the front door: size + _count order
     // + detsum metric, sharing q11's oracle.
-    "q147_dsl_terms_agg" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"size": 0,
-          |  "aggs": {"types": {
-          |    "terms": {"field": "event_type", "size": 10, "order": {"_count": "desc"}},
-          |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
-          |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
-    }),
+    "q147_dsl_terms_agg" -> ((s: SparkSession, d: String) => 
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), QueryDsl.parse(DoorBodies("q147_dsl_terms_agg")))),
 
     // extended_bounds through the front door (the builder's own parser
     // field, ProportionalSumAggregationBuilder.java:130-131): dense
@@ -2004,33 +1961,14 @@ object DslQueries {
     // NESTED bucket sub-agg: terms(event_type) → proportional_sum — the
     // reference's agg-under-terms-parent shape (the Drift UI top-talkers
     // request), one grouped run; shares q04's oracle verbatim.
-    "q153_dsl_nested_terms" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"size": 0,
-          |  "aggs": {"types": {
-          |    "terms": {"field": "event_type"},
-          |    "aggs": {"series": {"proportional_sum": {
-          |      "fields": ["rs", "re", "v"],
-          |      "interval": 3600000,
-          |      "start": 1704412800000,
-          |      "end": 1706140800000
-          |    }}}
-          |  }}}""".stripMargin)
-      QueryDsl.aggBody(Flows.df(s, d), body)
-    }),
+    "q153_dsl_nested_terms" -> ((s: SparkSession, d: String) => 
+      QueryDsl.aggBody(Flows.df(s, d), QueryDsl.parse(DoorBodies("q153_dsl_nested_terms")))),
 
     // `search_after` in the filter-context envelope: ES's deep-paging form
     // — the literal cursor's lexicographic keyset predicate lands on raw
     // columns (scan-pruning like scroll's), page ranks restart at 1.
-    "q157_dsl_search_after" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"query": {"range": {"n_chars": {"gte": 150}}},
-          |  "sort": [{"n_chars": "asc"}, {"doc_id": "asc"}],
-          |  "search_after": [250, 100],
-          |  "size": 20,
-          |  "_source": ["doc_id", "n_chars"]}""".stripMargin)
-      QueryDsl.search(Tables(s, d, "documents"), body)
-    }),
+    "q157_dsl_search_after" -> ((s: SparkSession, d: String) => 
+      QueryDsl.search(Tables(s, d, "documents"), QueryDsl.parse(DoorBodies("q157_dsl_search_after")))),
 
     // terms → date_histogram (→ metric) nesting — the dashboard shape
     // (every Kibana panel over the Drift indices is exactly this tree):
@@ -2243,31 +2181,14 @@ object DslQueries {
     // to typed q10b's exact frame (bucket = floor(v/25)·25 as
     // value_bucket), sharing its oracle verbatim. DslSpec pins
     // in-process row-identity with q10b.
-    "q172_dsl_histogram" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"size": 0,
-          |  "aggs": {"by_value": {
-          |    "histogram": {"field": "value", "interval": 25}
-          |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
-    }),
+    "q172_dsl_histogram" -> ((s: SparkSession, d: String) => 
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), QueryDsl.parse(DoorBodies("q172_dsl_histogram")))),
 
     // the explicit-edges `range` framework agg at the door — typed
     // q10c's buckets ([0,50) / [50,200) / [200,∞) keyed lo/mid/hi) with
     // its detsum metric, sharing q10c's oracle verbatim.
-    "q173_dsl_range" -> ((s: SparkSession, d: String) => {
-      val body = QueryDsl.parse(
-        """{"size": 0,
-          |  "aggs": {"by_range": {
-          |    "range": {"field": "value", "ranges": [
-          |      {"key": "lo", "to": 50},
-          |      {"key": "mid", "from": 50, "to": 200},
-          |      {"key": "hi", "from": 200}
-          |    ]},
-          |    "aggs": {"sum_value": {"sum": {"field": "value"}}}
-          |  }}}""".stripMargin)
-      QueryDsl.aggBody(EsAggQueries.ev(s, d), body)
-    }),
+    "q173_dsl_range" -> ((s: SparkSession, d: String) => 
+      QueryDsl.aggBody(EsAggQueries.ev(s, d), QueryDsl.parse(DoorBodies("q173_dsl_range")))),
 
     "q170_dsl_terms_size" -> ((s: SparkSession, d: String) => {
       val body = QueryDsl.parse(

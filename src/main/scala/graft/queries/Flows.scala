@@ -53,9 +53,8 @@ object Flows {
   def stretchedSqlCte(days: Int): String =
     sqlCteOver(s"SELECT * REPLACE (rs + (event_id % $days) * $DAY_MS AS re)")
 
-  /** 2024-01-01T00:00:00Z .. 2024-02-01T00:00:00Z — the events table's span. */
+  /** 2024-01-01T00:00:00Z, where the events table's span starts. */
   val JAN_START_MS: Long = 1704067200000L
-  val FEB_START_MS: Long = 1706745600000L
   val MAY_START_MS: Long = 1714521600000L
   val HOUR_MS: Long = 3600000L
   val DAY_MS: Long = 86400000L

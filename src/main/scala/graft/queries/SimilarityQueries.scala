@@ -37,8 +37,8 @@ object SimilarityQueries {
     * ~2% at this density; 8×5-bit reaches 0.48). The query side (queries × tables rows) broadcasts,
     * so the corpus streams once with no shuffle; multi-table duplicate hits
     * collapse in a map-side partial aggregate before ranking. Approximate
-    * (recall measured in the spec) yet ORACLE-BACKED since round 5: the
-    * hyperplane signs are data-independent constants, so the oracle inlines
+    * (recall measured in the spec) yet ORACLE-BACKED: the hyperplane
+    * signs are data-independent constants, so the oracle inlines
     * the sign pattern as literal ± terms from the same XXH64 calls the
     * kernel makes and replays the identical left-associated projections. */
   private def q36(s: SparkSession, d: String): DataFrame = {
@@ -458,9 +458,9 @@ object SimilarityQueries {
     * floor (ANN_RECALL.md's sweep: 8 is the smallest depth clearing 0.9 on
     * every committed SF, where nlists sits at its own floor of 10) joined
     * to a FIXED ≥0.25 scan fraction as nlists grows under the √n rule.
-    * Round 12 kept nprobe pinned at 8, so q37c's scan fraction shrank
-    * ≈1/√n beyond the 10× derivation and the ≥0.9 recall contract was
-    * unverified at larger scales; the ceil-div keeps the fraction
+    * A pinned nprobe of 8 would shrink q37c's scan fraction ≈1/√n beyond
+    * the 10× derivation and leave the ≥0.9 recall contract unverified at
+    * larger scales; the ceil-div keeps the fraction
     * constant (10→8/10, 32→8/32=0.25, 102→26/102≈0.255) — and recall at
     * fixed fraction on clustered data is what the committed clustered
     * sweep + SketchSpec gate measure. Integer arithmetic ((k+3)/4), so

@@ -30,10 +30,14 @@ object Streams {
     * frame is resolved before the view is dropped: the frame keeps its
     * rows, and repeated runs pin no earlier sink. With `checkpoint` the
     * query keeps its offsets and state there, and a later run on the same
-    * directory resumes after the last committed batch (complete mode only:
-    * an append-mode memory sink does not recover); without it Spark uses
-    * a temporary directory it deletes on success. */
+    * directory resumes after the last committed batch; without it Spark
+    * uses a temporary directory it deletes on success. A checkpoint takes
+    * complete mode: Spark resumes a memory sink in no other mode, so any
+    * other mode with a checkpoint throws IllegalArgumentException before
+    * the query starts. */
   def run(df: DataFrame, prefix: String, mode: String, checkpoint: Option[String] = None): Finished = {
+    require(checkpoint.isEmpty || mode.equalsIgnoreCase("complete"),
+      s"a checkpointed memory-sink stream must run in complete mode, got '$mode'")
     val spark = df.sparkSession
     val name = s"${prefix}_${runs.incrementAndGet()}"
     val writer = df.writeStream.format("memory").queryName(name)

@@ -172,6 +172,16 @@ class StreamRunnerSpec extends AnyFunSuite {
     assert(both == whole)
   }
 
+  test("a checkpoint with an append-mode memory sink is rejected before the query starts") {
+    val ckpt = IngestQueries.scratchDir("graft_append_ckpt").toString
+    val before = spark.streams.active.length
+    val ex = intercept[IllegalArgumentException](Streams.run(
+      FlowStream.flowSource(spark, sf), "append_ckpt", "append", Some(ckpt)))
+    assert(ex.getMessage.contains("complete mode"), ex.getMessage)
+    assert(spark.streams.active.length == before, "no query may start")
+    assert(!new java.io.File(ckpt, "offsets").exists, "nothing may be written to the checkpoint")
+  }
+
   test("a listener on the caller's session sees st04's state stores at StatePartitions; batch keeps the cores") {
     val seen = new ConcurrentLinkedQueue[StreamingQueryProgress]()
     val listener = new StreamingQueryListener {
