@@ -116,9 +116,10 @@ class DoorMutantSpec extends AnyFunSuite {
       (if (metric) Seq(sumDet(col("value")).as("sum_value")) else Nil): _*)
   }
 
-  /** q10c's buckets over explicit edges: one filtered aggregate per range. */
+  /** A range agg entry: (key, from, to). */
   private type Range = (String, Option[Double], Option[Double])
-  private val q173Ranges: Seq[Range] = Seq(("lo", None, Some(50.0)), ("mid", Some(50.0), Some(200.0)), ("hi", Some(200.0), None))
+  private val q173Ranges: Seq[Range] =
+    Seq(("lo", None, Some(50.0)), ("mid", Some(50.0), Some(200.0)), ("hi", Some(200.0), None))
 
   /** The events' non-null values, for q10c's buckets computed on the driver. */
   private lazy val values: Seq[Double] =
@@ -145,7 +146,9 @@ class DoorMutantSpec extends AnyFunSuite {
   /** q157's page: n_chars ≥ gte, strictly after the (n_chars, doc_id)
     * cursor, ranked in sort order, each hit scoring its range's boost 1.0. */
   private def page(gte: Long, after: Option[(Long, Long)], size: Int, src: Seq[String]): DataFrame = {
-    val hits = docKeys.filter { case (n, id) => n >= gte && after.forall { case (an, aid) => n > an || (n == an && id > aid) } }
+    val hits = docKeys.filter { case (n, id) =>
+      n >= gte && after.forall { case (an, aid) => n > an || (n == an && id > aid) }
+    }
     local(StructType(StructField("rank", LongType, nullable = false) +: StructField("score", DoubleType) +:
       src.map(f => docs.schema(f))), hits.take(size).zipWithIndex.map { case ((n, id), i) =>
       Row.fromSeq((i + 1L) +: 1.0 +: src.map(Map("doc_id" -> id, "n_chars" -> n)))
