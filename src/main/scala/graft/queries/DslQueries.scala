@@ -135,7 +135,10 @@ object QueryDsl {
   // long past 2^31 as its low bits).
 
   private def typeError(what: String, want: String, v: JsonNode): Nothing = {
-    val got = if (v == null) "nothing" else s"${v.getNodeType.toString.toLowerCase(java.util.Locale.ROOT)} $v"
+    val got =
+      if (v == null) "nothing"
+      else if (v.isNull) "null"
+      else s"${v.getNodeType.toString.toLowerCase(java.util.Locale.ROOT)} $v"
     throw new IllegalArgumentException(s"query DSL: $what must be $want, got $got")
   }
 
